@@ -23,10 +23,16 @@ from pyspark.sql import functions as F
 from mcpvectordb_spark.config import DEFAULT, EngineConfig
 from mcpvectordb_spark.embedder import Embedder, HashEmbedder
 from mcpvectordb_spark.ingest import ingest_batch
-from mcpvectordb_spark.operators.bm25 import bm25_topk
-from mcpvectordb_spark.operators.hybrid import rrf_topk, weighted_fuse_topk
-from mcpvectordb_spark.operators.knn import knn_topk
+
+# bm25_topk, rrf_topk, knn_topk are unused here: the traced benchmark run wraps them by name
+from mcpvectordb_spark.operators.bm25 import bm25_topk  # noqa: F401
+from mcpvectordb_spark.operators.hybrid import hybrid_search, rrf_topk  # noqa: F401
+from mcpvectordb_spark.operators.knn import knn_topk  # noqa: F401
 from mcpvectordb_spark.store import ChunkStore, InvalidFilterError, build_filter
+
+# the chunk columns a search result carries (docs/mcp-tool-spec.md:121-143)
+RESULT_COLS = ("id", "doc_id", "source", "title", "library", "content", "chunk_index",
+               "metadata", "file_type", "page", "last_modified")
 
 
 def _err(msg: str) -> dict:
@@ -184,6 +190,13 @@ class VectorDB:
         """Reference server.py:228-289 — hybrid BM25+vector search with RRF,
         falling back to vector-only when hybrid is disabled (config.py:59).
         Filters are applied BEFORE ranking (mcp-tool-spec.md:110-111).
+
+        Every mode runs one Spark plan over one filtered scan
+        (operators/hybrid.py::hybrid_search): each row is scored once for
+        both legs, one exchange gathers the scored rows, and the legs'
+        cuts, ranks and fusion run as global windows, so a default search
+        costs two Spark jobs and nothing joins back to the store.
+
         ``fusion``: "rrf" (reference default) or "blend" (convex score
         blend over min-max-normalized legs — beyond-reference option).
         ``highlight``: add a ``snippet`` field per result — a windowed
@@ -192,21 +205,29 @@ class VectorDB:
         ``method``: vector-leg scan strategy — "exact" (flat scan, the
         reference's sub-50k regime), "sq8" (int8 coarse scan + exact
         refine) or "matryoshka" (truncated-dim coarse scan + exact
-        refine).  The trained-state ANN paths (IVF / PQ) live behind
+        refine); the coarse strategies' top candidates enter the plan as
+        its vector leg.  The trained-state ANN paths (IVF / PQ) live behind
         their own maintained indexes (knn.IvfIndex / pq.IvfPqIndex) — a
         per-request train would be neither correct nor honest to time.
         ``diversify``: MMR λ in (0, 1] — rerank the top candidate pool
         with maximal marginal relevance (operators/mmr.py) so near-identical
         chunks of one document stop monopolizing the result page; results
         come back in selection order with the MMR objective as score."""
+        if not isinstance(query, str):
+            return _err("query must be a string")
+        if top_k is not None and (not isinstance(top_k, int) or isinstance(top_k, bool)):
+            return _err("top_k must be an integer")
         if fusion not in ("rrf", "blend"):
             return _err("fusion must be 'rrf' or 'blend'")
         if method not in ("exact", "sq8", "matryoshka"):
             return _err("method must be 'exact', 'sq8' or 'matryoshka'")
-        if diversify is not None and not (0.0 < diversify <= 1.0):
+        if diversify is not None and (
+            not isinstance(diversify, (int, float)) or isinstance(diversify, bool)
+            or not (0.0 < diversify <= 1.0)
+        ):
             return _err("diversify must be in (0, 1]")
         top_k = self.config.top_k_default if top_k is None else top_k
-        if not query or not query.strip():
+        if not query.strip():
             return _err("query must be non-empty")
         if not (1 <= top_k <= self.config.top_k_max):
             return _err(f"top_k must be in [1, {self.config.top_k_max}]")
@@ -215,59 +236,41 @@ class VectorDB:
         except InvalidFilterError as exc:
             return _err(str(exc))
 
-        chunks = self.store.read().filter(pred)
+        scope = self.store.read().filter(pred)
         qv = [float(x) for x in self.embedder.embed_query(query)]
         candidates = max(top_k, top_k * self.config.refine_factor)
+        vec_leg = None
         if method == "sq8":
             from mcpvectordb_spark.operators.knn import knn_topk_sq8
 
-            vec_leg = knn_topk_sq8(chunks, qv, candidates, tie_col="id")
+            vec_leg = knn_topk_sq8(scope, qv, candidates, tie_col="id")
         elif method == "matryoshka":
             from mcpvectordb_spark.operators.knn import knn_truncated_topk
 
             vec_leg = knn_truncated_topk(
-                chunks, qv, candidates, dims_coarse=max(8, len(qv) // 4), id_col="id"
+                scope, qv, candidates, dims_coarse=max(8, len(qv) // 4), id_col="id"
             )
-        else:
-            vec_leg = knn_topk(chunks, qv, candidates, tie_col="id")
-        pool_k = candidates if diversify is not None else top_k
-        if self.config.hybrid_search_enabled:
-            bm_leg = bm25_topk(
-                chunks, query, candidates, "id", "content",
-                k1=self.config.bm25_k1, b=self.config.bm25_b,
-            )
-            if fusion == "blend":
-                fused = weighted_fuse_topk(
-                    vec_leg.select(F.col("id").alias("doc"), "score"), bm_leg,
-                    pool_k, alpha=0.5, id_cols=("doc", "doc"),
-                    score_cols=("score", "score"), id_col="id", score_col="score",
-                )
-            else:
-                fused = rrf_topk(
-                    [(bm_leg, "doc", "score"), (vec_leg.select(F.col("id").alias("doc"), "score"), "doc", "score")],
-                    pool_k, k0=self.config.rrf_k0, id_col="id", score_col="score",
-                )
-            ranked = fused.join(chunks, "id")
-        else:
-            ranked = vec_leg if diversify is not None else vec_leg.limit(top_k)
+        cfg = self.config
+        ranked = hybrid_search(
+            scope, qv, query if cfg.hybrid_search_enabled else None,
+            candidates if diversify is not None else top_k, candidates,
+            RESULT_COLS + (("embedding",) if diversify is not None else ()),
+            fusion=fusion, k0=cfg.rrf_k0, k1=cfg.bm25_k1, b=cfg.bm25_b, vec_leg=vec_leg,
+        )
         if diversify is not None:
             from mcpvectordb_spark.operators.mmr import mmr_rerank
 
-            pool = ranked.select("id", "embedding", F.col("score").alias("rel"))
-            sel = mmr_rerank(pool, top_k, lam=diversify,
-                             id_col="id", vec_col="embedding", rel_col="rel")
-            ranked = (
-                sel.select(F.col("id"), F.col("step"), F.col("mmr").alias("score"))
-                .join(chunks.drop("score"), "id")
-            )
+            ranked = mmr_rerank(
+                ranked, top_k, lam=diversify, id_col="id", vec_col="embedding",
+                rel_col="score", carry=RESULT_COLS[1:],
+            ).withColumnRenamed("mmr", "score")
         if highlight:
             from mcpvectordb_spark.operators.bm25 import highlight_col
 
             ranked = ranked.withColumn(
                 "snippet", highlight_col(F.col("content"), query.lower().split())
             )
-        order = [F.asc("step")] if diversify is not None else [F.desc("score"), F.asc("id")]
-        rows = ranked.orderBy(*order).collect()
+        rows = ranked.collect()
         return {
             "status": "ok",
             "results": [

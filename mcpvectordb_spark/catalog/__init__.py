@@ -368,25 +368,27 @@ QUERIES = {
 # tag < max_round, i.e. a full round elapsed without rotation — still
 # degrades to pure stalest-first here and fails tests/test_entry.py
 # loudly.
-ROUND_CHURN_ROUND: int = 9
-# Round 9: tokenizer_fertility + dataset_datasheet (r8 ADVICE #1
-# NULL-text coalesce on the Spark side; datasheet also moved its
-# lang_entropy to the exact-integer BIGINT-sum readout — ADVICE #2);
-# events_psi (ADVICE #2: psi readout now an exact-integer sum too);
-# knn_pq_refined (ADVICE #3: cache-miss codebook training now records a
-# session train timing surfaced by bench.py); and the BM25-leg queries
-# moved onto the session-shared Bm25Index artifact (r8 verdict item 2,
-# the flagship hybrid_rrf drift): bm25_topk, hybrid_rrf,
-# hybrid_weighted, search_highlights.
+ROUND_CHURN_ROUND: int = 10
+# Round 10 (a88ad0c..6c7ee5b): knn_mmr (MMR rerank rewritten as in-plan
+# global-window argmaxes, its tie-break since made id-type agnostic);
+# events_attribution_markov (Markov removal effects fused into one
+# aggregation row); lang_confusion + nb_lang_classify (NB training pins
+# its (label, term) count table); text_repetition (top-bigram count by
+# sorted run length); text_logprob + ccnet_buckets (unigram freq table
+# pinned, N derived from it); curation_pipeline_v2 (planted rows pinned,
+# plus both text kernels above).  The round's ingest change (write set
+# fanned across cores) only repartitions, so ingest_chunks and
+# search_ingested stay with the stalest-first rotation — the set is
+# capped at 8.
 ROUND_CHURN: frozenset[str] = frozenset({
-    "tokenizer_fertility",
-    "dataset_datasheet",
-    "events_psi",
-    "knn_pq_refined",
-    "bm25_topk",
-    "hybrid_rrf",
-    "hybrid_weighted",
-    "search_highlights",
+    "knn_mmr",
+    "events_attribution_markov",
+    "lang_confusion",
+    "nb_lang_classify",
+    "text_repetition",
+    "text_logprob",
+    "ccnet_buckets",
+    "curation_pipeline_v2",
 })
 
 

@@ -19,6 +19,11 @@ mirrored 1:1 in the DuckDB oracle SQL.
 
 Scale: one explode of the corpus (map-side), two hash aggregations on
 (doc,term) and (term); query terms are a tiny broadcast; no UDFs anywhere.
+
+The serving path (operators/hybrid.py::hybrid_search) builds no posting
+list: it counts each query term per row in the scan and takes N, avgdl
+and df as global windows over the filtered rows — same statistics, same
+:func:`bm25_weight_sql`, no shuffle by term.
 """
 
 from __future__ import annotations
@@ -31,6 +36,33 @@ def tokens_col(text: Column) -> Column:
     """lowercase whitespace tokens, empties removed (matches oracle
     ``regexp_split_to_array(lower(x), '\\s+')`` after trim)."""
     return F.filter(F.split(F.lower(F.trim(text)), r"\s+"), lambda t: t != "")
+
+
+def query_terms(query: str) -> list[str]:
+    """The distinct lowercase whitespace terms of a query, sorted —
+    duplicate terms in the query count once."""
+    return sorted({t for t in query.lower().split() if t})
+
+
+def bm25_weight_sql(
+    tf: str, df: str, dl: str, n: str, avgdl: str, k1: float, b: float
+) -> str:
+    """SQL text of the weight one query term adds to a document's BM25
+    score (the module formula): ``tf`` its count in the document, ``df``
+    the number of documents holding it, ``dl`` the document's length,
+    ``n`` and ``avgdl`` the corpus size and mean length — each a SQL
+    expression.  Every BM25 scorer here uses this one definition; the
+    constants are double literals, so the arithmetic is the same IEEE
+    sequence whether the text runs through ``F.expr`` or a window select."""
+    return (
+        f"ln(1.0D + ({n} - {df} + 0.5D) / ({df} + 0.5D)) * ({tf} * {sql_double(k1 + 1.0)}) "
+        f"/ ({tf} + {sql_double(k1)} * ({sql_double(1.0 - b)} + {sql_double(b)} * {dl} / {avgdl}))"
+    )
+
+
+def sql_double(x: float) -> str:
+    """A finite float as an exact SQL double literal (repr round-trips)."""
+    return f"{float(x)!r}D"
 
 
 def doc_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -140,7 +172,7 @@ def bm25_score(
     Pass a prebuilt :class:`Bm25Index` for serving workloads; without one
     the stats derive lazily from ``df`` (uncached — no leak).
     """
-    q_terms = sorted({t for t in query.lower().split() if t})
+    q_terms = query_terms(query)
     if not q_terms:
         return df.sparkSession.createDataFrame([], f"doc string, {score_col} double")
 
@@ -165,15 +197,7 @@ def bm25_score(
         hits.join(F.broadcast(dfreq.filter(F.col("term").isin(q_terms))), "term")
         .join(lens, "doc")
         .crossJoin(stats)
-        .withColumn(
-            "idf", F.log(F.lit(1.0) + (F.col("__n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        )
-        .withColumn(
-            "w",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("__avgdl"))),
-        )
+        .withColumn("w", F.expr(bm25_weight_sql("tf", "df", "dl", "__n", "__avgdl", k1, b)))
         .groupBy("doc")
         .agg(F.sum("w").alias(score_col))
     )
@@ -221,7 +245,7 @@ def fuzzy_terms(
     fewer.  At 100 TB the vocab table is the same kilobyte-to-megabyte
     asset the NB classifier and TF-IDF broadcast; persist it beside the
     BM25 stats and expansion is an index probe, not a scan."""
-    q_terms = sorted({t for t in query.lower().split() if t})
+    q_terms = query_terms(query)
     if not q_terms:
         return df.sparkSession.createDataFrame([], "term string")
     vocab = doc_terms(df, id_col, text_col).select("term").distinct()
@@ -309,7 +333,7 @@ def bm25_multi_topk(
     :func:`bm25_score` (same idf/tf saturation, distinct query terms)."""
     rows = []
     for qid, q in sorted(queries.items()):
-        for t in sorted({t for t in q.lower().split() if t}):
+        for t in query_terms(q):
             rows.append((int(qid), t))
     spark = df.sparkSession
     if not rows:
@@ -333,15 +357,7 @@ def bm25_multi_topk(
         .join(F.broadcast(dfreq.join(qterms.select("term").distinct(), "term")), "term")
         .join(lens, "doc")
         .crossJoin(stats)
-        .withColumn(
-            "idf", F.log(F.lit(1.0) + (F.col("__n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        )
-        .withColumn(
-            "w",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("__avgdl"))),
-        )
+        .withColumn("w", F.expr(bm25_weight_sql("tf", "df", "dl", "__n", "__avgdl", k1, b)))
         .groupBy("qid", "doc")
         .agg(F.sum("w").alias("score"))
     )

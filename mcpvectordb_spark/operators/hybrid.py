@@ -14,14 +14,25 @@ failure has no Spark analog (there is no index to be missing).
 Scale: each leg is already top-N-truncated before fusion (the reference
 ranks candidate sets, not the corpus), so the fusion join is tiny and
 broadcast.
+
+The API's search does not compose these operators: :func:`hybrid_search`
+computes the same rows as one plan over one scan (both legs scored per
+row, cuts, ranks and fusion as global windows), because at the serving
+regime's store sizes the cost of a search is per-plan and per-job
+overhead, not scan work.  The composed operators stay for the catalog and
+as the reference the one plan is tested against.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from mcpvectordb_spark.operators.bm25 import bm25_weight_sql, query_terms, sql_double, tokens_col
+from mcpvectordb_spark.operators.knn import vector_score
 
 
 def rank_by_score(df: DataFrame, id_col: str, score_col: str, rank_col: str) -> DataFrame:
@@ -76,14 +87,15 @@ def minmax_normalize(df: DataFrame, score_col: str, out_col: str) -> DataFrame:
     )
     return (
         df.crossJoin(F.broadcast(stats))
-        .withColumn(
-            out_col,
-            F.when(F.col("__hi") == F.col("__lo"), F.lit(1.0)).otherwise(
-                (F.col(score_col) - F.col("__lo")) / (F.col("__hi") - F.col("__lo"))
-            ),
-        )
+        .withColumn(out_col, F.expr(minmax_sql(f"`{score_col}`", "__lo", "__hi")))
         .drop("__lo", "__hi")
     )
+
+
+def minmax_sql(score: str, lo: str, hi: str) -> str:
+    """SQL text of ``score`` scaled to [0,1] between ``lo`` and ``hi``;
+    1.0 when the two are equal."""
+    return f"CASE WHEN {hi} = {lo} THEN 1.0D ELSE ({score} - {lo}) / ({hi} - {lo}) END"
 
 
 def weighted_fuse_topk(
@@ -124,3 +136,130 @@ def weighted_fuse_topk(
     return blended.orderBy(
         F.round(F.col(score_col), 6).desc(), F.asc(id_col)
     ).limit(k)
+
+
+def hybrid_search(
+    scope: DataFrame,
+    query_vec: Sequence[float],
+    query: str | None,
+    k: int,
+    candidates: int,
+    keep: Sequence[str],
+    fusion: str = "rrf",
+    k0: int = 60,
+    k1: float = 1.2,
+    b: float = 0.75,
+    vec_leg: DataFrame | None = None,
+) -> DataFrame:
+    """Hybrid BM25 + vector top-``k`` as ONE plan over one scan of
+    ``scope``, a chunk table (``id``, ``embedding``, ``content``).
+
+    Returns (*keep, score): at most ``k`` rows, ordered by score DESC,
+    id ASC.  The rows are exactly those of the composed operators —
+    ``knn_topk`` and ``bm25_topk`` cut at ``candidates`` each, fused by
+    ``rrf_topk`` or ``weighted_fuse_topk`` at α = 0.5 (``fusion`` "rrf" /
+    "blend"), joined back to ``scope`` — with the same cut and rank keys:
+
+    - vector cut: raw score DESC, id ASC;
+    - leg ranks and the BM25 cut: round(score, 6) DESC, id ASC;
+    - BM25 statistics (N, avgdl, df per term) over ``scope``, as
+      ``bm25_score`` computes them.
+
+    Every row is scored once in the scan: the vector score with the kernel
+    ``knn_topk`` picks (:func:`vector_score`), each query term's frequency
+    as ``size(tokens) − size(array_remove(tokens, t))`` — no explode, no
+    posting-list shuffle, no checkpoint.  One exchange then gathers the
+    scored rows into a single partition, where global windows compute the
+    statistics, both ranks and the fusion.  Only ``keep`` (packed in one
+    struct) crosses it, so leave the embedding out of ``keep`` unless a
+    consumer (MMR) needs it.  The windowed steps are SQL text: each
+    Column call is a round trip to the JVM, and a search's plan is built
+    on every request.
+
+    ``query=None`` is vector-only search: the vector cut at ``k``.
+    ``vec_leg``: a precomputed vector cut (id, score) — the
+    coarse+refine result of ``knn_topk_sq8`` / ``knn_truncated_topk`` —
+    used instead of scoring ``query_vec`` here.
+    """
+    by_score = [F.desc("score"), F.asc("id")]
+    if vec_leg is not None:
+        if query is None:
+            return vec_leg.select(*keep, "score").orderBy(*by_score).limit(k)
+        scope = scope.join(
+            F.broadcast(vec_leg.select(
+                "id", F.col("score").alias("__v"), F.lit(True).alias("__leg")
+            )),
+            "id",
+            "left",
+        )
+        vscore = F.col("__v")
+        in_vec = "__leg IS NOT NULL"
+    else:
+        vscore = vector_score(F.col("embedding"), query_vec)
+        if query is None:
+            return scope.select(*keep, vscore.alias("score")).orderBy(*by_score).limit(k)
+        in_vec = f"row_number() OVER (ORDER BY __v DESC, __row.id) <= {candidates}"
+
+    terms = query_terms(query)
+    leg_flag = ["__leg"] if vec_leg is not None else []
+    # tokens are a column of their own so that every term counts from one
+    # tokenization (the optimizer keeps a non-trivial column computed once)
+    toks = F.col("__tok")
+    scored = scope.select(
+        F.struct(*keep).alias("__row"),
+        vscore.alias("__v"),
+        *leg_flag,
+        tokens_col(F.col("content")).alias("__tok"),
+    ).select(
+        "__row",
+        "__v",
+        *leg_flag,
+        F.size(toks).alias("__dl"),
+        *[(F.size(toks) - F.size(F.array_remove(toks, t))).alias(f"__tf{i}")
+          for i, t in enumerate(terms)],
+    )
+
+    n, avgdl = "CAST(count(1) OVER () AS DOUBLE)", "avg(__dl) OVER ()"
+    weights = [
+        f"CASE WHEN __tf{i} > 0 THEN "
+        + bm25_weight_sql(f"__tf{i}", f"count_if(__tf{i} > 0) OVER ()", "__dl", n, avgdl, k1, b)
+        + " ELSE 0.0D END"
+        for i in range(len(terms))
+    ]
+    hit = " OR ".join(f"__tf{i} > 0" for i in range(len(terms))) or "false"
+    legs = scored.selectExpr(
+        "__row", "__v", f"{in_vec} AS __inv",
+        f"{' + '.join(weights) or '0.0D'} AS __bm", f"{hit} AS __hit",
+    )
+
+    def rank(flag: str, score: str) -> str:
+        # rank among the leg's rows (flagged rows sort first)
+        return f"row_number() OVER (ORDER BY {flag} DESC, round({score}, 6) DESC, __row.id)"
+
+    in_bm = f"(__hit AND {rank('__hit', '__bm')} <= {candidates})"
+    if fusion == "blend":
+        legs = legs.selectExpr("__row", "__v", "__inv", "__bm", f"{in_bm} AS __inb")
+
+        def norm(flag: str, score: str) -> str:
+            # min-max over the leg's own rows, as minmax_normalize does
+            leg = f"IF({flag}, {score}, NULL)"
+            scaled = minmax_sql(score, f"min({leg}) OVER ()", f"max({leg}) OVER ()")
+            return f"coalesce(IF({flag}, {scaled}, NULL), 0.0D)"
+
+        fused = f"0.5D * {norm('__inv', '__v')} + 0.5D * {norm('__inb', '__bm')}"
+        in_any = "__inv OR __inb"
+    else:
+        def contrib(flag: str, rank_sql: str) -> str:
+            return f"CASE WHEN {flag} THEN 1.0D / ({sql_double(k0)} + {rank_sql}) ELSE 0.0D END"
+
+        fused = f"{contrib(in_bm, rank('__hit', '__bm'))} + {contrib('__inv', rank('__inv', '__v'))}"
+        in_any = f"__inv OR {in_bm}"
+    out = (
+        legs.selectExpr("__row", f"{fused} AS score", f"{in_any} AS __in")
+        .where("__in")
+        .select("__row.*", "score")
+    )
+    if fusion == "blend":
+        # cut on the 6dp-rounded blend, as weighted_fuse_topk does
+        return out.orderBy(F.round("score", 6).desc(), F.asc("id")).limit(k).orderBy(*by_score)
+    return out.orderBy(*by_score).limit(k)

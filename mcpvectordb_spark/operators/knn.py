@@ -7,9 +7,12 @@ stays exact below ~50k rows (store.py:274) and recommends IVF beyond — here
 ``knn_topk`` is the exact path and ``ivf_topk`` the scale path.
 
 Scale notes:
-- scoring is a pure JVM expression (``zip_with`` + ``aggregate``) — stays in
-  whole-stage codegen, no Python in the hot path;
-- the query vector is a literal folded into the plan (≈ broadcast);
+- :func:`vector_score` picks the kernel by dimension: below 256 dims a
+  pure JVM expression (``zip_with`` + ``aggregate``, the query vector a
+  plan literal) that stays in whole-stage codegen; at 256 dims and up
+  (the API's 768-d default) an Arrow UDF doing one BLAS matmul per batch,
+  because a 768-literal expression costs more to analyse than a small
+  store costs to score;
 - the pre-filter sits below the scoring projection, so Catalyst pushes it
   into the Parquet scan (partition pruning on ``library``);
 - global top-k compiles to TakeOrderedAndProject — each partition keeps k
@@ -89,6 +92,25 @@ def cosine_pandas(query: Sequence[float]):
     return F.pandas_udf(cos, "double")
 
 
+def vector_score(
+    vec: Column, query: Sequence[float], metric: str = "cosine", impl: str = "auto"
+) -> Column:
+    """The similarity kernel of a query against a vector column.
+
+    ``impl``: "expr" (codegen fold — exact, oracle-parity), "pandas"
+    (Arrow/BLAS batch — faster for wide vectors), or "auto" (expr below
+    256 dims, pandas at or above).  The literal kernel inlines every
+    component as a plan literal, so at 768-d its analysis alone costs
+    more than scoring a small store — "auto" avoids it there."""
+    query = [float(x) for x in query]
+    if impl == "auto":
+        impl = "pandas" if len(query) >= 256 else "expr"
+    if impl == "pandas" and metric == "cosine":
+        return cosine_pandas(query)(vec)
+    q = query_vec_lit(query)
+    return cosine(vec, q) if metric == "cosine" else dot(vec, q)
+
+
 def knn_topk(
     df: DataFrame,
     query: Sequence[float],
@@ -105,21 +127,11 @@ def knn_topk(
     Ordering is score DESC with an explicit id tiebreak so results are total
     and deterministic (FIXTURES.md table 3 contract).
 
-    ``impl``: "expr" (codegen fold — exact, oracle-parity), "pandas"
-    (Arrow/BLAS batch — faster for wide vectors), or "auto" (expr below
-    256 dims, pandas at or above).
+    ``impl``: the kernel choice of :func:`vector_score`.
     """
     if pre_filter is not None:
         df = df.filter(pre_filter)
-    if impl == "auto":
-        impl = "pandas" if len(list(query)) >= 256 else "expr"
-    v = F.col(vec_col)
-    if impl == "pandas" and metric == "cosine":
-        score = cosine_pandas(query)(v)
-    else:
-        q = query_vec_lit(query)
-        score = cosine(v, q) if metric == "cosine" else dot(v, q)
-    scored = df.withColumn(score_col, score)
+    scored = df.withColumn(score_col, vector_score(F.col(vec_col), query, metric, impl))
     order = [F.desc(score_col)] + ([F.asc(tie_col)] if tie_col else [])
     return scored.orderBy(*order).limit(k)
 

@@ -31,12 +31,7 @@ from collections import Counter
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mcpvectordb_spark.operators.bm25 import Bm25Index, doc_lens, doc_terms
-
-
-def _bm25_w(tf, df_, dl, n, avgdl, k1: float, b: float):
-    idf = F.log(F.lit(1.0) + (n - df_ + 0.5) / (df_ + 0.5))
-    return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+from mcpvectordb_spark.operators.bm25 import Bm25Index, bm25_weight_sql, doc_lens, doc_terms
 
 
 def rm3_topk(
@@ -77,8 +72,7 @@ def rm3_topk(
         .join(F.broadcast(dfreq.filter(F.col("term").isin(q_terms))), "term")
         .join(lens, "doc")
         .crossJoin(stats)
-        .withColumn("w", _bm25_w(F.col("tf"), F.col("df"), F.col("dl"),
-                                 F.col("__n"), F.col("__avgdl"), k1, b))
+        .withColumn("w", F.expr(bm25_weight_sql("tf", "df", "dl", "__n", "__avgdl", k1, b)))
         .groupBy("doc")
         .agg(F.sum("w").alias("s1"))
     )
@@ -124,8 +118,8 @@ def rm3_topk(
         .join(F.broadcast(dfreq.join(weights.select("term"), "term", "left_semi")), "term")
         .join(lens, "doc")
         .crossJoin(stats)
-        .withColumn("w", F.col("wt") * _bm25_w(F.col("tf"), F.col("df"), F.col("dl"),
-                                               F.col("__n"), F.col("__avgdl"), k1, b))
+        .withColumn("w", F.col("wt") * F.expr(
+            bm25_weight_sql("tf", "df", "dl", "__n", "__avgdl", k1, b)))
         .groupBy("doc")
         .agg(F.sum("w").alias(score_col))
     )
@@ -188,8 +182,7 @@ def clarity_score(
         .crossJoin(stats)
         .withColumn(
             "w",
-            _bm25_w(F.col("tf"), F.col("df"), F.col("dl"),
-                    F.col("__n"), F.col("__avgdl"), k1, b),
+            F.expr(bm25_weight_sql("tf", "df", "dl", "__n", "__avgdl", k1, b)),
         )
         .groupBy("doc")
         .agg(F.sum("w").alias("s1"))

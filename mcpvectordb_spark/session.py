@@ -8,6 +8,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def ui_enabled(env=os.environ) -> bool:
+    """``SPARK_GRAFT_UI`` opts a session into the Spark UI: only ``1`` or
+    ``true`` (any case) turn it on, so ``SPARK_GRAFT_UI=0`` keeps it off."""
+    return env.get("SPARK_GRAFT_UI", "").strip().lower() in ("1", "true")
+
+
 def get_spark(app_name: str = "mcpvectordb_spark", shuffle_partitions: int | None = None) -> SparkSession:
     # Python workers don't inherit the driver's sys.path edits — a caller who
     # imported us via sys.path.insert from another cwd gets
@@ -41,7 +47,7 @@ def get_spark(app_name: str = "mcpvectordb_spark", shuffle_partitions: int | Non
         # profiling sessions opt in via SPARK_GRAFT_UI=1 so
         # tools/profile_query.py can read per-stage task metrics from the
         # REST API (guide §1.1/§7.1).
-        .config("spark.ui.enabled", "true" if os.environ.get("SPARK_GRAFT_UI") else "false")
+        .config("spark.ui.enabled", "true" if ui_enabled() else "false")
         # \r-terminated stage-progress bars flooded the round-5 driver's
         # bench tail capture (BENCH_r05.json parsed:null) — silence them;
         # bench.py prints its one-line JSON summary LAST so any tail window

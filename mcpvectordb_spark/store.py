@@ -9,10 +9,12 @@ Re-expresses /root/reference/src/mcpvectordb/store.py (LanceDB table driver,
 - append is always batch (reference store.py:193-194 "never row-by-row").
 - delete is a partition-scoped anti-filter rewrite (Delta-less MERGE:
   only partitions that contain the doc are rewritten).
-- the FTS/vector "indexes" have no physical counterpart: BM25 term stats are
-  computed at query time (or cached) and KNN is an exact scan+score+top-k —
-  the correct physical choice at the reference's own <50k-chunk regime
-  (store.py:274); see operators/ for the scale path (IVF / LSH).
+- the FTS/vector "indexes" have no physical counterpart: a search computes
+  the BM25 term statistics of its filtered scope at query time, in the same
+  single plan that scores every row's vector (operators/hybrid.py::
+  hybrid_search), and nothing is cached between requests — the correct
+  physical choice at the reference's own <50k-chunk regime (store.py:274);
+  see operators/ for the scale path (IVF / LSH).
 """
 
 from __future__ import annotations

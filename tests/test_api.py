@@ -29,6 +29,15 @@ def test_search_validation_and_fallback(db):
     assert db.search("x", top_k=0)["status"] == "error"
     assert db.search("x", top_k=101)["status"] == "error"
     assert db.search("x", filter={"bad key": 1})["status"] == "error"
+    # MCP arguments arrive as JSON values of any type: a wrong type gets an
+    # error envelope naming the field, never an internal error
+    for bad in ("5", True, 5.0, [5]):
+        out = db.search("x", top_k=bad)
+        assert out["status"] == "error" and "top_k" in out["error"], bad
+    for bad in (5, None, ["x"]):
+        out = db.search(bad)
+        assert out["status"] == "error" and "query" in out["error"], bad
+    assert db.search("x", diversify="0.5")["status"] == "error"
     # vector-only fallback flag (reference config.py:59 / store.py:306-320)
     from dataclasses import replace
 

@@ -548,3 +548,164 @@ def test_embedding_quality_flags_each_offender(spark):
     assert not out[3]["finite_ok"] and not out[3]["ok"]
     assert out[4]["finite_ok"] and not out[4]["norm_ok"] and not out[4]["ok"]  # zero vector
     assert not out[5]["dim_ok"] and out[5]["norm_ok"] and not out[5]["ok"]     # wrong dim
+
+
+# -- the one-plan API search vs the composed reference operators -----------
+
+_WORDS = ("alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu "
+          "nu xi omicron pi rho sigma tau upsilon").split()
+
+
+@pytest.fixture(scope="module")
+def search_db(spark, tmp_path_factory):
+    """~60 chunks over three libraries and two file types, with repeated
+    passages (tied vector and BM25 scores) — more rows than a leg's cut."""
+    import random
+
+    from mcpvectordb_spark.api import VectorDB
+
+    rnd = random.Random(7)
+    docs = []
+    for i in range(16):
+        text = " ".join(rnd.choice(_WORDS) for _ in range(70))
+        docs.append((f"doc{i:02d}.{'md' if i % 3 else 'txt'}", "ab"[i % 2], text, None))
+    docs.append(("twin1.md", "a", docs[0][2], None))  # clone: every score ties
+    docs.append(("tiny.txt", "tiny", "alpha omega", None))
+    db = VectorDB(spark, str(tmp_path_factory.mktemp("hybrid") / "store"), TEST)
+    raw = spark.createDataFrame(docs, "source string, library string, content string, metadata string")
+    ingest_batch(raw, db.store, TEST, embedder_factory=db._embedder_factory(),
+                 created_at="2026-01-01T00:00:00+00:00")
+    return db
+
+
+def _reference_rows(db, query, top_k, library=None, filter=None, fusion="rrf",  # noqa: A002
+                    method="exact"):
+    """The search as the separate catalog operators compose it: both legs
+    cut at top_k·refine_factor, fused, joined back to the store."""
+    from mcpvectordb_spark.operators.hybrid import weighted_fuse_topk
+    from mcpvectordb_spark.operators.knn import knn_topk_sq8, knn_truncated_topk
+
+    cfg = db.config
+    chunks = db.store.read().filter(build_filter(library, filter))
+    qv = [float(x) for x in db.embedder.embed_query(query)]
+    cand = max(top_k, top_k * cfg.refine_factor)
+    if method == "sq8":
+        vec_leg = knn_topk_sq8(chunks, qv, cand, tie_col="id")
+    elif method == "matryoshka":
+        vec_leg = knn_truncated_topk(chunks, qv, cand, dims_coarse=max(8, len(qv) // 4),
+                                     id_col="id")
+    else:
+        vec_leg = knn_topk(chunks, qv, cand, tie_col="id")
+    if not cfg.hybrid_search_enabled:
+        ranked = vec_leg.limit(top_k)
+    else:
+        bm_leg = bm25_topk(chunks, query, cand, "id", "content", k1=cfg.bm25_k1, b=cfg.bm25_b)
+        vec = vec_leg.select(F.col("id").alias("doc"), "score")
+        if fusion == "blend":
+            fused = weighted_fuse_topk(vec, bm_leg, top_k, alpha=0.5, id_cols=("doc", "doc"),
+                                       score_cols=("score", "score"), id_col="id", score_col="score")
+        else:
+            fused = rrf_topk([(bm_leg, "doc", "score"), (vec, "doc", "score")], top_k,
+                             k0=cfg.rrf_k0, id_col="id", score_col="score")
+        ranked = fused.join(chunks, "id")
+    rows = ranked.orderBy(F.desc("score"), F.asc("id")).collect()
+    return [(r["id"], round(r["score"], 9)) for r in rows]
+
+
+def _api_rows(db, query, top_k, **kw):
+    out = db.search(query, top_k=top_k, **kw)
+    assert out["status"] == "ok", out
+    return [(r["id"], round(r["score"], 9)) for r in out["results"]]
+
+
+@pytest.mark.parametrize("fusion", ["rrf", "blend"])
+@pytest.mark.parametrize("query,top_k,scope", [
+    ("alpha beta gamma", 2, {}),                        # unscoped, cut < store
+    ("delta theta", 3, {"library": "b"}),               # library scope
+    ("kappa mu", 2, {"filter": {"file_type": "md"}}),   # metadata filter
+    ("zzzz qqqq", 2, {}),                               # no BM25 hit: vector leg only
+    ("gamma gamma Delta gamma", 2, {}),                 # repeated terms count once
+    ("alpha", 5, {"library": "ghost"}),                 # empty scope
+    ("alpha omega", 5, {"library": "tiny"}),            # fewer rows than top_k
+])
+def test_api_search_matches_composed_operators(search_db, fusion, query, top_k, scope):
+    got = _api_rows(search_db, query, top_k, fusion=fusion, **scope)
+    assert got == _reference_rows(search_db, query, top_k, fusion=fusion, **scope)
+    if scope.get("library") == "ghost":
+        assert got == []
+
+
+@pytest.mark.parametrize("method", ["sq8", "matryoshka"])
+def test_api_search_coarse_vector_leg_matches_composed_operators(search_db, method):
+    """The coarse+refine strategies' top candidates enter the one plan as
+    its vector leg."""
+    got = _api_rows(search_db, "alpha beta gamma", 2, method=method)
+    assert got == _reference_rows(search_db, "alpha beta gamma", 2, method=method)
+
+
+def test_api_search_vector_only_matches_knn_topk(search_db):
+    from dataclasses import replace
+
+    search_db.config = replace(TEST, hybrid_search_enabled=False)
+    try:
+        for query, scope in (("alpha beta gamma", {}), ("delta", {"library": "a"})):
+            got = _api_rows(search_db, query, 4, **scope)
+            assert got == _reference_rows(search_db, query, 4, **scope)
+            assert len(got) == 4
+    finally:
+        search_db.config = TEST
+
+
+def test_api_search_matches_composed_operators_wide_vectors(spark, tmp_path):
+    """At the API's 768-d default the vector leg runs the Arrow kernel;
+    the one plan must use the very kernel knn_topk picks."""
+    from mcpvectordb_spark.api import VectorDB
+    from mcpvectordb_spark.config import DEFAULT
+
+    db = VectorDB(spark, str(tmp_path / "store"), DEFAULT)
+    raw = spark.createDataFrame(
+        [(f"d{i}.md", "L", " ".join(_WORDS[(i * 3 + j) % len(_WORDS)] for j in range(12)), None)
+         for i in range(12)],
+        "source string, library string, content string, metadata string",
+    )
+    ingest_batch(raw, db.store, DEFAULT, embedder_factory=db._embedder_factory(),
+                 created_at="2026-01-01T00:00:00+00:00")
+    for fusion in ("rrf", "blend"):
+        got = _api_rows(db, "alpha gamma zeta", 1, fusion=fusion)
+        assert got == _reference_rows(db, "alpha gamma zeta", 1, fusion=fusion)
+
+
+def test_api_search_runs_in_few_spark_jobs(spark, search_db):
+    """A default hybrid search is one plan: a scan stage and a ranking
+    stage, not a job per leg, per posting list and per fusion step."""
+    sc = spark.sparkContext
+    search_db.search("alpha beta", top_k=5)  # warm-up
+    sc.setJobGroup("one-plan-search", "job count")
+    try:
+        out = search_db.search("alpha beta", top_k=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out["status"] == "ok" and out["results"]
+    assert len(sc.statusTracker().getJobIdsForGroup("one-plan-search")) <= 3
+
+
+def test_mmr_string_and_bigint_ids_pick_alike(spark):
+    """The API reranks string chunk ids, the catalog bigint ids: the same
+    pool keyed either way must give the same picks and mmr values,
+    including the smallest-id tie-break between identical rows."""
+    from mcpvectordb_spark.operators.mmr import mmr_rerank
+
+    rows = [
+        (0, [1.0, 0.0, 0.0], 0.9),
+        (1, [1.0, 0.0, 0.0], 0.9),    # identical to 0: a tie, 0 wins
+        (2, [0.0, 1.0, 0.0], 0.6),
+        (3, [0.0, 1.0, 0.1], 0.6),
+        (4, [0.5, 0.5, 0.7], 0.7),
+    ]
+    schema = "id {}, embedding array<double>, rel double"
+    big = spark.createDataFrame([(100 + i, v, r) for i, v, r in rows], schema.format("long"))
+    strs = spark.createDataFrame([(f"c{100 + i}", v, r) for i, v, r in rows], schema.format("string"))
+    a = [(r["step"], f"c{r['id']}", r["mmr"]) for r in mmr_rerank(big, 5, lam=0.6).collect()]
+    b = [(r["step"], r["id"], r["mmr"]) for r in mmr_rerank(strs, 5, lam=0.6).collect()]
+    assert a == b
+    assert a[0][1] == "c100" and len(a) == 5
