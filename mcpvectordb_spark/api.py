@@ -97,7 +97,8 @@ class VectorDB:
             return _err(f"file not found: {path}")
         ext = os.path.splitext(p)[1].lstrip(".").lower() or "unknown"
         try:
-            text = convert_bytes(open(p, "rb").read(), ext)
+            with open(p, "rb") as f:
+                text = convert_bytes(f.read(), ext)
         except Exception as exc:
             return _err(f"conversion failed: {exc}")
         return self.ingest_content(text, source=p, library=library, metadata=metadata)

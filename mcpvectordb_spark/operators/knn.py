@@ -12,7 +12,13 @@ Scale notes:
   plan literal) that stays in whole-stage codegen; at 256 dims and up
   (the API's 768-d default) an Arrow UDF doing one BLAS matmul per batch,
   because a 768-literal expression costs more to analyse than a small
-  store costs to score;
+  store costs to score.  The Arrow UDF adds about 0.15 s of fixed cost to
+  its stage on a 4-core host, now that ``session.get_spark`` starts
+  workers through ``_pyworker`` (it was about 0.3 s while every task
+  re-read pyspark.zip and the spark-core jar).  A JVM kernel with the
+  query as one constant-folded array literal (``aggregate(zip_with(...))``)
+  was measured against it at 768 dims: faster at 1k rows, 1.3-2.4x slower
+  at 20k-100k rows — not worth a third kernel;
 - the pre-filter sits below the scoring projection, so Catalyst pushes it
   into the Parquet scan (partition pruning on ``library``);
 - global top-k compiles to TakeOrderedAndProject — each partition keeps k
@@ -101,7 +107,11 @@ def vector_score(
     (Arrow/BLAS batch — faster for wide vectors), or "auto" (expr below
     256 dims, pandas at or above).  The literal kernel inlines every
     component as a plan literal, so at 768-d its analysis alone costs
-    more than scoring a small store — "auto" avoids it there."""
+    more than scoring a small store — "auto" avoids it there.  The Arrow
+    kernel adds about 0.15 s of fixed cost per stage (Python worker
+    start-up included); a constant-folded array-literal JVM kernel beats
+    it at 1k rows but is 1.3-2.4x slower at 20k-100k rows, so "auto"
+    stays Arrow at >= 256 dims."""
     query = [float(x) for x in query]
     if impl == "auto":
         impl = "pandas" if len(query) >= 256 else "expr"

@@ -8,6 +8,9 @@ import os
 from pyspark.sql import SparkSession
 
 
+WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
+
+
 def ui_enabled(env=os.environ) -> bool:
     """``SPARK_GRAFT_UI`` opts a session into the Spark UI: only ``1`` or
     ``true`` (any case) turn it on, so ``SPARK_GRAFT_UI=0`` keeps it off."""
@@ -53,7 +56,20 @@ def get_spark(app_name: str = "mcpvectordb_spark", shuffle_partitions: int | Non
         # bench.py prints its one-line JSON summary LAST so any tail window
         # retains it.
         .config("spark.ui.showConsoleProgress", "false")
+        # Start Python workers through _pyworker, which drops Spark's
+        # pyspark/py4j/spark-core archives from the workers' sys.path when
+        # the same packages resolve from a directory: every task's
+        # importlib.invalidate_caches() made each cached zipimporter re-read
+        # its archive, ~0.25 s per task.
+        .config("spark.python.daemon.module", "mcpvectordb_spark._pyworker")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
+    # The serving and catalog plans use global windows over pools that are
+    # bounded by construction; WindowExec warns "No Partition Defined" at
+    # every such window, several lines per search.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        WINDOW_EXEC_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
+    )
     return spark

@@ -1,6 +1,9 @@
 """API facade: the reference's 9-tool surface — parameter validation bounds,
 error envelopes, result dict shapes (docs/mcp-tool-spec.md contract)."""
 
+import gc
+import warnings
+
 import pytest
 
 from mcpvectordb_spark.api import VectorDB
@@ -89,6 +92,17 @@ def test_ingest_file_and_folder(db, tmp_path):
     assert bulk["errors"][0]["source"].endswith("bad.pdf")
     assert db.ingest_file(str(d / "ghost.md"))["status"] == "error"
     assert db.ingest_folder(str(d / "ghost"))["status"] == "error"
+
+
+def test_ingest_file_closes_its_file(db, tmp_path):
+    # a failing conversion still reads the file, and needs no Spark job
+    f = tmp_path / "bad.pdf"
+    f.write_bytes(b"%PDF-fake")
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always", ResourceWarning)
+        assert db.ingest_file(str(f))["status"] == "error"
+        gc.collect()  # an unclosed handle warns when it is collected
+    assert not [w for w in seen if str(f) in str(w.message)]
 
 
 def test_ingest_url_validation(db):

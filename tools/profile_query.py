@@ -30,34 +30,8 @@ sys.path.insert(0, ".")
 
 os.environ.setdefault("SPARK_GRAFT_UI", "1")
 
-from pyspark.sql import SparkSession
-
 from mcpvectordb_spark.catalog import QUERIES
-
-
-def _spark_with_ui():
-    """session.py's bench session, with the UI server on so the REST API
-    serves task metrics.  Built here (not via get_spark) so the tool also
-    profiles trees whose session factory predates the SPARK_GRAFT_UI knob."""
-    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if pkg_parent not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = pkg_parent + (os.pathsep + existing if existing else "")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile_query")
-        .config("spark.sql.shuffle.partitions", cpus if cpus.isdigit() else "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+from mcpvectordb_spark.session import get_spark
 
 
 def _get(url: str):
@@ -76,7 +50,7 @@ def main() -> None:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r10"
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = _spark_with_ui()
+    spark = get_spark("profile_query")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     ui = sc.uiWebUrl
