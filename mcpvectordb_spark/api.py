@@ -15,7 +15,6 @@ Error envelope: like the reference, API calls return
 from __future__ import annotations
 
 import json
-from typing import Any
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -185,8 +184,7 @@ class VectorDB:
     # -- query --------------------------------------------------------------
 
     def search(self, query: str, top_k: int | None = None, library: str | None = None,
-               filter: dict | None = None, fusion: str = "rrf",
-               highlight: bool = False, method: str = "exact",
+               filter: dict | None = None, fusion: str = "rrf", highlight: bool = False,
                diversify: float | None = None) -> dict:  # noqa: A002 - reference param name
         """Reference server.py:228-289 — hybrid BM25+vector search with RRF,
         falling back to vector-only when hybrid is disabled (config.py:59).
@@ -198,18 +196,16 @@ class VectorDB:
         cuts, ranks and fusion run as global windows, so a default search
         costs two Spark jobs and nothing joins back to the store.
 
+        The vector leg is always the exact flat scan, as the reference's is
+        below ~50k chunks; the coarse+refine scans (knn_topk_sq8 /
+        knn_truncated_topk) serve the catalog, and ANN search sits behind
+        maintained indexes (knn.IvfIndex / pq.IvfPqIndex).
+
         ``fusion``: "rrf" (reference default) or "blend" (convex score
         blend over min-max-normalized legs — beyond-reference option).
         ``highlight``: add a ``snippet`` field per result — a windowed
         excerpt with query terms marked (operators/bm25.py::highlight_col;
         beyond-reference).
-        ``method``: vector-leg scan strategy — "exact" (flat scan, the
-        reference's sub-50k regime), "sq8" (int8 coarse scan + exact
-        refine) or "matryoshka" (truncated-dim coarse scan + exact
-        refine); the coarse strategies' top candidates enter the plan as
-        its vector leg.  The trained-state ANN paths (IVF / PQ) live behind
-        their own maintained indexes (knn.IvfIndex / pq.IvfPqIndex) — a
-        per-request train would be neither correct nor honest to time.
         ``diversify``: MMR λ in (0, 1] — rerank the top candidate pool
         with maximal marginal relevance (operators/mmr.py) so near-identical
         chunks of one document stop monopolizing the result page; results
@@ -220,8 +216,6 @@ class VectorDB:
             return _err("top_k must be an integer")
         if fusion not in ("rrf", "blend"):
             return _err("fusion must be 'rrf' or 'blend'")
-        if method not in ("exact", "sq8", "matryoshka"):
-            return _err("method must be 'exact', 'sq8' or 'matryoshka'")
         if diversify is not None and (
             not isinstance(diversify, (int, float)) or isinstance(diversify, bool)
             or not (0.0 < diversify <= 1.0)
@@ -240,23 +234,12 @@ class VectorDB:
         scope = self.store.read().filter(pred)
         qv = [float(x) for x in self.embedder.embed_query(query)]
         candidates = max(top_k, top_k * self.config.refine_factor)
-        vec_leg = None
-        if method == "sq8":
-            from mcpvectordb_spark.operators.knn import knn_topk_sq8
-
-            vec_leg = knn_topk_sq8(scope, qv, candidates, tie_col="id")
-        elif method == "matryoshka":
-            from mcpvectordb_spark.operators.knn import knn_truncated_topk
-
-            vec_leg = knn_truncated_topk(
-                scope, qv, candidates, dims_coarse=max(8, len(qv) // 4), id_col="id"
-            )
         cfg = self.config
         ranked = hybrid_search(
             scope, qv, query if cfg.hybrid_search_enabled else None,
             candidates if diversify is not None else top_k, candidates,
             RESULT_COLS + (("embedding",) if diversify is not None else ()),
-            fusion=fusion, k0=cfg.rrf_k0, k1=cfg.bm25_k1, b=cfg.bm25_b, vec_leg=vec_leg,
+            fusion=fusion, k0=cfg.rrf_k0, k1=cfg.bm25_k1, b=cfg.bm25_b,
         )
         if diversify is not None:
             from mcpvectordb_spark.operators.mmr import mmr_rerank

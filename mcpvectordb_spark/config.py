@@ -40,16 +40,9 @@ class EngineConfig:
     bm25_b: float = 0.75
     rrf_k0: int = 60
 
-    # ID generation: the reference uses uuid4 (ingestor.py:248,253);
-    # deterministic mode derives ids from content identity (FIXTURES.md
-    # rule 3) so results are oracle-hashable. Semantics are identical —
-    # ids are opaque — so deterministic is the default.
-    deterministic_ids: bool = True
-
-    # Ingestion (reference config.py:68, 104-105; ingestor.py:103).
+    # Ingestion (reference config.py:68, 104-105).
     max_upload_bytes: int = 50 * 1024 * 1024
     http_timeout_seconds: float = 10.0
-    max_concurrency: int = 4
 
     # Supported conversion formats (reference converter.py:13-39).
     supported_extensions: tuple[str, ...] = field(

@@ -15,7 +15,7 @@ The gate is a broadcast left join of the incoming batch against the store's
 per-document hashes — the distributed form of the reference's point lookup
 (store.py:206-235).
 
-Determinism (FIXTURES.md rules 3-4): doc_id = sha2(source:library)[:16],
+Determinism (FIXTURES.md rules 3-4): doc_id = sha2(sha2(source)‖sha2(library))[:16],
 chunk id = doc_id-chunk_index, created_at injectable (defaults to now).
 """
 
@@ -53,29 +53,20 @@ def file_type_of(source):
     )
 
 
-def prepare_batch(
-    raw_docs: DataFrame, created_at: str | None = None, config: EngineConfig = DEFAULT
-) -> DataFrame:
+def prepare_batch(raw_docs: DataFrame, created_at: str | None = None) -> DataFrame:
     """Normalize a raw-docs batch: doc_id, title, hash, type.
 
-    doc_id is sha2(source:library)[:16] in deterministic mode (FIXTURES.md
-    rule 3) or uuid4 like the reference (ingestor.py:248) otherwise."""
+    doc_id is derived from document identity (FIXTURES.md rule 3); the
+    reference's uuid4 ids (ingestor.py:248) are no less opaque."""
     ts = created_at or datetime.now(UTC).isoformat(timespec="seconds")
     c = F.col("content")
     # hash-of-hashes: concat_ws(':') would be ambiguous at the separator —
     # ('a:b','c') and ('a','b:c') must NOT share a doc_id (sources are
     # URLs, ':' is routine)
-    doc_id = (
-        F.substring(
-            F.sha2(F.concat(F.sha2(F.col("source"), 256), F.sha2(F.col("library"), 256)), 256),
-            1, 16,
-        )
-        if config.deterministic_ids
-        else F.expr("uuid()")
-    )
+    key_hash = F.sha2(F.concat(F.sha2(F.col("source"), 256), F.sha2(F.col("library"), 256)), 256)
     return (
         raw_docs.withColumn("content_hash", F.sha2(c.cast("string"), 256))
-        .withColumn("doc_id", doc_id)
+        .withColumn("doc_id", F.substring(key_hash, 1, 16))
         .withColumn("title", extract_title(c, F.col("source")))
         .withColumn("file_type", file_type_of(F.col("source")))
         .withColumn("created_at", F.lit(ts))
@@ -140,7 +131,7 @@ def ingest_batch(
 
     w = Window.partitionBy("source", "library").orderBy("content_hash")
     prepared = (
-        prepare_batch(raw_docs, created_at, config)
+        prepare_batch(raw_docs, created_at)
         .withColumn("_dup_rank", F.row_number().over(w))
         .withColumn("valid", F.col("valid") & (F.col("_dup_rank") == 1))
     )

@@ -17,10 +17,10 @@ broadcast.
 
 The API's search does not compose these operators: :func:`hybrid_search`
 computes the same rows as one plan over one scan (both legs scored per
-row, cuts, ranks and fusion as global windows), because at the serving
-regime's store sizes the cost of a search is per-plan and per-job
-overhead, not scan work.  The composed operators stay for the catalog and
-as the reference the one plan is tested against.
+row, the vector leg always exactly; cuts, ranks and fusion as global
+windows), because at the serving regime's store sizes a search costs
+per-plan and per-job overhead, not scan work.  The composed operators
+stay for the catalog and as the reference the one plan is tested against.
 """
 
 from __future__ import annotations
@@ -149,7 +149,6 @@ def hybrid_search(
     k0: int = 60,
     k1: float = 1.2,
     b: float = 0.75,
-    vec_leg: DataFrame | None = None,
 ) -> DataFrame:
     """Hybrid BM25 + vector top-``k`` as ONE plan over one scan of
     ``scope``, a chunk table (``id``, ``embedding``, ``content``).
@@ -165,55 +164,35 @@ def hybrid_search(
     - BM25 statistics (N, avgdl, df per term) over ``scope``, as
       ``bm25_score`` computes them.
 
-    Every row is scored once in the scan: the vector score with the kernel
-    ``knn_topk`` picks (:func:`vector_score`), each query term's frequency
-    as ``size(tokens) − size(array_remove(tokens, t))`` — no explode, no
-    posting-list shuffle, no checkpoint.  One exchange then gathers the
-    scored rows into a single partition, where global windows compute the
-    statistics, both ranks and the fusion.  Only ``keep`` (packed in one
-    struct) crosses it, so leave the embedding out of ``keep`` unless a
-    consumer (MMR) needs it.  The windowed steps are SQL text: each
-    Column call is a round trip to the JVM, and a search's plan is built
-    on every request.
+    Every row is scored once in the scan: the exact vector score with the
+    kernel ``knn_topk`` picks (:func:`vector_score`), each query term's
+    frequency as ``size(tokens) − size(array_remove(tokens, t))`` — no
+    explode, no posting-list shuffle, no checkpoint.  One exchange then
+    gathers the scored rows into a single partition, where global windows
+    compute the statistics, both ranks and the fusion.  Only ``keep``
+    (packed in one struct) crosses it, so leave the embedding out of
+    ``keep`` unless a consumer (MMR) needs it.  The windowed steps are SQL
+    text: each Column call is a round trip to the JVM, and a search's plan
+    is built on every request.
 
     ``query=None`` is vector-only search: the vector cut at ``k``.
-    ``vec_leg``: a precomputed vector cut (id, score) — the
-    coarse+refine result of ``knn_topk_sq8`` / ``knn_truncated_topk`` —
-    used instead of scoring ``query_vec`` here.
     """
     by_score = [F.desc("score"), F.asc("id")]
-    if vec_leg is not None:
-        if query is None:
-            return vec_leg.select(*keep, "score").orderBy(*by_score).limit(k)
-        scope = scope.join(
-            F.broadcast(vec_leg.select(
-                "id", F.col("score").alias("__v"), F.lit(True).alias("__leg")
-            )),
-            "id",
-            "left",
-        )
-        vscore = F.col("__v")
-        in_vec = "__leg IS NOT NULL"
-    else:
-        vscore = vector_score(F.col("embedding"), query_vec)
-        if query is None:
-            return scope.select(*keep, vscore.alias("score")).orderBy(*by_score).limit(k)
-        in_vec = f"row_number() OVER (ORDER BY __v DESC, __row.id) <= {candidates}"
+    vscore = vector_score(F.col("embedding"), query_vec)
+    if query is None:
+        return scope.select(*keep, vscore.alias("score")).orderBy(*by_score).limit(k)
 
     terms = query_terms(query)
-    leg_flag = ["__leg"] if vec_leg is not None else []
     # tokens are a column of their own so that every term counts from one
     # tokenization (the optimizer keeps a non-trivial column computed once)
     toks = F.col("__tok")
     scored = scope.select(
         F.struct(*keep).alias("__row"),
         vscore.alias("__v"),
-        *leg_flag,
         tokens_col(F.col("content")).alias("__tok"),
     ).select(
         "__row",
         "__v",
-        *leg_flag,
         F.size(toks).alias("__dl"),
         *[(F.size(toks) - F.size(F.array_remove(toks, t))).alias(f"__tf{i}")
           for i, t in enumerate(terms)],
@@ -227,6 +206,7 @@ def hybrid_search(
         for i in range(len(terms))
     ]
     hit = " OR ".join(f"__tf{i} > 0" for i in range(len(terms))) or "false"
+    in_vec = f"row_number() OVER (ORDER BY __v DESC, __row.id) <= {candidates}"
     legs = scored.selectExpr(
         "__row", "__v", f"{in_vec} AS __inv",
         f"{' + '.join(weights) or '0.0D'} AS __bm", f"{hit} AS __hit",

@@ -406,7 +406,6 @@ def knn_topk_sq8(
     query: Sequence[float],
     k: int,
     vec_col: str = "embedding",
-    pre_filter: Column | None = None,
     refine_factor: int = 4,
     tie_col: str | None = None,
     score_col: str = "score",
@@ -419,8 +418,6 @@ def knn_topk_sq8(
     the float vectors of the non-candidates are never needed — with a
     materialised code column the fat float column drops out of the scan
     entirely (column pruning)."""
-    if pre_filter is not None:
-        df = df.filter(pre_filter)
     qscale, qcodes = sq8_quantize_query(query)
     df = sq8_quantize(df, vec_col)
     qlit = F.array(*[F.lit(c) for c in qcodes])

@@ -119,17 +119,39 @@ def tool_listing() -> list[dict]:
     return [{k: v for k, v in t.items() if not k.startswith("_")} for t in TOOLS]
 
 
+# JSON-schema type → test of a decoded JSON value (a bool is not an integer)
+_IS_TYPE: dict[str, Callable[[Any], bool]] = {
+    "string": lambda v: isinstance(v, str),
+    "integer": lambda v: isinstance(v, int) and not isinstance(v, bool),
+    "boolean": lambda v: isinstance(v, bool),
+    "object": lambda v: isinstance(v, dict),
+    "null": lambda v: v is None,
+}
+
+
 def call_tool(db: VectorDB, name: str, arguments: dict | None) -> dict:
     """Dispatch one tools/call to the engine.  Engine-level failures come
     back as the reference's ``{"status": "error", "error": ...}`` dicts —
-    they are tool RESULTS (isError), not protocol errors."""
+    they are tool RESULTS (isError), not protocol errors.  Each argument
+    is checked against its ``inputSchema`` type first, so a wrong-typed
+    value is an error naming it, never a crash or a coerced store value."""
     spec = _BY_NAME.get(name)
     if spec is None:
         return {"status": "error", "error": f"unknown tool: {name}"}
-    args = arguments or {}
-    missing = [k for k in spec["inputSchema"]["required"] if k not in args]
+    if not isinstance(arguments or {}, dict):
+        return {"status": "error", "error": "arguments must be an object"}
+    schema = spec["inputSchema"]
+    # null for an optional argument means "not given": the tool's default applies
+    args = {k: v for k, v in (arguments or {}).items()
+            if v is not None or k in schema["required"]}
+    missing = [k for k in schema["required"] if k not in args]
     if missing:
         return {"status": "error", "error": f"missing required argument(s): {missing}"}
+    for k, v in args.items():
+        t = schema["properties"].get(k, {}).get("type", [])  # undeclared: ignored
+        types = t if isinstance(t, list) else [t]
+        if types and not any(_IS_TYPE[x](v) for x in types):
+            return {"status": "error", "error": f"argument '{k}' must be {' or '.join(types)}"}
     try:
         return spec["_dispatch"](db, args)
     except Exception as exc:  # engine errors never kill the transport

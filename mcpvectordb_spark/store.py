@@ -225,11 +225,6 @@ class ChunkStore:
             )
         return deleted
 
-    def replace_document(self, doc_id: str, new_chunks: DataFrame) -> None:
-        """Delete-then-append replace cycle (reference ingestor.py:199-209)."""
-        self.delete_document(doc_id)
-        self.append(new_chunks)
-
     # -- point lookups / listings --------------------------------------------
 
     def find_existing(self, source: str, library: str) -> tuple[str, str] | None:

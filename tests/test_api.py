@@ -142,23 +142,6 @@ def test_search_highlight_snippets(db):
     assert "snippet" not in plain["results"][0]
 
 
-def test_search_method_routing(db):
-    """All three vector-leg scan strategies return the same results on
-    the mini corpus (candidates >= corpus size makes the coarse passes
-    lossless) and an unknown method errors."""
-    db.ingest_content("alpha beta gamma " * 30, source="a.md", library="m")
-    db.ingest_content("delta epsilon zeta " * 30, source="b.md", library="m")
-    db.ingest_content("unrelated cooking pasta " * 30, source="c.md", library="m")
-    base = db.search("alpha beta gamma", top_k=3)
-    assert base["status"] == "ok" and base["results"]
-    for method in ("sq8", "matryoshka"):
-        got = db.search("alpha beta gamma", top_k=3, method=method)
-        assert got["status"] == "ok", method
-        assert [r["id"] for r in got["results"]] == [r["id"] for r in base["results"]], method
-    err = db.search("alpha", method="hnsw")
-    assert err["status"] == "error" and "method" in err["error"]
-
-
 def test_search_diversify_spreads_documents(spark, tmp_path):
     """diversify=λ reranks with MMR: ingest one doc whose chunks are
     near-identical plus a distinct doc; plain search's top-2 is the clone
@@ -223,3 +206,15 @@ def test_delete_where_and_snapshot_api(spark, tmp_path):
     assert libs == {"L1", "L2"}
     tags = [s["tag"] for s in db.list_snapshots()["snapshots"]]
     assert "before-delete" in tags and "pre-restore" in tags
+
+
+def test_every_config_field_is_read_by_the_engine():
+    """EngineConfig carries no knob that no engine code reads."""
+    import dataclasses
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "mcpvectordb_spark"
+    code = "\n".join(p.read_text() for p in pkg.rglob("*.py") if p.name != "config.py")
+    assert [f.name for f in dataclasses.fields(TEST)
+            if not re.search(rf"\.{f.name}\b", code)] == []

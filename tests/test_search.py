@@ -578,24 +578,16 @@ def search_db(spark, tmp_path_factory):
     return db
 
 
-def _reference_rows(db, query, top_k, library=None, filter=None, fusion="rrf",  # noqa: A002
-                    method="exact"):
+def _reference_rows(db, query, top_k, library=None, filter=None, fusion="rrf"):  # noqa: A002
     """The search as the separate catalog operators compose it: both legs
     cut at top_k·refine_factor, fused, joined back to the store."""
     from mcpvectordb_spark.operators.hybrid import weighted_fuse_topk
-    from mcpvectordb_spark.operators.knn import knn_topk_sq8, knn_truncated_topk
 
     cfg = db.config
     chunks = db.store.read().filter(build_filter(library, filter))
     qv = [float(x) for x in db.embedder.embed_query(query)]
     cand = max(top_k, top_k * cfg.refine_factor)
-    if method == "sq8":
-        vec_leg = knn_topk_sq8(chunks, qv, cand, tie_col="id")
-    elif method == "matryoshka":
-        vec_leg = knn_truncated_topk(chunks, qv, cand, dims_coarse=max(8, len(qv) // 4),
-                                     id_col="id")
-    else:
-        vec_leg = knn_topk(chunks, qv, cand, tie_col="id")
+    vec_leg = knn_topk(chunks, qv, cand, tie_col="id")
     if not cfg.hybrid_search_enabled:
         ranked = vec_leg.limit(top_k)
     else:
@@ -633,14 +625,6 @@ def test_api_search_matches_composed_operators(search_db, fusion, query, top_k, 
     assert got == _reference_rows(search_db, query, top_k, fusion=fusion, **scope)
     if scope.get("library") == "ghost":
         assert got == []
-
-
-@pytest.mark.parametrize("method", ["sq8", "matryoshka"])
-def test_api_search_coarse_vector_leg_matches_composed_operators(search_db, method):
-    """The coarse+refine strategies' top candidates enter the one plan as
-    its vector leg."""
-    got = _api_rows(search_db, "alpha beta gamma", 2, method=method)
-    assert got == _reference_rows(search_db, "alpha beta gamma", 2, method=method)
 
 
 def test_api_search_vector_only_matches_knn_topk(search_db):

@@ -7,6 +7,7 @@ import json
 import threading
 import urllib.request
 import urllib.error
+from unittest.mock import Mock, call
 
 import pytest
 
@@ -86,6 +87,63 @@ def test_call_tool_error_contract(db):
     resp = handle_rpc(db, _rpc("tools/call", {"name": "get_document",
                                               "arguments": {"doc_id": "absent"}}))
     assert resp["result"]["isError"] is True
+
+
+@pytest.mark.parametrize("tool,arguments,bad", [
+    ("search", {"query": "x", "filter": ["x"]}, "filter"),
+    ("search", {"query": "x", "library": 5}, "library"),
+    ("search", {"query": "x", "top_k": True}, "top_k"),
+    ("search", {"query": None}, "query"),
+    ("list_documents", {"limit": "5"}, "limit"),
+    ("ingest_content", {"content": 5, "source": "s.md"}, "content"),
+    ("ingest_content", {"content": "text", "source": 7}, "source"),
+    ("ingest_content", {"content": "text", "source": "s.md", "library": 3}, "library"),
+    ("ingest_content", {"content": "text", "source": "s.md", "metadata": [1]}, "metadata"),
+    ("get_document", {"doc_id": ["x"]}, "doc_id"),
+    ("delete_document", {"doc_id": 5}, "doc_id"),
+    ("server_info", {"check_path": 5}, "check_path"),
+    ("ingest_file", {"path": 5}, "path"),
+    ("ingest_url", {"url": 5}, "url"),
+    ("ingest_folder", {"folder": 5}, "folder"),
+    ("ingest_folder", {"folder": "/tmp", "recursive": "yes"}, "recursive"),
+])
+def test_call_tool_rejects_wrong_typed_arguments(tool, arguments, bad):
+    """A wrong JSON type is an error naming the argument, returned before
+    anything reaches the engine (so nothing is indexed)."""
+    engine = Mock()
+    out = call_tool(engine, tool, arguments)
+    assert out["status"] == "error" and f"'{bad}'" in out["error"], out
+    assert engine.method_calls == []
+
+
+def test_call_tool_null_optional_arguments_take_defaults():
+    engine = Mock()
+    call_tool(engine, "ingest_content", {"content": "t", "source": "s", "library": None})
+    call_tool(engine, "search", {"query": "q", "top_k": None, "library": None, "filter": None})
+    call_tool(engine, "list_documents", {"library": "L", "limit": 5, "offset": None})
+    assert call_tool(engine, "search", [1])["status"] == "error"
+    assert engine.method_calls == [call.ingest_content("t", "s", "default", None),
+                                   call.search("q", None, None, None),
+                                   call.list_documents("L", 5, 0)]
+
+
+@pytest.mark.parametrize("tool", sorted(REFERENCE_TOOLS))
+def test_every_schema_property_reaches_its_vectordb_parameter(tool):
+    """Each tool calls the VectorDB method of its name, and every
+    inputSchema property lands in the parameter of the same name, so no
+    keyword the engine lacks is reachable from the wire."""
+    import inspect
+
+    props = next(t for t in tool_listing() if t["name"] == tool)["inputSchema"]["properties"]
+    types = {k: p["type"] if isinstance(p["type"], str) else p["type"][0] for k, p in props.items()}
+    # a value of each property's (first) type, distinct between properties
+    args = {k: {"string": f"v-{k}", "integer": len(k), "boolean": False, "object": {"k": k}}[t]
+            for k, t in types.items()}
+    engine = Mock()
+    call_tool(engine, tool, args)
+    [(name, pos, kw)] = engine.method_calls
+    bound = inspect.signature(getattr(VectorDB, tool)).bind(None, *pos, **kw).arguments
+    assert name == tool and {k: bound.get(k) for k in props} == args
 
 
 def _post(url, data, content_type):
