@@ -14,6 +14,7 @@ Error envelope: like the reference, API calls return
 
 from __future__ import annotations
 
+import functools
 import json
 
 from pyspark.sql import SparkSession
@@ -36,6 +37,28 @@ RESULT_COLS = ("id", "doc_id", "source", "title", "library", "content", "chunk_i
 
 def _err(msg: str) -> dict:
     return {"status": "error", "error": msg}
+
+
+def _ingest_arg_error(metadata, **names) -> dict | None:
+    """Error envelope for an empty or non-str name argument or a non-dict
+    ``metadata``: Spark would store an empty library as its null partition
+    and index a null library under a null doc_id."""
+    for name, value in names.items():
+        if not isinstance(value, str) or not value:
+            return _err(f"{name} must be a non-empty string")
+    if metadata is not None and not isinstance(metadata, dict):
+        return _err("metadata must be an object")
+    return None
+
+
+def _pinned(method):
+    """Run a read-only call inside the store's read pin, so the version it
+    resolves stays readable until its collect() has returned."""
+    @functools.wraps(method)
+    def call(self, *args, **kwargs):
+        with self.store.pinned():
+            return method(self, *args, **kwargs)
+    return call
 
 
 class VectorDB:
@@ -71,8 +94,8 @@ class VectorDB:
         """Reference server.py:138-177 — index already-extracted text."""
         if not content or not content.strip():
             return _err("content must be non-empty")
-        if not source:
-            return _err("source must be non-empty")
+        if bad := _ingest_arg_error(metadata, source=source, library=library):
+            return bad
         raw = self.spark.createDataFrame(
             [(source, library, content, json.dumps(metadata or {}))],
             "source string, library string, content string, metadata string",
@@ -143,6 +166,8 @@ class VectorDB:
         from mcpvectordb_spark.converter import convert_stage
         from mcpvectordb_spark.sources.files import read_folder
 
+        if bad := _ingest_arg_error(metadata, folder=folder, library=library):
+            return bad
         if not os.path.isdir(os.path.expanduser(folder)):
             return _err(f"folder not found: {folder}")
         files = read_folder(self.spark, os.path.expanduser(folder), recursive, self.config)
@@ -183,6 +208,7 @@ class VectorDB:
 
     # -- query --------------------------------------------------------------
 
+    @_pinned
     def search(self, query: str, top_k: int | None = None, library: str | None = None,
                filter: dict | None = None, fusion: str = "rrf", highlight: bool = False,
                diversify: float | None = None) -> dict:  # noqa: A002 - reference param name
@@ -272,6 +298,7 @@ class VectorDB:
             ],
         }
 
+    @_pinned
     def list_documents(self, library: str | None = None, limit: int = 20, offset: int = 0) -> dict:
         """Reference server.py:291-320."""
         try:
@@ -282,6 +309,7 @@ class VectorDB:
             d["metadata"] = json.loads(d.get("metadata") or "{}")
         return {"status": "ok", "documents": docs, "count": len(docs)}
 
+    @_pinned
     def list_libraries(self) -> dict:
         """Reference server.py:322-338."""
         return {"status": "ok", "libraries": self.store.list_libraries()}
@@ -311,10 +339,7 @@ class VectorDB:
 
     def snapshot(self, tag: str | None = None) -> dict:
         """Create a zero-copy store snapshot (store.py::snapshot)."""
-        try:
-            version = self.store.snapshot(tag)
-        except NotImplementedError as exc:
-            return _err(str(exc))
+        version = self.store.snapshot(tag)
         return {"status": "ok", "version": version, "tag": tag}
 
     def list_snapshots(self) -> dict:
@@ -325,10 +350,11 @@ class VectorDB:
         auto-snapshotted (tag 'pre-restore') and its version returned."""
         try:
             safety = self.store.restore(version)
-        except (ValueError, NotImplementedError) as exc:
+        except ValueError as exc:
             return _err(str(exc))
         return {"status": "ok", "restored": version, "pre_restore_version": safety}
 
+    @_pinned
     def get_document(self, doc_id: str) -> dict:
         """Reference server.py:363-398."""
         if not doc_id:
@@ -339,6 +365,7 @@ class VectorDB:
         doc["metadata"] = json.loads(doc.get("metadata") or "{}")
         return {"status": "ok", **doc}
 
+    @_pinned
     def server_info(self, check_path: str | None = None) -> dict:
         """Reference server.py:400-420 (spec docs/mcp-tool-spec.md:253-285):
         diagnostics + optional ``check_path`` readability probe."""

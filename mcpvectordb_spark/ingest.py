@@ -118,10 +118,10 @@ def ingest_batch(
     result DataFrame (INGEST_RESULT_SCHEMA shape).
 
     Two write-safety rules learned the hard way:
-    - the gate result is ``localCheckpoint``-ed (lineage cut) BEFORE any
-      write: the gate's plan reads the store path, and Spark's
-      recacheByPath would otherwise silently recompute cached statuses
-      against the post-write files;
+    - the gate is read under the store's read pin and ``localCheckpoint``-ed
+      (lineage cut) BEFORE any write: its plan reads the files of the
+      version it resolved, which this ingest's own delete/append commits
+      may garbage-collect;
     - duplicate (source, library) keys within one batch are rejected as
       failed rows — the pair is the document identity (reference
       store.py:206-235), so two batch rows with the same key would collide
@@ -135,7 +135,8 @@ def ingest_batch(
         .withColumn("_dup_rank", F.row_number().over(w))
         .withColumn("valid", F.col("valid") & (F.col("_dup_rank") == 1))
     )
-    gated = dedup_gate(prepared, store).localCheckpoint(eager=True)
+    with store.pinned():
+        gated = dedup_gate(prepared, store).localCheckpoint(eager=True)
 
     to_write = gated.filter(F.col("status").isin("indexed", "replaced"))
     # r10 optimization (guide §2.5 input skew / §1.2): AQE coalesces the
@@ -149,7 +150,8 @@ def ingest_batch(
     # and the downstream counts/digests are content-keyed, so placement
     # does not affect any result.
     sc = raw_docs.sparkSession.sparkContext
-    if gated.rdd.getNumPartitions() < sc.defaultParallelism:
+    gate_parts = gated.rdd.getNumPartitions()
+    if gate_parts < sc.defaultParallelism:
         to_write = to_write.repartition(sc.defaultParallelism)
     chunked = chunk_documents(to_write, "content", config, token_counter)
     embedded = embed_documents_stage(
@@ -179,14 +181,18 @@ def ingest_batch(
 
     # Replace = delete-then-append (reference ingestor.py:199-209), fully
     # set-based: the replaced-ids set flows from the (checkpointed) gate
-    # into ONE anti-join rewrite per affected partition — the ids never
-    # visit the driver, so the path is the same at 10 or 10M replacements.
+    # into ONE delete commit that rewrites only the files holding a replaced
+    # document — the ids never visit the driver, so the path is the same at
+    # 10 or 10M replacements.
     old_ids_df = (
         gated.filter(F.col("status") == "replaced")
         .select(F.col("_old_doc_id").alias("doc_id"))
     )
     store.delete_documents_df(old_ids_df)
-    store.append(chunks)
+    # Write the cached chunks back at the gate's partitioning: the fan-out
+    # above serves the CPU-heavy stages only, and each write task leaves one
+    # file per library that every later scan of the library opens.
+    store.append(chunks.coalesce(gate_parts))
     chunks.unpersist()
     results = (
         gated.join(counts, "doc_id", "left")

@@ -7,22 +7,35 @@ Re-expresses /root/reference/src/mcpvectordb/store.py (LanceDB table driver,
   index on ``library`` (store.py:82-88) becomes Catalyst partition pruning;
   ``doc_id``/``source`` predicates ride Parquet min/max pushdown.
 - append is always batch (reference store.py:193-194 "never row-by-row").
-- delete is a partition-scoped anti-filter rewrite (Delta-less MERGE:
-  only partitions that contain the doc are rewritten).
+- versions: LanceDB versions every write (SURVEY §1.3); here every append,
+  delete, compaction, snapshot and restore is one commit of an immutable
+  file list (``_Log``) — Delta Lake's transaction log (Armbrust et al., VLDB
+  2020) in its simplest form — and a read reads exactly one version's files.
+- delete rewrites only the files that hold a hit (an anti-filter of each).
 - the FTS/vector "indexes" have no physical counterpart: a search computes
   the BM25 term statistics of its filtered scope at query time, in the same
   single plan that scores every row's vector (operators/hybrid.py::
   hybrid_search), and nothing is cached between requests — the correct
   physical choice at the reference's own <50k-chunk regime (store.py:274);
   see operators/ for the scale path (IVF / LSH).
+
+Writers are serialized per store path within one process; concurrent
+writers in several processes are not supported.
 """
 
 from __future__ import annotations
 
+import json
 import re
+import threading
+import uuid
+from contextlib import contextmanager
+from datetime import datetime, timezone
 from functools import reduce
 from operator import and_
+from urllib.parse import unquote
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -32,23 +45,17 @@ from mcpvectordb_spark.schema import CHUNKS_SCHEMA
 # Filter keys must be plain identifiers (reference store.py:119) — kept as an
 # API guard even though Spark Columns are parameterised (no SQL injection).
 _IDENT_RE = re.compile(r"^[a-zA-Z_][a-zA-Z0-9_]*$")
-
-# Hive/Spark partition-path escaping (ExternalCatalogUtils.charToEscape):
-# exactly these characters appear %XX-encoded in partition directory names.
-# NOTE: '{' is in the set but '}' is NOT — matching Spark's writer exactly
-# is load-bearing (a mismatch makes delete rewrite the wrong directory).
-_PATH_ESCAPE = set('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(0x20)}
-
-
-def escape_partition_value(value: str) -> str:
-    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPE else c for c in value)
-
-
-def unescape_partition_value(name: str) -> str:
-    """Inverse of :func:`escape_partition_value` (decodes any %XX byte —
-    Spark's writer only escapes _PATH_ESCAPE but reading is permissive)."""
-    return re.sub("%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name)
 _FILTERABLE = {f.name for f in CHUNKS_SCHEMA if f.name != "embedding"}
+_COLUMNS = [f.name for f in CHUNKS_SCHEMA]
+
+# Process-wide commit state, keyed by a store's qualified root path so every
+# ChunkStore on one path shares it.  _STATE guards the maps below and makes
+# "publish a version" and "resolve + pin the latest version" atomic with
+# respect to each other.
+_STATE = threading.Lock()
+_WRITERS: dict[str, threading.RLock] = {}
+_READING: list[tuple[str, int]] = []  # (root, version) of each in-flight pinned read
+_PINS = threading.local()
 
 
 class InvalidFilterError(ValueError):
@@ -73,6 +80,111 @@ def build_filter(library: str | None = None, filters: dict | None = None):
     return reduce(and_, preds) if preds else F.lit(True)
 
 
+def _entry(rel: str, nbytes: int) -> dict:
+    """Manifest entry of the data file at ``rel`` (``library=<dir>/<name>``);
+    the library is the directory's value with Spark's %XX escapes decoded."""
+    return {"path": rel, "library": unquote(rel.split("/")[0][len("library="):]), "bytes": nbytes}
+
+
+class _Log:
+    """The commit log of one store root, through the Hadoop FS API (any
+    scheme).  ``_log/<N>.json`` is version N:
+    ``{"files": [{"path", "library", "bytes"}], "snapshots": [pin]}``.
+    Data files are never overwritten; a write adds new files, then commits
+    N+1 with one create-if-absent, then garbage-collects what no kept
+    version references, so a crash before the commit leaves only
+    unreferenced files."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        jvm = spark._jvm
+        self._path = jvm.org.apache.hadoop.fs.Path
+        self._io = jvm.org.apache.commons.io.IOUtils
+        p = self._path(path)
+        self.fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+        self.root = self.fs.makeQualified(p).toString()
+
+    def path(self, rel: str):
+        return self._path(f"{self.root}/{rel}")
+
+    def versions(self) -> list[int]:
+        log = self.path("_log")
+        if not self.fs.exists(log):
+            return []
+        names = [st.getPath().getName() for st in self.fs.listStatus(log)]
+        return [int(n[: -len(".json")]) for n in names if n.endswith(".json") and n[0].isdigit()]
+
+    def load(self, version: int) -> dict:
+        stream = self.fs.open(self.path(f"_log/{version}.json"))
+        try:
+            return json.loads(self._io.toString(stream, "UTF-8"))
+        finally:
+            stream.close()
+
+    def publish(self, version: int, manifest: dict) -> bool:
+        """Create ``_log/<version>.json`` if absent; False if it exists."""
+        try:
+            out = self.fs.create(self.path(f"_log/{version}.json"), False)
+        except Py4JJavaError as exc:
+            if "FileAlreadyExistsException" not in str(exc):
+                raise
+            return False
+        try:
+            out.write(json.dumps(manifest).encode())
+        finally:
+            out.close()
+        return True
+
+    def data_files(self) -> list[dict]:
+        """Every Parquet file under ``library=*/``, referenced or not."""
+        out = []
+        if not self.fs.exists(self._path(self.root)):
+            return out
+        it = self.fs.listFiles(self._path(self.root), True)
+        while it.hasNext():
+            st = it.next()
+            rel = st.getPath().toString()[len(self.root) + 1:]
+            parts = rel.split("/")
+            if len(parts) == 2 and parts[0].startswith("library=") and not parts[1].startswith(("_", ".")):
+                out.append(_entry(rel, st.getLen()))
+        return out
+
+    def head(self, adopt: bool) -> tuple[int, dict]:
+        """The latest (version, manifest).  A store without a log is adopted
+        as version 0 by listing its files once (stores written before the
+        log existed); with ``adopt`` an empty one gets an empty version 0 too,
+        so a crashed first commit cannot leave files a listing would adopt.
+        No log and no files: version -1, the empty table."""
+        versions = self.versions()
+        if versions:
+            return max(versions), self.load(max(versions))
+        manifest = {"files": self.data_files(), "snapshots": []}
+        if not (manifest["files"] or adopt):
+            return -1, manifest
+        if not self.publish(0, manifest):
+            manifest = self.load(0)
+        return 0, manifest
+
+    def commit(self, base: int, files: list[dict], snapshots: list[dict]) -> int:
+        """Publish version base+1, then delete every manifest and data file
+        that neither it, a snapshot pin nor an in-flight read references."""
+        version = base + 1
+        manifest = {"files": files, "snapshots": snapshots}
+        with _STATE:
+            if not self.publish(version, manifest):
+                raise RuntimeError(f"{self.root}: version {version} was committed by another writer")
+            keep = {version} | {s["table_version"] for s in snapshots}
+            keep |= {v for root, v in _READING if root == self.root}
+        live = {f["path"] for v in keep - {version} for f in self.load(v)["files"]}
+        live |= {f["path"] for f in files}
+        for v in set(self.versions()) - keep:
+            self.fs.delete(self.path(f"_log/{v}.json"), False)
+        for f in self.data_files():
+            if f["path"] not in live:
+                self.fs.delete(self.path(f["path"]), False)
+        self.fs.delete(self.path("_stage"), True)
+        return version
+
+
 class ChunkStore:
     """Path-backed chunks table. Cheap to construct (the reference opens a
     LanceDB connection per call, store.py:156-160; here the SparkSession is
@@ -83,28 +195,93 @@ class ChunkStore:
         self.path = path
         self.config = config
 
+    # -- versions -------------------------------------------------------------
+
+    @contextmanager
+    def pinned(self):
+        """Keep the files of every version a ``read()`` resolves inside this
+        block until the block exits, so a request reads the version it
+        started on to the end while other threads commit.  Nested blocks
+        share the outermost one's pins."""
+        if getattr(_PINS, "held", None) is not None:
+            yield
+            return
+        _PINS.held = []
+        try:
+            yield
+        finally:
+            with _STATE:
+                for pin in _PINS.held:
+                    _READING.remove(pin)
+            _PINS.held = None
+
+    def _resolve(self) -> tuple[_Log, dict]:
+        log = _Log(self.spark, self.path)
+        with _STATE:
+            version, manifest = log.head(adopt=False)
+            held = getattr(_PINS, "held", None)
+            if held is not None and version >= 0:
+                _READING.append((log.root, version))
+                held.append((log.root, version))
+        return log, manifest
+
+    @contextmanager
+    def _writing(self):
+        """Hold the store's writer lock; yield (log, version, manifest) of
+        the head to commit against."""
+        log = _Log(self.spark, self.path)
+        with _STATE:
+            lock = _WRITERS.setdefault(log.root, threading.RLock())
+        with lock:
+            with _STATE:  # a reader must not load a half-written adoption
+                head = log.head(adopt=True)
+            yield (log, *head)
+
+    def _stage(self, log: _Log, df: DataFrame) -> list[dict]:
+        """Write ``df`` (CHUNKS_SCHEMA columns) as new library-partitioned
+        files, move them into the table tree and return their manifest
+        entries.  Nothing references them until a commit does."""
+        stage = f"_stage/{uuid.uuid4().hex}"
+        df.write.partitionBy("library").parquet(f"{log.root}/{stage}")
+        added = []
+        for part in log.fs.listStatus(log.path(stage)):
+            if not part.isDirectory():
+                continue  # _SUCCESS
+            lib_dir = part.getPath().getName()
+            log.fs.mkdirs(log.path(lib_dir))
+            for st in log.fs.listStatus(part.getPath()):
+                rel = f"{lib_dir}/{st.getPath().getName()}"
+                log.fs.rename(st.getPath(), log.path(rel))
+                added.append(_entry(rel, st.getLen()))
+        log.fs.delete(log.path("_stage"), True)
+        return added
+
     # -- read ---------------------------------------------------------------
 
     def read(self) -> DataFrame:
-        import os
-        import re as _re
+        """The latest version (an empty store reads as an empty table —
+        searching it returns empty, never errors: TC-17)."""
+        log, manifest = self._resolve()
+        return self._table(log, manifest["files"])
 
-        # Missing/empty table → empty DataFrame with the right schema
-        # (searching an empty store returns empty, never errors — TC-17).
-        # The cheap isdir probe only applies to local paths; URI stores
-        # (hdfs://, s3a://, ...) must NOT be silently treated as empty —
-        # attempt the read and map only path-not-found to empty.
-        if _re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", self.path) or self.path.startswith("file:"):
-            try:
-                df = self.spark.read.schema(CHUNKS_SCHEMA).parquet(self.path)
-            except Exception as exc:
-                if "PATH_NOT_FOUND" in str(exc):
-                    return self.spark.createDataFrame([], CHUNKS_SCHEMA)
-                raise
-            return self._migrate(df)
-        if not os.path.isdir(self.path):
+    def _table(self, log: _Log, files: list[dict]) -> DataFrame:
+        if not files:
             return self.spark.createDataFrame([], CHUNKS_SCHEMA)
-        return self._migrate(self.spark.read.schema(CHUNKS_SCHEMA).parquet(self.path))
+        return self._migrate(self._scan(log, files))
+
+    def _scan(self, log: _Log, files: list[dict], file_col: bool = False) -> DataFrame:
+        """Exactly ``files``, with ``basePath`` at the root so ``library``
+        stays a partition column (plus ``_file``, each row's file URI, with
+        ``file_col``).  Spark lists a read of more paths than
+        parallelPartitionDiscovery.threshold with a distributed job, so
+        longer lists are read in threshold-sized parts and unioned."""
+        paths = [f"{log.root}/{f['path']}" for f in files]
+        step = int(self.spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+        reader = self.spark.read.schema(CHUNKS_SCHEMA).option("basePath", log.root)
+        parts = [reader.parquet(*paths[i:i + step]) for i in range(0, len(paths), step)]
+        if file_col:
+            parts = [p.withColumn("_file", F.col("_metadata.file_path")) for p in parts]
+        return reduce(DataFrame.union, parts)
 
     @staticmethod
     def _migrate(df: DataFrame) -> DataFrame:
@@ -133,14 +310,11 @@ class ChunkStore:
 
         Rows are sorted by (doc_id, chunk_index) within partitions so
         Parquet row-group min/max statistics stay selective for the
-        doc-scoped point lookups (get/delete/find_existing)."""
-        (
-            chunks.select([f.name for f in CHUNKS_SCHEMA])
-            .sortWithinPartitions("doc_id", "chunk_index")
-            .write.mode("append")
-            .partitionBy("library")
-            .parquet(self.path)
-        )
+        doc-scoped point lookups (get/delete)."""
+        with self._writing() as (log, version, manifest):
+            added = self._stage(log, chunks.select(_COLUMNS).sortWithinPartitions("doc_id", "chunk_index"))
+            if added:
+                log.commit(version, manifest["files"] + added, manifest["snapshots"])
 
     def delete_document(self, doc_id: str) -> int:
         """Delete all chunks of one document (reference store.py:237-259)."""
@@ -152,44 +326,29 @@ class ChunkStore:
     _DELETE_ISIN_MAX = 1000
 
     def delete_documents(self, doc_ids) -> int:
-        """Batch delete: all chunks of every id in ``doc_ids``, with ONE
-        anti-join rewrite per affected library partition — the Parquet-era
-        MERGE — no matter how many documents are deleted (round-1 judge
-        item: the per-doc loop paid O(R) rewrites of the same partitions).
-
-        Each affected partition is overwritten statically at its own path:
-        dynamic overwrite would silently SKIP a partition whose remaining
-        row set is empty (nothing to write → old files survive). Returns
-        deleted row count."""
+        """Batch delete: all chunks of every id in ``doc_ids`` in ONE commit
+        that rewrites only the files holding a hit, no matter how many
+        documents are deleted.  Returns deleted row count."""
         ids = sorted({d for d in doc_ids if d is not None})
         if not ids:
             return 0
-        df = self.read()
         if len(ids) <= self._DELETE_ISIN_MAX:
             is_hit = F.col("doc_id").isin(ids)
-            hits = df.filter(is_hit)
-            keep_of = lambda lib: df.filter((F.col("library") == lib) & ~is_hit)
-            return self._delete_rewrite(hits, keep_of)
+            return self._delete(lambda df: df.filter(is_hit), lambda df: df.filter(~is_hit))
         ids_df = self.spark.createDataFrame([(d,) for d in ids], "doc_id string")
         return self.delete_documents_df(ids_df)
 
     def delete_documents_df(self, ids_df: DataFrame) -> int:
         """Fully set-based batch delete: ``ids_df`` is a one-column
         (doc_id) DataFrame — e.g. the replaced-ids set straight out of the
-        ingest dedup gate — joined anti against every affected partition
-        without the ids ever visiting the driver.  Same single-rewrite-
-        per-partition contract as :meth:`delete_documents`.
-
-        ``ids_df``'s plan must not read this store's path (the rewrite
-        would race its own input); callers pass a localCheckpoint-ed
-        lineage, as ingest_batch does."""
-        ids_df = ids_df.select("doc_id").where(F.col("doc_id").isNotNull()).distinct()
-        df = self.read()
-        hits = df.join(F.broadcast(ids_df), "doc_id", "semi")
-        keep_of = lambda lib: df.filter(F.col("library") == lib).join(
-            F.broadcast(ids_df), "doc_id", "anti"
+        ingest dedup gate — joined against the store without the ids ever
+        visiting the driver.  Same one-commit contract as
+        :meth:`delete_documents`."""
+        ids_df = F.broadcast(ids_df.select("doc_id").where(F.col("doc_id").isNotNull()).distinct())
+        return self._delete(
+            lambda df: df.join(ids_df, "doc_id", "semi"),
+            lambda df: df.join(ids_df, "doc_id", "anti"),
         )
-        return self._delete_rewrite(hits, keep_of)
 
     def delete_where(self, library: str | None = None, filters: dict | None = None) -> int:
         """Predicate-scoped delete: remove every chunk matching the same
@@ -199,45 +358,33 @@ class ChunkStore:
         reference's doc-granular delete semantics (store.py:237-259) —
         a partial-document store would corrupt get_document reconstruction.
 
-        Returns deleted row count.  Same single-rewrite-per-partition
-        contract as delete_documents."""
+        Returns deleted row count.  Same one-commit contract as
+        delete_documents."""
         pred = build_filter(library, filters)
-        df = self.read()
-        ids_df = df.filter(pred).select("doc_id").distinct().localCheckpoint(eager=True)
-        return self.delete_documents_df(ids_df)
+        with self._writing():
+            ids_df = self.read().filter(pred).select("doc_id").distinct().localCheckpoint(eager=True)
+            return self.delete_documents_df(ids_df)
 
-    def _delete_rewrite(self, hits: DataFrame, keep_of) -> int:
-        # one job: affected partitions + per-partition deleted counts
-        lib_counts = hits.groupBy("library").agg(F.count(F.lit(1)).alias("n")).collect()
-        if not lib_counts:
-            return 0
-        deleted = sum(r["n"] for r in lib_counts)
-        data_cols = [f.name for f in CHUNKS_SCHEMA if f.name != "library"]
-        for r in lib_counts:
-            lib = r["library"]
-            keep = (
-                keep_of(lib)
-                .select(data_cols)
-                .localCheckpoint(eager=True)  # cut lineage before overwriting what it reads
-            )
-            keep.write.mode("overwrite").parquet(
-                f"{self.path}/library={escape_partition_value(lib)}"
-            )
-        return deleted
+    def _delete(self, hits_of, keep_of) -> int:
+        """One job finds the files holding a hit and their hit counts; only
+        those files are rewritten (``keep_of`` of each), then one commit
+        swaps them for the rewrites."""
+        with self._writing() as (log, version, manifest):
+            if not manifest["files"]:
+                return 0
+            hits = hits_of(self._scan(log, manifest["files"], file_col=True)).groupBy("_file").count().collect()
+            if not hits:
+                return 0
+            # _file is the %XX-encoded URI form: a literal '%' of an escaped
+            # partition directory reads as '%25'
+            hit_paths = {"/".join(unquote(r["_file"]).rsplit("/", 2)[-2:]) for r in hits}
+            kept = [f for f in manifest["files"] if f["path"] not in hit_paths]
+            rewritten = [f for f in manifest["files"] if f["path"] in hit_paths]
+            added = self._stage(log, keep_of(self._scan(log, rewritten)).select(_COLUMNS))
+            log.commit(version, kept + added, manifest["snapshots"])
+            return sum(r["count"] for r in hits)
 
     # -- point lookups / listings --------------------------------------------
-
-    def find_existing(self, source: str, library: str) -> tuple[str, str] | None:
-        """Dedup point-lookup (reference store.py:206-235): first row
-        matching (source, library) → (doc_id, content_hash)."""
-        row = (
-            self.read()
-            .filter((F.col("source") == source) & (F.col("library") == library))
-            .select("doc_id", "content_hash")
-            .limit(1)
-            .collect()
-        )
-        return (row[0]["doc_id"], row[0]["content_hash"]) if row else None
 
     def documents_df(self, library: str | None = None) -> DataFrame:
         """One row per document with first-seen metadata + chunk count
@@ -286,160 +433,6 @@ class ChunkStore:
     def list_libraries(self) -> list[dict]:
         return [r.asDict() for r in self.libraries_df().orderBy("library").collect()]
 
-    # -- maintenance ---------------------------------------------------------
-
-    def partition_file_stats(self) -> dict[str, dict]:
-        """Per-library file-count/byte stats via the Hadoop FileSystem API
-        (works for any scheme, not just local paths).  Keys are the
-        UNESCAPED library values — the same namespace compact()'s
-        ``library=`` parameter uses, so ``compact(library=k)`` is valid for
-        every key k returned here.  The observability half of compaction:
-        at 100 TB, many-small-files is the first thing that kills scan
-        throughput (driver listing + per-file open cost + tiny row groups
-        defeating min/max skipping)."""
-        jvm = self.spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        stats: dict[str, dict] = {}
-        if not fs.exists(root):
-            return stats
-        for part in fs.listStatus(root):
-            name = part.getPath().getName()
-            if not (part.isDirectory() and name.startswith("library=")):
-                continue
-            files = [
-                f
-                for f in fs.listStatus(part.getPath())
-                if f.isFile() and not f.getPath().getName().startswith(("_", "."))
-            ]
-            stats[unescape_partition_value(name[len("library="):])] = {
-                "files": len(files),
-                "bytes": sum(f.getLen() for f in files),
-            }
-        return stats
-
-    def recover_compaction(self) -> dict[str, str]:
-        """Finish any compaction swap interrupted by a crash.
-
-        For every leftover ``.compact_tmp_*`` / ``.compact_bak_*`` dir:
-        - partition dir present → the swap completed (or never started);
-          leftovers are stale, delete them;
-        - partition dir absent and tmp is complete (has ``_SUCCESS``) →
-          roll FORWARD: tmp becomes the partition, backup is dropped;
-        - otherwise → roll BACK: backup becomes the partition again and the
-          incomplete tmp is dropped.
-
-        Returns {library_dir: action} for observability. Called
-        automatically at the start of :meth:`compact`; safe to call any
-        time (no-op when nothing is pending)."""
-        jvm = self.spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        actions: dict[str, str] = {}
-        if not fs.exists(root):
-            return actions
-        pend: dict[str, dict] = {}
-        for entry in fs.listStatus(root):
-            name = entry.getPath().getName()
-            for prefix, kind in ((".compact_tmp_", "tmp"), (".compact_bak_", "bak")):
-                if name.startswith(prefix):
-                    pend.setdefault(name[len(prefix):], {})[kind] = entry.getPath()
-        for lib_dir, parts in pend.items():
-            dst = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{lib_dir}")
-            tmp, bak = parts.get("tmp"), parts.get("bak")
-            if fs.exists(dst):
-                for p in (tmp, bak):
-                    if p is not None:
-                        fs.delete(p, True)
-                actions[lib_dir] = "cleaned-stale"
-            elif tmp is not None and fs.exists(
-                jvm.org.apache.hadoop.fs.Path(str(tmp) + "/_SUCCESS")
-            ):
-                fs.rename(tmp, dst)
-                if bak is not None:
-                    fs.delete(bak, True)
-                actions[lib_dir] = "rolled-forward"
-            elif bak is not None:
-                fs.rename(bak, dst)
-                if tmp is not None:
-                    fs.delete(tmp, True)
-                actions[lib_dir] = "rolled-back"
-            else:
-                # incomplete tmp, no backup, no dst: nothing recoverable
-                fs.delete(tmp, True)
-                actions[lib_dir] = "dropped-incomplete"
-        return actions
-
-    def compact(
-        self,
-        library: str | None = None,
-        target_file_bytes: int = 128 << 20,
-    ) -> dict[str, dict]:
-        """Rewrite fragmented partitions into few large clustered files.
-
-        Every append creates new files (reference 'batch inserts, never
-        row-by-row' avoids row fragments but not file fragments —
-        store.py:193-194 and lancedb-best-practices:104-113 make the same
-        point about LanceDB versions).  Compaction restores the scan-side
-        invariants: ~target-sized files, rows re-sorted by (doc_id,
-        chunk_index) so row-group min/max stats prune doc point-lookups.
-
-        Partitions already at their target file count are skipped, so a
-        second compact is a no-op.  Returns per-library
-        {files_before, files_after, bytes}.
-
-        The rewrite is range-partitioned on (doc_id, chunk_index) — NOT
-        round-robin — so each output file owns a contiguous doc_id range
-        and file/row-group min/max stats actually prune point lookups.
-        New files land in a hidden sibling directory first; the swap is
-        backup-rename → forward-rename → backup-delete, so BOTH copies of
-        the partition exist at every intermediate state and
-        :meth:`recover_compaction` can roll a crashed swap forward (tmp
-        complete) or back (tmp incomplete) — no state loses data, and the
-        reader-invisible window is two metadata renames, not a delete."""
-        self.recover_compaction()
-        stats = self.partition_file_stats()
-        report: dict[str, dict] = {}
-        jvm = self.spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(self.path).getFileSystem(
-            self.spark._jsc.hadoopConfiguration()
-        )
-        for lib_value, st in stats.items():
-            if library is not None and lib_value != library:
-                continue
-            want = max(1, -(-st["bytes"] // target_file_bytes))
-            if st["files"] <= want:
-                continue
-            data_cols = [f.name for f in CHUNKS_SCHEMA if f.name != "library"]
-            lib_dir = f"library={escape_partition_value(lib_value)}"
-            tmp = f"{self.path}/.compact_tmp_{lib_dir}"
-            rows = (
-                self.read()
-                .filter(F.col("library") == lib_value)
-                .select(data_cols)
-                .repartitionByRange(want, "doc_id", "chunk_index")
-                .sortWithinPartitions("doc_id", "chunk_index")
-            )
-            rows.write.mode("overwrite").parquet(tmp)
-            src = jvm.org.apache.hadoop.fs.Path(tmp)
-            dst = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{lib_dir}")
-            bak = jvm.org.apache.hadoop.fs.Path(
-                f"{self.path}/.compact_bak_{lib_dir}"
-            )
-            # backup-rename, forward-rename, then drop the backup: a crash
-            # at any point leaves tmp (complete, has _SUCCESS) and/or bak
-            # on disk for recover_compaction() to finish the swap.
-            fs.delete(bak, True)  # clear any stale backup first
-            fs.rename(dst, bak)
-            fs.rename(src, dst)
-            fs.delete(bak, True)
-            report[lib_value] = {
-                "files_before": st["files"],
-                "files_after": want,
-                "bytes": st["bytes"],
-            }
-        return report
-
     def get_document(self, doc_id: str) -> dict | None:
         """Reconstruct a document: chunks ordered by chunk_index, contents
         joined with blank lines (reference store.py:329-352, server.py:382)."""
@@ -465,152 +458,125 @@ class ChunkStore:
         )
         return rows[0].asDict() if rows else None
 
+    # -- maintenance ---------------------------------------------------------
 
+    def partition_file_stats(self) -> dict[str, dict]:
+        """Per-library file-count/byte stats of the latest version, from its
+        manifest.  Keys are library values — the same namespace compact()'s
+        ``library=`` parameter uses.  The observability half of compaction:
+        at 100 TB, many-small-files is the first thing that kills scan
+        throughput (per-file open cost + tiny row groups defeating min/max
+        skipping)."""
+        stats: dict[str, dict] = {}
+        for f in self._resolve()[1]["files"]:
+            st = stats.setdefault(f["library"], {"files": 0, "bytes": 0})
+            st["files"] += 1
+            st["bytes"] += f["bytes"]
+        return stats
+
+    def compact(
+        self,
+        library: str | None = None,
+        target_file_bytes: int = 128 << 20,
+    ) -> dict[str, dict]:
+        """Rewrite fragmented partitions into few large clustered files.
+
+        Every append creates new files (reference 'batch inserts, never
+        row-by-row' avoids row fragments but not file fragments —
+        store.py:193-194 and lancedb-best-practices:104-113 make the same
+        point about LanceDB versions).  Compaction restores the scan-side
+        invariants: ~target-sized files, rows re-sorted by (doc_id,
+        chunk_index) so row-group min/max stats prune doc point-lookups.
+
+        Partitions already at their target file count are skipped, so a
+        second compact is a no-op.  Returns per-library
+        {files_before, files_after, bytes}.
+
+        The rewrite is range-partitioned on (doc_id, chunk_index) — NOT
+        round-robin — so each output file owns a contiguous doc_id range
+        and file/row-group min/max stats actually prune point lookups.
+        All rewrites land in one commit."""
+        report: dict[str, dict] = {}
+        with self._writing() as (log, version, manifest):
+            by_lib: dict[str, list[dict]] = {}
+            for f in manifest["files"]:
+                by_lib.setdefault(f["library"], []).append(f)
+            files = manifest["files"]
+            for lib_value, lib_files in by_lib.items():
+                nbytes = sum(f["bytes"] for f in lib_files)
+                want = max(1, -(-nbytes // target_file_bytes))
+                if (library is not None and lib_value != library) or len(lib_files) <= want:
+                    continue
+                rows = (
+                    self._table(log, lib_files)
+                    .repartitionByRange(want, "doc_id", "chunk_index")
+                    .sortWithinPartitions("doc_id", "chunk_index")
+                )
+                files = [f for f in files if f not in lib_files] + self._stage(log, rows.select(_COLUMNS))
+                report[lib_value] = {"files_before": len(lib_files), "files_after": want, "bytes": nbytes}
+            if report:
+                log.commit(version, files, manifest["snapshots"])
+        return report
 
     # -- snapshots / time travel ----------------------------------------------
 
-    def _require_local(self) -> None:
-        if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", self.path) and not self.path.startswith("file:"):
-            raise NotImplementedError(
-                "snapshots use filesystem hard links; on object stores keep a "
-                "manifest + retention scheme instead (not implemented)"
-            )
-
     def snapshot(self, tag: str | None = None) -> int:
-        """Create a zero-copy snapshot of the current table state; returns
-        the new version number.
+        """Pin the current table state; returns the new snapshot number
+        (1, 2, ... per store).  No bytes are copied: the pin keeps the
+        version's manifest and files out of garbage collection until
+        :meth:`expire_snapshot`."""
+        with self._writing() as (log, version, manifest):
+            number = max((s["version"] for s in manifest["snapshots"]), default=0) + 1
+            pin = self._pin(number, tag, manifest, version + 1)
+            log.commit(version, manifest["files"], manifest["snapshots"] + [pin])
+            return number
 
-        LanceDB versions every write natively (the reference's storage layer
-        keeps old versions until compaction); this is the parquet-store
-        equivalent: every current data file is HARD-LINKED into a
-        ``_snapshots/v{N}/`` mirror tree (same inodes, no bytes copied), so
-        later appends, delete-rewrites, compactions, or restores cannot
-        disturb it — POSIX keeps the inode alive for the link even after
-        the live copy is unlinked or overwritten.
-
-        Commit protocol: links first, ``_MANIFEST.json`` written LAST — a
-        crash mid-snapshot leaves a version dir with no manifest, which
-        every reader ignores and the next snapshot() call garbage-collects.
-        Underscore-prefixed names are invisible to Spark's file readers, so
-        the mirror tree never pollutes `read()`.
-        """
-        import json as _json
-        import os
-        from datetime import datetime, timezone
-
-        self._require_local()
-        root = self.path[len("file:"):] if self.path.startswith("file:") else self.path
-        snapdir = os.path.join(root, "_snapshots")
-        os.makedirs(snapdir, exist_ok=True)
-        # gc uncommitted (crashed) snapshot dirs; find next version
-        import shutil
-
-        max_v = 0
-        for name in os.listdir(snapdir):
-            if not name.startswith("v"):
-                continue
-            vdir = os.path.join(snapdir, name)
-            if not os.path.exists(os.path.join(vdir, "_MANIFEST.json")):
-                shutil.rmtree(vdir, ignore_errors=True)
-                continue
-            max_v = max(max_v, int(name[1:]))
-        version = max_v + 1
-        vdir = os.path.join(snapdir, f"v{version}")
-        n_files = 0
-        for dirpath, dirnames, filenames in os.walk(root):
-            rel = os.path.relpath(dirpath, root)
-            # never descend into snapshot/hidden bookkeeping trees
-            dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
-            for fname in filenames:
-                if fname.startswith((".", "_")):
-                    continue
-                dst_dir = os.path.join(vdir, rel) if rel != "." else vdir
-                os.makedirs(dst_dir, exist_ok=True)
-                os.link(os.path.join(dirpath, fname), os.path.join(dst_dir, fname))
-                n_files += 1
-        os.makedirs(vdir, exist_ok=True)
-        manifest = {
-            "version": version,
+    @staticmethod
+    def _pin(number: int, tag: str | None, manifest: dict, table_version: int) -> dict:
+        return {
+            "version": number,
             "tag": tag,
             "created_at": datetime.now(timezone.utc).isoformat(),
-            "n_files": n_files,
+            "n_files": len(manifest["files"]),
+            "table_version": table_version,
         }
-        with open(os.path.join(vdir, "_MANIFEST.json"), "w") as f:
-            _json.dump(manifest, f)
-        return version
+
+    @staticmethod
+    def _find_pin(manifest: dict, number: int) -> dict:
+        for s in manifest["snapshots"]:
+            if s["version"] == number:
+                return s
+        raise ValueError(f"no committed snapshot v{number}")
 
     def snapshots(self) -> list[dict]:
         """Committed snapshots, oldest first."""
-        import json as _json
-        import os
-
-        self._require_local()
-        root = self.path[len("file:"):] if self.path.startswith("file:") else self.path
-        snapdir = os.path.join(root, "_snapshots")
-        if not os.path.isdir(snapdir):
-            return []
-        out = []
-        for name in sorted(os.listdir(snapdir), key=lambda n: int(n[1:]) if n[1:].isdigit() else 0):
-            mpath = os.path.join(snapdir, name, "_MANIFEST.json")
-            if name.startswith("v") and os.path.exists(mpath):
-                with open(mpath) as f:
-                    out.append(_json.load(f))
-        return out
+        return [
+            {k: s[k] for k in ("version", "tag", "created_at", "n_files")}
+            for s in self._resolve()[1]["snapshots"]
+        ]
 
     def read_version(self, version: int) -> DataFrame:
         """Read the table as of a snapshot — the reference's LanceDB
         checkout-by-version, on parquet."""
-        import os
-
-        self._require_local()
-        root = self.path[len("file:"):] if self.path.startswith("file:") else self.path
-        vdir = os.path.join(root, "_snapshots", f"v{version}")
-        if not os.path.exists(os.path.join(vdir, "_MANIFEST.json")):
-            raise ValueError(f"no committed snapshot v{version}")
-        has_data = any(
-            fnames and not all(f.startswith(("_", ".")) for f in fnames)
-            for _, _, fnames in os.walk(vdir)
-        )
-        if not has_data:
-            return self.spark.createDataFrame([], CHUNKS_SCHEMA)
-        return self._migrate(self.spark.read.schema(CHUNKS_SCHEMA).parquet(vdir))
+        log, manifest = self._resolve()
+        pin = self._find_pin(manifest, version)
+        return self._table(log, log.load(pin["table_version"])["files"])
 
     def restore(self, version: int) -> int:
-        """Roll the live table back to a snapshot.  The pre-restore state
-        is snapshotted automatically first (tag ``pre-restore``) so restore
-        itself is undoable; returns that safety version."""
-        import os
-        import shutil
-
-        self._require_local()
-        root = self.path[len("file:"):] if self.path.startswith("file:") else self.path
-        vdir = os.path.join(root, "_snapshots", f"v{version}")
-        if not os.path.exists(os.path.join(vdir, "_MANIFEST.json")):
-            raise ValueError(f"no committed snapshot v{version}")
-        safety = self.snapshot(tag="pre-restore")
-        for name in os.listdir(root):
-            if name.startswith((".", "_")):
-                continue
-            full = os.path.join(root, name)
-            shutil.rmtree(full) if os.path.isdir(full) else os.remove(full)
-        for dirpath, dirnames, filenames in os.walk(vdir):
-            rel = os.path.relpath(dirpath, vdir)
-            for fname in filenames:
-                if fname.startswith((".", "_")):
-                    continue
-                dst_dir = os.path.join(root, rel) if rel != "." else root
-                os.makedirs(dst_dir, exist_ok=True)
-                os.link(os.path.join(dirpath, fname), os.path.join(dst_dir, fname))
-        self.spark.catalog.refreshByPath(self.path)
-        return safety
+        """Roll the live table back to a snapshot in one commit that also
+        pins the pre-restore state (tag ``pre-restore``), so restore itself
+        is undoable; returns that safety snapshot's number."""
+        with self._writing() as (log, head, manifest):
+            files = log.load(self._find_pin(manifest, version)["table_version"])["files"]
+            safety = max(s["version"] for s in manifest["snapshots"]) + 1
+            pin = self._pin(safety, "pre-restore", manifest, head)
+            log.commit(head, files, manifest["snapshots"] + [pin])
+            return safety
 
     def expire_snapshot(self, version: int) -> None:
-        """Drop a snapshot (frees its inodes once no other link remains)."""
-        import os
-        import shutil
-
-        self._require_local()
-        root = self.path[len("file:"):] if self.path.startswith("file:") else self.path
-        vdir = os.path.join(root, "_snapshots", f"v{version}")
-        if os.path.isdir(vdir):
-            shutil.rmtree(vdir)
+        """Drop a snapshot's pin; the next garbage collection (this commit's)
+        frees the files no other version references."""
+        with self._writing() as (log, head, manifest):
+            kept = [s for s in manifest["snapshots"] if s["version"] != version]
+            if len(kept) < len(manifest["snapshots"]):
+                log.commit(head, manifest["files"], kept)

@@ -218,3 +218,91 @@ def test_every_config_field_is_read_by_the_engine():
     code = "\n".join(p.read_text() for p in pkg.rglob("*.py") if p.name != "config.py")
     assert [f.name for f in dataclasses.fields(TEST)
             if not re.search(rf"\.{f.name}\b", code)] == []
+
+
+def test_ingest_rejects_empty_or_non_str_names_and_non_dict_metadata(db, tmp_path):
+    """An empty library would land in Spark's null partition and read back as
+    null; a None library indexed a null library under a null doc_id.  Every
+    ingest entry point answers with an error envelope naming the argument,
+    and nothing reaches the store."""
+    cases = [("library", ""), ("library", None), ("library", 3),
+             ("source", ""), ("source", None), ("source", 7),
+             ("metadata", "x"), ("metadata", [1])]
+    for name, value in cases:
+        args = {"source": "n.md", "library": "notes", name: value}
+        out = db.ingest_content("some note text", **args)
+        assert out["status"] == "error" and name in out["error"], (name, value)
+    d = tmp_path / "docs"
+    d.mkdir()
+    (d / "a.md").write_text("folder note text")
+    assert "library" in db.ingest_file(str(d / "a.md"), library="")["error"]
+    for name, value in [("library", ""), ("library", None), ("metadata", "x"), ("folder", None)]:
+        args = {"folder": str(d), name: value}
+        out = db.ingest_folder(**args)
+        assert out["status"] == "error" and name in out["error"], (name, value)
+    assert db.list_libraries()["libraries"] == []
+
+
+def _stable_notes(db, n=4):
+    for i in range(n):
+        r = db.ingest_content(f"stable note {i} about isolation " * 5, source=f"stable{i}.md", library="c")
+        assert r["status"] == "indexed"
+    return {f"stable{i}.md" for i in range(n)}
+
+
+def test_search_reads_the_version_it_started_on(db):
+    """A search reads the store version its read() resolved to the end: a
+    delete committed between read() and collect() — here from inside the
+    query embedding, which runs in between — changes nothing it returns
+    and raises nothing."""
+    _stable_notes(db)
+    want = db.search("isolation", top_k=20, library="c")
+    victim = want["results"][0]["doc_id"]
+    embed_query = db.embedder.embed_query
+    deleted = []
+
+    def embed_then_delete(text):
+        if not deleted:
+            deleted.append(db.store.delete_document(victim))
+        return embed_query(text)
+
+    db.embedder.embed_query = embed_then_delete
+    got = db.search("isolation", top_k=20, library="c")
+    del db.embedder.embed_query
+    assert deleted and deleted[0] > 0
+    assert got == want
+    after = db.search("isolation", top_k=20, library="c")
+    assert victim not in {r["doc_id"] for r in after["results"]}
+
+
+def test_searches_beside_ingest_and_delete_see_whole_versions(db):
+    """One thread searches a library while another ingests and deletes
+    throwaway documents in it: no search fails and every one sees all the
+    stable documents."""
+    import threading
+
+    stable = _stable_notes(db)
+    stop = threading.Event()
+    seen, errors = [], []
+
+    def search_until_stopped():
+        while not stop.is_set():
+            try:
+                out = db.search("stable isolation", top_k=50, library="c")
+                seen.append(stable <= {r["source"] for r in out.get("results", [])}
+                            and out["status"] == "ok")
+            except Exception as exc:  # a failed read surfaces here
+                errors.append(exc)
+
+    searcher = threading.Thread(target=search_until_stopped)
+    searcher.start()
+    try:
+        for i in range(10):
+            r = db.ingest_content(f"throwaway note {i} " * 20, source=f"tmp{i}.md", library="c")
+            assert db.delete_document(r["doc_id"])["status"] == "deleted"
+    finally:
+        stop.set()
+        searcher.join(timeout=120)
+    assert not searcher.is_alive()
+    assert errors == []
+    assert seen and all(seen), f"{seen.count(False)} of {len(seen)} searches missed a stable document"

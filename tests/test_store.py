@@ -84,14 +84,6 @@ def test_pagination_bounds(spark, store, mini_docs):
         store.list_documents(limit=10, offset=-1)
 
 
-def test_find_existing(spark, store, mini_docs):
-    ingest(mini_docs, store)
-    hit = store.find_existing("file:///a.md", "lib_a")
-    assert hit is not None and len(hit) == 2
-    assert store.find_existing("file:///a.md", "nope") is None
-    assert store.find_existing("ghost", "lib_a") is None
-
-
 def test_filter_validation():
     with pytest.raises(InvalidFilterError):
         build_filter(filters={"bad-key": "x"})
@@ -197,13 +189,6 @@ def test_compact_scopes_to_one_library(spark, store, mini_docs):
     assert after["lib_b"]["files"] >= 2
 
 
-def test_partition_value_escape_roundtrip():
-    from mcpvectordb_spark.store import escape_partition_value, unescape_partition_value
-
-    for v in ["plain", "with space", "a/b:c", "q{uote'd\"}", "100%", "tab\there"]:
-        assert unescape_partition_value(escape_partition_value(v)) == v
-
-
 def _doc_batch(spark, n, libs=("lib_a", "lib_b")):
     rows = [
         (f"file:///bulk{i}.txt", libs[i % len(libs)],
@@ -285,48 +270,147 @@ def test_replace_batch_uses_single_batch_delete(spark, store, monkeypatch):
     assert store.get_document(doc["doc_id"])["content"].endswith("v2")
 
 
-def test_recover_compaction_roll_forward_and_back(spark, store, mini_docs):
-    """Crash-state recovery: a complete tmp (has _SUCCESS) rolls forward,
-    an incomplete tmp rolls back to the backup, stale leftovers are
-    cleaned. No state loses the partition's rows."""
+def _manifest(store):
+    """The latest committed manifest, read straight from the log."""
+    import json
     import os
-    import shutil
+
+    log = os.path.join(store.path, "_log")
+    latest = max(int(n[: -len(".json")]) for n in os.listdir(log) if n.endswith(".json"))
+    with open(os.path.join(log, f"{latest}.json")) as f:
+        return json.load(f)
+
+
+def _data_bytes(root):
+    """Bytes of every Parquet file under ``root`` (checksums excluded)."""
+    import os
+
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(root) for f in files if f.endswith(".parquet") and not f.startswith(".")
+    )
+
+
+def test_crashed_commit_is_invisible_and_collected(spark, store, mini_docs, monkeypatch):
+    """A commit that wrote its files but died before publishing the manifest
+    leaves only unreferenced files: read() does not see them, and the next
+    commit deletes them."""
+    from mcpvectordb_spark.store import _Log
 
     ingest(mini_docs, store)
+    store.append(_mini_chunks(spark, range(3), library="lib_a"))  # lib_a: >= 2 files
     rows_before = store.count()
-    lib_dir = next(
-        d for d in os.listdir(store.path) if d.startswith("library=")
-    )
-    dst = os.path.join(store.path, lib_dir)
-    bak = os.path.join(store.path, f".compact_bak_{lib_dir}")
-    tmp = os.path.join(store.path, f".compact_tmp_{lib_dir}")
+    bytes_before = _data_bytes(store.path)
 
-    # crash between backup-rename and forward-rename, tmp complete
-    shutil.copytree(dst, tmp)  # stands in for the compacted rewrite
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()  # writer's completion marker
-    shutil.move(dst, bak)
-    assert store.recover_compaction() == {lib_dir: "rolled-forward"}
-    assert os.path.isdir(dst) and not os.path.exists(bak) and not os.path.exists(tmp)
-    assert store.count() == rows_before
+    def crash(self, version, manifest):
+        raise OSError("crashed before the commit")
 
-    # crash during the tmp write (no _SUCCESS): roll back to backup
-    shutil.move(dst, bak)
-    os.makedirs(tmp)
-    with open(os.path.join(tmp, "part-00000.parquet"), "wb") as f:
-        f.write(b"garbage-partial-write")
-    assert store.recover_compaction() == {lib_dir: "rolled-back"}
-    assert os.path.isdir(dst) and not os.path.exists(bak) and not os.path.exists(tmp)
-    assert store.count() == rows_before
+    monkeypatch.setattr(_Log, "publish", crash)
+    with pytest.raises(OSError):
+        store.append(_mini_chunks(spark, range(3, 6), library="lib_a"))
+    with pytest.raises(OSError):
+        store.compact(target_file_bytes=1 << 30)
+    monkeypatch.undo()
+    assert _data_bytes(store.path) > bytes_before  # the crashed writes' files exist
+    assert store.count() == rows_before  # ... but no version references them
 
-    # stale leftovers next to a live partition are dropped
-    shutil.copytree(dst, bak)
-    assert store.recover_compaction() == {lib_dir: "cleaned-stale"}
-    assert store.count() == rows_before
+    store.append(_mini_chunks(spark, range(6, 9), library="lib_a"))
+    assert store.count() == rows_before + 3
+    assert _data_bytes(store.path) == sum(f["bytes"] for f in _manifest(store)["files"])
 
-    # compact() itself self-heals first and still works end-to-end
-    assert store.recover_compaction() == {}
-    store.compact()
-    assert store.count() == rows_before
+
+def test_delete_rewrites_only_hit_files_and_leaves_no_garbage(spark, tmp_path):
+    """A delete replaces just the files holding a hit; after append →
+    delete → compact the directory holds exactly the manifest's bytes."""
+    from mcpvectordb_spark.config import TEST
+    from mcpvectordb_spark.store import ChunkStore
+
+    store = ChunkStore(spark, str(tmp_path / "t"), TEST)
+    store.append(_mini_chunks(spark, range(3)).coalesce(1))
+    untouched = {f["path"] for f in _manifest(store)["files"]}
+    store.append(_mini_chunks(spark, range(3, 6)).coalesce(1))
+    assert store.delete_documents(["d3", "d4"]) == 2
+    assert untouched < {f["path"] for f in _manifest(store)["files"]}
+    assert store.count() == 4
+    assert _data_bytes(store.path) == sum(f["bytes"] for f in _manifest(store)["files"])
+
+    assert set(store.compact()) == {"L"}
+    assert store.count() == 4
+    assert _data_bytes(store.path) == sum(f["bytes"] for f in _manifest(store)["files"])
+
+
+def test_read_of_many_files_adds_no_listing_job(spark, tmp_path):
+    """Spark lists a read of more than 32 paths with a distributed job; a
+    read of the manifest's file list must not pay it at any file count."""
+    from mcpvectordb_spark.config import TEST
+    from mcpvectordb_spark.schema import CHUNKS_SCHEMA
+    from mcpvectordb_spark.store import ChunkStore
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_to_read_and_count(store):
+        before = max(tracker.getJobIdsForGroup() or [0])
+        assert store.read().filter(build_filter(library="L")).count() > 0
+        return max(tracker.getJobIdsForGroup() or [0]) - before
+
+    small = ChunkStore(spark, str(tmp_path / "small"), TEST)
+    small.append(_mini_chunks(spark, range(2)).repartition(2))
+    large = ChunkStore(spark, str(tmp_path / "large"), TEST)
+    rows = _mini_chunks(spark, range(40)).collect()
+    large.append(spark.createDataFrame(spark.sparkContext.parallelize(rows, 40), CHUNKS_SCHEMA))
+    assert large.partition_file_stats()["L"]["files"] > 32
+    assert large.count() == 40
+    assert jobs_to_read_and_count(large) <= jobs_to_read_and_count(small)
+    # a delete finds its files through the same threshold-sized reads
+    assert large.delete_documents(["d7", "d31"]) == 2
+    assert large.count() == 38
+
+
+def test_concurrent_commits_and_pins_lose_nothing(spark, tmp_path):
+    """Stores on one path share one writer lock and one pin registry:
+    snapshots committed from many threads at once (each a read-modify-write
+    of the manifest) all survive with distinct numbers, and every pin a
+    reader took is released."""
+    import sys
+    import threading
+
+    from mcpvectordb_spark.config import TEST
+    from mcpvectordb_spark.store import _READING, ChunkStore
+
+    path = str(tmp_path / "t")
+    ChunkStore(spark, path, TEST).append(_mini_chunks(spark, range(2)))
+    numbers, errors = [], []
+
+    def snapshot():
+        try:
+            numbers.append(ChunkStore(spark, path, TEST).snapshot())
+        except Exception as exc:
+            errors.append(exc)
+
+    def pinned_reads():
+        try:
+            for _ in range(5):
+                with ChunkStore(spark, path, TEST).pinned():
+                    ChunkStore(spark, path, TEST).read()
+        except Exception as exc:
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=snapshot) for _ in range(8)]
+        threads += [threading.Thread(target=pinned_reads) for _ in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert sorted(numbers) == list(range(1, 9))
+    assert [s["version"] for s in ChunkStore(spark, path, TEST).snapshots()] == list(range(1, 9))
+    assert _READING == []
 
 
 def test_legacy_table_reads_with_migration_defaults(spark, tmp_path):
@@ -411,24 +495,25 @@ def test_snapshot_restore_roundtrip(spark, tmp_path):
     assert "pre-restore" in tags
 
 
-def test_snapshot_crash_dir_ignored_and_gced(spark, tmp_path):
-    import os
-
+def test_crashed_snapshot_commit_is_ignored(spark, tmp_path, monkeypatch):
     from mcpvectordb_spark.config import TEST
-    from mcpvectordb_spark.store import ChunkStore
+    from mcpvectordb_spark.store import ChunkStore, _Log
 
     store = ChunkStore(spark, str(tmp_path / "t"), TEST)
     store.append(_mini_chunks(spark, range(2)))
-    # simulate a crashed (uncommitted) snapshot: dir without _MANIFEST.json
-    os.makedirs(tmp_path / "t" / "_snapshots" / "v7")
-    assert store.snapshots() == []
-    import pytest
 
+    def crash(self, version, manifest):
+        raise OSError("crashed before the commit")
+
+    monkeypatch.setattr(_Log, "publish", crash)
+    with pytest.raises(OSError):
+        store.snapshot()
+    monkeypatch.undo()
+    assert store.snapshots() == []
     with pytest.raises(ValueError):
-        store.read_version(7)
-    v = store.snapshot()
-    assert v == 1                         # crashed v7 gc'd, numbering clean
-    assert not (tmp_path / "t" / "_snapshots" / "v7").exists()
+        store.read_version(1)
+    assert store.snapshot() == 1          # numbering unaffected by the crash
+    assert store.read_version(1).count() == 2
 
 
 def test_snapshot_empty_store_and_expire(spark, tmp_path):
@@ -448,3 +533,23 @@ def test_snapshot_empty_store_and_expire(spark, tmp_path):
 
     with pytest.raises(ValueError):
         store.read_version(v)
+
+
+def test_snapshots_on_a_file_uri_store(spark, tmp_path):
+    """Versions go through the Hadoop FS API, so a URI-addressed store
+    snapshots, time-travels and restores like a local path, and a pinned
+    version survives a delete and a compaction that rewrite its files."""
+    from mcpvectordb_spark.config import TEST
+    from mcpvectordb_spark.store import ChunkStore
+
+    store = ChunkStore(spark, f"file://{tmp_path}/u", TEST)
+    assert store.count() == 0
+    store.append(_mini_chunks(spark, range(3)))
+    v = store.snapshot(tag="uri")
+    assert store.delete_document("d1") == 1
+    store.compact(target_file_bytes=1 << 30)
+    assert store.partition_file_stats()["L"]["files"] == 1
+    assert store.read_version(v).count() == 3
+    store.restore(v)
+    assert store.count() == 3
+    assert [s["tag"] for s in store.snapshots()] == ["uri", "pre-restore"]

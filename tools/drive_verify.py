@@ -96,6 +96,28 @@ def invalid_filter():
     raise AssertionError("no InvalidFilterError")
 check("invalid filter key raises", invalid_filter)
 
+# ---- 2b. store versions ----
+def snapshot_delete_restore():
+    n = store.count()
+    v = store.snapshot(tag="drive")
+    victim = store.read().select("doc_id").first()["doc_id"]
+    gone = store.delete_document(victim)
+    assert gone > 0 and store.count() == n - gone, (n, gone)
+    assert store.read_version(v).count() == n
+    store.restore(v)
+    assert store.count() == n and store.get_document(victim) is not None
+check("snapshot -> delete -> read_version -> restore", snapshot_delete_restore)
+
+def pinned_read_outlives_delete():
+    with store.pinned():
+        before = store.read()
+        n = store.count()
+        victim = before.select("doc_id").first()["doc_id"]
+        assert store.delete_document(victim) > 0
+        assert before.count() == n, "a read resolved before the delete lost rows"
+    assert store.count() < n
+check("read resolved before a delete still collects", pinned_read_outlives_delete)
+
 # ---- 3. dedup flow (planted) ----
 from mcpvectordb_spark.operators.dedup import minhash_lsh_pairs
 
