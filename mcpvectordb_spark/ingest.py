@@ -9,11 +9,13 @@ one bad document never stops the batch (ingestor.py:104-118 semantics).
 
 Dedup gate (reference ingestor.py:181-209, contract docs/mcp-tool-spec.md:52-55):
     same (source, library) + same content hash   → skipped   (no write)
-    same (source, library) + different hash      → replaced  (delete+append)
+    same (source, library) + different hash      → replaced  (one commit)
     absent                                       → indexed   (append)
-The gate is a broadcast left join of the incoming batch against the store's
-per-document hashes — the distributed form of the reference's point lookup
-(store.py:206-235).
+The gate is an in-process lookup of the batch's collected keys in the
+store's document index (store.py::_DocIndex) — the reference's point lookup
+(store.py:206-235) without a Spark job.  Skipped and failed rows write
+nothing; the indexed and replaced ones are written, and the replaced
+documents' old chunks removed, in one commit.
 
 Determinism (FIXTURES.md rules 3-4): doc_id = sha2(sha2(source)‖sha2(library))[:16],
 chunk id = doc_id-chunk_index, created_at injectable (defaults to now).
@@ -21,15 +23,18 @@ chunk id = doc_id-chunk_index, created_at injectable (defaults to now).
 
 from __future__ import annotations
 
+from collections import Counter
 from datetime import UTC, datetime
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mcpvectordb_spark.chunker import chunk_documents
 from mcpvectordb_spark.config import DEFAULT, EngineConfig
 from mcpvectordb_spark.embedder import embed_documents_stage
-from mcpvectordb_spark.store import ChunkStore
+from mcpvectordb_spark.schema import INGEST_RESULT_SCHEMA
+from mcpvectordb_spark.store import ChunkStore, where_in
 from mcpvectordb_spark.tokenizer import ws_token_count
 
 
@@ -87,23 +92,42 @@ def prepare_batch(raw_docs: DataFrame, created_at: str | None = None) -> DataFra
     )
 
 
-def dedup_gate(batch: DataFrame, store: ChunkStore) -> DataFrame:
-    """Attach ingest status by joining against the store's document hashes."""
-    existing = (
-        store.read()
-        .groupBy("source", "library")
-        .agg(
-            F.first("doc_id").alias("_old_doc_id"),
-            F.first("content_hash").alias("_old_hash"),
-        )
-    )
-    return batch.join(F.broadcast(existing), ["source", "library"], "left").withColumn(
-        "status",
-        F.when(~F.col("valid"), F.lit("failed"))
-        .when(F.col("_old_hash") == F.col("content_hash"), F.lit("skipped"))
-        .when(F.col("_old_doc_id").isNotNull(), F.lit("replaced"))
-        .otherwise(F.lit("indexed")),
-    )
+def dedup_gate(keys: list, index) -> list[dict]:
+    """Status of each batch row (``keys``: collected rows with source,
+    library, content_hash and valid), in the order given, from the store's
+    document index.  Rows sharing a (source, library) key — the document
+    identity (reference store.py:206-235), so they would collide on
+    doc_id/chunk ids — rank by content_hash, nulls first; every row after
+    the first fails."""
+    def rank_key(r):
+        return tuple((v is not None, v or "") for v in (r["source"], r["library"], r["content_hash"]))
+
+    out: list[dict] = [{} for _ in keys]
+    seen = set()
+    for i in sorted(range(len(keys)), key=lambda i: rank_key(keys[i])):
+        r = keys[i]
+        key = (r["source"], r["library"])
+        old = index.by_key.get(key)
+        if key in seen:
+            status, error = "failed", "duplicate (source, library) in batch"
+        elif not r["valid"]:
+            status, error = "failed", "empty content"
+        elif old is not None and old["content_hash"] == r["content_hash"]:
+            status, error = "skipped", None
+        else:
+            status, error = ("replaced" if old is not None else "indexed"), None
+        seen.add(key)
+        out[i] = {"status": status, "error": error, "old_doc_id": old["doc_id"] if old is not None else None}
+    return out
+
+
+# A write task's share of the batch's text: at the reference's regime an
+# ingest leaves one file per library, which every later scan of it opens.
+_BYTES_PER_WRITE_TASK = 64 << 20
+# the index row of a written document, less its chunk_count
+_DOC_COLS = ("doc_id", "source", "title", "library", "content_hash", "created_at", "metadata")
+_RESULT_ARROW = pa.schema([(f.name, pa.int32() if f.name == "chunk_count" else pa.string())
+                           for f in INGEST_RESULT_SCHEMA])
 
 
 def ingest_batch(
@@ -117,42 +141,51 @@ def ingest_batch(
     """Run the full pipeline; writes to the store and returns the per-doc
     result DataFrame (INGEST_RESULT_SCHEMA shape).
 
-    Two write-safety rules learned the hard way:
-    - the gate is read under the store's read pin and ``localCheckpoint``-ed
-      (lineage cut) BEFORE any write: its plan reads the files of the
-      version it resolved, which this ingest's own delete/append commits
-      may garbage-collect;
-    - duplicate (source, library) keys within one batch are rejected as
-      failed rows — the pair is the document identity (reference
-      store.py:206-235), so two batch rows with the same key would collide
-      on doc_id/chunk ids.
-    """
-    from pyspark.sql import Window
+    The batch is prepared once and cached with a row id; one job collects
+    its keys for the gate.  The whole ingest holds the store's writer lock,
+    so the index the gate read is the one the commit derives from."""
+    spark = raw_docs.sparkSession
+    prepared = prepare_batch(raw_docs, created_at).withColumn("_row", F.monotonically_increasing_id()).cache()
+    try:
+        with store.writer():
+            index = store.documents()
+            keys = prepared.select(
+                "_row", "valid", *_DOC_COLS, F.octet_length("content").alias("_bytes")
+            ).collect()
+            gate = dedup_gate(keys, index)
+            written = [k for k, g in zip(keys, gate) if g["status"] in ("indexed", "replaced")]
+            # the replaced documents' old chunks, and any chunks under a
+            # written doc_id, leave in the same commit
+            replace = {g["old_doc_id"] for g in gate if g["status"] == "replaced"}
+            replace |= {k["doc_id"] for k in written}
+            counts = _write(prepared, written, replace, store, config, token_counter, embedder_factory)
+    finally:
+        prepared.unpersist()
+    # an Arrow table becomes a LocalRelation: reading the results runs no job
+    rows = [
+        {"status": g["status"], "doc_id": k["doc_id"], "source": k["source"], "library": k["library"],
+         "chunk_count": counts.get(k["_row"], 0), "error": g["error"]}
+        for k, g in zip(keys, gate)
+    ]
+    return spark.createDataFrame(pa.Table.from_pylist(rows, _RESULT_ARROW))
 
-    w = Window.partitionBy("source", "library").orderBy("content_hash")
-    prepared = (
-        prepare_batch(raw_docs, created_at)
-        .withColumn("_dup_rank", F.row_number().over(w))
-        .withColumn("valid", F.col("valid") & (F.col("_dup_rank") == 1))
-    )
-    with store.pinned():
-        gated = dedup_gate(prepared, store).localCheckpoint(eager=True)
 
-    to_write = gated.filter(F.col("status").isin("indexed", "replaced"))
-    # r10 optimization (guide §2.5 input skew / §1.2): AQE coalesces the
-    # tiny (source, library) dedup-rank exchange, so the checkpointed gate
-    # lands in ONE partition at bench scale — profiled: the whole
-    # chunk→embed→append kernel chain ran on a single core (ingest_chunks'
-    # 8→32-core scaling ratio of 1.2 was partition collapse, not Arrow
-    # overhead).  Fan the write set back out before the CPU-heavy per-row
-    # stages; skipped when the gate already carries enough partitions, so
-    # at real scale this adds no shuffle.  Chunking/embedding are per-row
-    # and the downstream counts/digests are content-keyed, so placement
-    # does not affect any result.
-    sc = raw_docs.sparkSession.sparkContext
-    gate_parts = gated.rdd.getNumPartitions()
-    if gate_parts < sc.defaultParallelism:
-        to_write = to_write.repartition(sc.defaultParallelism)
+def _write(prepared, written, replace, store, config, token_counter, embedder_factory) -> dict:
+    """Chunk, embed and commit the ``written`` rows of ``prepared`` in one
+    commit that also removes the chunks of the ``replace`` doc ids; returns
+    the written rows' chunk counts by row id."""
+    if not written:
+        return {}
+    ids = [k["_row"] for k in written]
+    to_write = where_in(prepared, "_row", ids)
+    # Fan the write set out before the CPU-heavy per-row stages when the
+    # batch arrives in fewer partitions than there are cores to chunk and
+    # embed it on.  Chunking/embedding are per-row and the downstream
+    # counts/digests are content-keyed, so placement does not affect any
+    # result.
+    fan = min(prepared.sparkSession.sparkContext.defaultParallelism, len(written))
+    if prepared.rdd.getNumPartitions() < fan:
+        to_write = to_write.repartition(fan)
     chunked = chunk_documents(to_write, "content", config, token_counter)
     embedded = embed_documents_stage(
         chunked, "content", "embedding", config.embedding_dim, config, embedder_factory
@@ -172,41 +205,17 @@ def ingest_batch(
         "file_type",
         "last_modified",
         "page",
-    )
-
-    # Cache the chunk pipeline output: it is consumed twice (append + counts)
-    # and re-running it would re-chunk/re-embed the batch.
-    chunks = chunks.cache()
-    counts = chunks.groupBy("doc_id").agg(F.count(F.lit(1)).cast("int").alias("chunk_count")).localCheckpoint(eager=True)
-
-    # Replace = delete-then-append (reference ingestor.py:199-209), fully
-    # set-based: the replaced-ids set flows from the (checkpointed) gate
-    # into ONE delete commit that rewrites only the files holding a replaced
-    # document — the ids never visit the driver, so the path is the same at
-    # 10 or 10M replacements.
-    old_ids_df = (
-        gated.filter(F.col("status") == "replaced")
-        .select(F.col("_old_doc_id").alias("doc_id"))
-    )
-    store.delete_documents_df(old_ids_df)
-    # Write the cached chunks back at the gate's partitioning: the fan-out
-    # above serves the CPU-heavy stages only, and each write task leaves one
-    # file per library that every later scan of the library opens.
-    store.append(chunks.coalesce(gate_parts))
-    chunks.unpersist()
-    results = (
-        gated.join(counts, "doc_id", "left")
-        .withColumn(
-            "error",
-            F.when(F.col("status") == "failed",
-                   F.when(F.col("_dup_rank") > 1, F.lit("duplicate (source, library) in batch"))
-                    .otherwise(F.lit("empty content"))
-            ).otherwise(F.lit(None).cast("string")),
-        )
-        .withColumn("chunk_count", F.coalesce(F.col("chunk_count"), F.lit(0)))
-        .select("status", "doc_id", "source", "library", "chunk_count", "error")
-    )
-    return results
+    ).cache()
+    try:
+        # the counts job materializes the cache at the fan-out's parallelism
+        per_doc = Counter(r["doc_id"] for r in chunks.select("doc_id").collect())
+        documents = [{**{c: k[c] for c in _DOC_COLS}, "chunk_count": per_doc[k["doc_id"]]}
+                     for k in written if per_doc[k["doc_id"]]]
+        parts = max(1, -(-sum(k["_bytes"] for k in written) // _BYTES_PER_WRITE_TASK))
+        store.append(chunks.coalesce(parts), replace=replace, documents=documents)
+    finally:
+        chunks.unpersist()
+    return {k["_row"]: per_doc[k["doc_id"]] for k in written}
 
 
 def rollup_results(results: DataFrame) -> DataFrame:

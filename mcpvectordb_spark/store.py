@@ -11,13 +11,24 @@ Re-expresses /root/reference/src/mcpvectordb/store.py (LanceDB table driver,
   delete, compaction, snapshot and restore is one commit of an immutable
   file list (``_Log``) — Delta Lake's transaction log (Armbrust et al., VLDB
   2020) in its simplest form — and a read reads exactly one version's files.
-- delete rewrites only the files that hold a hit (an anti-filter of each).
+- document index: the reference answers "is this document stored?",
+  list_documents and list_libraries with LanceDB point lookups.  Here each
+  version has an in-memory index (``_DocIndex``), one row per document with
+  its first-seen metadata, chunk count and the files that can hold its
+  chunks.  It is keyed by the version's data-file set — files are
+  uuid-named and never rewritten, so the key pins the content — and a
+  writer derives the next version's index from the current one plus the
+  rows it wrote.  A cold process, a restore or a raw append misses and
+  rebuilds it from exactly those files with one aggregate.  The browse
+  calls, count() and the ingest dedup gate run no Spark job; a delete
+  rewrites only the files the index names for its documents (an
+  anti-filter of each).
 - the FTS/vector "indexes" have no physical counterpart: a search computes
   the BM25 term statistics of its filtered scope at query time, in the same
   single plan that scores every row's vector (operators/hybrid.py::
-  hybrid_search), and nothing is cached between requests — the correct
-  physical choice at the reference's own <50k-chunk regime (store.py:274);
-  see operators/ for the scale path (IVF / LSH).
+  hybrid_search) — the correct physical choice at the reference's own
+  <50k-chunk regime (store.py:274); see operators/ for the scale path
+  (IVF / LSH).  Only search, get_document and delete_where read chunks.
 
 Writers are serialized per store path within one process; concurrent
 writers in several processes are not supported.
@@ -29,14 +40,15 @@ import json
 import re
 import threading
 import uuid
+from collections import OrderedDict
 from contextlib import contextmanager
 from datetime import datetime, timezone
-from functools import reduce
+from functools import cached_property, reduce
 from operator import and_
 from urllib.parse import unquote
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mcpvectordb_spark.config import DEFAULT, EngineConfig
@@ -56,6 +68,12 @@ _STATE = threading.Lock()
 _WRITERS: dict[str, threading.RLock] = {}
 _READING: list[tuple[str, int]] = []  # (root, version) of each in-flight pinned read
 _PINS = threading.local()
+# Document indexes of recent versions, keyed by (root, frozenset of the
+# version's data-file paths), least recently used first.
+_INDEXES: OrderedDict[tuple[str, frozenset], _DocIndex] = OrderedDict()
+_INDEXES_MAX = 16
+# an index row; list_documents returns these fields in this order
+_DOC_FIELDS = ("doc_id", "source", "title", "library", "content_hash", "created_at", "metadata", "chunk_count")
 
 
 class InvalidFilterError(ValueError):
@@ -80,10 +98,115 @@ def build_filter(library: str | None = None, filters: dict | None = None):
     return reduce(and_, preds) if preds else F.lit(True)
 
 
+# Above this many values, where_in goes from an In() literal list to a
+# broadcast join (an In with 10^5 entries bloats the plan and falls off
+# codegen; a broadcast hash join does not).
+_ISIN_MAX = 1000
+
+
+def where_in(df: DataFrame, col: str, values: list, negate: bool = False) -> DataFrame:
+    """Rows of ``df`` whose ``col`` is in ``values`` — with ``negate``, is
+    not in them (rows with a null ``col`` stay)."""
+    if len(values) <= _ISIN_MAX:
+        hit = F.col(col).isin(values)
+        return df.filter(F.col(col).isNull() | ~hit if negate else hit)
+    dtype = df.schema[col].dataType.simpleString()
+    values_df = df.sparkSession.createDataFrame([(v,) for v in values], f"`{col}` {dtype}")
+    return df.join(F.broadcast(values_df), col, "anti" if negate else "semi")
+
+
 def _entry(rel: str, nbytes: int) -> dict:
     """Manifest entry of the data file at ``rel`` (``library=<dir>/<name>``);
     the library is the directory's value with Spark's %XX escapes decoded."""
     return {"path": rel, "library": unquote(rel.split("/")[0][len("library="):]), "bytes": nbytes}
+
+
+def _rel(uri: str) -> str:
+    """Manifest path (``library=<dir>/<name>``) of a ``_metadata.file_path``
+    URI, whose escaped partition directory reads '%' as '%25'."""
+    return "/".join(unquote(uri).rsplit("/", 2)[-2:])
+
+
+def _nulls_first(value) -> tuple:
+    return (value is not None, value or "")
+
+
+class _DocIndex:
+    """One version's documents: doc_id → the ``_DOC_FIELDS`` row plus
+    ``files``, a superset of the version's files that hold the document's
+    chunks.  Immutable; the derived views are computed once."""
+
+    def __init__(self, docs: dict):
+        self.docs = docs
+
+    @cached_property
+    def by_key(self) -> dict:
+        """(source, library) → row: the ingest dedup identity."""
+        return {(d["source"], d["library"]): d for d in self.docs.values()}
+
+    @cached_property
+    def recent_first(self) -> list[dict]:
+        """Rows by created_at descending (nulls last), then doc_id."""
+        rows = sorted(self.docs.values(), key=lambda d: _nulls_first(d["doc_id"]))
+        return sorted(rows, key=lambda d: _nulls_first(d["created_at"]), reverse=True)
+
+    @cached_property
+    def libraries(self) -> list[dict]:
+        libs: dict = {}
+        for d in self.docs.values():
+            lib = libs.setdefault(d["library"], {"library": d["library"], "document_count": 0, "chunk_count": 0})
+            lib["document_count"] += d["doc_id"] is not None
+            lib["chunk_count"] += d["chunk_count"]
+        return [libs[k] for k in sorted(libs, key=_nulls_first)]
+
+    @cached_property
+    def chunks(self) -> int:
+        return sum(d["chunk_count"] for d in self.docs.values())
+
+    def derive(self, removed: set, added: list[dict], dropped: set, documents: list[dict]) -> _DocIndex:
+        """The index after a commit that swapped the files ``removed`` for
+        ``added``, deleted the documents ``dropped`` and wrote
+        ``documents`` (rows without ``files``).  A document that kept
+        chunks in a removed file may now hold them in any added file of
+        that file's library directory; a written one in any added file of
+        its library."""
+        by_dir: dict = {}
+        for f in added:
+            by_dir.setdefault(f["path"].split("/")[0], set()).add(f["path"])
+        lib_files = {f["library"]: by_dir[f["path"].split("/")[0]] for f in added}
+        docs = {}
+        for doc_id, d in self.docs.items():
+            if doc_id in dropped:
+                continue
+            hit = d["files"] & removed
+            if hit:
+                moved = set().union(*(by_dir.get(p.split("/")[0], ()) for p in hit))
+                d = {**d, "files": frozenset((d["files"] - removed) | moved)}
+            docs[doc_id] = d
+        for d in documents:
+            docs[d["doc_id"]] = {**d, "files": frozenset(lib_files.get(d["library"], ()))}
+        return _DocIndex(docs)
+
+
+def _index_key(log: _Log, files: list[dict]) -> tuple[str, frozenset]:
+    return log.root, frozenset(f["path"] for f in files)
+
+
+def _cached_index(key: tuple) -> _DocIndex | None:
+    with _STATE:
+        index = _INDEXES.get(key)
+        if index is not None:
+            _INDEXES.move_to_end(key)
+        return index
+
+
+def _remember(key: tuple, index: _DocIndex) -> _DocIndex:
+    with _STATE:
+        _INDEXES[key] = index
+        _INDEXES.move_to_end(key)
+        while len(_INDEXES) > _INDEXES_MAX:
+            _INDEXES.popitem(last=False)
+    return index
 
 
 class _Log:
@@ -226,16 +349,45 @@ class ChunkStore:
         return log, manifest
 
     @contextmanager
-    def _writing(self):
-        """Hold the store's writer lock; yield (log, version, manifest) of
-        the head to commit against."""
+    def writer(self):
+        """Hold the store's writer lock (re-entrant) for the block: no other
+        thread of this process commits to the store until it exits, so a
+        decision read from the head — the ingest dedup gate — still holds
+        when its commit lands."""
         log = _Log(self.spark, self.path)
         with _STATE:
             lock = _WRITERS.setdefault(log.root, threading.RLock())
         with lock:
+            yield log
+
+    @contextmanager
+    def _writing(self):
+        """Hold the store's writer lock; yield (log, version, manifest) of
+        the head to commit against."""
+        with self.writer() as log:
             with _STATE:  # a reader must not load a half-written adoption
                 head = log.head(adopt=True)
             yield (log, *head)
+
+    def _index(self, log: _Log, files: list[dict]) -> _DocIndex:
+        """The document index of the version made of ``files``; a miss
+        rebuilds it from exactly those files with one aggregate."""
+        key = _index_key(log, files)
+        index = _cached_index(key)
+        if index is not None:
+            return index
+        docs = {}
+        if files:
+            scan = self._scan(log, files, file_col=True)
+            for r in self._per_document(scan, F.collect_set("_file").alias("files")).collect():
+                docs[r["doc_id"]] = {**{k: r[k] for k in _DOC_FIELDS}, "files": frozenset(map(_rel, r["files"]))}
+        return _remember(key, _DocIndex(docs))
+
+    def documents(self) -> _DocIndex:
+        """The latest version's document index."""
+        with self.pinned():
+            log, manifest = self._resolve()
+            return self._index(log, manifest["files"])
 
     def _stage(self, log: _Log, df: DataFrame) -> list[dict]:
         """Write ``df`` (CHUNKS_SCHEMA columns) as new library-partitioned
@@ -300,55 +452,44 @@ class ChunkStore:
         )
 
     def count(self) -> int:
-        return self.read().count()
+        return self.documents().chunks
 
     # -- write --------------------------------------------------------------
 
-    def append(self, chunks: DataFrame) -> None:
+    def append(self, chunks: DataFrame, replace=(), documents: list[dict] | None = None) -> None:
         """Batch append (reference upsert_chunks, store.py:180-204, minus the
         per-upsert FTS rebuild — term stats are derived at query time).
 
         Rows are sorted by (doc_id, chunk_index) within partitions so
         Parquet row-group min/max statistics stay selective for the
-        doc-scoped point lookups (get/delete)."""
+        doc-scoped point lookups (get/delete).
+
+        ``replace``: doc ids whose chunks leave in the same commit — a
+        replace is one version, never a delete then an append.
+        ``documents``: the ``_DOC_FIELDS`` rows of the appended documents,
+        from which the next version's index is derived; without them a raw
+        append leaves the index to be rebuilt on its next use."""
         with self._writing() as (log, version, manifest):
-            added = self._stage(log, chunks.select(_COLUMNS).sortWithinPartitions("doc_id", "chunk_index"))
-            if added:
-                log.commit(version, manifest["files"] + added, manifest["snapshots"])
+            rows = chunks.select(_COLUMNS).sortWithinPartitions("doc_id", "chunk_index")
+            self._commit_rows(log, version, manifest, rows, replace, documents)
 
     def delete_document(self, doc_id: str) -> int:
         """Delete all chunks of one document (reference store.py:237-259)."""
         return self.delete_documents([doc_id])
 
-    # Above this many ids, predicate goes from an In() literal list to a
-    # broadcast anti-join (an In with 10^5 entries bloats the plan and
-    # falls off codegen; a broadcast hash anti-join does not).
-    _DELETE_ISIN_MAX = 1000
+    _DELETE_ISIN_MAX = _ISIN_MAX
 
     def delete_documents(self, doc_ids) -> int:
         """Batch delete: all chunks of every id in ``doc_ids`` in ONE commit
-        that rewrites only the files holding a hit, no matter how many
-        documents are deleted.  Returns deleted row count."""
-        ids = sorted({d for d in doc_ids if d is not None})
-        if not ids:
-            return 0
-        if len(ids) <= self._DELETE_ISIN_MAX:
-            is_hit = F.col("doc_id").isin(ids)
-            return self._delete(lambda df: df.filter(is_hit), lambda df: df.filter(~is_hit))
-        ids_df = self.spark.createDataFrame([(d,) for d in ids], "doc_id string")
-        return self.delete_documents_df(ids_df)
+        that rewrites only the files the index names for them, no matter
+        how many documents are deleted.  Returns deleted row count, read
+        from the index."""
+        with self._writing() as (log, version, manifest):
+            return self._commit_rows(log, version, manifest, None, doc_ids, [])
 
     def delete_documents_df(self, ids_df: DataFrame) -> int:
-        """Fully set-based batch delete: ``ids_df`` is a one-column
-        (doc_id) DataFrame — e.g. the replaced-ids set straight out of the
-        ingest dedup gate — joined against the store without the ids ever
-        visiting the driver.  Same one-commit contract as
-        :meth:`delete_documents`."""
-        ids_df = F.broadcast(ids_df.select("doc_id").where(F.col("doc_id").isNotNull()).distinct())
-        return self._delete(
-            lambda df: df.join(ids_df, "doc_id", "semi"),
-            lambda df: df.join(ids_df, "doc_id", "anti"),
-        )
+        """:meth:`delete_documents` of a one-column (doc_id) DataFrame."""
+        return self.delete_documents(r["doc_id"] for r in ids_df.select("doc_id").distinct().collect())
 
     def delete_where(self, library: str | None = None, filters: dict | None = None) -> int:
         """Predicate-scoped delete: remove every chunk matching the same
@@ -361,38 +502,45 @@ class ChunkStore:
         Returns deleted row count.  Same one-commit contract as
         delete_documents."""
         pred = build_filter(library, filters)
-        with self._writing():
-            ids_df = self.read().filter(pred).select("doc_id").distinct().localCheckpoint(eager=True)
-            return self.delete_documents_df(ids_df)
+        with self._writing() as (log, _, manifest):
+            hits = self._table(log, manifest["files"]).filter(pred).select("doc_id").distinct().collect()
+            return self.delete_documents(r["doc_id"] for r in hits)
 
-    def _delete(self, hits_of, keep_of) -> int:
-        """One job finds the files holding a hit and their hit counts; only
-        those files are rewritten (``keep_of`` of each), then one commit
-        swaps them for the rewrites."""
-        with self._writing() as (log, version, manifest):
-            if not manifest["files"]:
-                return 0
-            hits = hits_of(self._scan(log, manifest["files"], file_col=True)).groupBy("_file").count().collect()
-            if not hits:
-                return 0
-            # _file is the %XX-encoded URI form: a literal '%' of an escaped
-            # partition directory reads as '%25'
-            hit_paths = {"/".join(unquote(r["_file"]).rsplit("/", 2)[-2:]) for r in hits}
-            kept = [f for f in manifest["files"] if f["path"] not in hit_paths]
-            rewritten = [f for f in manifest["files"] if f["path"] in hit_paths]
-            added = self._stage(log, keep_of(self._scan(log, rewritten)).select(_COLUMNS))
-            log.commit(version, kept + added, manifest["snapshots"])
-            return sum(r["count"] for r in hits)
+    def _commit_rows(self, log: _Log, version: int, manifest: dict, rows: DataFrame | None,
+                     drop, documents: list[dict] | None) -> int:
+        """One commit that adds ``rows`` (or nothing) and removes every chunk
+        of the doc ids in ``drop``: the files the index names for them are
+        rewritten without those chunks in the same write as ``rows``.
+        When ``documents`` describes ``rows`` (or there are none), the next
+        version's index is derived from this one.  Returns the removed
+        chunk count."""
+        drop = {d for d in drop if d is not None}
+        derive = rows is None or documents is not None
+        index = self._index(log, manifest["files"]) if drop or derive else None
+        dropped = [index.docs[d] for d in drop if d in index.docs] if drop else []
+        removed = set().union(*(d["files"] for d in dropped))
+        parts = [] if rows is None else [rows]
+        if removed:
+            ids = sorted(d["doc_id"] for d in dropped)
+            old = self._scan(log, [f for f in manifest["files"] if f["path"] in removed])
+            parts.append(where_in(old, "doc_id", ids, negate=True).select(_COLUMNS))
+        added = self._stage(log, reduce(DataFrame.union, parts)) if parts else []
+        if not (added or removed):
+            return 0
+        files = [f for f in manifest["files"] if f["path"] not in removed] + added
+        log.commit(version, files, manifest["snapshots"])
+        if derive:
+            dropped_ids = {d["doc_id"] for d in dropped}
+            _remember(_index_key(log, files), index.derive(removed, added, dropped_ids, documents or []))
+        return sum(d["chunk_count"] for d in dropped)
 
     # -- point lookups / listings --------------------------------------------
 
-    def documents_df(self, library: str | None = None) -> DataFrame:
+    @staticmethod
+    def _per_document(df: DataFrame, *extra) -> DataFrame:
         """One row per document with first-seen metadata + chunk count
         (reference list_documents grouping loop, store.py:382-397).
         first-seen == the chunk_index-0 row, made explicit with min_by."""
-        df = self.read()
-        if library is not None:
-            df = df.filter(F.col("library") == library)
         return df.groupBy("doc_id").agg(
             F.min_by("source", "chunk_index").alias("source"),
             F.min_by("title", "chunk_index").alias("title"),
@@ -401,62 +549,55 @@ class ChunkStore:
             F.min_by("created_at", "chunk_index").alias("created_at"),
             F.min_by("metadata", "chunk_index").alias("metadata"),
             F.count(F.lit(1)).cast("int").alias("chunk_count"),
+            *extra,
         )
 
     def list_documents(self, library: str | None = None, limit: int | None = None, offset: int = 0) -> list[dict]:
+        """Recency-sorted page of the index (reference store.py:382-401)."""
         limit = self.config.list_limit_default if limit is None else limit
         if not (1 <= limit <= self.config.list_limit_max) or offset < 0:
             raise ValueError("limit must be in [1, %d], offset >= 0" % self.config.list_limit_max)
-        # Recency sort + pagination (reference store.py:399-401): cut to
-        # the page end with an explicit orderBy().limit(offset+limit) —
-        # TakeOrderedAndProject, per-partition top-k then a bounded merge —
-        # so the row_number window only ever sees offset+limit rows
-        # instead of single-partitioning the whole doc listing.
-        w = Window.orderBy(F.desc("created_at"), F.asc("doc_id"))
-        page = (
-            self.documents_df(library)
-            .orderBy(F.desc("created_at"), F.asc("doc_id"))
-            .limit(offset + limit)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") > offset)
-            .drop("_rn")
-        )
-        return [r.asDict() for r in page.collect()]
+        docs = self.documents().recent_first
+        if library is not None:
+            docs = [d for d in docs if d["library"] == library]
+        return [{k: d[k] for k in _DOC_FIELDS} for d in docs[offset:offset + limit]]
 
     def libraries_df(self) -> DataFrame:
-        """Per-library rollup (reference store.py:405-442)."""
+        """Per-library rollup over the latest version's chunks (reference
+        store.py:405-442)."""
         return self.read().groupBy("library").agg(
             F.countDistinct("doc_id").cast("int").alias("document_count"),
             F.count(F.lit(1)).cast("int").alias("chunk_count"),
         )
 
     def list_libraries(self) -> list[dict]:
-        return [r.asDict() for r in self.libraries_df().orderBy("library").collect()]
+        return [dict(lib) for lib in self.documents().libraries]
 
     def get_document(self, doc_id: str) -> dict | None:
         """Reconstruct a document: chunks ordered by chunk_index, contents
-        joined with blank lines (reference store.py:329-352, server.py:382)."""
-        rows = (
-            self.read()
-            .filter(F.col("doc_id") == doc_id)
-            .groupBy("doc_id")
-            .agg(
-                F.min_by("source", "chunk_index").alias("source"),
-                F.min_by("title", "chunk_index").alias("title"),
-                F.min_by("library", "chunk_index").alias("library"),
-                F.min_by("metadata", "chunk_index").alias("metadata"),
-                F.count(F.lit(1)).cast("int").alias("chunk_count"),
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("chunk_index", "content"))),
-                        lambda s: s["content"],
-                    ),
-                    "\n\n",
-                ).alias("content"),
+        joined with blank lines (reference store.py:329-352, server.py:382).
+        Reads only the files the index names for it."""
+        with self.pinned():
+            log, manifest = self._resolve()
+            doc = self._index(log, manifest["files"]).docs.get(doc_id)
+            if doc is None:
+                return None
+            files = [f for f in manifest["files"] if f["path"] in doc["files"]]
+            rows = (
+                self._table(log, files)
+                .filter(F.col("doc_id") == doc_id)
+                .select("chunk_index", "source", "title", "library", "metadata", "content")
+                .collect()
             )
-            .collect()
-        )
-        return rows[0].asDict() if rows else None
+        if not rows:
+            return None
+        rows.sort(key=lambda r: r["chunk_index"])
+        first = rows[0]
+        return {
+            "doc_id": doc_id, "source": first["source"], "title": first["title"],
+            "library": first["library"], "metadata": first["metadata"], "chunk_count": len(rows),
+            "content": "\n\n".join(r["content"] for r in rows if r["content"] is not None),
+        }
 
     # -- maintenance ---------------------------------------------------------
 
@@ -516,6 +657,11 @@ class ChunkStore:
                 report[lib_value] = {"files_before": len(lib_files), "files_after": want, "bytes": nbytes}
             if report:
                 log.commit(version, files, manifest["snapshots"])
+                index = _cached_index(_index_key(log, manifest["files"]))
+                if index is not None:
+                    removed = {f["path"] for f in manifest["files"]} - {f["path"] for f in files}
+                    added = [f for f in files if f not in manifest["files"]]
+                    _remember(_index_key(log, files), index.derive(removed, added, set(), []))
         return report
 
     # -- snapshots / time travel ----------------------------------------------

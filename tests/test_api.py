@@ -306,3 +306,69 @@ def test_searches_beside_ingest_and_delete_see_whole_versions(db):
     assert not searcher.is_alive()
     assert errors == []
     assert seen and all(seen), f"{seen.count(False)} of {len(seen)} searches missed a stable document"
+
+
+class _Jobs:
+    """Spark jobs run by one call: the call runs in its own job group and
+    the group's jobs are read from the status tracker once none of them is
+    still running (job-end events arrive asynchronously)."""
+
+    def __init__(self, spark):
+        self.sc = spark.sparkContext
+        self.tracker = self.sc.statusTracker()
+        self.calls = 0
+
+    def __call__(self, fn, *args, **kwargs):
+        import time
+
+        self.calls += 1
+        group = f"jobs-{id(self)}-{self.calls}"
+        outer = self.sc.getLocalProperty("spark.jobGroup.id")
+        self.sc.setJobGroup(group, group)
+        try:
+            out = fn(*args, **kwargs)
+        finally:
+            self.sc.setLocalProperty("spark.jobGroup.id", outer)  # None clears it
+        deadline = time.monotonic() + 5.0
+        while True:
+            jobs = list(self.tracker.getJobIdsForGroup(group))
+            infos = [self.tracker.getJobInfo(j) for j in jobs]
+            if all(i is not None and i.status != "RUNNING" for i in infos) or time.monotonic() > deadline:
+                return out, len(jobs)
+            time.sleep(0.01)
+
+
+def _versions(db):
+    import os
+
+    log = os.path.join(db.store.path, "_log")
+    return max(int(n[: -len(".json")]) for n in os.listdir(log) if n.endswith(".json"))
+
+
+def test_edit_session_job_budgets(spark, db):
+    """The per-call Spark jobs of an edit session: the dedup gate, the
+    browse calls and delete planning are served from the document index."""
+    jobs = _Jobs(spark)
+    for i in range(3):
+        db.ingest_content(f"# Kept {i}\n\n" + f"kept note {i} body " * 40, source=f"kept{i}.md", library="notes")
+    note = {"content": "# Note\n\n" + "a note about budgets " * 120, "source": "note.md", "library": "notes"}
+
+    res, n = jobs(db.ingest_content, **note)
+    assert res["status"] == "indexed" and n <= 4, n
+    res, n = jobs(db.ingest_content, **note)
+    assert res["status"] == "skipped" and n <= 1, n
+    before = _versions(db)
+    res, n = jobs(db.ingest_content, **{**note, "content": note["content"] + " changed"})
+    assert res["status"] == "replaced" and n <= 5, n
+    assert _versions(db) == before + 1
+    doc_id, chunks = res["doc_id"], res["chunk_count"]
+
+    for call in (lambda: db.list_documents(library="notes"), db.list_libraries, db.server_info,
+                 lambda: db.delete_document("no-such-doc")):
+        _, n = jobs(call)
+        assert n == 0, (call, n)
+    res, n = jobs(db.delete_document, doc_id)
+    assert res["deleted_chunks"] == chunks and n <= 1, (res, n)
+    assert db.list_libraries()["libraries"] == [
+        {"library": "notes", "document_count": 3, "chunk_count": db.store.read().count()}
+    ]

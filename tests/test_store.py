@@ -245,29 +245,32 @@ def test_delete_documents_large_idset_antijoin(spark, store):
     assert len(store.list_documents(limit=100)) == 3
 
 
-def test_replace_batch_uses_single_batch_delete(spark, store, monkeypatch):
-    """A batch with many replaced docs triggers exactly ONE set-based
-    delete (delete_documents_df) carrying the whole id set — the ids never
-    pass through a driver-side list."""
+def test_replace_batch_publishes_one_version(spark, store):
+    """A batch of 6 replaced documents is one commit: the next version
+    already holds every new chunk and none of the old ones, so no reader
+    can resolve a version in which a replaced document is missing."""
     ingest(_doc_batch(spark, 6), store)
-    calls = []
-    orig = type(store).delete_documents_df
-
-    def spy(self, ids_df):
-        calls.append(ids_df.select("doc_id").distinct().count())
-        return orig(self, ids_df)
-
-    monkeypatch.setattr(type(store), "delete_documents_df", spy)
+    before = _head_version(store)
+    old_hashes = {d["doc_id"]: d["content_hash"] for d in store.list_documents(limit=100)}
     changed = _doc_batch(spark, 6).withColumn(
         "content", F.concat(F.col("content"), F.lit(" v2"))
     )
     res = ingest(changed, store, "2026-02-01T00:00:00+00:00")
     assert counts(res) == {"replaced": 6}
-    assert calls == [6]
-    # store holds exactly the new content
-    assert len(store.list_documents(limit=100)) == 6
-    doc = store.list_documents(limit=1)[0]
-    assert store.get_document(doc["doc_id"])["content"].endswith("v2")
+    assert _head_version(store) == before + 1
+    docs = store.list_documents(limit=100)
+    assert {d["doc_id"] for d in docs} == set(old_hashes)
+    assert all(d["content_hash"] != old_hashes[d["doc_id"]] for d in docs)
+    assert all(store.get_document(d["doc_id"])["content"].endswith("v2") for d in docs)
+    assert store.read().filter(F.col("content_hash").isin(list(old_hashes.values()))).count() == 0
+    assert store.count() == sum(r["chunk_count"] for r in res.collect())
+
+
+def _head_version(store):
+    import os
+
+    log = os.path.join(store.path, "_log")
+    return max(int(n[: -len(".json")]) for n in os.listdir(log) if n.endswith(".json"))
 
 
 def _manifest(store):
@@ -275,9 +278,7 @@ def _manifest(store):
     import json
     import os
 
-    log = os.path.join(store.path, "_log")
-    latest = max(int(n[: -len(".json")]) for n in os.listdir(log) if n.endswith(".json"))
-    with open(os.path.join(log, f"{latest}.json")) as f:
+    with open(os.path.join(store.path, "_log", f"{_head_version(store)}.json")) as f:
         return json.load(f)
 
 
@@ -466,13 +467,16 @@ def test_snapshot_survives_append_delete_compact(spark, tmp_path):
     assert store.count() == 8
     assert store.read_version(v1).count() == 5
 
-    # delete rewrites the partition; the snapshot's hard links keep inodes
+    # delete rewrites the files holding d0; the pin keeps the old ones
     assert store.delete_document("d0") == 1
     assert store.count() == 7
     assert store.read_version(v1).count() == 5
     assert store.read_version(v1).filter("doc_id = 'd0'").count() == 1
 
-    store.compact(target_file_bytes=1)  # force a rewrite
+    assert store.partition_file_stats()["L"]["files"] >= 2
+    report = store.compact(target_file_bytes=1 << 30)
+    assert report["L"]["files_after"] < report["L"]["files_before"]
+    assert store.count() == 7
     assert store.read_version(v1).count() == 5
 
 
@@ -553,3 +557,81 @@ def test_snapshots_on_a_file_uri_store(spark, tmp_path):
     store.restore(v)
     assert store.count() == 3
     assert [s["tag"] for s in store.snapshots()] == ["uri", "pre-restore"]
+
+
+# -- document index -----------------------------------------------------------
+
+
+def _listing(store):
+    docs = store.list_documents(limit=store.config.list_limit_max)
+    return docs, store.list_libraries(), store.count()
+
+
+def _assert_index_parity(store):
+    """What the store serves equals a rebuild from the data with the index
+    cache cleared, and every served document's ``files`` contains the
+    files that hold its chunks."""
+    from mcpvectordb_spark import store as store_mod
+
+    served, served_index = _listing(store), store.documents()
+    warm = dict(store_mod._INDEXES)
+    store_mod._INDEXES.clear()
+    try:
+        rebuilt, rebuilt_index = _listing(store), store.documents()
+    finally:
+        store_mod._INDEXES.clear()
+        store_mod._INDEXES.update(warm)
+    assert served == rebuilt
+    assert served[2] == store.read().count()
+    assert served_index.docs.keys() == rebuilt_index.docs.keys()
+    for doc_id, d in rebuilt_index.docs.items():
+        assert served_index.docs[doc_id]["files"] >= d["files"], doc_id
+
+
+def test_index_matches_a_rebuild_after_every_write_kind(spark, tmp_path, mini_docs, monkeypatch):
+    from mcpvectordb_spark import store as store_mod
+    from mcpvectordb_spark.store import ChunkStore
+
+    path = str(tmp_path / "t")
+    store = ChunkStore(spark, path, TEST)
+    ingest(mini_docs, store)                                          # indexed
+    _assert_index_parity(store)
+    assert counts(ingest(mini_docs, store, "2026-01-02T00:00:00+00:00")) == {"skipped": 5}
+    _assert_index_parity(store)
+    changed = mini_docs.filter(F.col("library") == "lib_a").withColumn("content", F.lit("# New\n\nnew text"))
+    assert counts(ingest(changed, store, "2026-01-03T00:00:00+00:00")) == {"replaced": 3}
+    _assert_index_parity(store)
+    store.append(_mini_chunks(spark, range(6), library="lib_b"))    # raw append: a miss
+    _assert_index_parity(store)
+    # above the In() threshold: the ingest selects its rows and the deletes
+    # rewrite their files through broadcast joins
+    monkeypatch.setattr(store_mod, "_ISIN_MAX", 2)
+    assert counts(ingest(_doc_batch(spark, 8), store, "2026-01-04T00:00:00+00:00")) == {"indexed": 8}
+    _assert_index_parity(store)
+    victim = store.list_documents(limit=1)[0]
+    assert store.delete_document(victim["doc_id"]) == victim["chunk_count"]
+    _assert_index_parity(store)
+    ids = [d["doc_id"] for d in store.list_documents(library="lib_a", limit=100)][:3]
+    padded = ids + [f"nonexistent-{i}" for i in range(store._DELETE_ISIN_MAX + 5)]
+    assert store.delete_documents(padded) > 0
+    monkeypatch.undo()
+    _assert_index_parity(store)
+    assert store.delete_where(filters={"source": "src1"}) == 1
+    _assert_index_parity(store)
+    assert store.compact(target_file_bytes=1 << 30)
+    _assert_index_parity(store)
+    v = store.snapshot()
+    _assert_index_parity(store)
+    ingest(_doc_batch(spark, 3, libs=("lib_c",)), store, "2026-01-05T00:00:00+00:00")
+    _assert_index_parity(store)
+    store.restore(v)
+    _assert_index_parity(store)
+    store.expire_snapshot(v)
+    _assert_index_parity(store)
+
+    # a cold store, opened on what another instance wrote
+    writer = _listing(store)
+    store_mod._INDEXES.clear()
+    cold = ChunkStore(spark, path, TEST)
+    assert _listing(cold) == writer
+    assert cold.get_document(writer[0][0]["doc_id"])["chunk_count"] == writer[0][0]["chunk_count"]

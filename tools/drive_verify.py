@@ -118,6 +118,20 @@ def pinned_read_outlives_delete():
     assert store.count() < n
 check("read resolved before a delete still collects", pinned_read_outlives_delete)
 
+def cold_store_lists_the_writers_documents():
+    # the document index lives in process memory (store._INDEXES): with it
+    # cleared, a new ChunkStore sees the store as a fresh process would and
+    # rebuilds the index from the files the writer committed
+    from mcpvectordb_spark import store as store_mod
+    want = (store.list_documents(limit=1000), store.list_libraries(), store.count())
+    store_mod._INDEXES.clear()
+    cold = ChunkStore(spark, tmp, TESTCFG)
+    got = (cold.list_documents(limit=1000), cold.list_libraries(), cold.count())
+    assert want[2] > 0 and got == want, (got, want)
+    doc = want[0][0]
+    assert cold.get_document(doc["doc_id"])["chunk_count"] == doc["chunk_count"]
+check("cold store lists the writer's documents", cold_store_lists_the_writers_documents)
+
 # ---- 3. dedup flow (planted) ----
 from mcpvectordb_spark.operators.dedup import minhash_lsh_pairs
 
