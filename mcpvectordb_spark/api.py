@@ -171,25 +171,18 @@ class VectorDB:
         if not os.path.isdir(os.path.expanduser(folder)):
             return _err(f"folder not found: {folder}")
         files = read_folder(self.spark, os.path.expanduser(folder), recursive, self.config)
-        # cache: the conversion output feeds both the ingest run and the
-        # error report — without it the folder is scanned+converted twice
-        converted = convert_stage(files).cache()
-        raw = converted.select(
+        # a file that fails to convert becomes a failed row carrying the
+        # converter's message (ingest.prepare_batch passes convert_error on)
+        raw = convert_stage(files).select(
             "source",
             F.lit(library).alias("library"),
             F.col("content"),
             F.lit(json.dumps(metadata or {})).alias("metadata"),
             "last_modified",
+            "convert_error",
         )
         results = ingest_batch(raw, self.store, self.config,
                                embedder_factory=self._embedder_factory()).collect()
-        # conversion failures surface as empty-content rows; report the
-        # converter's actual error for them
-        convert_errors = {
-            r["source"]: r["convert_error"]
-            for r in converted.select("source", "convert_error").filter("convert_error IS NOT NULL").collect()
-        }
-        converted.unpersist()
         by = {}
         for r in results:
             by[r["status"]] = by.get(r["status"], 0) + 1
@@ -201,7 +194,7 @@ class VectorDB:
             "skipped": by.get("skipped", 0),
             "failed": by.get("failed", 0),
             "errors": [
-                {"source": r["source"], "error": convert_errors.get(r["source"], r["error"])}
+                {"source": r["source"], "error": r["error"]}
                 for r in results if r["status"] == "failed"
             ],
         }

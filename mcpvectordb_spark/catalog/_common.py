@@ -7,6 +7,7 @@ reference names from earlier ones via the wildcard chain below."""
 from __future__ import annotations
 
 import math
+import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -38,13 +39,20 @@ SEARCH_QUERY = "window join spark batch"
 QUERY_VEC_ID = 0
 RRF_K0 = 60
 
-# One-off build costs of session-cached artifacts (trained PQ codebooks,
-# the shared Bm25Index, ...), recorded at cache-miss time keyed by a
-# human-readable artifact name.  bench.py surfaces this ledger in its
-# output (r8 ADVICE #3): session-caching moves a build into the UNTIMED
-# warm rep, so without this record the cost would appear in no benchmark
-# number at all.
+# One-off build costs of session artifacts (trained PQ codebooks, the
+# shared Bm25Index, ...), recorded at cache-miss time keyed by the
+# artifact's name.  bench.py surfaces this ledger in its output:
+# session-caching moves a build into the UNTIMED warm rep, so without this
+# record the cost would appear in no benchmark number at all.
 SESSION_BUILD_SECONDS: dict[str, float] = {}
+
+# Session artifacts: state derived from the corpora under sf_dir (graphs,
+# indexes, trained models, stream fixtures) that several catalog queries
+# share, built once per (artifact, session, corpus).  The corpora are
+# immutable within a session, and the key carries the applicationId, so a
+# new SparkSession rebuilds instead of reading a dead context's
+# localCheckpoint.  Ingest-backed corpora mutate and never come here.
+_SESSION_ARTIFACTS: dict[tuple[str, str, str], object] = {}
 
 
 def _record_build(name: str, seconds: float) -> None:
@@ -52,6 +60,18 @@ def _record_build(name: str, seconds: float) -> None:
     # "what does a cold consumer of this artifact pay", not "how many
     # times was it built"
     SESSION_BUILD_SECONDS[name] = max(SESSION_BUILD_SECONDS.get(name, 0.0), seconds)
+
+
+def _session_artifact(spark: SparkSession, sf_dir: str, name: str, build):
+    """The artifact ``name`` (which spells out every build parameter) for
+    this session and corpus: ``build()`` on the first use, timed into
+    SESSION_BUILD_SECONDS; the same object afterwards."""
+    key = (name, spark.sparkContext.applicationId, sf_dir)
+    if key not in _SESSION_ARTIFACTS:
+        t0 = time.perf_counter()
+        _SESSION_ARTIFACTS[key] = build()
+        _record_build(name, time.perf_counter() - t0)
+    return _SESSION_ARTIFACTS[key]
 
 # ---------------------------------------------------------------------------
 # DuckDB SQL fragment builders (mirrors of the Spark column expressions)
@@ -143,84 +163,58 @@ q AS (
 """
 
 
-# Session-scoped co-purchase pair cache: five catalog queries (pagerank /
+# The co-purchase pair graph: five catalog queries (pagerank /
 # communities / graph_metrics / bfs / copurchase_triangles) run different
 # graph algorithms over the SAME mined edge set — parts co-ordered in >= 2
 # orders.  The order-key self-join that mines it is the dominant cost of
 # each (~2.5s at sf0.1 vs a ~9k-row result); a real engine materializes
-# the graph once and runs its algorithm suite against the frozen edges
-# (the persisted-bloom / trained-LR discipline).  Keyed by
-# (applicationId, sf_dir): a new session gets a fresh applicationId, so
-# stopped-session checkpoints are never served stale; the testdata corpora
-# under sf_dir are immutable within a session.
-_COPURCHASE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# the graph once and runs its algorithm suite against the frozen edges.
 def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(pa < pb, n_pair) part pairs co-ordered in >= 2 distinct orders —
     the canonical co-purchase graph, mined once per (session, corpus) and
     eagerly checkpointed.  Pair explosion is bounded by items-per-order²
     (sub-quadratic in the catalog), the result by recurring pairs (~1.5%
     of distinct pairs on this corpus)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _COPURCHASE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
-    pair_n = (
-        a.join(b, "o")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pair"))
-        .filter(F.col("n_pair") >= 2)
-        .localCheckpoint(eager=True)
-    )
-    _COPURCHASE_CACHE[key] = pair_n
-    return pair_n
+    def build():
+        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+        a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
+        b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
+        return (
+            a.join(b, "o")
+            .filter(F.col("pa") < F.col("pb"))
+            .groupBy("pa", "pb")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_pair"))
+            .filter(F.col("n_pair") >= 2)
+            .localCheckpoint(eager=True)
+        )
+
+    return _session_artifact(spark, sf_dir, "copurchase_pairs", build)
 
 
-# Session-scoped BM25 index over the raw documents corpus: the retrieval
-# family (search_eval, hard_negatives, search_clarity, search_rbo, ...)
-# re-tokenized the same corpus per query.  Same freshness contract as
-# _COPURCHASE_CACHE: keyed by (applicationId, sf_dir), corpus immutable
-# within a session; ingest-backed corpora use Bm25Index.append, never this.
-_BM25_CACHE: dict[tuple[str, str], "object"] = {}
-
-
+# The BM25 index over the raw documents corpus: the retrieval family
+# (search_eval, hard_negatives, search_clarity, search_rbo, ...) would
+# re-tokenize the same corpus per query.  Ingest-backed corpora use
+# Bm25Index.append, never this.
 def _shared_bm25_index(spark: SparkSession, sf_dir: str):
     """Eagerly-checkpointed (posting, lens) Bm25Index over documents —
     built once per (session, corpus), the reference's persistent FTS
     index (store.py:197-202) realized as frozen shared state."""
     from mcpvectordb_spark.operators.bm25 import Bm25Index, doc_lens, doc_terms
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BM25_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import time as _time
+    def build():
+        docs = load_table(spark, sf_dir, "documents")
+        posting = doc_terms(docs, "doc_id", "text").localCheckpoint(eager=True)
+        lens = doc_lens(docs, "doc_id", "text").localCheckpoint(eager=True)
+        return Bm25Index(posting, lens, cached=False)
 
-    t0 = _time.perf_counter()
-    docs = load_table(spark, sf_dir, "documents")
-    posting = doc_terms(docs, "doc_id", "text").localCheckpoint(eager=True)
-    lens = doc_lens(docs, "doc_id", "text").localCheckpoint(eager=True)
-    idx = Bm25Index(posting, lens, cached=False)
-    _record_build("bm25_index", _time.perf_counter() - t0)
-    _BM25_CACHE[key] = idx
-    return idx
+    return _session_artifact(spark, sf_dir, "bm25_index", build)
 
 
-# Session-scoped shingle inverted indexes: the dedup/similarity family
-# (ngram_jaccard, minhash sig/lsh/calibration, ssjoin, clusters) re-exploded
-# the same corpus into (id, shingle) rows per query — the dominant cost of
-# each.  Two corpus variants exist: "raw" (the documents table verbatim)
-# and "near" (_near_corpus's planted-duplicate union).  Same freshness
-# contract as the caches above: keyed (applicationId, sf_dir, corpus, n);
-# ingest-backed mutating corpora never route through catalog sf_dir queries.
-_SHINGLE_CACHE: dict[tuple[str, str, str, int], DataFrame] = {}
-
-
+# Shingle inverted indexes: the dedup/similarity family (ngram_jaccard,
+# minhash sig/lsh/calibration, ssjoin, clusters) would re-explode the same
+# corpus into (id, shingle) rows per query — the dominant cost of each.
+# Two corpus variants exist: "raw" (the documents table verbatim) and
+# "near" (_near_corpus's planted-duplicate union).
 def _shared_shingles(
     spark: SparkSession, sf_dir: str, corpus: str = "raw", n: int = 3
 ) -> DataFrame:
@@ -228,61 +222,45 @@ def _shared_shingles(
     corpus variant — built once per (session, corpus), the frozen artifact
     every shingle-set operator runs against (the 100 TB shape: you shingle
     the corpus once, then run the whole dedup suite on the index)."""
-    key = (spark.sparkContext.applicationId, sf_dir, corpus, n)
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    if corpus == "raw":
-        base = load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").alias("id"), "text"
-        )
-    elif corpus == "near":
-        base = _near_corpus(spark, sf_dir)
-    else:  # pragma: no cover - caller bug
+    if corpus not in ("raw", "near"):  # pragma: no cover - caller bug
         raise ValueError(f"unknown corpus variant: {corpus!r}")
-    import time as _time
-
-    t0 = _time.perf_counter()
-    idx = dd._shingle_index(base, "id", "text", n).localCheckpoint(eager=True)
-    _record_build(f"shingle_index_{corpus}_{n}", _time.perf_counter() - t0)
-    _SHINGLE_CACHE[key] = idx
-    return idx
+    return _session_artifact(
+        spark, sf_dir, f"shingle_index_{corpus}_{n}",
+        lambda: dd._shingle_index(_corpus_variant(spark, sf_dir, corpus), "id", "text", n)
+        .localCheckpoint(eager=True),
+    )
 
 
-# Session-scoped AllPairs/PPJoin positional postings (doc, term, s, pos)
-# over a corpus variant — the threshold-independent exact-similarity-join
-# index (operators/simjoin.py::ssjoin_postings), built on top of the shared
-# shingles and frozen once per session.
-_SSJOIN_POSTINGS_CACHE: dict[tuple[str, str, str, int], DataFrame] = {}
+def _corpus_variant(spark: SparkSession, sf_dir: str, corpus: str) -> DataFrame:
+    """(id, text): the documents verbatim ("raw") or _near_corpus ("near")."""
+    if corpus == "raw":
+        return load_table(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"), "text")
+    return _near_corpus(spark, sf_dir)
 
 
+# AllPairs/PPJoin positional postings (doc, term, s, pos) over a corpus
+# variant — the threshold-independent exact-similarity-join index
+# (operators/simjoin.py::ssjoin_postings), built on the shared shingles.
 def _shared_ssjoin_postings(
     spark: SparkSession, sf_dir: str, corpus: str = "near", n: int = 3
 ) -> DataFrame:
     from mcpvectordb_spark.operators.simjoin import ssjoin_postings
 
-    key = (spark.sparkContext.applicationId, sf_dir, corpus, n)
-    hit = _SSJOIN_POSTINGS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    ranked = ssjoin_postings(
-        None, "id", "text", n, shingles=_shared_shingles(spark, sf_dir, corpus, n)
-    ).localCheckpoint(eager=True)
-    _SSJOIN_POSTINGS_CACHE[key] = ranked
-    return ranked
+    return _session_artifact(
+        spark, sf_dir, f"ssjoin_postings_{corpus}_{n}",
+        lambda: ssjoin_postings(
+            None, "id", "text", n, shingles=_shared_shingles(spark, sf_dir, corpus, n)
+        ).localCheckpoint(eager=True),
+    )
 
 
-# Session-scoped near-dup pair graph over the planted corpus: the
-# clustering suite (dedup_clusters, dedup_clusters_twostar,
-# dedup_keep_canonical) runs three different algorithms over the SAME
-# Jaccard>=0.5 edge set — mine it once per session (the co-purchase-graph
-# pattern applied to the dup graph; at 100 TB the pair table is the
-# persisted output of the dedup pass that the canonicalization jobs read).
-# dedup_ngram_jaccard itself still COMPUTES the pairs (they are its
-# answer); only the downstream consumers read the frozen table.
-_NEARDUP_PAIRS_CACHE: dict[tuple[str, str, str, int, float], DataFrame] = {}
-
-
+# The near-dup pair graph over the planted corpus: the clustering suite
+# (dedup_clusters, dedup_clusters_twostar, dedup_keep_canonical) runs three
+# different algorithms over the SAME Jaccard>=0.5 edge set (at 100 TB the
+# pair table is the persisted output of the dedup pass that the
+# canonicalization jobs read).  dedup_ngram_jaccard itself still COMPUTES
+# the pairs (they are its answer); only the downstream consumers read the
+# frozen table.
 def _shared_neardup_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -290,108 +268,64 @@ def _shared_neardup_pairs(
     threshold: float = 0.5,
     corpus: str = "near",
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, corpus, n, threshold)
-    hit = _NEARDUP_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    if corpus == "raw":
-        base = load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").alias("id"), "text"
-        )
-    else:
-        base = _near_corpus(spark, sf_dir)
-    import time as _time
-
-    t0 = _time.perf_counter()
-    pairs = dd.ngram_jaccard_pairs(
-        base, "id", "text", n=n, threshold=threshold,
-        shingles=_shared_shingles(spark, sf_dir, corpus, n),
-    ).localCheckpoint(eager=True)
-    _record_build(
-        f"neardup_pairs_{corpus}_{n}_{threshold}", _time.perf_counter() - t0
+    return _session_artifact(
+        spark, sf_dir, f"neardup_pairs_{corpus}_{n}_{threshold}",
+        lambda: dd.ngram_jaccard_pairs(
+            _corpus_variant(spark, sf_dir, corpus), "id", "text", n=n, threshold=threshold,
+            shingles=_shared_shingles(spark, sf_dir, corpus, n),
+        ).localCheckpoint(eager=True),
     )
-    _NEARDUP_PAIRS_CACHE[key] = pairs
-    return pairs
 
 
-# Session-scoped MinHash signature table over the RAW corpus.  Built at 16
-# hashes: mh_i depends only on (h1, h2, i), so the first K columns ARE the
-# K-hash signatures — one table serves the 8-hash dedup_minhash_sig and the
+# The MinHash signature table over the RAW corpus.  Built at 16 hashes:
+# mh_i depends only on (h1, h2, i), so the first K columns ARE the K-hash
+# signatures — one table serves the 8-hash dedup_minhash_sig and the
 # 16-hash calibration audit.
-_MINHASH_SIG_CACHE: dict[tuple[str, str, int, int], DataFrame] = {}
-
-
 def _shared_minhash_sigs(
     spark: SparkSession, sf_dir: str, num_hashes: int = 16, n: int = 3
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, num_hashes, n)
-    hit = _MINHASH_SIG_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id"), "text"
+    return _session_artifact(
+        spark, sf_dir, f"minhash_sigs_{num_hashes}_{n}",
+        lambda: dd.minhash_signatures(
+            _corpus_variant(spark, sf_dir, "raw"), "id", "text", num_hashes, n,
+            shingles=_shared_shingles(spark, sf_dir, "raw", n),
+        ).localCheckpoint(eager=True),
     )
-    sigs = dd.minhash_signatures(
-        docs, "id", "text", num_hashes, n, shingles=_shared_shingles(spark, sf_dir, "raw", n)
-    ).localCheckpoint(eager=True)
-    _MINHASH_SIG_CACHE[key] = sigs
-    return sigs
 
 
-# Session-scoped streaming-input fixtures (r9 optimization): every stream_*
-# query simulates a watch-folder by writing a DETERMINISTIC parquet
-# directory derived from the testdata tables, then driving a readStream
-# over it.  The write is producer-side fixture setup, not operator cost —
-# and it used to run once per EXECUTION (warm rep + every timed rep).  The
-# directory is now written once per (session, corpus, fixture key); since
-# the writer is deterministic, re-executions read bytes identical to a
-# fresh write and every stream result is unchanged.  Same freshness
-# contract as the caches above (applicationId-keyed); build time lands in
-# the SESSION_BUILD_SECONDS ledger like every other session artifact.
-_STREAM_INPUT_CACHE: dict[tuple[str, str, str], str] = {}
-
-
+# Streaming-input fixtures: every stream_* query simulates a watch-folder
+# by writing a DETERMINISTIC parquet directory derived from the testdata
+# tables, then driving a readStream over it.  The write is producer-side
+# fixture setup, not operator cost, so it runs once per (session, corpus,
+# fixture key); since the writer is deterministic, re-executions read bytes
+# identical to a fresh write and every stream result is unchanged.
 def _stream_input_dir(spark: SparkSession, sf_dir: str, key: str, writer) -> str:
     """Return the session-cached input directory for a stream fixture,
     invoking ``writer(dir)`` exactly once per (session, corpus, key)."""
-    k = (spark.sparkContext.applicationId, sf_dir, key)
-    hit = _STREAM_INPUT_CACHE.get(k)
-    if hit is not None:
-        return hit
     import tempfile
-    import time as _time
 
-    d = tempfile.mkdtemp(prefix=f"stream_{key}_")
-    t0 = _time.perf_counter()
-    writer(d)
-    _record_build(f"stream_input_{key}", _time.perf_counter() - t0)
-    _STREAM_INPUT_CACHE[k] = d
-    return d
+    def build():
+        d = tempfile.mkdtemp(prefix=f"stream_{key}_")
+        writer(d)
+        return d
+
+    return _session_artifact(spark, sf_dir, f"stream_input_{key}", build)
 
 
 # The supplier↔part recurring-shipment table (>= 2 lineitems) backs four
-# more graph queries (kcore / linkpred / ppr / hits) — same freshness
-# contract as the caches above.
-_SUPPART_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# more graph queries (kcore / linkpred / ppr / hits).
 def _supplier_part_recurring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(suppkey, partkey, n) pairs with >= 2 shipments — one groupBy over
     lineitem, mined once per (session, corpus); callers namespace/weight
     as their graph needs (negated supplier keys, directed vs symmetric)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SUPPART_CACHE.get(key)
-    if hit is not None:
-        return hit
-    sp = (
-        load_table(spark, sf_dir, "lineitem")
+    return _session_artifact(
+        spark, sf_dir, "supplier_part_recurring",
+        lambda: load_table(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_suppkey").alias("suppkey"), F.col("l_partkey").alias("partkey"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .filter(F.col("n") >= 2)
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True),
     )
-    _SUPPART_CACHE[key] = sp
-    return sp
 
 
 def _q_vec(spark: SparkSession, sf_dir: str, vec_id: int = QUERY_VEC_ID) -> list[float]:

@@ -523,7 +523,21 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
 """
 
 
-_W2V_CACHE: dict = {}
+def _shared_w2v(spark: SparkSession, sf_dir: str, dim: int) -> DataFrame:
+    """The trained (term, tid, vector) table over the documents, vectors
+    quantized to 6 dp — the persisted artifact of a real pipeline (same
+    steady-state pattern as the IVF index and the decontamination bloom):
+    repeat queries only pay the embed + search."""
+    from mcpvectordb_spark.operators.w2v import train_word_vectors
+
+    def build():
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        wv = train_word_vectors(docs, "doc_id", "text", dim=dim, vocab_size=300, window=2)
+        return wv.select(
+            "term", "tid", F.transform("vector", lambda x: F.round(x, 6)).alias("vector")
+        ).localCheckpoint(eager=True)
+
+    return _session_artifact(spark, sf_dir, f"w2v_vectors_{dim}", build)
 
 
 def q_w2v_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -535,25 +549,11 @@ def q_w2v_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     MiniTransformer).  SVD is not SQL-expressible -> golden-digest gate;
     word vectors are quantized to 6 dp before embedding so sub-ulp LAPACK
     drift cannot reach the digest."""
-    from mcpvectordb_spark.operators.w2v import embed_documents_df, train_word_vectors
+    from mcpvectordb_spark.operators.w2v import embed_documents_df
 
     dim = 32
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # train once per (session, sf_dir): the trained table is the persisted
-    # artifact of a real pipeline (same steady-state pattern as the IVF
-    # index and the decontamination bloom) — repeat queries only pay the
-    # embed + search
-    # keyed (applicationId, sf_dir) like every other session cache (round-5
-    # ADVICE): a localCheckpoint belongs to ONE SparkContext, so an sf_dir-
-    # only key would serve a dead context's checkpoint after a session restart
-    key = (spark.sparkContext.applicationId, sf_dir)
-    wq = _W2V_CACHE.get(key)
-    if wq is None:
-        wv = train_word_vectors(docs, "doc_id", "text", dim=dim, vocab_size=300, window=2)
-        wq = wv.select(
-            "term", "tid", F.transform("vector", lambda x: F.round(x, 6)).alias("vector")
-        ).localCheckpoint(eager=True)
-        _W2V_CACHE[key] = wq
+    wq = _shared_w2v(spark, sf_dir, dim)
     emb = embed_documents_df(docs, "doc_id", "text", wq, dim)
     probe = emb.filter(F.col("id") == 0).first()
     qv = [float(x) for x in probe["embedding"]]
@@ -1392,17 +1392,10 @@ SQL_SEARCH_EVAL = _sql_search_eval()
 
 _LR_ITER, _LR_RATE = 10, 0.5
 
-# Session-scoped trained-model cache: five catalog queries (lr_quality /
-# lr_eval / lr_reliability / lr_pr_curve / lr_isotonic) evaluate the SAME
-# trained classifier — a real engine trains once per corpus and shares the
-# frozen state across every metric query (the persisted-bloom / persisted-
-# ANN-index discipline).  Keyed by (applicationId, sf_dir): a new
-# SparkSession gets a fresh applicationId, so stopped-session checkpoints
-# can never be served stale (the _DENSE_BLOOM_CACHE lesson applies — the
-# testdata corpora under sf_dir are immutable within a session).
-_LR_CACHE: dict[tuple[str, str], tuple[DataFrame, list[float]]] = {}
-
-
+# The trained classifier is a session artifact: five catalog queries
+# (lr_quality / lr_eval / lr_reliability / lr_pr_curve / lr_isotonic)
+# evaluate the SAME model — a real engine trains once per corpus and shares
+# the frozen state across every metric query.
 def _lr_scored(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[float]]:
     """Shared LR pipeline for lr_quality / lr_eval / lr_reliability:
     standardized features -> trained weights -> per-row (y, p, pred).
@@ -1415,31 +1408,27 @@ def _lr_scored(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[float]
         train_logistic_gd,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LR_CACHE.get(key)
-    if hit is not None:
-        return hit
+    def build():
+        docs = load_table(spark, sf_dir, "documents")
+        t = dd.normalize_text(F.col("text"))
+        words = F.split(t, " ")
+        nt = F.greatest(F.length(t), F.lit(1)).cast("double")
+        nw = F.greatest(F.size(words), F.lit(1)).cast("double")
+        feats = standardized_features(
+            docs,
+            [
+                F.log(F.lit(1.0) + F.length(t)),
+                F.length(t) / nw,
+                F.size(F.array_distinct(words)) / nw,
+                F.length(F.regexp_replace(t, "[^aeiou]", "")) / nt,
+            ],
+            F.col("lang") == "en",
+        )
+        cached = feats.localCheckpoint(eager=True)
+        w = train_logistic_gd(cached, 4, iterations=_LR_ITER, lr=_LR_RATE, precached=True)
+        return score_logistic(cached, w), w
 
-    docs = load_table(spark, sf_dir, "documents")
-    t = dd.normalize_text(F.col("text"))
-    words = F.split(t, " ")
-    nt = F.greatest(F.length(t), F.lit(1)).cast("double")
-    nw = F.greatest(F.size(words), F.lit(1)).cast("double")
-    feats = standardized_features(
-        docs,
-        [
-            F.log(F.lit(1.0) + F.length(t)),
-            F.length(t) / nw,
-            F.size(F.array_distinct(words)) / nw,
-            F.length(F.regexp_replace(t, "[^aeiou]", "")) / nt,
-        ],
-        F.col("lang") == "en",
-    )
-    cached = feats.localCheckpoint(eager=True)
-    w = train_logistic_gd(cached, 4, iterations=_LR_ITER, lr=_LR_RATE, precached=True)
-    result = (score_logistic(cached, w), w)
-    _LR_CACHE[key] = result
-    return result
+    return _session_artifact(spark, sf_dir, "lr_scored", build)
 
 
 def q_lr_quality(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -753,24 +753,15 @@ FROM ranked WHERE rank <= 10
 
 
 # Session-shared Lloyd trajectory: embeddings_kmeans and
-# embeddings_silhouette run against ONE trained (base, centroids) pair —
-# the frozen-state contract of catalog/_common.py (keyed by
-# (applicationId, sf_dir); a new SparkSession gets a fresh applicationId,
-# so stopped-session checkpoints are never reused; catalog sf_dir corpora
-# are immutable within a session).
-_LLOYD_CACHE: dict = {}
-
-
+# embeddings_silhouette run against ONE trained (base, centroids) pair, a
+# session artifact (catalog/_common.py::_session_artifact).
 def _shared_lloyd(spark: SparkSession, sf_dir: str):
     from mcpvectordb_spark.operators.knn import _lloyd_train
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LLOYD_CACHE.get(key)
-    if hit is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        hit = _lloyd_train(emb, "vec_id", "embedding", 8, 2, 64, 9)
-        _LLOYD_CACHE[key] = hit
-    return hit
+    return _session_artifact(
+        spark, sf_dir, "lloyd_k8_iters2",
+        lambda: _lloyd_train(load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding", 8, 2, 64, 9),
+    )
 
 
 def q_embeddings_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:

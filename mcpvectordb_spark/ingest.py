@@ -85,6 +85,12 @@ def prepare_batch(raw_docs: DataFrame, created_at: str | None = None) -> DataFra
         )
         .withColumn("page", F.lit(0))
         .withColumn("metadata", F.coalesce(F.col("metadata"), F.lit("{}")))
+        # sources that convert bytes to text (folder scan) pass the
+        # converter's message through; it is a failed row's error
+        .withColumn(
+            "convert_error",
+            F.col("convert_error") if "convert_error" in raw_docs.columns else F.lit(None).cast("string"),
+        )
         # \s-aware emptiness: F.trim strips spaces only, but the chunker
         # does Python str.strip() — a '\n\n' doc must be invalid here, not
         # a phantom 'indexed' with zero chunks
@@ -94,8 +100,8 @@ def prepare_batch(raw_docs: DataFrame, created_at: str | None = None) -> DataFra
 
 def dedup_gate(keys: list, index) -> list[dict]:
     """Status of each batch row (``keys``: collected rows with source,
-    library, content_hash and valid), in the order given, from the store's
-    document index.  Rows sharing a (source, library) key — the document
+    library, content_hash, valid and convert_error), in the order given,
+    from the store's document index.  Rows sharing a (source, library) key — the document
     identity (reference store.py:206-235), so they would collide on
     doc_id/chunk ids — rank by content_hash, nulls first; every row after
     the first fails."""
@@ -111,7 +117,7 @@ def dedup_gate(keys: list, index) -> list[dict]:
         if key in seen:
             status, error = "failed", "duplicate (source, library) in batch"
         elif not r["valid"]:
-            status, error = "failed", "empty content"
+            status, error = "failed", r["convert_error"] or "empty content"
         elif old is not None and old["content_hash"] == r["content_hash"]:
             status, error = "skipped", None
         else:
@@ -150,7 +156,7 @@ def ingest_batch(
         with store.writer():
             index = store.documents()
             keys = prepared.select(
-                "_row", "valid", *_DOC_COLS, F.octet_length("content").alias("_bytes")
+                "_row", "valid", "convert_error", *_DOC_COLS, F.octet_length("content").alias("_bytes")
             ).collect()
             gate = dedup_gate(keys, index)
             written = [k for k, g in zip(keys, gate) if g["status"] in ("indexed", "replaced")]

@@ -1,5 +1,7 @@
 """SparkSession factory tuned for the local[32] test/bench environment,
-with settings that also make sense on a real cluster (AQE, Arrow, UTC)."""
+with settings that also make sense on a real cluster (AQE, Arrow, UTC).
+The Spark UI is always off; ``obs.spark_work`` reads a block's jobs, stages
+and task metrics without it."""
 
 from __future__ import annotations
 
@@ -9,12 +11,6 @@ from pyspark.sql import SparkSession
 
 
 WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
-
-
-def ui_enabled(env=os.environ) -> bool:
-    """``SPARK_GRAFT_UI`` opts a session into the Spark UI: only ``1`` or
-    ``true`` (any case) turn it on, so ``SPARK_GRAFT_UI=0`` keeps it off."""
-    return env.get("SPARK_GRAFT_UI", "").strip().lower() in ("1", "true")
 
 
 def get_spark(app_name: str = "mcpvectordb_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -45,12 +41,10 @@ def get_spark(app_name: str = "mcpvectordb_spark", shuffle_partitions: int | Non
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # UI off for bench/test runs (allocating the HTTP server costs
-        # startup time and the port can collide across parallel sessions);
-        # profiling sessions opt in via SPARK_GRAFT_UI=1 so
-        # tools/profile_query.py can read per-stage task metrics from the
-        # REST API (guide §1.1/§7.1).
-        .config("spark.ui.enabled", "true" if ui_enabled() else "false")
+        # No UI: its HTTP server costs startup time and its port can collide
+        # across parallel sessions.  Job, stage and task metrics come from
+        # the status store, which Spark keeps without it (obs.py).
+        .config("spark.ui.enabled", "false")
         # \r-terminated stage-progress bars flooded the round-5 driver's
         # bench tail capture (BENCH_r05.json parsed:null) — silence them;
         # bench.py prints its one-line JSON summary LAST so any tail window

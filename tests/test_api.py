@@ -8,6 +8,8 @@ import pytest
 
 from mcpvectordb_spark.api import VectorDB
 from mcpvectordb_spark.config import TEST
+from mcpvectordb_spark.converter import convert_bytes
+from mcpvectordb_spark.obs import spark_work
 
 
 @pytest.fixture()
@@ -90,6 +92,9 @@ def test_ingest_file_and_folder(db, tmp_path):
     assert bulk["indexed"] == 1      # two.txt
     assert bulk["failed"] == 1       # bad.pdf → converter stub error
     assert bulk["errors"][0]["source"].endswith("bad.pdf")
+    with pytest.raises(Exception) as converter_error:
+        convert_bytes(b"%PDF-fake", "pdf")
+    assert bulk["errors"][0]["error"] == f"{converter_error.type.__name__}: {converter_error.value}"
     assert db.ingest_file(str(d / "ghost.md"))["status"] == "error"
     assert db.ingest_folder(str(d / "ghost"))["status"] == "error"
 
@@ -308,36 +313,6 @@ def test_searches_beside_ingest_and_delete_see_whole_versions(db):
     assert seen and all(seen), f"{seen.count(False)} of {len(seen)} searches missed a stable document"
 
 
-class _Jobs:
-    """Spark jobs run by one call: the call runs in its own job group and
-    the group's jobs are read from the status tracker once none of them is
-    still running (job-end events arrive asynchronously)."""
-
-    def __init__(self, spark):
-        self.sc = spark.sparkContext
-        self.tracker = self.sc.statusTracker()
-        self.calls = 0
-
-    def __call__(self, fn, *args, **kwargs):
-        import time
-
-        self.calls += 1
-        group = f"jobs-{id(self)}-{self.calls}"
-        outer = self.sc.getLocalProperty("spark.jobGroup.id")
-        self.sc.setJobGroup(group, group)
-        try:
-            out = fn(*args, **kwargs)
-        finally:
-            self.sc.setLocalProperty("spark.jobGroup.id", outer)  # None clears it
-        deadline = time.monotonic() + 5.0
-        while True:
-            jobs = list(self.tracker.getJobIdsForGroup(group))
-            infos = [self.tracker.getJobInfo(j) for j in jobs]
-            if all(i is not None and i.status != "RUNNING" for i in infos) or time.monotonic() > deadline:
-                return out, len(jobs)
-            time.sleep(0.01)
-
-
 def _versions(db):
     import os
 
@@ -348,7 +323,11 @@ def _versions(db):
 def test_edit_session_job_budgets(spark, db):
     """The per-call Spark jobs of an edit session: the dedup gate, the
     browse calls and delete planning are served from the document index."""
-    jobs = _Jobs(spark)
+    def jobs(fn, *args, **kwargs):
+        with spark_work(spark, "edit call") as work:
+            out = fn(*args, **kwargs)
+        return out, work.jobs
+
     for i in range(3):
         db.ingest_content(f"# Kept {i}\n\n" + f"kept note {i} body " * 40, source=f"kept{i}.md", library="notes")
     note = {"content": "# Note\n\n" + "a note about budgets " * 120, "source": "note.md", "library": "notes"}

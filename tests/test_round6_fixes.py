@@ -172,13 +172,13 @@ def test_stream_hourly_closed_set_is_deterministic(spark):
 
 
 def test_ingest_path_never_reads_session_caches(spark, tmp_path):
-    """The session-shared frozen-state caches (_BM25_CACHE & friends) assume
+    """The session artifacts (_SESSION_ARTIFACTS: the BM25 index & friends) assume
     the corpus under sf_dir is IMMUTABLE within a session — a mutating
     ingest-backed corpus must never route through them (the contract stated
     at catalog/_common.py; round-5 verdict item 7).  Two pins:
 
     1. static — no ingest-path module references any session cache;
-    2. behavioral — a full ingest + hybrid search leaves _BM25_CACHE
+    2. behavioral — a full ingest + hybrid search leaves _SESSION_ARTIFACTS
        untouched (the API tokenizes its own store, Bm25Index.append is the
        incremental path).
     """
@@ -195,15 +195,15 @@ def test_ingest_path_never_reads_session_caches(spark, tmp_path):
         pkg / "operators" / "bm25.py", pkg / "operators" / "hybrid.py",
     ]
     cache_names = [
-        "_shared_bm25_index", "_BM25_CACHE", "_COPURCHASE_CACHE",
-        "_SUPPART_CACHE", "_copurchase_pairs", "_supplier_part_recurring",
+        "_shared_bm25_index", "_SESSION_ARTIFACTS", "_session_artifact",
+        "_copurchase_pairs", "_supplier_part_recurring",
     ]
     for mod in ingest_path_modules:
         src = mod.read_text()
         for name in cache_names:
             assert name not in src, f"{mod.name} references session cache {name}"
 
-    before = dict(common._BM25_CACHE)
+    before = dict(common._SESSION_ARTIFACTS)
     db = VectorDB(spark, str(tmp_path / "store"), TEST)
     db.ingest_content("the mutable corpus gains a xylophone document " * 8,
                       source="a.md", library="l")
@@ -211,8 +211,8 @@ def test_ingest_path_never_reads_session_caches(spark, tmp_path):
                       source="b.md", library="l")
     hits = db.search("xylophone", top_k=3)
     assert hits["status"] == "ok" and hits["results"]
-    assert common._BM25_CACHE == before, (
-        "an ingest-backed search populated the immutable-corpus BM25 cache"
+    assert common._SESSION_ARTIFACTS == before, (
+        "an ingest-backed search populated the immutable-corpus session artifacts"
     )
 
 

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from mcpvectordb_spark.config import TEST
 from mcpvectordb_spark.embedder import HashEmbedder
 from mcpvectordb_spark.ingest import ingest_batch
+from mcpvectordb_spark.obs import spark_work
 from mcpvectordb_spark.operators.bm25 import bm25_topk
 from mcpvectordb_spark.operators.hybrid import rrf_topk
 from mcpvectordb_spark.operators.knn import cosine, ivf_assign, ivf_topk, knn_topk
@@ -662,15 +663,11 @@ def test_api_search_matches_composed_operators_wide_vectors(spark, tmp_path):
 def test_api_search_runs_in_few_spark_jobs(spark, search_db):
     """A default hybrid search is one plan: a scan stage and a ranking
     stage, not a job per leg, per posting list and per fusion step."""
-    sc = spark.sparkContext
     search_db.search("alpha beta", top_k=5)  # warm-up
-    sc.setJobGroup("one-plan-search", "job count")
-    try:
+    with spark_work(spark, "one-plan search") as work:
         out = search_db.search("alpha beta", top_k=5)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert out["status"] == "ok" and out["results"]
-    assert len(sc.statusTracker().getJobIdsForGroup("one-plan-search")) <= 3
+    assert work.jobs <= 3
 
 
 def test_mmr_string_and_bigint_ids_pick_alike(spark):

@@ -1,19 +1,11 @@
-"""Session factory: its switches, the worker daemon's sys.path filter, and
-what a session built by ``get_spark`` does to its Python workers."""
+"""Session factory: the worker daemon's sys.path filter, and what a
+session built by ``get_spark`` does to its Python workers and loggers."""
 
 import re
 import zipfile
 
 from mcpvectordb_spark._pyworker import without_spark_archives
-from mcpvectordb_spark.session import WINDOW_EXEC_LOGGER, ui_enabled
-
-
-def test_spark_ui_switch_is_on_only_for_1_or_true():
-    assert not ui_enabled({})
-    for off in ("0", "", "false", "no", " 0 "):
-        assert not ui_enabled({"SPARK_GRAFT_UI": off}), off
-    for on in ("1", "true", "TRUE", " True "):
-        assert ui_enabled({"SPARK_GRAFT_UI": on}), on
+from mcpvectordb_spark.session import WINDOW_EXEC_LOGGER
 
 
 def _package(root, name):

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from mcpvectordb_spark.config import TEST
 from mcpvectordb_spark.ingest import ingest_batch, rollup_results
+from mcpvectordb_spark.obs import spark_work
 from mcpvectordb_spark.store import InvalidFilterError, build_filter
 
 
@@ -209,12 +210,10 @@ def test_delete_documents_batch(spark, store):
     docs = store.list_documents(limit=100)
     assert len(docs) == 12
 
-    tracker = spark.sparkContext.statusTracker()
-
     def job_count(fn):
-        before = max(tracker.getJobIdsForGroup() or [0])
-        fn()
-        return max(tracker.getJobIdsForGroup() or [0]) - before
+        with spark_work(spark, "delete") as work:
+            fn()
+        return work.jobs
 
     # delete 2 docs (one per library) vs 8 docs (same 2 partitions):
     ids = sorted(d["doc_id"] for d in docs)
@@ -347,12 +346,10 @@ def test_read_of_many_files_adds_no_listing_job(spark, tmp_path):
     from mcpvectordb_spark.schema import CHUNKS_SCHEMA
     from mcpvectordb_spark.store import ChunkStore
 
-    tracker = spark.sparkContext.statusTracker()
-
     def jobs_to_read_and_count(store):
-        before = max(tracker.getJobIdsForGroup() or [0])
-        assert store.read().filter(build_filter(library="L")).count() > 0
-        return max(tracker.getJobIdsForGroup() or [0]) - before
+        with spark_work(spark, "read and count") as work:
+            assert store.read().filter(build_filter(library="L")).count() > 0
+        return work.jobs
 
     small = ChunkStore(spark, str(tmp_path / "small"), TEST)
     small.append(_mini_chunks(spark, range(2)).repartition(2))

@@ -1,21 +1,20 @@
-"""Runtime profile of catalog queries: job/stage/task counts and task-metric
-attribution (executor run/CPU time, shuffle read/write bytes, input bytes)
-pulled from the Spark UI REST API after a timed noop-sink execution.
+"""Runtime profile and formatted plan of catalog queries.
 
-This is the r10 answer to two round-9 verdict items: (a) plan captures of
-localCheckpoint-pinned queries truncate at the pin boundary, so "exchanges
-removed" claims need runtime evidence a reviewer can check from the artifact
-alone; (b) the remaining slow queries have clean plans — the next pass must
-attribute wall-clock to scan vs shuffle vs kernel vs job overhead (guide
-§1.1 empirical loop, §7.1).
+For each query: one warm noop-sink run, then three timed runs inside one
+``obs.spark_work`` block (job/stage/task counts and task metrics from
+Spark's status store, UI off).  The formatted physical plan goes beside the
+profile: a localCheckpoint-pinned subtree prints as ``Scan ExistingRDD``
+there, and the job/stage counts show what it ran.
 
-Usage: SPARK_GRAFT_SF_DIR=... python tools/profile_query.py <label> <query> [...]
-Writes plans/r10/profile_<label>.json with one entry per query:
-  wall_sec (median of 3 timed noop runs after one warm run),
-  n_jobs / n_stages / n_tasks,
-  executor_run_ms / executor_cpu_ms (summed over stages),
+Usage: SPARK_GRAFT_SF_DIR=... python tools/profile_query.py <out_dir> <query> [...]
+Writes <out_dir>/<query>.plan.txt per query and <out_dir>/profile.json with
+one entry per query:
+  wall_sec (median of the 3 timed runs), wall_3runs_sec,
+  n_jobs / n_jobs_per_run / n_stages / n_tasks,
+  executor_run_ms / executor_cpu_ms / driver_ms (summed over the 3 runs),
   shuffle_read_mb / shuffle_write_mb / input_mb,
   per_stage: [{stage, name, tasks, run_ms, cpu_ms, shuf_r_mb, shuf_w_mb, in_mb}]
+  (the 25 longest-running stages)
 """
 
 from __future__ import annotations
@@ -24,115 +23,79 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
-sys.path.insert(0, ".")
-
-os.environ.setdefault("SPARK_GRAFT_UI", "1")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mcpvectordb_spark.catalog import QUERIES
-from mcpvectordb_spark.session import get_spark
+from mcpvectordb_spark.obs import spark_work
+from mcpvectordb_spark.plans.explain import formatted_plan
+
+RUNS = 3
+TABLES = ["lineitem", "orders", "customer", "supplier", "nation", "region",
+          "documents", "embeddings", "events"]
 
 
-def _get(url: str):
-    with urllib.request.urlopen(url, timeout=30) as r:
-        return json.loads(r.read())
+def _timed_run(fn, spark, sf_dir: str) -> float:
+    """Seconds to build the query (iterative queries run jobs here) and
+    run it into the noop sink."""
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
 
 
-def main() -> None:
-    label = sys.argv[1]
-    names = sys.argv[2:]
+def profile_queries(spark, sf_dir: str, names: list[str], out_dir: str) -> dict:
+    """Profile ``names`` at ``sf_dir``; write the plans and profile.json
+    into ``out_dir`` and return the profile."""
     unknown = set(names) - set(QUERIES)
     if unknown:
-        raise SystemExit(f"unknown queries: {sorted(unknown)}")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r10"
-    )
+        raise ValueError(f"unknown queries: {sorted(unknown)}")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("profile_query")
-    spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-    ui = sc.uiWebUrl
-    if not ui:
-        raise SystemExit("Spark UI is disabled; run with SPARK_GRAFT_UI=1")
-    app_id = sc.applicationId
-    base = f"{ui}/api/v1/applications/{app_id}"
-
-    from mcpvectordb_spark.io import enable_table_cache
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    enable_table_cache(
-        spark, sf_dir,
-        ["lineitem", "orders", "customer", "supplier", "nation", "region",
-         "documents", "embeddings", "events"],
-    )
-
     out: dict[str, dict] = {"_sf_dir": sf_dir, "_cpus": os.environ.get("SPARK_GRAFT_CPUS", "32")}
     for name in names:
         fn = QUERIES[name]
-        # warm: codegen + page cache (bench.py convention)
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        walls = []
-        sc.setJobGroup(f"profile:{name}", name)
-        t_group0 = time.perf_counter()
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            walls.append(time.perf_counter() - t0)
-        sc.setJobGroup(None, None)
-        wall = sorted(walls)[1]
-        # pull jobs tagged with our group (the 3 timed runs; metrics are
-        # per-run-comparable after dividing by 3)
-        jobs = [j for j in _get(f"{base}/jobs") if j.get("jobGroup") == f"profile:{name}"]
-        stage_ids = sorted({s for j in jobs for s in j.get("stageIds", [])})
-        stages = []
-        for sid in stage_ids:
-            try:
-                infos = _get(f"{base}/stages/{sid}")
-            except Exception:
-                continue
-            for si in infos:
-                if si.get("status") == "SKIPPED":
-                    continue
-                stages.append(
-                    {
-                        "stage": sid,
-                        "name": (si.get("name") or "")[:120],
-                        "tasks": si.get("numCompleteTasks", si.get("numTasks", 0)),
-                        "run_ms": si.get("executorRunTime", 0),
-                        "cpu_ms": round((si.get("executorCpuTime", 0) or 0) / 1e6, 1),
-                        "shuf_r_mb": round(si.get("shuffleReadBytes", 0) / 1e6, 3),
-                        "shuf_w_mb": round(si.get("shuffleWriteBytes", 0) / 1e6, 3),
-                        "in_mb": round(si.get("inputBytes", 0) / 1e6, 3),
-                    }
-                )
-        rec = {
-            "wall_sec": round(wall, 3),
-            "wall_3runs_sec": round(time.perf_counter() - t_group0, 3),
-            "n_jobs": len(jobs),
-            "n_jobs_per_run": round(len(jobs) / 3.0, 1),
-            "n_stages": len(stages),
-            "n_tasks": sum(s["tasks"] for s in stages),
-            "executor_run_ms": sum(s["run_ms"] for s in stages),
-            "executor_cpu_ms": round(sum(s["cpu_ms"] for s in stages), 1),
-            "shuffle_read_mb": round(sum(s["shuf_r_mb"] for s in stages), 3),
-            "shuffle_write_mb": round(sum(s["shuf_w_mb"] for s in stages), 3),
-            "input_mb": round(sum(s["in_mb"] for s in stages), 3),
-            "per_stage": sorted(stages, key=lambda s: -s["run_ms"])[:25],
+        with open(os.path.join(out_dir, f"{name}.plan.txt"), "w") as fh:
+            fh.write(f"# {name} @ {sf_dir}\n{formatted_plan(fn(spark, sf_dir))}")
+        _timed_run(fn, spark, sf_dir)  # warm: codegen + page cache (bench.py convention)
+        with spark_work(spark, name) as work:
+            walls = [_timed_run(fn, spark, sf_dir) for _ in range(RUNS)]
+        out[name] = rec = {
+            "wall_sec": round(sorted(walls)[RUNS // 2], 3),
+            "wall_3runs_sec": round(work.wall_ms / 1000.0, 3),
+            "n_jobs": work.jobs,
+            "n_jobs_per_run": round(work.jobs / RUNS, 1),
+            "n_stages": work.stages,
+            "n_tasks": work.tasks,
+            "executor_run_ms": work.executor_run_ms,
+            "executor_cpu_ms": round(work.executor_cpu_ms, 1),
+            "driver_ms": round(work.driver_ms, 1),
+            "shuffle_read_mb": round(work.shuffle_read_mb, 3),
+            "shuffle_write_mb": round(work.shuffle_write_mb, 3),
+            "input_mb": round(work.input_mb, 3),
+            "per_stage": sorted(work.per_stage, key=lambda s: -s["run_ms"])[:25],
         }
-        out[name] = rec
-        print(
-            f"# {name}: wall={rec['wall_sec']}s jobs/run={rec['n_jobs_per_run']} "
-            f"stages={rec['n_stages']} tasks={rec['n_tasks']} "
-            f"run={rec['executor_run_ms']}ms cpu={rec['executor_cpu_ms']}ms "
-            f"shufR={rec['shuffle_read_mb']}MB in={rec['input_mb']}MB",
-            file=sys.stderr,
-        )
-    path = os.path.join(out_dir, f"profile_{label}.json")
-    with open(path, "w") as fh:
+        print(f"# {name}: " + " ".join(f"{k}={v}" for k, v in rec.items() if k != "per_stage"), file=sys.stderr)
+    with open(os.path.join(out_dir, "profile.json"), "w") as fh:
         json.dump(out, fh, indent=1)
-    print(f"wrote {path}")
+    return out
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if len(sys.argv) < 3 or not sf_dir:
+        raise SystemExit(__doc__)
+    from mcpvectordb_spark.io import enable_table_cache
+    from mcpvectordb_spark.session import get_spark
+
+    out_dir, names = sys.argv[1], sys.argv[2:]
+    spark = get_spark("profile_query")
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    enable_table_cache(spark, sf_dir, TABLES)
+    try:
+        profile_queries(spark, sf_dir, names, out_dir)
+    except ValueError as exc:
+        raise SystemExit(str(exc)) from None
+    print(f"wrote {os.path.join(out_dir, 'profile.json')}")
     spark.stop()
 
 
