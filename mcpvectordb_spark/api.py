@@ -17,6 +17,7 @@ from __future__ import annotations
 import functools
 import json
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -96,10 +97,11 @@ class VectorDB:
             return _err("content must be non-empty")
         if bad := _ingest_arg_error(metadata, source=source, library=library):
             return bad
-        raw = self.spark.createDataFrame(
-            [(source, library, content, json.dumps(metadata or {}))],
-            "source string, library string, content string, metadata string",
-        )
+        # an Arrow table becomes a local relation: the dedup gate reads it
+        # without a Spark job (ingest.ingest_batch)
+        raw = self.spark.createDataFrame(pa.Table.from_pylist(
+            [{"source": source, "library": library, "content": content, "metadata": json.dumps(metadata or {})}]
+        ))
         res = ingest_batch(raw, self.store, self.config,
                            embedder_factory=self._embedder_factory()).collect()[0]
         return {
@@ -193,10 +195,11 @@ class VectorDB:
             "replaced": by.get("replaced", 0),
             "skipped": by.get("skipped", 0),
             "failed": by.get("failed", 0),
-            "errors": [
-                {"source": r["source"], "error": r["error"]}
-                for r in results if r["status"] == "failed"
-            ],
+            # in source order, as the reference's sorted glob lists them
+            "errors": sorted(
+                ({"source": r["source"], "error": r["error"]} for r in results if r["status"] == "failed"),
+                key=lambda e: e["source"],
+            ),
         }
 
     # -- query --------------------------------------------------------------

@@ -301,11 +301,15 @@ def _shared_minhash_sigs(
 # identical to a fresh write and every stream result is unchanged.
 def _stream_input_dir(spark: SparkSession, sf_dir: str, key: str, writer) -> str:
     """Return the session-cached input directory for a stream fixture,
-    invoking ``writer(dir)`` exactly once per (session, corpus, key)."""
+    invoking ``writer(dir)`` exactly once per (session, corpus, key).  It
+    lies under the driver's per-application directory, which Spark deletes
+    when the session stops."""
     import tempfile
 
+    from pyspark import SparkFiles
+
     def build():
-        d = tempfile.mkdtemp(prefix=f"stream_{key}_")
+        d = tempfile.mkdtemp(prefix=f"stream_{key}_", dir=SparkFiles.getRootDirectory())
         writer(d)
         return d
 

@@ -17,6 +17,13 @@ store's document index (store.py::_DocIndex) — the reference's point lookup
 nothing; the indexed and replaced ones are written, and the replaced
 documents' old chunks removed, in one commit.
 
+Spark jobs: a local batch (one note from ``VectorDB.ingest_content`` is an
+Arrow-backed local relation) is gated on the driver, so chunk → embed →
+write is its one job, and a skipped re-send runs none.  A distributed batch
+(a folder scan) adds one job that collects its keys and caches it.  The
+per-document chunk counts of the result rows and of the next index version
+are observed in the write (an ``Observation``), not counted by a job.
+
 Determinism (FIXTURES.md rules 3-4): doc_id = sha2(sha2(source)‖sha2(library))[:16],
 chunk id = doc_id-chunk_index, created_at injectable (defaults to now).
 """
@@ -27,8 +34,9 @@ from collections import Counter
 from datetime import UTC, datetime
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from mcpvectordb_spark.chunker import chunk_documents
 from mcpvectordb_spark.config import DEFAULT, EngineConfig
@@ -69,32 +77,27 @@ def prepare_batch(raw_docs: DataFrame, created_at: str | None = None) -> DataFra
     # ('a:b','c') and ('a','b:c') must NOT share a doc_id (sources are
     # URLs, ':' is routine)
     key_hash = F.sha2(F.concat(F.sha2(F.col("source"), 256), F.sha2(F.col("library"), 256)), 256)
-    return (
-        raw_docs.withColumn("content_hash", F.sha2(c.cast("string"), 256))
-        .withColumn("doc_id", F.substring(key_hash, 1, 16))
-        .withColumn("title", extract_title(c, F.col("source")))
-        .withColumn("file_type", file_type_of(F.col("source")))
-        .withColumn("created_at", F.lit(ts))
-        # sources that know their mtime (folder scan, URL Last-Modified)
-        # pass a last_modified column through; otherwise "" (store.py:33)
-        .withColumn(
-            "last_modified",
-            F.coalesce(F.col("last_modified"), F.lit(""))
-            if "last_modified" in raw_docs.columns
-            else F.lit(""),
-        )
-        .withColumn("page", F.lit(0))
-        .withColumn("metadata", F.coalesce(F.col("metadata"), F.lit("{}")))
-        # sources that convert bytes to text (folder scan) pass the
-        # converter's message through; it is a failed row's error
-        .withColumn(
-            "convert_error",
-            F.col("convert_error") if "convert_error" in raw_docs.columns else F.lit(None).cast("string"),
-        )
-        # \s-aware emptiness: F.trim strips spaces only, but the chunker
-        # does Python str.strip() — a '\n\n' doc must be invalid here, not
-        # a phantom 'indexed' with zero chunks
-        .withColumn("valid", c.isNotNull() & (F.regexp_replace(c, r"\s+", "") != ""))
+    cols = raw_docs.columns
+    return raw_docs.withColumns(
+        {
+            "content_hash": F.sha2(c.cast("string"), 256),
+            "doc_id": F.substring(key_hash, 1, 16),
+            "title": extract_title(c, F.col("source")),
+            "file_type": file_type_of(F.col("source")),
+            "created_at": F.lit(ts),
+            # sources that know their mtime (folder scan, URL Last-Modified)
+            # pass a last_modified column through; otherwise "" (store.py:33)
+            "last_modified": F.coalesce(F.col("last_modified"), F.lit("")) if "last_modified" in cols else F.lit(""),
+            "page": F.lit(0),
+            "metadata": F.coalesce(F.col("metadata"), F.lit("{}")),
+            # sources that convert bytes to text (folder scan) pass the
+            # converter's message through; it is a failed row's error
+            "convert_error": F.col("convert_error") if "convert_error" in cols else F.lit(None).cast("string"),
+            # \s-aware emptiness: F.trim strips spaces only, but the chunker
+            # does Python str.strip() — a '\n\n' doc must be invalid here, not
+            # a phantom 'indexed' with zero chunks
+            "valid": c.isNotNull() & (F.regexp_replace(c, r"\s+", "") != ""),
+        }
     )
 
 
@@ -147,11 +150,21 @@ def ingest_batch(
     """Run the full pipeline; writes to the store and returns the per-doc
     result DataFrame (INGEST_RESULT_SCHEMA shape).
 
-    The batch is prepared once and cached with a row id; one job collects
-    its keys for the gate.  The whole ingest holds the store's writer lock,
-    so the index the gate read is the one the commit derives from."""
+    Every row gets a ``_row`` id, and the gate's key collect and the write
+    select rows by it.  A local batch (``raw_docs.isLocal()``, e.g. built
+    from an Arrow table) is read back on the driver and rebuilt with its
+    positions as ``_row``; the key collect then folds to a local scan and
+    runs no job, so chunk → embed → write is the ingest's only job.  Any
+    other batch is prepared once and cached with a
+    ``monotonically_increasing_id`` row id; one job collects its keys.
+    The whole ingest holds the store's writer lock, so the index the gate
+    read is the one the commit derives from."""
     spark = raw_docs.sparkSession
-    prepared = prepare_batch(raw_docs, created_at).withColumn("_row", F.monotonically_increasing_id()).cache()
+    local = raw_docs.isLocal()
+    numbered = _with_positions(raw_docs) if local else raw_docs.withColumn("_row", F.monotonically_increasing_id())
+    prepared = prepare_batch(numbered, created_at)
+    if not local:
+        prepared = prepared.cache()
     try:
         with store.writer():
             index = store.documents()
@@ -164,7 +177,7 @@ def ingest_batch(
             # written doc_id, leave in the same commit
             replace = {g["old_doc_id"] for g in gate if g["status"] == "replaced"}
             replace |= {k["doc_id"] for k in written}
-            counts = _write(prepared, written, replace, store, config, token_counter, embedder_factory)
+            counts = _write(prepared, local, written, replace, store, config, token_counter, embedder_factory)
     finally:
         prepared.unpersist()
     # an Arrow table becomes a LocalRelation: reading the results runs no job
@@ -176,22 +189,32 @@ def ingest_batch(
     return spark.createDataFrame(pa.Table.from_pylist(rows, _RESULT_ARROW))
 
 
-def _write(prepared, written, replace, store, config, token_counter, embedder_factory) -> dict:
+def _with_positions(batch: DataFrame) -> DataFrame:
+    """A local ``batch`` as a new Arrow-backed local relation with each
+    row's position as ``_row``.  Collecting a local relation runs no job,
+    and the ids are data, so every plan over the result reads the same
+    ones."""
+    schema = to_arrow_schema(batch.schema).append(pa.field("_row", pa.int64(), nullable=False))
+    rows = [{**r.asDict(recursive=True), "_row": i} for i, r in enumerate(batch.collect())]
+    return batch.sparkSession.createDataFrame(pa.Table.from_pylist(rows, schema))
+
+
+def _write(prepared, local, written, replace, store, config, token_counter, embedder_factory) -> dict:
     """Chunk, embed and commit the ``written`` rows of ``prepared`` in one
     commit that also removes the chunks of the ``replace`` doc ids; returns
-    the written rows' chunk counts by row id."""
+    the written rows' chunk counts by row id, observed in the write."""
     if not written:
         return {}
-    ids = [k["_row"] for k in written]
-    to_write = where_in(prepared, "_row", ids)
+    to_write = where_in(prepared, "_row", [k["_row"] for k in written])
     # Fan the write set out before the CPU-heavy per-row stages when the
     # batch arrives in fewer partitions than there are cores to chunk and
     # embed it on.  Chunking/embedding are per-row and the downstream
     # counts/digests are content-keyed, so placement does not affect any
-    # result.
+    # result.  A local write set scans in min(rows, cores) = ``fan`` tasks.
     fan = min(prepared.sparkSession.sparkContext.defaultParallelism, len(written))
-    if prepared.rdd.getNumPartitions() < fan:
-        to_write = to_write.repartition(fan)
+    tasks = fan if local else prepared.rdd.getNumPartitions()
+    if tasks < fan:
+        to_write, tasks = to_write.repartition(fan), fan
     chunked = chunk_documents(to_write, "content", config, token_counter)
     embedded = embed_documents_stage(
         chunked, "content", "embedding", config.embedding_dim, config, embedder_factory
@@ -211,16 +234,22 @@ def _write(prepared, written, replace, store, config, token_counter, embedder_fa
         "file_type",
         "last_modified",
         "page",
-    ).cache()
-    try:
-        # the counts job materializes the cache at the fan-out's parallelism
-        per_doc = Counter(r["doc_id"] for r in chunks.select("doc_id").collect())
-        documents = [{**{c: k[c] for c in _DOC_COLS}, "chunk_count": per_doc[k["doc_id"]]}
-                     for k in written if per_doc[k["doc_id"]]]
-        parts = max(1, -(-sum(k["_bytes"] for k in written) // _BYTES_PER_WRITE_TASK))
-        store.append(chunks.coalesce(parts), replace=replace, documents=documents)
-    finally:
-        chunks.unpersist()
+    )
+    # one file per _BYTES_PER_WRITE_TASK of text; a repartition, not a
+    # coalesce, so chunking and embedding keep their ``tasks``-wide stage
+    parts = max(1, -(-sum(k["_bytes"] for k in written) // _BYTES_PER_WRITE_TASK))
+    if tasks > parts:
+        chunks = chunks.repartition(parts)
+    observed = Observation("chunk counts")
+    chunks = chunks.observe(observed, F.collect_list("doc_id").alias("doc_ids"))
+    per_doc: Counter = Counter()
+
+    def documents() -> list[dict]:
+        per_doc.update(observed.get["doc_ids"])
+        return [{**{c: k[c] for c in _DOC_COLS}, "chunk_count": per_doc[k["doc_id"]]}
+                for k in written if per_doc[k["doc_id"]]]
+
+    store.append(chunks, replace=replace, documents=documents)
     return {k["_row"]: per_doc[k["doc_id"]] for k in written}
 
 

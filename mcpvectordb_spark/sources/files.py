@@ -2,8 +2,7 @@
 
 Reference S1/S3 (/root/reference/src/mcpvectordb/ingestor.py:90-101,163-179):
 read raw bytes, derive file_type from the extension and last_modified from
-mtime, recursive folder scan filtered to supported extensions in
-deterministic sorted order.
+mtime, recursive folder scan filtered to supported extensions.
 
 Spark-native form: the built-in ``binaryFile`` format, which exposes
 (path, modificationTime, length, content) and handles distributed listing —
@@ -26,10 +25,13 @@ def read_folder(
     recursive: bool = True,
     config: EngineConfig = DEFAULT,
 ) -> DataFrame:
-    """Folder scan → (source, file_type, last_modified, size, raw_bytes).
+    """Folder scan → (source, file_type, last_modified, size, raw_bytes),
+    in no particular row order.
 
-    Deterministic ``orderBy(source)`` mirrors the reference's sorted glob
-    (ingestor.py:98).
+    The reference's sorted glob (ingestor.py:98) orders only what a caller
+    sees: ``VectorDB.ingest_folder`` sorts its ``errors`` by source on the
+    driver.  A global sort here would range-partition the scan, raw bytes
+    included, for results that do not depend on row order.
     """
     df = (
         spark.read.format("binaryFile")
@@ -50,7 +52,6 @@ def read_folder(
         )
         .filter(F.col("file_type").isin(list(config.supported_extensions)))
         .filter(F.col("size") <= config.max_upload_bytes)
-        .orderBy("source")
     )
 
 

@@ -41,6 +41,7 @@ import re
 import threading
 import uuid
 from collections import OrderedDict
+from collections.abc import Callable
 from contextlib import contextmanager
 from datetime import datetime, timezone
 from functools import cached_property, reduce
@@ -456,7 +457,8 @@ class ChunkStore:
 
     # -- write --------------------------------------------------------------
 
-    def append(self, chunks: DataFrame, replace=(), documents: list[dict] | None = None) -> None:
+    def append(self, chunks: DataFrame, replace=(),
+               documents: list[dict] | Callable[[], list[dict]] | None = None) -> None:
         """Batch append (reference upsert_chunks, store.py:180-204, minus the
         per-upsert FTS rebuild — term stats are derived at query time).
 
@@ -467,8 +469,11 @@ class ChunkStore:
         ``replace``: doc ids whose chunks leave in the same commit — a
         replace is one version, never a delete then an append.
         ``documents``: the ``_DOC_FIELDS`` rows of the appended documents,
-        from which the next version's index is derived; without them a raw
-        append leaves the index to be rebuilt on its next use."""
+        from which the next version's index is derived, or a function that
+        returns them, called once the rows are written and before the
+        commit (ingest reads the chunk counts it observed in the write);
+        without them a raw append leaves the index to be rebuilt on its
+        next use."""
         with self._writing() as (log, version, manifest):
             rows = chunks.select(_COLUMNS).sortWithinPartitions("doc_id", "chunk_index")
             self._commit_rows(log, version, manifest, rows, replace, documents)
@@ -507,13 +512,13 @@ class ChunkStore:
             return self.delete_documents(r["doc_id"] for r in hits)
 
     def _commit_rows(self, log: _Log, version: int, manifest: dict, rows: DataFrame | None,
-                     drop, documents: list[dict] | None) -> int:
+                     drop, documents: list[dict] | Callable[[], list[dict]] | None) -> int:
         """One commit that adds ``rows`` (or nothing) and removes every chunk
         of the doc ids in ``drop``: the files the index names for them are
         rewritten without those chunks in the same write as ``rows``.
-        When ``documents`` describes ``rows`` (or there are none), the next
-        version's index is derived from this one.  Returns the removed
-        chunk count."""
+        When ``documents`` (a list, or a function called after the write)
+        describes ``rows`` (or there are none), the next version's index is
+        derived from this one.  Returns the removed chunk count."""
         drop = {d for d in drop if d is not None}
         derive = rows is None or documents is not None
         index = self._index(log, manifest["files"]) if drop or derive else None
@@ -525,6 +530,8 @@ class ChunkStore:
             old = self._scan(log, [f for f in manifest["files"] if f["path"] in removed])
             parts.append(where_in(old, "doc_id", ids, negate=True).select(_COLUMNS))
         added = self._stage(log, reduce(DataFrame.union, parts)) if parts else []
+        if callable(documents):
+            documents = documents()
         if not (added or removed):
             return 0
         files = [f for f in manifest["files"] if f["path"] not in removed] + added

@@ -322,7 +322,8 @@ def _versions(db):
 
 def test_edit_session_job_budgets(spark, db):
     """The per-call Spark jobs of an edit session: the dedup gate, the
-    browse calls and delete planning are served from the document index."""
+    browse calls and delete planning are served from the document index,
+    and a note's chunk → embed → write is its ingest's only job."""
     def jobs(fn, *args, **kwargs):
         with spark_work(spark, "edit call") as work:
             out = fn(*args, **kwargs)
@@ -333,12 +334,12 @@ def test_edit_session_job_budgets(spark, db):
     note = {"content": "# Note\n\n" + "a note about budgets " * 120, "source": "note.md", "library": "notes"}
 
     res, n = jobs(db.ingest_content, **note)
-    assert res["status"] == "indexed" and n <= 4, n
+    assert res["status"] == "indexed" and n <= 1, n
     res, n = jobs(db.ingest_content, **note)
-    assert res["status"] == "skipped" and n <= 1, n
+    assert res["status"] == "skipped" and n == 0, n
     before = _versions(db)
     res, n = jobs(db.ingest_content, **{**note, "content": note["content"] + " changed"})
-    assert res["status"] == "replaced" and n <= 5, n
+    assert res["status"] == "replaced" and n <= 1, n
     assert _versions(db) == before + 1
     doc_id, chunks = res["doc_id"], res["chunk_count"]
 
@@ -351,3 +352,41 @@ def test_edit_session_job_budgets(spark, db):
     assert db.list_libraries()["libraries"] == [
         {"library": "notes", "document_count": 3, "chunk_count": db.store.read().count()}
     ]
+
+
+def test_warm_folder_ingest_job_budget(spark, tmp_path):
+    """A warm folder ingest runs 3 Spark jobs: the key collect that fills
+    the batch's cache, then the write's shuffle to its file count and the
+    write.  Chunking and embedding run in a stage at least as wide as the
+    cores (or the files, if fewer)."""
+    d = tmp_path / "docs"
+    d.mkdir()
+    n = 24
+    for i in range(n):
+        (d / f"n{i:02d}.md").write_text(f"# Note {i}\n\n" + f"folder note {i} words " * (20 + 7 * i))
+    VectorDB(spark, str(tmp_path / "warm"), TEST).ingest_folder(str(d))
+    db = VectorDB(spark, str(tmp_path / "store"), TEST)
+    with spark_work(spark, "ingest_folder") as work:
+        res = db.ingest_folder(str(d))
+    assert res["indexed"] == n and res["failed"] == 0, res
+    assert work.jobs <= 3, work.jobs
+    # the first stage is the key collect; the chunk/embed stage follows it
+    want = min(spark.sparkContext.defaultParallelism, n)
+    assert max(s["tasks"] for s in work.per_stage[1:]) >= want, work.per_stage
+    assert db.list_libraries()["libraries"][0]["chunk_count"] == db.store.read().count()
+
+
+def test_ingest_folder_lists_errors_in_source_order(db, tmp_path):
+    """read_folder promises no row order; ingest_folder's errors still come
+    in source order, as the reference's sorted glob lists the files."""
+    d = tmp_path / "docs"
+    d.mkdir()
+    # later names are larger files, and a file scan lists larger files
+    # first: scan order is the reverse of source order
+    names = ["a.pdf", "b.pdf", "c.pdf", "d.pdf"]
+    for i, name in enumerate(names):
+        (d / name).write_bytes(b"%PDF-fake" + b" " * (1000 * i))
+    (d / "ok.md").write_text("# Ok\n\n" + "fine words " * 30)
+    res = db.ingest_folder(str(d), library="errs")
+    assert (res["indexed"], res["failed"]) == (1, 4), res
+    assert [e["source"].rsplit("/", 1)[-1] for e in res["errors"]] == names

@@ -138,6 +138,21 @@ def test_session_cache_miss_records_build_seconds(spark, monkeypatch):
     os.rmdir(uses["stream_input_ledger_probe"]())
 
 
+def test_stream_input_dir_lies_in_the_application_directory(spark):
+    """Stream fixtures live under the driver's per-application directory,
+    which Spark deletes at stop, not in the system temp directory where
+    nothing would remove them."""
+    from pyspark import SparkFiles
+
+    import mcpvectordb_spark.catalog as catalog
+    from conftest import SF as sf
+
+    d = catalog._stream_input_dir(spark, sf, "root_probe", lambda d: None)
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    assert os.path.commonpath([os.path.realpath(d), root]) == root, (d, root)
+    os.rmdir(d)
+
+
 def test_psi_parity_on_testdata(spark):
     """Full engine-vs-oracle replay of events_psi at sf0.001 after the
     exact-integer rewrite (the driver window re-checks at sf0.01; this

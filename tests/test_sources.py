@@ -18,7 +18,7 @@ from mcpvectordb_spark.sources.multimodal import (
 )
 
 
-def test_read_folder_filters_and_orders(spark, tmp_path):
+def test_read_folder_filters_by_extension(spark, tmp_path):
     (tmp_path / "b.txt").write_text("plain")
     (tmp_path / "a.md").write_text("# Title")
     (tmp_path / "sub").mkdir()
@@ -26,7 +26,8 @@ def test_read_folder_filters_and_orders(spark, tmp_path):
     (tmp_path / "skip.xyz").write_text("nope")
     rows = read_folder(spark, str(tmp_path)).collect()
     names = [r["source"].rsplit("/", 1)[-1] for r in rows]
-    assert names == ["a.md", "b.txt", "c.html"]  # sorted by full path, ext-filtered
+    # ext-filtered, recursive; the rows come in no particular order
+    assert sorted(names) == ["a.md", "b.txt", "c.html"]
     assert all(r["last_modified"] for r in rows)
 
 

@@ -1,13 +1,16 @@
 """Store + ingest behavioral matrix (reference test_store.py / test_ingestor.py
 scenarios listed in FIXTURES.md)."""
 
+import hashlib
+
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from mcpvectordb_spark.config import TEST
 from mcpvectordb_spark.ingest import ingest_batch, rollup_results
 from mcpvectordb_spark.obs import spark_work
-from mcpvectordb_spark.store import InvalidFilterError, build_filter
+from mcpvectordb_spark.store import ChunkStore, InvalidFilterError, build_filter
 
 
 def counts(results):
@@ -119,6 +122,42 @@ def test_failed_rows_do_not_stop_batch(spark, store):
     errors = {r["error"] for r in res.filter(F.col("status") == "failed").collect()}
     assert "empty content" in errors
     assert "duplicate (source, library) in batch" in errors
+
+
+def test_local_and_distributed_batches_ingest_alike(spark, tmp_path):
+    """A batch's ``_row`` id names the same row in the gate's key collect
+    and in the write, whether the batch is a local relation (rebuilt on the
+    driver, not cached) or a distributed one (cached): both give the same
+    statuses, chunk counts and stored rows."""
+    dup = "file:///dup.md"
+    rows = [
+        {"source": dup, "library": "lib", "content": "# Dup\n\n" + "second copy words " * 40, "metadata": None},
+        {"source": "file:///one.md", "library": "lib", "content": "# One\n\n" + "one words " * 90, "metadata": '{"k": 1}'},
+        {"source": dup, "library": "lib", "content": "# Dup\n\n" + "first copy words " * 30, "metadata": None},
+        {"source": "file:///empty.md", "library": "lib", "content": " \n\n ", "metadata": None},
+        {"source": "file:///two.md", "library": "other", "content": "two words " * 120, "metadata": None},
+    ]
+    local = spark.createDataFrame(pa.Table.from_pylist(rows))
+    # several partitions: monotonically_increasing_id leaves gaps between them
+    distributed = spark.createDataFrame(
+        [tuple(r.values()) for r in rows], "source string, library string, content string, metadata string"
+    ).repartition(3)
+    assert local.isLocal() and not distributed.isLocal()
+    seen = {}
+    for name, batch in (("local", local), ("distributed", distributed)):
+        store = ChunkStore(spark, str(tmp_path / name), TEST)
+        results = sorted((r.asDict() for r in ingest(batch, store).collect()), key=lambda r: (r["source"], r["status"]))
+        stored = sorted((r.asDict() for r in store.read().collect()), key=lambda c: c["id"])
+        seen[name] = (results, stored)
+    assert seen["local"] == seen["distributed"]
+    results, stored = seen["local"]
+    assert sorted(r["status"] for r in results) == ["failed", "failed", "indexed", "indexed", "indexed"]
+    for r in results:
+        written = sum(1 for c in stored if c["source"] == r["source"]) if r["status"] == "indexed" else 0
+        assert r["chunk_count"] == written, r
+    # of the duplicate pair, the row with the lower content hash is written
+    hashes = sorted(hashlib.sha256(r["content"].encode()).hexdigest() for r in rows if r["source"] == dup)
+    assert {c["content_hash"] for c in stored if c["source"] == dup} == {hashes[0]}
 
 
 def test_metadata_roundtrip(spark, store, mini_docs):

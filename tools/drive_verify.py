@@ -132,6 +132,20 @@ def cold_store_lists_the_writers_documents():
     assert cold.get_document(doc["doc_id"])["chunk_count"] == doc["chunk_count"]
 check("cold store lists the writer's documents", cold_store_lists_the_writers_documents)
 
+def note_ingest_job_budget():
+    # a one-note batch is a local relation: the dedup gate runs no job, and
+    # chunk -> embed -> write is the ingest's only one
+    from mcpvectordb_spark.api import VectorDB
+    from mcpvectordb_spark.obs import spark_work
+    db = VectorDB(spark, tempfile.mkdtemp(prefix="drive_notes_"), TESTCFG)
+    note = {"content": "# Budget\n\n" + "a note about job budgets " * 60, "source": "budget.md", "library": "notes"}
+    with spark_work(spark, "new note") as new:
+        assert db.ingest_content(**note)["status"] == "indexed"
+    with spark_work(spark, "re-send") as again:
+        assert db.ingest_content(**note)["status"] == "skipped"
+    assert (new.jobs, again.jobs) == (1, 0), (new.jobs, again.jobs)
+check("a new note is 1 Spark job, its re-send 0", note_ingest_job_budget)
+
 # ---- 3. dedup flow (planted) ----
 from mcpvectordb_spark.operators.dedup import minhash_lsh_pairs
 
