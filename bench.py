@@ -8,7 +8,7 @@ windows truncated the 4.6 KB full line in rounds 4-6 -> parsed:null).
 Second lane: SPARK_GRAFT_BENCH_ALL=1 times EVERY catalog query (the 86
 that the headline set never covered, plus the stream family) once at
 $SPARK_GRAFT_SF_DIR and merges them into BENCH_local.json under
-"queries_all" so tools/bench_gate.py can flag regressions anywhere in
+"queries_all" so tools/bench_compare.py can flag regressions anywhere in
 the registry, not just the headline set.
 
 Both lanes SELF-STABILIZE (r8): the headline lane medians >=3 timed reps

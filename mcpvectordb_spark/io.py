@@ -58,12 +58,6 @@ def enable_table_cache(spark: SparkSession, sf_dir: str, tables: list[str]) -> N
         _TABLE_CACHE[(sf_dir, name)] = df
 
 
-def clear_table_cache() -> None:
-    for df in _TABLE_CACHE.values():
-        df.unpersist()
-    _TABLE_CACHE.clear()
-
-
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 

@@ -15,11 +15,6 @@ def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")  # type: ignore[attr-defined]
 
 
-def plan_has(df: DataFrame, *needles: str) -> bool:
-    plan = formatted_plan(df)
-    return all(n in plan for n in needles)
-
-
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters lines of every scan in the plan."""
     return "\n".join(l.strip() for l in formatted_plan(df).splitlines() if "PushedFilters" in l)

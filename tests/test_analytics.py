@@ -196,3 +196,30 @@ def test_funnel_latency_hand_computed(spark):
     assert (r["step"], r["step_name"], r["n_users"]) == (2, "click", 2)
     assert r["p50_s"] == 20.0     # interpolated between 10 and 30
     assert r["p90_s"] == 28.0     # 10 + 0.9*(30-10)
+
+
+def test_seqmine_support_matches_bruteforce(spark, tmp_path):
+    """Gapped ordered pairs a -> b (b any time after a for the same user,
+    equal seconds broken by event_id), counted in distinct users and kept
+    at support >= 5: the catalog query against a Python enumeration."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from mcpvectordb_spark.catalog import QUERIES
+
+    rnd = random.Random(5)
+    types = ["view", "click", "signup", "purchase", "error"]
+    rows = [(i, 1_699_920_000 + rnd.randrange(600), rnd.randrange(20), rnd.choice(types), 0.0, "{}")
+            for i in range(120)]
+    spark.createDataFrame(
+        rows, "event_id long, ts long, user_id long, event_type string, value double, props string"
+    ).withColumn("ts", F.timestamp_seconds("ts")).write.parquet(str(tmp_path / "events.parquet"))
+    users: dict[tuple[str, str], set[int]] = {}
+    for a in rows:
+        for b in rows:
+            if a[2] == b[2] and (b[1], b[0]) > (a[1], a[0]):
+                users.setdefault((a[3], b[3]), set()).add(a[2])
+    want = {pair: len(u) for pair, u in users.items() if len(u) >= 5}
+    got = {(r["ta"], r["tb"]): r["support"] for r in QUERIES["events_seqmine"](spark, str(tmp_path)).collect()}
+    assert got == want and want

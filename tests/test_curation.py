@@ -436,6 +436,34 @@ def test_dsir_select_deterministic_topk(spark):
     assert len({i for i, _ in a}) == 10
 
 
+def test_dsir_select_gumbel_keys_match_hashlib_recompute(spark):
+    """Identical texts give every candidate one log-weight, so the
+    selection is the Gumbel key alone: the top-k must equal a plain
+    Python recompute from the portable md5 hash, id for id, and the cut
+    must be a TakeOrderedAndProject with no unbounded single-task stage."""
+    import hashlib
+    import math
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from plan_report import audit_plan
+
+    n, k = 2000, 20
+    docs = spark.range(n).select(F.col("id").alias("doc_id"), F.lit("alpha beta gamma delta").alias("text"))
+    out = cu.dsir_select(docs, "doc_id", "text", F.col("doc_id") < 100, k)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan and audit_plan(plan) == (0, 0)
+    rows = out.orderBy("rank").collect()
+    assert len({r["logw"] for r in rows}) == 1
+    c = rows[0]["logw"]
+
+    def key(i):
+        u = (int(hashlib.md5(f"dsir:{i}".encode()).hexdigest()[:12], 16) + 0.5) / float(1 << 48)
+        return round(c - math.log(-math.log(u)), 6)
+
+    assert [r["id"] for r in rows] == sorted(range(100, n), key=lambda i: (-key(i), i))[:k]
+
 def test_blocklist_flags_page_gate(spark):
     rows = [
         (1, "a perfectly ordinary document about engineering"),

@@ -104,3 +104,34 @@ def test_profiler_writes_plan_and_profile(spark, tmp_path):
     assert rec["n_jobs_per_run"] >= 1 and rec["n_tasks"] >= rec["n_stages"] >= 1
     with pytest.raises(ValueError, match="unknown queries"):
         profile_queries(spark, SF, ["no_such_query"], str(tmp_path))
+
+
+def test_replica_joins_per_copy_and_matches_the_oracle(spark, tmp_path):
+    """tools/stress.py x3: keyed tables triple, region/nation stay single,
+    foreign keys join within a copy only, and the registry queries still
+    match their DuckDB oracles and profile at the replica."""
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from check_parity import check_query, oracle_connection
+    from profile_query import profile_queries
+    from stress import replicate
+
+    rep = str(tmp_path / "x3")
+    replicate(SF, 3, rep)
+    con = oracle_connection(rep)
+    src = oracle_connection(SF)
+
+    def count(c, sql):
+        return c.execute(sql).fetchone()[0]
+
+    for t in ("customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings"):
+        assert count(con, f"SELECT count(*) FROM {t}") == 3 * count(src, f"SELECT count(*) FROM {t}"), t
+    for t in ("region", "nation"):
+        assert count(con, f"SELECT count(*) FROM {t}") == count(src, f"SELECT count(*) FROM {t}"), t
+    join = ("SELECT count(*) FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
+            "JOIN customer ON o_custkey = c_custkey")
+    assert count(con, join) == 3 * count(src, join) > 0
+    for name in ("tpch_q5", "knn_topk", "events_sessions"):
+        ok, line = check_query(spark, con, rep, name)
+        assert ok, line
+    out = profile_queries(spark, rep, ["tpch_q5"], str(tmp_path / "profile"))
+    assert out["tpch_q5"]["n_jobs_per_run"] >= 1

@@ -500,6 +500,23 @@ def test_audit_plan_global_agg_single_partition_is_benign(spark):
     assert pr.audit_plan(plan) == (0, 0)
 
 
+def test_list_documents_page_is_a_bounded_cut_of_the_planted_size_law(spark, tmp_path):
+    """Sources s0..s19 hold 1e9-i chars and every other source < 1000, so
+    page ranks 6..15 are exactly s5..s14; the rank window sees only the
+    TakeOrdered cut, never the grouped listing."""
+    pr = _audit()
+    spark.range(500).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("s"), F.col("id")).alias("source"),
+        F.when(F.col("id") < 20, F.lit(1_000_000_000) - F.col("id"))
+        .otherwise(F.col("id") % 997 + 1).cast("long").alias("n_chars"),
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    q = QUERIES["list_documents"](spark, str(tmp_path))
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan and pr.audit_plan(plan) == (0, 0)
+    rows = q.orderBy("rank").collect()
+    assert [(r["source"], r["total_chars"]) for r in rows] == [(f"s{i}", 1_000_000_000 - i) for i in range(5, 15)]
+
 def test_plan_report_allowlist_is_valid():
     """Every ALLOW_BOUNDED entry must name a real catalog query and carry
     a non-empty justification; the allowlist may never silently grow to

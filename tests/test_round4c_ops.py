@@ -321,7 +321,10 @@ def test_hard_negatives_are_truly_negative(spark):
         assert scores == sorted(scores, reverse=True)  # ranked by score
 
 
-def test_events_psi_invariants(spark):
+def test_events_psi_invariants(spark, tmp_path):
+    """PSI bounds on the testdata stream, and exactly 0 on a stream whose
+    second half replays the first half's values per type (every decile
+    cell then holds the same share in both halves)."""
     from mcpvectordb_spark.catalog import QUERIES
 
     rows = QUERIES["events_psi"](spark, "/root/testdata/sf0.001").collect()
@@ -330,6 +333,18 @@ def test_events_psi_invariants(spark):
         # PSI is a sum of (p-q)ln(p/q) terms, each >= 0
         assert r["psi"] >= 0
         assert 0 <= r["n_drifted_bins"] <= 10
+
+    base, ev = 1_699_920_000, []
+    for half in (0, 1):
+        for t in range(200):
+            ev.append((half * 200 + t, base + half * 1000 + t, t % 17,
+                       ("view", "click")[t % 2], float((t * 7) % 50), "{}"))
+    spark.createDataFrame(
+        ev, "event_id long, ts long, user_id long, event_type string, value double, props string"
+    ).withColumn("ts", F.timestamp_seconds("ts")).write.parquet(str(tmp_path / "events.parquet"))
+    same = QUERIES["events_psi"](spark, str(tmp_path)).collect()
+    assert {r["event_type"] for r in same} == {"view", "click"}
+    assert all((r["psi"], r["n_drifted_bins"]) == (0.0, 0) for r in same), same
 
 
 # -- modularity / graph metrics ---------------------------------------------
@@ -1794,6 +1809,105 @@ def test_coxph_newton_converged(spark):
         u += r["da"] - r["d"] * p
         i += r["d"] * p * (1 - p)
     assert abs(u / i) < 1e-5, u / i
+
+
+def _planted_survival_corpus(spark, path, p0, p1, n_users=2000, horizon=30):
+    """One 'view' per user per day 0..horizon-1 (first event on day 0,
+    stream horizon on day horizon-1) plus a 'purchase' on day g, g ~
+    Geometric(p) per arm, with the catalog's hexint48(user_id) % 2 arms.
+    Returns the users frame (user_id, arm, g)."""
+    from mcpvectordb_spark.operators.dedup import hexint48
+
+    base = 1_699_920_000  # midnight UTC: the +12h purchase stays on day g
+    u = (F.pmod(F.xxhash64(F.col("id"), F.lit(7)), F.lit(1_000_000)) + 0.5) / 1_000_000.0
+    users = spark.range(n_users).select(
+        F.col("id").alias("user_id"),
+        F.pmod(hexint48(F.col("id").cast("string")), F.lit(2)).alias("arm"),
+        u.alias("u"),
+    ).select(
+        "user_id", "arm",
+        F.floor(F.log(1.0 - F.col("u")) / F.log(
+            1.0 - F.when(F.col("arm") == 1, F.lit(p1)).otherwise(F.lit(p0)))).cast("long").alias("g"),
+    )
+    views = spark.range(n_users * horizon).select(
+        (F.col("id") / horizon).cast("long").alias("user_id"),
+        F.pmod(F.col("id"), F.lit(horizon)).alias("day"),
+        F.lit("view").alias("event_type"),
+    )
+    purchases = users.filter(F.col("g") < horizon).select(
+        "user_id", F.col("g").alias("day"), F.lit("purchase").alias("event_type"))
+    views.unionByName(purchases).select(
+        F.xxhash64("user_id", "day", "event_type").alias("event_id"),
+        F.timestamp_seconds(F.lit(base) + F.col("day") * 86400
+                            + F.when(F.col("event_type") == "purchase", 43200).otherwise(0)).alias("ts"),
+        "user_id", "event_type", F.lit(1.0).alias("value"), F.lit("{}").alias("props"),
+    ).coalesce(2).write.parquet(f"{path}/events.parquet")
+    return users
+
+
+def test_survival_trio_recovers_planted_geometric_law(spark, tmp_path):
+    """Every user starts on day 0 and is censored only at the horizon, so
+    the Kaplan-Meier product telescopes to the empirical survivor
+    function of the planted conversion days (exact per step).  An A/A
+    split must be accepted by the log-rank test and Cox PH; a planted
+    discrete-time hazard ratio of 2 must be detected by both, with the
+    right sign and Cox recovering HR ~ 2."""
+    from mcpvectordb_spark.catalog import QUERIES
+
+    p0, horizon, n_users = 0.05, 30, 2000
+    aa, eff = str(tmp_path / "aa"), str(tmp_path / "eff")
+    users = _planted_survival_corpus(spark, aa, p0, p0).collect()
+    _planted_survival_corpus(spark, eff, p0, 1.0 - (1.0 - p0) ** 2)
+
+    km = QUERIES["events_survival"](spark, aa).orderBy("dur").collect()
+    prev, checked = 1.0, 0
+    for r in km:
+        assert r["survival"] <= prev
+        prev = r["survival"]
+        if r["dur"] < horizon - 1:
+            want = sum(u["g"] > r["dur"] for u in users) / n_users
+            assert abs(r["survival"] - want) <= 1e-6, (r, want)
+            checked += 1
+    assert checked >= 20, checked
+
+    lr_aa = QUERIES["events_logrank"](spark, aa).first()
+    lr_eff = QUERIES["events_logrank"](spark, eff).first()
+    assert abs(lr_aa["z"]) <= 3.3 and not lr_aa["significant"], lr_aa
+    # arm 1 converts faster, so arm 0 (observed_a) sees fewer conversions
+    # than the hypergeometric expectation
+    assert lr_eff["significant"] and lr_eff["z"] < -5, lr_eff
+
+    cox_aa = QUERIES["events_coxph"](spark, aa).first()
+    cox_eff = QUERIES["events_coxph"](spark, eff).first()
+    assert abs(cox_aa["z"]) <= 3.3 and 0.8 <= cox_aa["hazard_ratio"] <= 1.25, cox_aa
+    assert cox_eff["significant"] and 1.7 <= cox_eff["hazard_ratio"] <= 2.3, cox_eff
+
+
+def test_sprt_crosses_upper_bound_on_elevated_stream(spark, tmp_path):
+    """A stream with a planted 35% error share (H1 says 30%, H0 20%) must
+    stop at the UPPER bound, at exactly the step a Python replay of the
+    Wald walk first leaves (-ln 19, ln 19)."""
+    from mcpvectordb_spark.catalog import QUERIES
+
+    n = 400
+    is_err = [i % 20 < 7 for i in range(n)]
+    spark.createDataFrame(
+        [(i, 1_699_920_000 + i, i % 13, "error" if e else "view", 0.0, "{}") for i, e in enumerate(is_err)],
+        "event_id long, ts long, user_id long, event_type string, value double, props string",
+    ).withColumn("ts", F.timestamp_seconds("ts")).coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
+
+    c1, c0, bound = math.log(0.3 / 0.2), math.log(0.7 / 0.8), math.log(19.0)
+    k = 0
+    for step, e in enumerate(is_err, 1):
+        k += e
+        s = k * c1 + (step - k) * c0
+        if abs(s) >= bound:
+            break
+    assert s > 0
+    r = QUERIES["events_sprt"](spark, str(tmp_path)).first()
+    assert r["decision"] == "elevated", r
+    assert (r["n_at_decision"], r["k_errors"]) == (step, k), (r, step, k)
+    assert r["n_total"] == n and r["frac_saved"] > 0.5, r
 
 
 # -- events_interarrival (catalog-level) ----------------------------------------------

@@ -1,8 +1,8 @@
 """Round-5 operator tests: CUPED, synthetic-control placebo, Heaps law.
 
-Planted-corpus fixtures follow the stress-harness discipline: the ground
-truth is constructed analytically, written to a tmp parquet dir, and the
-REAL catalog query runs its production code path against it."""
+Planted-corpus fixtures: the ground truth is constructed analytically,
+written to a tmp parquet dir, and the REAL catalog query runs its
+production code path against it."""
 
 import math
 
@@ -38,29 +38,40 @@ def _write_events(spark, tmp_path, rows):
 def test_cuped_planted_covariate_strips_pre_period_variance(spark, tmp_path):
     """Users' post-period spend is a deterministic function of their
     pre-period activity plus arm-independent noise: CUPED must find
-    theta near the planted slope and collapse the variance."""
-    rows = []
-    for u in range(200):
-        x = (u % 10) + 1  # pre-period view count, 1..10
-        for k in range(x):
-            rows.append({"ts": BASE + k, "user_id": u, "event_type": "view"})
-        # post-period purchase: value = 10*x + deterministic +/-1 noise
-        rows.append(
-            {
-                "ts": BASE + 20 * 86400,
-                "user_id": u,
-                "event_type": "purchase",
-                "value": 10.0 * x + (1.0 if u % 2 else -1.0),
-            }
-        )
-    sf_dir = _write_events(spark, tmp_path, rows)
-    out = QUERIES["events_cuped"](spark, sf_dir).first()
-    # theta is cents-per-pre-event / 100 = dollars per event ~ planted 10
-    assert abs(out["theta"] - 10.0) < 0.2, out
-    assert out["var_reduction"] > 0.95, out
-    assert out["se_cuped"] < 0.25 * out["se_raw"], out
-    # y depends only on x, never on the arm: the A/A gate must hold
-    assert out["significant"] is False, out
+    theta near the planted slope and collapse the variance.  A second
+    corpus adds a planted +$2 to the treatment arm (the catalog's
+    hexint48(user_id) % 2 == 1), which CUPED must detect and estimate."""
+    import hashlib
+
+    for effect in (0.0, 2.0):
+        rows = []
+        for u in range(200):
+            x = (u % 10) + 1  # pre-period view count, 1..10
+            arm = int(hashlib.md5(str(u).encode()).hexdigest()[:12], 16) % 2
+            for k in range(x):
+                rows.append({"ts": BASE + k, "user_id": u, "event_type": "view"})
+            # post-period purchase: value = 10*x + deterministic +/-1 noise
+            rows.append(
+                {
+                    "ts": BASE + 20 * 86400,
+                    "user_id": u,
+                    "event_type": "purchase",
+                    "value": 10.0 * x + effect * arm + (1.0 if u % 2 else -1.0),
+                }
+            )
+        sf_dir = _write_events(spark, tmp_path / f"effect{effect}", rows)
+        out = QUERIES["events_cuped"](spark, sf_dir).first()
+        # theta is cents-per-pre-event / 100 = dollars per event ~ planted 10
+        assert abs(out["theta"] - 10.0) < 0.2, out
+        assert out["var_reduction"] > 0.95, out
+        assert out["se_cuped"] < 0.25 * out["se_raw"], out
+        if effect == 0.0:
+            # y depends only on x, never on the arm: the A/A gate must hold
+            assert out["significant"] is False, out
+        else:
+            # se_cuped ~ 1 * sqrt(2 / 100): the estimate sits within 3 se
+            assert out["significant"] is True and out["z_cuped"] > 5, out
+            assert abs(out["diff_cuped"] - effect) < 0.45, out
 
 
 def test_cuped_aa_gate_on_testdata(spark):
@@ -141,6 +152,19 @@ def test_heaps_hand_fixture(spark, tmp_path):
     assert abs(out["heaps_beta"] - slope) < 1e-5, out
     assert abs(out["heaps_k"] - k) < 1e-5, out
 
+
+def test_heaps_globally_unique_shingles_recover_the_identity_law(spark, tmp_path):
+    """When every shingle in the corpus is distinct, V(N) = N at every
+    document, so the log-log fit is the identity: beta = 1, K = 1 and
+    corr = 1 exactly at the query's 6 dp."""
+    n_docs, toks = 50, 20
+    spark.createDataFrame(
+        [Row(doc_id=d, text=" ".join(f"d{d}t{j}" for j in range(toks))) for d in range(n_docs)]
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    out = QUERIES["documents_heaps"](spark, str(tmp_path)).first()
+    assert out["n_docs"] == n_docs
+    assert out["total_shingles"] == out["vocab"] == n_docs * (toks - 2), out
+    assert (out["heaps_beta"], out["heaps_k"], out["loglog_corr"]) == (1.0, 1.0, 1.0), out
 
 def test_heaps_short_docs_yield_no_shingles(spark, tmp_path):
     """Docs under 3 words contribute 0 occurrences and 0 vocabulary —

@@ -338,6 +338,24 @@ def test_registered_domain_short_hosts(spark):
     assert got == ["localhost", "example.com", "co.uk"]
 
 
+def test_web_pipeline_funnel_is_one_scan_and_never_grows(spark):
+    """The fused web-filtering funnel: every document enters the first
+    stage, each gate keeps a subset of the stage before it, and all four
+    gates run off one corpus scan."""
+    import re
+
+    from conftest import SF
+    from mcpvectordb_spark.catalog import QUERIES
+    from mcpvectordb_spark.plans.explain import formatted_plan
+
+    q = QUERIES["web_pipeline"](spark, SF)
+    rows = q.collect()
+    assert [r["stage"] for r in rows] == ["all", "url_domain", "langid", "quality", "blocklist"]
+    n = [r["n_docs"] for r in rows]
+    assert n[0] == spark.read.parquet(f"{SF}/documents.parquet").count()
+    assert n == sorted(n, reverse=True) and n[-1] < n[0], n
+    assert len(re.findall(r"^\(\d+\) Scan parquet", formatted_plan(q), re.M)) == 1
+
 def test_deflate_ratio_flags_repetition(spark):
     from mcpvectordb_spark.operators.textstats import deflate_ratio
 

@@ -3,11 +3,17 @@
 
 Usage::
 
+    python tools/bench_compare.py                  # newest vs previous round
     python tools/bench_compare.py BENCH_r01.json BENCH_r02.json [--max-ratio 1.5]
 
-Exit 1 if any query common to both runs regressed by more than
-``--max-ratio`` (new/old), or if the new run dropped a query the old run
-had.  New queries are reported but never fail (coverage growth is good).
+With no files named, the new side is ``BENCH_local.json`` if present (else
+the highest ``BENCH_r{N}.json``) and the old side is the round before it.
+
+Exit 1 if the new file has no per-query timings (a ``parsed: null``
+artifact whose tail recovers nothing fails the same way), if any query
+common to both runs regressed by more than ``--max-ratio`` (new/old), or if
+the new run dropped a query the old run had.  New queries are reported but
+never fail (coverage growth is good).
 
 Timing caveat (round-1 experience): this host is a shared VM — load >5
 inflates every wall-clock ~1.5×, so a uniform across-the-board slowdown is
@@ -23,6 +29,9 @@ import json
 import re
 import statistics
 import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def _recover_from_tail(doc: dict) -> dict | None:
@@ -116,20 +125,39 @@ def compare(old_q: dict, new_q: dict, max_ratio: float, min_sec: float,
     )
 
 
+def _default_pair() -> tuple[str, str]:
+    """(previous round, newest artifact): BENCH_local.json counts as the
+    round after the highest BENCH_r{N}.json."""
+    found = (re.fullmatch(r"BENCH_r(\d+)\.json", p.name) for p in ROOT.glob("BENCH_r*.json"))
+    rounds = [ROOT / m[0] for m in sorted(filter(None, found), key=lambda m: int(m[1]))]
+    if not rounds:
+        raise SystemExit("bench_compare: no BENCH_r*.json artifacts found")
+    local = ROOT / "BENCH_local.json"
+    chain = rounds + [local] if local.exists() else rounds
+    return str(chain[max(len(chain) - 2, 0)]), str(chain[-1])
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("old")
-    ap.add_argument("new")
+    ap.add_argument("old", nargs="?")
+    ap.add_argument("new", nargs="?")
     ap.add_argument("--max-ratio", type=float, default=1.5)
     ap.add_argument("--max-ratio-all", type=float, default=2.0,
                     help="threshold for the full-registry queries_all lane")
     ap.add_argument("--min-sec", type=float, default=0.3,
                     help="ignore regressions on queries faster than this (noise floor)")
     args = ap.parse_args()
+    if args.new is None:
+        if args.old is not None:
+            ap.error("name both files or neither")
+        args.old, args.new = _default_pair()
 
     old_doc, new_doc = load(args.old), load(args.new)
-    old_q = old_doc.get("queries", {})
-    new_q = new_doc.get("queries", {})
+    old_q = old_doc.get("queries") or {}
+    new_q = new_doc.get("queries") or {}
+    if not new_q:
+        print(f"bench_compare: {args.new} has no per-query timings — FAIL")
+        return 1
     # a recovered-partial artifact lost the FRONT of its queries dict to
     # tail truncation — absent queries are capture loss, not real drops
     partial = bool(old_doc.get("recovered_partial") or new_doc.get("recovered_partial"))

@@ -43,6 +43,64 @@ def norm_rows(cols, rows):
     )
 
 
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per testdata table at ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def check_query(spark, con, sf_dir: str, name: str) -> tuple[bool, str]:
+    """Run query ``name`` on Spark and its oracle on ``con``; return
+    (passed, the report line)."""
+    try:
+        sdf = QUERIES[name](spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    except Exception as exc:
+        return False, f"FAIL {name}: spark error: {type(exc).__name__}: {str(exc)[:300]}"
+    sql = ORACLES.get(name)
+    if sql is None:
+        status = "ROWS-ONLY" if len(srows) > 0 else "ROWS-ONLY-EMPTY!"
+        return bool(srows), f"{'ok  ' if srows else 'WARN'} {name}: {status} rows={len(srows)}"
+    try:
+        # .df() first: pandas dtypes are what the driver's value-hash
+        # serializes (HUGEINT -> float64 there, but Python int via
+        # fetchall) -- keep both views so dtype-kind skew is caught.
+        odf = con.execute(sql).df()
+        ocols = list(odf.columns)
+        orows = list(con.execute(sql).fetchall())
+    except Exception as exc:
+        return False, f"FAIL {name}: oracle error: {type(exc).__name__}: {str(exc)[:300]}"
+    if sorted(scols) != sorted(ocols):
+        return False, f"FAIL {name}: columns spark={sorted(scols)} oracle={sorted(ocols)}"
+    sn, on = norm_rows(scols, srows), norm_rows(ocols, orows)
+    if len(sn) != len(on):
+        return False, f"FAIL {name}: rowcount spark={len(sn)} oracle={len(on)}"
+    mismatch = [(a, b) for a, b in zip(sn, on) if a != b]
+    if mismatch:
+        return False, f"FAIL {name}: {len(mismatch)}/{len(sn)} rows differ; first: spark={mismatch[0][0]} oracle={mismatch[0][1]}"
+    # Dtype-kind skew: the driver hashes pandas-serialized values, where
+    # int64 5 ("5") != float64 5.0 ("5.0").  A NULL-free column whose
+    # kinds differ across engines passes the value compare above but
+    # fails the driver hash (round-1 pack_sequences bug).
+    skew = []
+    sidx = {c: i for i, c in enumerate(scols)}
+    for c in ocols:
+        okind = odf[c].dtype.kind  # 'i', 'f', 'O', ...
+        stype = dict(sdf.dtypes).get(c, "")
+        skind = "i" if stype in ("bigint", "int", "smallint", "tinyint") else (
+            "f" if stype in ("double", "float") else "O")
+        if {okind, skind} == {"i", "f"}:
+            has_null = any(r[sidx[c]] is None for r in srows)
+            if not has_null:
+                skew.append((c, stype, str(odf[c].dtype)))
+    if skew:
+        return False, f"FAIL {name}: dtype-kind skew (driver-hash hazard): {skew}"
+    return True, f"ok   {name}: {len(sn)} rows match"
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -52,75 +110,15 @@ def main():
         print(f"unknown queries: {sorted(unknown)}; valid: {sorted(QUERIES)}")
         sys.exit(2)
     spark = get_spark("parity")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-
+    con = oracle_connection(sf_dir)
     passed = failed = 0
-    for name, fn in QUERIES.items():
+    for name in QUERIES:
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as exc:
-            print(f"FAIL {name}: spark error: {type(exc).__name__}: {str(exc)[:300]}")
-            failed += 1
-            continue
-        sql = ORACLES.get(name)
-        if sql is None:
-            status = "ROWS-ONLY" if len(srows) > 0 else "ROWS-ONLY-EMPTY!"
-            print(f"{'ok  ' if srows else 'WARN'} {name}: {status} rows={len(srows)}")
-            passed += 1 if srows else 0
-            failed += 0 if srows else 1
-            continue
-        try:
-            # .df() first: pandas dtypes are what the driver's value-hash
-            # serializes (HUGEINT -> float64 there, but Python int via
-            # fetchall) -- keep both views so dtype-kind skew is caught.
-            odf = con.execute(sql).df()
-            ocols = list(odf.columns)
-            orows = list(con.execute(sql).fetchall())
-        except Exception as exc:
-            print(f"FAIL {name}: oracle error: {type(exc).__name__}: {str(exc)[:300]}")
-            failed += 1
-            continue
-        if sorted(scols) != sorted(ocols):
-            print(f"FAIL {name}: columns spark={sorted(scols)} oracle={sorted(ocols)}")
-            failed += 1
-            continue
-        sn, on = norm_rows(scols, srows), norm_rows(ocols, orows)
-        if len(sn) != len(on):
-            print(f"FAIL {name}: rowcount spark={len(sn)} oracle={len(on)}")
-            failed += 1
-            continue
-        mismatch = [(a, b) for a, b in zip(sn, on) if a != b]
-        if mismatch:
-            print(f"FAIL {name}: {len(mismatch)}/{len(sn)} rows differ; first: spark={mismatch[0][0]} oracle={mismatch[0][1]}")
-            failed += 1
-            continue
-        # Dtype-kind skew: the driver hashes pandas-serialized values, where
-        # int64 5 ("5") != float64 5.0 ("5.0").  A NULL-free column whose
-        # kinds differ across engines passes the value compare above but
-        # fails the driver hash (round-1 pack_sequences bug).
-        skew = []
-        sidx = {c: i for i, c in enumerate(scols)}
-        for c in ocols:
-            okind = odf[c].dtype.kind  # 'i', 'f', 'O', ...
-            stype = dict(sdf.dtypes).get(c, "")
-            skind = "i" if stype in ("bigint", "int", "smallint", "tinyint") else (
-                "f" if stype in ("double", "float") else "O")
-            if {okind, skind} == {"i", "f"}:
-                has_null = any(r[sidx[c]] is None for r in srows)
-                if not has_null:
-                    skew.append((c, stype, str(odf[c].dtype)))
-        if skew:
-            print(f"FAIL {name}: dtype-kind skew (driver-hash hazard): {skew}")
-            failed += 1
-        else:
-            print(f"ok   {name}: {len(sn)} rows match")
-            passed += 1
+        ok, line = check_query(spark, con, sf_dir, name)
+        print(line)
+        passed += ok
+        failed += not ok
     print(f"\n{passed} passed, {failed} failed")
     spark.stop()
     sys.exit(1 if failed else 0)

@@ -1,4129 +1,51 @@
-"""Scale stress test: replicate the sf0.1 tables ~20× (100k documents, 40k
-vectors, 2M events) and run the heavy operators.  Evidence that the
-partition/blocking strategies hold beyond bench scale — results recorded in
-STRESS.md.
+"""Replicate a testdata sf dir N times, for timing and oracle checks beyond
+bench scale.
 
-Usage: python tools/stress.py        # 20× workload (round-1/2 table)
-       python tools/stress.py sf1    # sf1-equivalent workload (~6M events,
-                                     # 200k docs) over the round-2 families,
-                                     # skewed keys so the heavy-hitters
-                                     # guard is exercised in-regime
+Usage: python tools/stress.py <src_sf_dir> <replicas> <out_dir>
+
+Each table is written N times with its parquet types kept.  Every int64
+column named ``*key`` or ``*_id`` is shifted by ``r * offset`` in replica r,
+with one offset over all tables, so foreign keys still join within a
+replica.  Tables with no such column (region, nation) are copied once.
+Then run any registry queries on the replica:
+
+  SPARK_GRAFT_SF_DIR=<out_dir> python tools/profile_query.py <prof_dir> <query>...
+  python tools/check_parity.py <out_dir> <query>...
 """
 
 from __future__ import annotations
 
-import json
-import math
+import os
 import sys
-import time
 
-sys.path.insert(0, ".")
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
-from pyspark.sql import Window
-from pyspark.sql import functions as F
 
-from mcpvectordb_spark.io import load_table
-from mcpvectordb_spark.operators.bm25 import bm25_topk
-from mcpvectordb_spark.operators.dedup import exact_duplicates, minhash_lsh_pairs
-from mcpvectordb_spark.operators.knn import knn_topk
-from mcpvectordb_spark.session import get_spark
-from mcpvectordb_spark.streaming.events import sessionize_batch, windowed_counts_batch
+def _keys(table: pa.Table) -> list[str]:
+    return [f.name for f in table.schema
+            if pa.types.is_int64(f.type) and f.name.endswith(("key", "_id"))]
 
-SF = "/root/testdata/sf0.1"
-REPLICAS = 20
 
+def _shift(table: pa.Table, keys: list[str], delta: int) -> pa.Table:
+    for c in keys:
+        table = table.set_column(table.schema.get_field_index(c), c, pc.add(table[c], delta))
+    return table
 
-def main() -> None:
-    spark = get_spark("stress")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    r = spark.range(REPLICAS).select(F.col("id").alias("r"))
 
-    # 100k documents, mostly UNIQUE (random 40-token texts derived from
-    # md5(doc,replica,position)) with controlled plants: for every 10th
-    # base doc, replica 1 = replica 0's real text + one word (near-dup)
-    # and replica 2 = replica 0's text verbatim (exact dup).
-    docs = load_table(spark, SF, "documents")
-    synth = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(39)),
-            lambda i: F.substring(
-                F.md5(F.concat_ws(":", F.col("doc_id"), F.col("r"), i)), 1, 8
-            ),
-        ),
-        " ",
-    )
-    big_docs = (
-        docs.crossJoin(F.broadcast(r))
-        .select(
-            (F.col("doc_id") * 100 + F.col("r")).alias("id"),
-            F.when(F.col("r") == 0, F.col("text"))
-            .when((F.col("r") == 1) & (F.col("doc_id") % 10 == 0), F.concat("text", F.lit(" nearly")))
-            .when((F.col("r") == 2) & (F.col("doc_id") % 10 == 0), F.col("text"))
-            .otherwise(synth)
-            .alias("text"),
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_docs = big_docs.count()
-
-    # 40k vectors: deterministic per-replica perturbation (direction shifts)
-    emb = load_table(spark, SF, "embeddings")
-    big_emb = (
-        emb.crossJoin(F.broadcast(r))
-        .select(
-            (F.col("vec_id") * 100 + F.col("r")).alias("vec_id"),
-            F.transform(
-                "embedding",
-                lambda x, i: x + (F.col("r") * 0.01) * F.cos(i.cast("double") + F.col("r")),
-            ).alias("embedding"),
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_vec = big_emb.count()
-
-    # 2M events: replicas shifted by r days
-    ev = load_table(spark, SF, "events")
-    big_ev = (
-        ev.crossJoin(F.broadcast(r))
-        .select(
-            (F.col("event_id") * 100 + F.col("r")).alias("event_id"),
-            (F.col("ts") + F.make_dt_interval(F.col("r"))).alias("ts"),
-            (F.col("user_id") * 100 + F.col("r") % 4).alias("user_id"),
-            "event_type", "value",
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_ev = big_ev.count()
-    print(f"# corpus: {n_docs} docs, {n_vec} vectors, {n_ev} events", file=sys.stderr)
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s → {counts[name]}", file=sys.stderr)
-
-    run("exact_dedup_100k", lambda: exact_duplicates(big_docs, "id", "text").count())
-    run("minhash_lsh_100k", lambda: minhash_lsh_pairs(big_docs, "id", "text", 8, 2, 3, 0.5).count())
-    run("bm25_100k", lambda: bm25_topk(big_docs, "window join spark batch", 10, "id", "text").count())
-    qv = [float(x) for x in emb.first()["embedding"]]
-    run("knn_40k", lambda: knn_topk(big_emb, qv, 10, tie_col="vec_id").count())
-    run("windows_2m", lambda: windowed_counts_batch(big_ev).count())
-    run("sessions_2m", lambda: sessionize_batch(big_ev).count())
-
-    # line-level dedup: 5-line docs; every doc carries one of 3 boilerplate
-    # banners (corpus counts ~33k each) around 4 unique lines — the removal
-    # path is hot, the digest shuffle stays tiny (distinct lines only)
-    from mcpvectordb_spark.operators.curation import mixture_sample
-    from mcpvectordb_spark.operators.dedup import dedup_lines
-
-    line = lambda j: F.substring(
-        F.md5(F.concat_ws("|", F.col("id"), F.lit(j))), 1, 24
-    )
-    lined = big_docs.select(
-        "id",
-        F.concat_ws(
-            "\n",
-            line(1), line(2),
-            F.concat(F.lit("BANNER "), (F.col("id") % 3).cast("string")),
-            line(3), line(4),
-        ).alias("text"),
-    )
-    run("dedup_lines_100k", lambda: dedup_lines(lined, "id", "text", min_count=3)
-        .agg(F.sum("n_removed")).collect()[0][0])
-
-    # mixture sampling: 8 hash domains, weights over 4, 1/8 token budget
-    mixed = big_docs.select(
-        "id",
-        F.concat(F.lit("d"), (F.col("id") % 8).cast("string")).alias("dom"),
-        F.length("text").alias("tokens"),
-    )
-    run("mixture_sample_100k", lambda: mixture_sample(
-        mixed, "id", "dom", "tokens",
-        {"d0": 4000, "d1": 3000, "d2": 2000, "d3": 1000}, 1_000_000,
-    ).count())
-
-    # round-2 operators at the same 20× scale
-    from mcpvectordb_spark.operators.curation import decontaminate
-    from mcpvectordb_spark.operators.dedup import dup_span_fraction
-    from mcpvectordb_spark.operators.sketches import heavy_hitters
-    from mcpvectordb_spark.operators.textstats import keywords_tfidf, unigram_logprob
-
-    run("dup_spans_100k", lambda: dup_span_fraction(big_docs, "id", "text", k=8)
-        .filter("dup_windows > 0").count())
-    run("heavy_hitters_2m", lambda: heavy_hitters(big_ev, "user_id", k=20, capacity=4096).count())
-    run("tfidf_keywords_100k", lambda: keywords_tfidf(big_docs, "id", "text", k=3).count())
-    run("unigram_logprob_100k", lambda: unigram_logprob(big_docs, "id", "text").count())
-    eval_docs = big_docs.filter(F.col("id") % 1000 == 0).select("id", "text")
-    run("decontaminate_bloom_100k", lambda: decontaminate(
-        big_docs, eval_docs, "id", "text", bloom_bits=1 << 20, bloom_k=3
-    ).count())
-
-    from mcpvectordb_spark.operators.analytics import cohort_retention, funnel_counts
-
-    run("funnel_2m", lambda: funnel_counts(big_ev, ["view", "click", "purchase"]).count())
-    run("cohorts_2m", lambda: cohort_retention(big_ev, [1, 7]).count())
-
-    print(json.dumps({"replicas": REPLICAS, "docs": n_docs, "vectors": n_vec,
-                      "events": n_ev, "timings_sec": timings, "result_counts": counts}))
-    spark.stop()
-
-
-def main_sf1() -> None:
-    """sf1-equivalent stress (~6M events = lineitem-at-sf1 row count; 200k
-    docs) over the round-2 operator families.  user_id follows a power law
-    (u^3-warped md5 uniform) so heavy_hitters runs in its DESIGN regime —
-    the run asserts the exactness guard did NOT fall back to a full agg,
-    and separately reports the span-dedup shuffle staying hash-sized."""
-    spark = get_spark("stress-sf1")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    from mcpvectordb_spark.operators.analytics import cohort_retention, funnel_counts
-    from mcpvectordb_spark.operators.dedup import dedup_lines, dup_span_fraction
-    from mcpvectordb_spark.operators.sketches import (
-        heavy_hitters,
-        histogram_partials,
-        histogram_quantile,
-    )
-
-    # ---- 6M events, skewed users ------------------------------------------
-    ev = load_table(spark, SF, "events")
-    r60 = spark.range(60).select(F.col("id").alias("r"))
-    u = F.conv(F.substring(F.md5(F.concat_ws(":", "event_id", "r")), 1, 6), 16, 10).cast(
-        "double"
-    ) / F.lit(float(1 << 24))
-    big_ev = (
-        ev.crossJoin(F.broadcast(r60))
-        .select(
-            (F.col("event_id") * 100 + F.col("r")).alias("event_id"),
-            (F.col("ts") + F.make_dt_interval(F.col("r") % 30)).alias("ts"),
-            F.floor(F.pow(u, 3) * 50_000).cast("long").alias("user_id"),
-            "event_type",
-            "value",
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_ev = big_ev.count()
-    print(f"# sf1 corpus: {n_ev} events", file=sys.stderr)
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s → {counts[name]}", file=sys.stderr)
-
-    def hh():
-        rows = heavy_hitters(big_ev, "user_id", k=20, capacity=4096).collect()
-        bound = n_ev / 4096
-        min_cnt = min(r["cnt"] for r in rows)
-        # the guard recounts everything when rank-k ≤ N/capacity; in the
-        # skewed regime it must NOT have tripped
-        assert min_cnt > bound, f"guard fallback: rank-20 {min_cnt} <= {bound:.0f}"
-        notes["heavy_hitters_6m"] = (
-            f"rank-20 count {min_cnt} vs guard bound {bound:.0f} — two-pass path held"
-        )
-        return len(rows)
-
-    run("heavy_hitters_6m", hh)
-
-    def quantiles():
-        parts = histogram_partials(
-            big_ev.withColumn("day", F.to_date("ts")), ["day", "event_type"], "value",
-            0.0, 1000.0, 256,
-        )
-        out = histogram_quantile(parts, ["event_type"], [0.5, 0.95, 0.99], 0.0, 1000.0, 256)
-        return out.count()
-
-    run("quantile_sketch_6m", quantiles)
-    run("funnel_6m", lambda: funnel_counts(big_ev, ["view", "click", "purchase"]).count())
-    run("cohorts_6m", lambda: cohort_retention(big_ev, [1, 7]).count())
-
-    big_ev.unpersist()
-
-    # ---- 200k docs for line/span dedup ------------------------------------
-    docs = load_table(spark, SF, "documents")
-    r40 = spark.range(40).select(F.col("id").alias("r"))
-    synth = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(39)),
-            lambda i: F.substring(
-                F.md5(F.concat_ws(":", F.col("doc_id"), F.col("r"), i)), 1, 8
-            ),
-        ),
-        " ",
-    )
-    big_docs = (
-        docs.crossJoin(F.broadcast(r40))
-        .select(
-            (F.col("doc_id") * 100 + F.col("r")).alias("id"),
-            F.when(F.col("r") == 0, F.col("text"))
-            .when((F.col("r") == 1) & (F.col("doc_id") % 10 == 0), F.col("text"))
-            .otherwise(synth)
-            .alias("text"),
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_docs = big_docs.count()
-    print(f"# sf1 corpus: {n_docs} docs", file=sys.stderr)
-
-    line = lambda j: F.substring(F.md5(F.concat_ws("|", F.col("id"), F.lit(j))), 1, 24)
-    lined = big_docs.select(
-        "id",
-        F.concat_ws(
-            "\n",
-            line(1), line(2),
-            F.concat(F.lit("BANNER "), (F.col("id") % 3).cast("string")),
-            line(3), line(4),
-        ).alias("text"),
-    )
-    run("dedup_lines_200k", lambda: dedup_lines(lined, "id", "text", min_count=3)
-        .agg(F.sum("n_removed")).collect()[0][0])
-
-    def spans():
-        out = dup_span_fraction(big_docs, "id", "text", k=8)
-        n = out.filter("dup_windows > 0").count()
-        # the exchange carries (id, 48-bit window hash) pairs, never text:
-        # ~16 bytes/row regardless of document length
-        total_windows = big_docs.select(
-            F.sum(F.greatest(F.size(F.split("text", r"\s+")) - 7, F.lit(0)))
-        ).collect()[0][0]
-        notes["dup_spans_200k"] = (
-            f"{total_windows} windows shuffled as 48-bit hashes (~16 B/row, "
-            f"~{total_windows * 16 // 1_000_000} MB) — not ~{total_windows * 60 // 1_000_000} MB of text"
-        )
-        return n
-
-    run("dup_spans_200k", spans)
-    big_docs.unpersist()
-
-    # ---- 400k vectors for semantic dedup ----------------------------------
-    from mcpvectordb_spark.operators.dedup import semdedup
-
-    emb = load_table(spark, SF, "embeddings")
-    r20 = spark.range(20).select(F.col("id").alias("r"))
-    synth_vec = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda i: F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.col("vec_id"), F.col("r"), i.cast("string"))), 1, 6),
-            16, 10,
-        ).cast("double") / F.lit(float(1 << 24)) - 0.5,
-    )
-    base = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    big_vec = (
-        emb.crossJoin(F.broadcast(r20))
-        .select(
-            (F.col("vec_id") * 100 + F.col("r")).alias("id"),
-            F.when(F.col("r") == 0, base).otherwise(synth_vec).alias("embedding"),
-        )
-        .unionByName(
-            emb.filter(F.col("vec_id") < 1000).select(
-                (F.col("vec_id") * 100 + 50).alias("id"), base.alias("embedding")
-            )
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_vec = big_vec.count()
-    print(f"# sf1 corpus: {n_vec} vectors", file=sys.stderr)
-
-    def sem():
-        # k ≈ √n balances the n·k assignment against the Σ|cell|² pair work;
-        # impl="pandas" = the BLAS assignment path (one matmul per Arrow
-        # batch) — the throughput shape for bucketing at this n×k
-        dropped = semdedup(
-            big_vec, "id", "embedding", k=640, threshold=0.9, impl="pandas"
-        ).collect()
-        ids = {r["id"] for r in dropped}
-        plants = {i * 100 + 50 for i in range(1000)}
-        assert plants <= ids, f"missed {len(plants - ids)} planted copies"
-        extras = ids - plants
-        assert not extras, f"{len(extras)} false drops (random 64-d cosines ≥0.9?)"
-        notes["semdedup_400k"] = (
-            "1000/1000 planted copies dropped, 0 false drops; cells ≈ n/k = "
-            f"{n_vec // 640} rows, pair work Σ|cell|² only"
-        )
-        return len(dropped)
-
-    run("semdedup_400k", sem)
-    big_vec.unpersist()
-
-    # ---- 1M-node duplicate chain: the diameter regime ---------------------
-    from mcpvectordb_spark.operators.dedup import dedup_clusters_twostar
-
-    def twostar_chain():
-        n = 1_000_000
-        ids = spark.range(n + 1).select(F.col("id"))
-        pairs = spark.range(n).select(
-            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-        )
-        out = dedup_clusters_twostar(ids, pairs, "id", max_iter=40)
-        n_clusters = out.select("cluster_id").distinct().count()
-        assert n_clusters == 1, f"chain not fully contracted: {n_clusters} clusters"
-        notes["twostar_chain_1m"] = (
-            "1,000,001-node chain → 1 cluster; min-label propagation would "
-            "need 1M rounds (graph diameter), two-star needed ≤ its "
-            "O(log²n) budget"
-        )
-        return n_clusters
-
-    run("twostar_chain_1m", twostar_chain)
-
-    print(json.dumps({
-        "mode": "sf1", "events": n_ev, "docs": n_docs,
-        "timings_sec": timings, "result_counts": counts, "notes": notes,
-    }))
-    spark.stop()
-
-
-def main_r3() -> None:
-    """Stress the round-3 session-2 operators at sf1-equivalent scale:
-    PQ over 400k vectors, CMS over 6M events, trigram LM + span removal
-    over 200k docs, the Hamming-block join over 200k fingerprints, and
-    bloom semi-join reduction over a 6M-row fact."""
-    import math
-    import random
-
-    spark = get_spark("stress-r3")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s → {counts[name]}", file=sys.stderr)
-
-    # ---- 400k vectors: PQ train(seed)+encode(BLAS)+search ------------------
-    from mcpvectordb_spark.operators import pq as pqm
-    from mcpvectordb_spark.operators.knn import knn_topk, l2_norm
-
-    emb = load_table(spark, SF, "embeddings")
-    r20 = spark.range(20).select(F.col("id").alias("r"))
-    synth_vec = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda i: F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.col("vec_id"), F.col("r"), i.cast("string"))), 1, 6),
-            16, 10,
-        ).cast("double") / F.lit(float(1 << 24)) - 0.5,
-    )
-    base = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    raw = (
-        emb.crossJoin(F.broadcast(r20))
-        .select(
-            (F.col("vec_id") * 100 + F.col("r")).alias("id"),
-            F.when(F.col("r") == 0, base).otherwise(synth_vec).alias("v0"),
-        )
-    )
-    nrm = F.col("v0")
-    big_vec = (
-        raw.withColumn("__n", l2_norm(nrm))
-        .select("id", F.transform("v0", lambda x: x / F.col("__n")).alias("embedding"))
-        .repartition(64)
-        .cache()
-    )
-    n_vec = big_vec.count()
-    print(f"# r3 corpus: {n_vec} vectors", file=sys.stderr)
-
-    qrow = big_vec.filter(F.col("id") == 500).first()
-    qv = list(qrow["embedding"])
-
-    def pq_search():
-        cb = pqm.seed_codebooks(big_vec, 8, 256)
-        enc = pqm.pq_encode(big_vec, cb, impl="pandas").select("id", "embedding", "pq_codes")
-        hits = pqm.pq_topk(enc, cb, qv, 10, refine=8).collect()
-        exact = {r["id"] for r in knn_topk(big_vec, qv, 10, tie_col="id").collect()}
-        got = {r["id"] for r in hits}
-        rec = len(got & exact)
-        assert 500 in got, "self-match lost"
-        assert rec >= 5, f"recall@10 {rec}/10 below floor"
-        notes["pq_400k"] = (
-            f"seed ksub=256 codebooks, BLAS encode of {n_vec} vectors, ADC over "
-            f"8-byte codes (32x compression), recall@10 {rec}/10 at refine=8"
-        )
-        return rec
-
-    run("pq_400k", pq_search)
-    big_vec.unpersist()
-
-    # ---- 6M events: CMS build+probe with contract check --------------------
-    from mcpvectordb_spark.operators.sketches import cms_estimate, cms_sketch
-
-    ev = load_table(spark, SF, "events")
-    r60 = spark.range(60).select(F.col("id").alias("r"))
-    u = F.conv(F.substring(F.md5(F.concat_ws(":", "event_id", "r")), 1, 6), 16, 10).cast(
-        "double"
-    ) / F.lit(float(1 << 24))
-    big_ev = (
-        ev.crossJoin(F.broadcast(r60))
-        .select(F.floor(F.pow(u, 3) * 50_000).cast("long").alias("user_id"))
-        .repartition(64)
-        .cache()
-    )
-    n_ev = big_ev.count()
-    print(f"# r3 corpus: {n_ev} events", file=sys.stderr)
-
-    def cms():
-        DEPTH, WIDTH = 4, 4096
-        sk = cms_sketch(big_ev, "user_id", depth=DEPTH, width=WIDTH)
-        hot = big_ev.groupBy("user_id").count().orderBy(F.desc("count")).limit(50)
-        true = {str(r["user_id"]): r["count"] for r in hot.collect()}
-        items = spark.createDataFrame([(int(k),) for k in true], "user_id long")
-        est = {r["item"]: r["est"] for r in cms_estimate(sk, items, "user_id", DEPTH, WIDTH).collect()}
-        slack = math.ceil(math.e * n_ev / WIDTH)
-        bad_lo = [k for k in true if est[k] < true[k]]
-        bad_hi = [k for k in true if est[k] > true[k] + slack]
-        assert not bad_lo, f"CMS underestimated {bad_lo[:3]}"
-        assert not bad_hi, f"CMS above eps bound for {bad_hi[:3]}"
-        err = max(est[k] - true[k] for k in true)
-        notes["cms_6m"] = (
-            f"(4x4096) sketch over {n_ev} events; top-50 probes all within "
-            f"[true, true+{slack}] (max excess {err}) — shuffle bounded at "
-            f"depth*width rows/task"
-        )
-        return len(true)
-
-    run("cms_6m", cms)
-    big_ev.unpersist()
-
-    # ---- 200k docs: trigram LM + span removal ------------------------------
-    from mcpvectordb_spark.operators.dedup import remove_dup_spans
-    from mcpvectordb_spark.operators.ngram_lm import ngram_lm_score
-
-    docs = load_table(spark, SF, "documents")
-    r40 = spark.range(40).select(F.col("id").alias("r"))
-    synth = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(39)),
-            lambda i: F.substring(
-                F.md5(F.concat_ws(":", F.col("doc_id"), F.col("r"), i)), 1, 8
-            ),
-        ),
-        " ",
-    )
-    big_docs = (
-        docs.crossJoin(F.broadcast(r40))
-        .select(
-            (F.col("doc_id") * 100 + F.col("r")).alias("id"),
-            F.when(F.col("r") == 0, F.col("text"))
-            .when((F.col("r") == 1) & (F.col("doc_id") % 10 == 0), F.col("text"))
-            .otherwise(synth)
-            .alias("text"),
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_docs = big_docs.count()
-    print(f"# r3 corpus: {n_docs} docs", file=sys.stderr)
-
-    def lm():
-        out = ngram_lm_score(big_docs, "id", "text")
-        n = out.count()
-        assert n > n_docs * 0.99
-        notes["ngram_lm_200k"] = (
-            f"{n} docs scored; grams joined as 48-bit hashes against "
-            "count tables (strings never shuffle past the first agg)"
-        )
-        return n
-
-    run("ngram_lm_200k", lm)
-
-    def span_rm():
-        out = remove_dup_spans(big_docs, "id", "text", k=8)
-        removed = out.filter("n_removed > 0")
-        n_aff = removed.count()
-        # every (base, r=1 copy) pair of the %10 plants must be gutted;
-        # the synthetic uniques must be untouched
-        assert n_aff >= 2 * (docs.count() // 10) * 0.95, n_aff
-        tot = out.agg(F.sum("n_removed")).collect()[0][0]
-        notes["span_removal_200k"] = (
-            f"{n_aff} affected docs rewritten ({tot} tokens removed); "
-            f"{n_docs - n_aff} untouched docs never exploded"
-        )
-        return n_aff
-
-    run("span_removal_200k", span_rm)
-    big_docs.unpersist()
-
-    # ---- 200k fingerprints: Hamming-block join -----------------------------
-    from mcpvectordb_spark.operators.dedup import hamming_neardup_pairs
-
-    def hamm():
-        n = 200_000
-        rng = random.Random(5)
-        h = F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 15), 16, 10).cast("long")
-        baseh = spark.range(n).select("id", h.alias("h"))
-        # plant near copies of ids < 2000: flip <=4 bits
-        flips = spark.createDataFrame(
-            [(i, sum(1 << b for b in rng.sample(range(60), rng.randint(1, 4))))
-             for i in range(2000)],
-            "id long, mask long",
-        )
-        plants = baseh.join(flips, "id").select(
-            (F.col("id") + 1_000_000).alias("id"),
-            F.col("h").bitwiseXOR(F.col("mask")).alias("h"),
-        )
-        allh = baseh.unionByName(plants).repartition(64).cache()
-        allh.count()
-        pairs = hamming_neardup_pairs(allh, "id", "h", bits=64, max_dist=6)
-        planted_found = pairs.filter(
-            (F.col("id_b") - F.col("id_a")) == 1_000_000
-        ).count()
-        assert planted_found >= 2000, planted_found
-        total = pairs.count()
-        allh.unpersist()
-        notes["hamming_200k"] = (
-            f"{total} pairs from 202k 60-bit fingerprints; all 2000 planted "
-            f"near-copies found (pigeonhole completeness at scale)"
-        )
-        return total
-
-    run("hamming_200k", hamm)
-
-    # ---- 6M fact rows: bloom semi-join reduction ---------------------------
-    from mcpvectordb_spark.operators.bloomjoin import bloom_reduce, bloom_reduce_join
-
-    orders = load_table(spark, SF, "orders")
-    big_orders = (
-        orders.crossJoin(F.broadcast(r40))
-        .select(
-            (F.col("o_orderkey") * 100 + F.col("r")).alias("o_orderkey"),
-            "o_custkey",
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_ord = big_orders.count()
-    cust = load_table(spark, SF, "customer").filter(F.col("c_acctbal") < -600).select("c_custkey")
-
-    def bloom():
-        pruned = bloom_reduce(big_orders, "o_custkey", cust, "c_custkey")
-        n_kept = pruned.count()
-        got = bloom_reduce_join(big_orders, cust.withColumnRenamed("c_custkey", "ck"),
-                                "o_custkey", "ck").count()
-        want = big_orders.join(cust, big_orders.o_custkey == cust.c_custkey).count()
-        assert got == want, (got, want)
-        notes["bloom_join_6m"] = (
-            f"fact {n_ord} rows -> {n_kept} past the literal-bitset probe "
-            f"({100*n_kept/n_ord:.1f}%), exact join equality asserted"
-        )
-        return got
-
-    run("bloom_join_6m", bloom)
-    big_orders.unpersist()
-
-    print(json.dumps({
-        "mode": "r3", "vectors": n_vec, "events": n_ev, "docs": n_docs,
-        "fact_rows": n_ord,
-        "timings_sec": timings, "result_counts": counts, "notes": notes,
-    }))
-    spark.stop()
-
-
-def main_s3() -> None:
-    """Stress the session-3 operators at sf1-equivalent scale: TF-IDF
-    cosine sim-join + RM3 + Dirichlet QL + BPE encode over 200k docs,
-    association rules over a 6M-row basket fact, PageRank over a ~1M-edge
-    power-law graph.  In-script correctness assertions throughout."""
-    spark = get_spark("stress-s3")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    # ---- 200k docs (planted dup pair for every 10th base doc) --------------
-    docs = load_table(spark, SF, "documents")
-    r40 = spark.range(40).select(F.col("id").alias("r"))
-    synth = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(39)),
-            lambda i: F.substring(
-                F.md5(F.concat_ws(":", F.col("doc_id"), F.col("r"), i)), 1, 8
-            ),
-        ),
-        " ",
-    )
-    # planted dup pairs live on the SYNTHETIC (rare-token) replicas: for
-    # every 10th base doc, replica r=1 repeats r=2's hash-token text — the
-    # pair's terms have df=2, so it must survive any max_df cutoff, while
-    # the base docs' common words (df ~ n_base) are exactly what the
-    # cutoff exists to drop
-    synth_r2 = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(39)),
-            lambda i: F.substring(
-                F.md5(F.concat_ws(":", F.col("doc_id"), F.lit(2), i)), 1, 8
-            ),
-        ),
-        " ",
-    )
-    big_docs = (
-        docs.crossJoin(F.broadcast(r40))
-        .select(
-            (F.col("doc_id") * 100 + F.col("r")).alias("id"),
-            F.when(F.col("r") == 0, F.col("text"))
-            .when((F.col("r") == 1) & (F.col("doc_id") % 10 == 0), synth_r2)
-            .otherwise(synth)
-            .alias("text"),
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_docs = big_docs.count()
-    n_planted = docs.filter("doc_id % 10 = 0").count()
-    print(f"# s3 corpus: {n_docs} docs ({n_planted} planted dup pairs)", file=sys.stderr)
-
-    def simjoin():
-        from mcpvectordb_spark.operators.simjoin import tfidf_cosine_pairs
-
-        pairs = tfidf_cosine_pairs(big_docs, "id", "text", threshold=0.9, max_df=2000)
-        got = pairs.filter(
-            (F.col("id_b") - F.col("id_a") == 1) & (F.col("id_a") % 100 == 1)
-        ).count()
-        total = pairs.count()
-        assert got >= n_planted, f"planted dup pairs missed: {got}/{n_planted}"
-        notes["tfidf_simjoin_200k"] = (
-            f"{total} pairs >= 0.9 over {n_docs} docs; inverted-index fanout "
-            f"bounded by max_df=2000; all {n_planted} planted exact pairs found"
-        )
-        return total
-
-    run("tfidf_simjoin_200k", simjoin)
-
-    def retrieval():
-        from mcpvectordb_spark.operators.prf import rm3_topk
-        from mcpvectordb_spark.operators.qlm import qlm_topk
-
-        q = "spark window join batch"
-        a = qlm_topk(big_docs, q, 10, "id", "text").collect()
-        b = rm3_topk(big_docs, q, 10, "id", "text").collect()
-        assert len(a) == 10 and len(b) == 10
-        notes["retrieval_200k"] = (
-            "Dirichlet QL + two-pass RM3 over the 200k-doc posting list; "
-            "both return full top-10"
-        )
-        return len(a) + len(b)
-
-    run("retrieval_200k", retrieval)
-
-    def bpe():
-        from mcpvectordb_spark.operators.bpe import bpe_encode, train_bpe, word_histogram
-
-        merges = train_bpe(word_histogram(big_docs, "text"), 40)
-        enc = bpe_encode(big_docs, "text", merges)
-        n = enc.filter(F.size("bpe_tokens") > 0).count()
-        assert n == n_docs
-        notes["bpe_encode_200k"] = f"40 trained merges applied to {n} docs (map-only)"
-        return n
-
-    run("bpe_encode_200k", bpe)
-
-    # ---- DSIR importance resampling over the 200k corpus -------------------
-    def dsir():
-        from mcpvectordb_spark.operators.curation import dsir_select
-
-        # target = even-base real-text docs; raw = odd-base real-text docs
-        # (in-distribution) + ~195k hash-salad replicas (out-of-distribution).
-        # DSIR must overwhelmingly select the real-text raw docs.
-        corpus = big_docs.withColumn(
-            "t", (F.col("id") % 100 == 0) & (F.expr("id div 100") % 2 == 0)
-        )
-        sel = dsir_select(corpus, "id", "text", F.col("t"), k=1000)
-        rows = sel.collect()
-        assert len(rows) == 1000
-        real = sum(1 for r in rows if r["id"] % 100 == 0)
-        assert real >= 900, f"only {real}/1000 selected docs are in-distribution"
-        notes["dsir_200k"] = (
-            f"k=1000 Gumbel-top-k over {n_docs} docs; {real}/1000 selected are "
-            "real-text (in-distribution) vs ~2.5k real-text raw candidates "
-            "among ~197.5k raw docs — the log-ratio broadcast is 256 rows"
-        )
-        return real
-
-    run("dsir_200k", dsir)
-    big_docs.unpersist()
-
-    # ---- 6M basket rows: association rules ---------------------------------
-    li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
-    r10 = spark.range(10).select(F.col("id").alias("r"))
-    big_li = (
-        li.crossJoin(F.broadcast(r10))
-        .select(
-            (F.col("l_orderkey") * 16 + F.col("r")).alias("o"),
-            F.col("l_partkey").alias("p"),
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_li = big_li.count()
-    print(f"# s3 corpus: {n_li} basket rows", file=sys.stderr)
-
-    def rules():
-        from mcpvectordb_spark.operators.analytics import assoc_rules
-
-        out = assoc_rules(big_li, "o", "p", min_pair_count=3, top_n=50).collect()
-        assert len(out) == 50
-        assert all(0 < r["confidence"] <= 1.0 for r in out)
-        assert all(r["lift"] > 0 for r in out)
-        notes["assoc_rules_6m"] = (
-            f"top-50 rules from {n_li} basket rows; pair explode bounded by "
-            "items-per-basket^2, min_pair_count=3 prune"
-        )
-        return len(out)
-
-    run("assoc_rules_6m", rules)
-    big_li.unpersist()
-
-    # ---- ~1M-edge power-law graph: PageRank --------------------------------
-    def pr():
-        from mcpvectordb_spark.operators.graph import pagerank
-
-        e = spark.range(1_000_000)
-        h = lambda salt: F.conv(
-            F.substring(F.md5(F.concat_ws(":", "id", F.lit(salt))), 1, 6), 16, 10
-        ).cast("double") / F.lit(float(1 << 24))
-        edges = e.select(
-            F.floor(F.pow(h("s"), 2.0) * 100_000).cast("long").alias("src"),
-            F.floor(F.pow(h("d"), 2.0) * 100_000).cast("long").alias("dst"),
-        ).filter(F.col("src") != F.col("dst")).repartition(64).cache()
-        n_edges = edges.count()
-        ranks = pagerank(edges, iterations=10, damping=0.85)
-        agg = ranks.agg(
-            F.sum("rank").alias("mass"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        # symmetric-free graph HAS dangling mass loss; bound sanity only
-        assert 0.1 < agg["mass"] <= 1.000001, f"mass {agg['mass']}"
-        notes["pagerank_1m"] = (
-            f"{n_edges} power-law edges, {agg['n']} nodes, 10 iterations; "
-            f"total mass {agg['mass']:.4f} (teleport + non-dangling share)"
-        )
-        edges.unpersist()
-        return agg["n"]
-
-    run("pagerank_1m", pr)
-
-    print(json.dumps({
-        "mode": "s3",
-        "timings_sec": timings, "result_counts": counts, "notes": notes,
-    }))
-    spark.stop()
-
-
-
-
-def main_s4() -> None:
-    """Stress the session-4 operators at scale: the fused web-filtering
-    funnel + DSIR-adjacent text gates over 200k docs, URL normalization
-    over 1M rows, and the OCR/ASR byte kernels at corpus-batch size.
-    In-script correctness assertions throughout."""
-    spark = get_spark("stress-s4")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    docs = load_table(spark, SF, "documents")
-    r400 = spark.range(400).select(F.col("id").alias("r"))
-    big_docs = (
-        docs.crossJoin(F.broadcast(r400))
-        .select(
-            (F.col("doc_id") * 1000 + F.col("r")).alias("doc_id"),
-            F.col("source"),
-            F.col("text"),
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_docs = big_docs.count()
-    print(f"# s4 corpus: {n_docs} docs", file=sys.stderr)
-
-    def urls():
-        from mcpvectordb_spark.operators import weburl as wu
-
-        sid = F.col("doc_id").cast("string")
-        m = F.col("doc_id") % 4
-        url = (
-            F.when(m == 0, F.concat(F.lit("HTTPS://WWW."), F.col("source"), F.lit(".Example.CO.UK:443/a/"), sid, F.lit("?utm_source=f&b=2&a=1#x")))
-            .when(m == 1, F.concat(F.lit("http://sub."), F.col("source"), F.lit(".example.com:8080/p/"), sid, F.lit("?gclid=x&z=9")))
-            .when(m == 2, F.concat(F.lit("https://"), F.col("source"), F.lit(".example.org")))
-            .otherwise(F.concat(F.lit("http://"), F.col("source"), F.lit(".github.io:80/?ref=rss&q="), sid))
-        )
-        out = wu.url_features(big_docs.withColumn("url", url), "url")
-        agg = out.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("url_domain") == "example.co.uk", 1).otherwise(0)).alias("couk"),
-            F.sum("n_tracking_params").alias("stripped"),
-        ).collect()[0]
-        assert agg["n"] == n_docs
-        assert agg["couk"] == n_docs // 4 + (1 if n_docs % 4 else 0)
-        notes["url_features_200k"] = (
-            f"{agg['n']} URLs normalized, {agg['couk']} co.uk registered domains, "
-            f"{agg['stripped']} tracking params stripped — pure projection, zero shuffle"
-        )
-        return int(agg["n"])
-
-    run("url_features_200k", urls)
-
-    def funnel():
-        from mcpvectordb_spark.catalog import q_web_pipeline
-
-        # the catalog funnel reads sf0.1 directly; run it on the raw table
-        out = {r["stage"]: r["n_docs"] for r in q_web_pipeline(spark, SF).collect()}
-        assert out["all"] >= out["url_domain"] >= out["langid"] >= out["quality"] >= out["blocklist"]
-        notes["web_pipeline"] = f"funnel {out} — single scan, monotone non-increasing"
-        return int(out["all"])
-
-    run("web_pipeline_funnel", funnel)
-
-    def gates():
-        from mcpvectordb_spark.operators import textstats as ts
-
-        enc = ts.encoding_artifacts(big_docs, "doc_id", "text")
-        buckets = ts.logprob_buckets(big_docs.select(F.col("doc_id").alias("id"), "text"), "id", "text")
-        n_damaged = enc.filter("damaged").count()
-        dist = {r["bucket"]: r["n"] for r in buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()}
-        assert n_damaged == 0  # the synthetic corpus is clean
-        assert set(dist) == {"head", "middle", "tail"}
-        # replicas share text per base doc → terciles form ~equal thirds
-        assert max(dist.values()) / min(dist.values()) < 2.5
-        notes["text_gates_200k"] = f"0 damaged docs; ccnet buckets {dist}"
-        return int(sum(dist.values()))
-
-    run("text_gates_200k", gates)
-
-    def ocr_tp():
-        from pyspark.sql import types as T
-
-        heads = big_docs.limit(20_000).select("doc_id", "text").repartition(32)
-
-        schema = T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("ok", T.BooleanType()),
-        ])
-
-        def k(batches):
-            import pandas as pd
-
-            from mcpvectordb_spark.ocr import ocr_bitmap, render_text_bmp, renderable
-
-            for pdf in batches:
-                rows = []
-                for rec in pdf.to_dict(orient="records"):
-                    head = (rec["text"] or "")[:24]
-                    got = ocr_bitmap(render_text_bmp(head))
-                    lines = [l.rstrip() for l in renderable(head).split("\n")]
-                    while lines and not lines[-1]:
-                        lines.pop()
-                    rows.append((int(rec["doc_id"]), got == "\n".join(lines).rstrip()))
-                yield pd.DataFrame(rows, columns=["doc_id", "ok"])
-
-        out = heads.mapInPandas(k, schema=schema)
-        n_ok = out.filter("ok").count()
-        assert n_ok == 20_000, f"{n_ok}/20000 OCR round-trips"
-        notes["ocr_20k"] = f"{n_ok}/20000 render->OCR round-trips exact (Arrow kernel, 32-way)"
-        return n_ok
-
-    run("ocr_roundtrip_20k", ocr_tp)
-
-    def asr_tp():
-        from pyspark.sql import types as T
-
-        heads = big_docs.limit(5_000).select("doc_id", "text").repartition(32)
-        schema = T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("ok", T.BooleanType()),
-        ])
-
-        def k(batches):
-            import pandas as pd
-
-            from mcpvectordb_spark.asr import asr_tones, render_text_wav, renderable
-
-            for pdf in batches:
-                rows = []
-                for rec in pdf.to_dict(orient="records"):
-                    head = (rec["text"] or "")[:16]
-                    got = asr_tones(render_text_wav(head))
-                    rows.append((int(rec["doc_id"]), got == (renderable(head).rstrip() or None)))
-                yield pd.DataFrame(rows, columns=["doc_id", "ok"])
-
-        out = heads.mapInPandas(k, schema=schema)
-        n_ok = out.filter("ok").count()
-        assert n_ok == 5_000, f"{n_ok}/5000 ASR round-trips"
-        notes["asr_5k"] = f"{n_ok}/5000 encode->decode round-trips exact (Arrow kernel, 32-way)"
-        return n_ok
-
-    run("asr_roundtrip_5k", asr_tp)
-    big_docs.unpersist()
-
-    print(json.dumps({
-        "mode": "s4",
-        "timings_sec": timings, "result_counts": counts, "notes": notes,
-    }))
-    spark.stop()
-
-def main_r4() -> None:
-    """Stress the round-3 heavy query operators at sf1-equivalent scale
-    (r03 verdict item 6): weighted PageRank over 5M edges / 500k nodes,
-    trigram-LM scoring + RM3 feedback retrieval + TF-IDF cosine self-join
-    over a 200k-doc corpus with perturbed (non-identical) replicas, so the
-    join fanouts are exercised under realistic shared-vocabulary overlap
-    rather than degenerate exact duplicates."""
-    spark = get_spark("stress-r4")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    # ---- 200k-doc corpus: 5000 sf0.1 docs x 40 perturbed replicas ---------
-    docs = load_table(spark, SF, "documents")
-    r40 = spark.range(40).select(F.col("id").alias("r"))
-    big_docs = (
-        docs.crossJoin(F.broadcast(r40))
-        .select(
-            (F.col("doc_id") * 1000 + F.col("r")).alias("id"),
-            # min doc length is 44 chars, so a rotation offset <= 40 keeps
-            # every replica a real text (empty substrings would starve the
-            # >=3-token LM gate).  The grp<doc_id> token is shared by the 40
-            # replicas of one original doc (df=40): the synthetic vocabulary
-            # is small and every natural word lands in thousands of docs, so
-            # without it the simjoin's df<=max_df index would be empty.
-            F.concat(
-                F.substring("text", (F.col("r") % 40).cast("int") + 1, 1200),
-                F.lit(" grp"), F.col("doc_id").cast("string"),
-                F.lit(" uniq"), F.col("r").cast("string"),
-            ).alias("text"),
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_docs = big_docs.count()
-    print(f"# r4 corpus: {n_docs} docs", file=sys.stderr)
-
-    # ---- PageRank: 5M edges, 500k nodes, 10 weighted power iterations -----
-    def pr():
-        from mcpvectordb_spark.operators.graph import pagerank
-
-        n_nodes, n_edges = 500_000, 5_000_000
-        # dst = a*id + 1 mod n: gcd(a-1, n)=80 does not divide 1, so no id
-        # solves src==dst — zero self-loops, every node keeps all 20 edges
-        edges = spark.range(n_edges).select(
-            (F.col("id") % n_nodes).alias("src"),
-            ((F.col("id") * 2654435761 + 1) % n_nodes).alias("dst"),
-            (F.pmod(F.col("id"), 7) + 1).cast("double").alias("w"),
-        ).repartition(64)
-        ranks = pagerank(edges, iterations=10, weight_col="w")
-        agg = ranks.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("rank").alias("s"),
-            F.max("rank").alias("mx"), F.min("rank").alias("mn"),
-        ).collect()[0]
-        assert agg["n"] == n_nodes, f"{agg['n']} nodes ranked"
-        # probability-normalized ranks: total mass stays ~1 (dangling can leak)
-        assert 0.5 < agg["s"] <= 1.01, agg["s"]
-        assert agg["mx"] > agg["mn"] > 0.0
-        notes["pagerank_5m"] = (
-            f"{agg['n']} nodes over {n_edges} weighted edges, 10 iterations; "
-            f"rank mass {agg['s']:.6f}, plan depth O(1) via localCheckpoint"
-        )
-        return int(agg["n"])
-
-    run("pagerank_5m_edges", pr)
-
-    # ---- trigram LM over 200k docs ----------------------------------------
-    def lm():
-        from mcpvectordb_spark.operators.ngram_lm import ngram_lm_score
-
-        out = ngram_lm_score(big_docs, "id", "text")
-        agg = out.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("ppl") > 0, 1).otherwise(0)).alias("pos"),
-        ).collect()[0]
-        assert agg["n"] == agg["pos"], "non-positive perplexity"
-        assert agg["n"] >= 0.99 * n_docs, f"only {agg['n']} docs scored"
-        notes["ngram_lm_200k"] = (
-            f"{agg['n']} docs trigram-scored; grams shuffled as 48-bit longs, "
-            "5 hash equi-joins vs vocabulary-bounded count tables"
-        )
-        return int(agg["n"])
-
-    run("ngram_lm_200k", lm)
-
-    # ---- RM3 two-pass feedback retrieval over 200k docs -------------------
-    def rm3():
-        from mcpvectordb_spark.operators.prf import rm3_topk
-
-        out = rm3_topk(big_docs, "data system model result", 10, "id", "text").collect()
-        assert len(out) == 10
-        scores = [r["score"] for r in out]
-        assert scores == sorted(scores, reverse=True)
-        notes["rm3_200k"] = (
-            f"top-10 of {n_docs} docs via 2-pass BM25+RM3; feedback set and "
-            "expansion vocabulary broadcast, posting list localCheckpointed"
-        )
-        return len(out)
-
-    run("rm3_200k", rm3)
-
-    # ---- TF-IDF cosine self-join over 200k docs ---------------------------
-    def simjoin():
-        from mcpvectordb_spark.operators.bm25 import doc_terms
-        from mcpvectordb_spark.operators.simjoin import tfidf_cosine_pairs
-
-        max_df = 100
-        pairs = tfidf_cosine_pairs(big_docs, "id", "text", threshold=0.8, max_df=max_df)
-        n_pairs = pairs.count()
-        # fanout audit: candidate pairs are bounded by sum_t C(df_t, 2) over
-        # kept terms <= n_kept_terms * C(max_df, 2)
-        kept = (
-            doc_terms(big_docs, "id", "text")
-            .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-            .filter((F.col("df") >= 2) & (F.col("df") <= max_df))
-            .agg(F.count(F.lit(1)).alias("t"), F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("cand"))
-            .collect()[0]
-        )
-        bound = kept["t"] * max_df * (max_df - 1) / 2
-        assert kept["cand"] <= bound, (kept["cand"], bound)
-        assert n_pairs > 0, "no near-dup pairs found — corpus degenerate"
-        assert n_pairs <= kept["cand"]
-        notes["tfidf_simjoin_200k"] = (
-            f"{n_pairs} pairs >= 0.8 cosine from {int(kept['cand'])} candidate "
-            f"pairs ({kept['t']} kept terms, max_df={max_df}; hard bound {int(bound)})"
-        )
-        return int(n_pairs)
-
-    run("tfidf_simjoin_200k", simjoin)
-
-    big_docs.unpersist()
-    print(json.dumps({
-        "mode": "r4",
-        "timings_sec": timings, "result_counts": counts, "notes": notes,
-    }))
-    spark.stop()
-
-
-def main_r4b() -> None:
-    """Stress the round-4 stats/entity/attribution/DQ cohorts at
-    sf1-equivalent scale: 6M events for the window/agg operators, 600k
-    entities for the blocked fuzzy join.  In-script correctness
-    assertions throughout."""
-    spark = get_spark("stress-r4b")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    # ---- 6M events: replicate sf0.1 events 60x with shifted users/times ---
-    ev = load_table(spark, SF, "events")
-    r60 = spark.range(60).select(F.col("id").alias("r"))
-    big_ev = (
-        ev.crossJoin(F.broadcast(r60))
-        .select(
-            (F.col("event_id") * 100 + F.col("r")).alias("event_id"),
-            F.timestamp_seconds(
-                F.unix_timestamp("ts") + F.col("r") * 37
-            ).alias("ts"),
-            (F.col("user_id") + F.col("r") * 1_000_000).alias("user_id"),
-            "event_type",
-            "value",
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_ev = big_ev.count()
-    print(f"# r4b corpus: {n_ev} events", file=sys.stderr)
-
-    def attribution():
-        from mcpvectordb_spark.operators.analytics import last_touch_attribution
-
-        conv = last_touch_attribution(big_ev, "purchase")
-        agg = conv.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("v").alias("v"),
-            F.countDistinct("channel").alias("ch"),
-        ).collect()[0]
-        n_purch = big_ev.filter("event_type = 'purchase'").count()
-        assert agg["n"] == n_purch, (agg["n"], n_purch)  # every conversion attributed once
-        assert agg["ch"] >= 2
-        notes["attribution_6m"] = (
-            f"{agg['n']} conversions attributed over {n_ev} events, one user-keyed "
-            f"window, {agg['ch']} channels; value conserved by construction"
-        )
-        return int(agg["n"])
-
-    run("attribution_6m", attribution)
-
-    def ab():
-        from mcpvectordb_spark.operators.stats import ab_test_ztest
-
-        r = ab_test_ztest(big_ev, "purchase", min_conversions=3).first()
-        n_users = big_ev.select("user_id").distinct().count()
-        assert r["n_a"] + r["n_b"] == n_users
-        assert 0.0 < r["rate_a"] < 1.0 and 0.0 < r["rate_b"] < 1.0
-        notes["ab_test_6m"] = (
-            f"{n_users} users hash-split {r['n_a']}/{r['n_b']}, rates "
-            f"{r['rate_a']:.4f}/{r['rate_b']:.4f}, z={r['z']:.3f} — two keyed aggs"
-        )
-        return int(n_users)
-
-    run("ab_test_6m", ab)
-
-    def mad():
-        from mcpvectordb_spark.operators.stats import mad_outliers
-
-        # plant 50 extreme values
-        spiked = big_ev.withColumn(
-            "value",
-            F.when(F.col("event_id") % 120_000 == 7, F.col("value") + 1e6).otherwise(F.col("value")),
-        )
-        out = mad_outliers(spiked, "event_type", "value", threshold=3.5)
-        n_planted = spiked.filter("value > 5e5").count()
-        flagged = out.filter("value > 5e5").count()
-        assert flagged == n_planted, (flagged, n_planted)
-        total = out.count()
-        notes["mad_outliers_6m"] = (
-            f"{total} outliers flagged incl. all {n_planted} planted 1e6 spikes; "
-            "2 exact per-group percentiles + broadcast gates"
-        )
-        return int(total)
-
-    run("mad_outliers_6m", mad)
-
-    def dq():
-        from mcpvectordb_spark.operators.dataquality import dq_report
-
-        rep = dq_report(
-            big_ev,
-            completeness=["event_id", "user_id", "ts"],
-            unique=["event_id"],
-            ranges={"value": (0.0, 1e7)},
-            memberships={"event_type": ["click", "error", "purchase", "signup", "view"]},
-        ).collect()
-        assert all(r["ok"] for r in rep), [tuple(r) for r in rep if not r["ok"]]
-        notes["dq_audit_6m"] = (
-            f"{len(rep)} rules over {n_ev} rows in ONE fused aggregation, all green "
-            "(incl. exact event_id uniqueness)"
-        )
-        return len(rep)
-
-    run("dq_audit_6m", dq)
-
-    def seqmine():
-        q = (
-            big_ev.select("user_id", F.col("event_type").alias("t"),
-                          F.unix_timestamp("ts").alias("sec"), "event_id")
-        )
-        a = q.select("user_id", F.col("t").alias("ta"), F.col("sec").alias("sa"), F.col("event_id").alias("ea"))
-        b = q.select("user_id", F.col("t").alias("tb"), F.col("sec").alias("sb"), F.col("event_id").alias("eb"))
-        pairs = a.join(b, "user_id").filter(
-            (F.col("sb") > F.col("sa")) | ((F.col("sb") == F.col("sa")) & (F.col("eb") > F.col("ea")))
-        )
-        sup = pairs.groupBy("ta", "tb").agg(F.countDistinct("user_id").alias("s"))
-        n = sup.count()
-        assert n == 25, n  # 5x5 ordered type pairs all supported at this density
-        notes["seqmine_6m"] = (
-            f"25 ordered type-pairs mined from {n_ev} events; self-join fanout "
-            "bounded by per-user event count (~100), shuffles keyed by user"
-        )
-        return int(n)
-
-    run("seqmine_6m", seqmine)
-
-    # ---- 600k entities: blocked fuzzy matching --------------------------
-    def entity():
-        from mcpvectordb_spark.operators.entity import entity_match_blocked
-
-        cust = load_table(spark, SF, "customer").select("c_custkey", "c_nationkey")
-        r40 = spark.range(40).select(F.col("id").alias("r"))
-        big = cust.crossJoin(F.broadcast(r40)).select(
-            (F.col("c_custkey") * 100 + F.col("r")).alias("ck"), "c_nationkey"
-        )
-        h = F.md5(F.concat(F.lit("name:"), F.col("ck").cast("string")))
-        syl = F.concat_ws("", F.transform(
-            F.sequence(F.lit(0), F.lit(4)),
-            lambda j: F.concat(
-                F.substring(F.lit("bdklmnrs"), (F.conv(h.substr(j * 2 + 1, F.lit(1)), 16, 10).cast("int") % 8) + 1, 1),
-                F.substring(F.lit("aeio"), (F.conv(h.substr(j * 2 + 2, F.lit(1)), 16, 10).cast("int") % 4) + 1, 1),
-            ),
-        ))
-        base = big.select(F.col("ck").alias("id"), "c_nationkey", syl.alias("name"))
-        n_base = base.count()
-        planted = base.filter(F.col("id") % 100 == 0).select(
-            (F.col("id") + 100_000_000).alias("id"), "c_nationkey",
-            F.concat(F.substring("name", 1, 5), F.lit("x"), F.substring("name", 7, 10)).alias("name"),
-        )
-        n_planted = planted.count()
-        ents = base.unionByName(planted).repartition(64)
-        out = entity_match_blocked(ents, "id", "name", ["c_nationkey"], prefix_len=4, max_edit=1)
-        found_planted = out.filter(F.col("id_b") >= 100_000_000).count()
-        assert found_planted >= n_planted, (found_planted, n_planted)
-        total = out.count()
-        notes["entity_match_600k"] = (
-            f"{total} candidate matches over {n_base + n_planted} entities; all "
-            f"{n_planted} planted 1-edit dups found; blocking = (nation, 4-char "
-            "prefix), Levenshtein codegen inside blocks"
-        )
-        return int(total)
-
-    run("entity_match_600k", entity)
-
-    big_ev.unpersist()
-    print(json.dumps({
-        "mode": "r4b",
-        "timings_sec": timings, "result_counts": counts, "notes": notes,
-    }))
-    spark.stop()
-
-
-def main_r4c() -> None:
-    """Stress the round-4b/4c operator cohorts at sf1-equivalent scale:
-    AllPairs ssjoin + TextRank on a 200k-doc corpus, item-item CF on the
-    full 6M-row sf0.1 lineitem, LP/HITS/BFS on a 5M-edge graph, join-view
-    IVM on 1.5M orders.  In-script correctness assertions throughout."""
-    spark = get_spark("stress-r4c")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    # ---- 200k-doc corpus (the r4 construction: rotated replicas) ----------
-    docs = load_table(spark, SF, "documents")
-    r40 = spark.range(40).select(F.col("id").alias("r"))
-    big_docs = (
-        docs.crossJoin(F.broadcast(r40))
-        .select(
-            (F.col("doc_id") * 1000 + F.col("r")).alias("id"),
-            F.concat(
-                F.substring("text", (F.col("r") % 40).cast("int") + 1, 1200),
-                F.lit(" grp"), F.col("doc_id").cast("string"),
-                F.lit(" uniq"), F.col("r").cast("string"),
-            ).alias("text"),
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_docs = big_docs.count()
-    print(f"# r4c corpus: {n_docs} docs", file=sys.stderr)
-
-    def ssjoin():
-        from mcpvectordb_spark.operators.simjoin import jaccard_ssjoin
-
-        pairs = jaccard_ssjoin(big_docs, "id", "text", threshold=0.8).cache()
-        n = pairs.count()
-        # >= 0.8 shingle-Jaccard pairs are dominated by same-origin
-        # rotation replicas; the remainder are ORGANIC near-dups (the doc
-        # generator slides a window over a shared token stream, so
-        # distinct doc_ids genuinely overlap — verified by inspection)
-        cross = pairs.filter(
-            (F.col("id_a") / 1000).cast("long") != (F.col("id_b") / 1000).cast("long")
-        ).count()
-        bad = pairs.filter((F.col("jaccard") > 1.0) | (F.col("jaccard") < 0.8)).count()
-        assert n > 0 and bad == 0 and (n - cross) / n >= 0.9, (n, cross, bad)
-        pairs.unpersist()
-        notes["ssjoin_200k"] = (
-            f"{n} pairs ({n - cross} same-origin rotations, {cross} organic "
-            "stream-window near-dups); PPJoin positional filter keeps the "
-            "shared-vocabulary candidate mass verifiable"
-        )
-        return int(n)
-
-    run("ssjoin_200k", ssjoin)
-
-    def textrank():
-        from mcpvectordb_spark.operators.textrank import textrank_sentences
-
-        sent_docs = big_docs.select(
-            "id",
-            F.regexp_replace("text", r"((\S+\s+){6}\S+)\s+", "$1. ").alias("text"),
-        )
-        out = textrank_sentences(sent_docs, "id", "text", top_k=2, iters=5).cache()
-        n = out.count()
-        per_doc = out.groupBy("doc").agg(F.count(F.lit(1)).alias("k"))
-        over = per_doc.filter(F.col("k") > 2).count()
-        nonpos = out.filter(F.col("rank") <= 0).count()
-        assert n >= n_docs and over == 0 and nonpos == 0, (n, over, nonpos)
-        out.unpersist()
-        notes["textrank_200k"] = (
-            f"{n} summary sentences (top-2 per doc), one 5-iteration plan "
-            "for all 200k per-doc graphs, ranks all positive"
-        )
-        return int(n)
-
-    run("textrank_200k", textrank)
-
-    def itemcf():
-        from mcpvectordb_spark.operators.analytics import item_item_cosine
-
-        li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
-        pairs = item_item_cosine(li, "l_orderkey", "l_partkey", min_cooc=2).cache()
-        n = pairs.count()
-        bad = pairs.filter((F.col("cos") > 1.0000001) | (F.col("cos") <= 0)).count()
-        assert bad == 0, bad
-        pairs.unpersist()
-        notes["itemcf_6m"] = (
-            f"{n} co-occurrence pairs from 6M lineitem rows / 1.5M baskets; "
-            "basket² fanout bounded by max_basket=50, cosines all in (0,1]"
-        )
-        return int(n)
-
-    run("itemcf_6m", itemcf)
-
-    # ---- 5M-edge graph (the r4 generator: no self-loops) ------------------
-    n_nodes, n_edges = 500_000, 5_000_000
-    g = spark.range(n_edges).select(
-        (F.col("id") % n_nodes).alias("src"),
-        ((F.col("id") * 2654435761 + 1) % n_nodes).alias("dst"),
-    ).repartition(64).cache()
-    g.count()
-
-    def lp():
-        from mcpvectordb_spark.operators.graph import label_propagation
-
-        labels = label_propagation(g, rounds=4).cache()
-        n = labels.count()
-        n_comm = labels.select("lbl").distinct().count()
-        assert n == n_nodes, n
-        labels.unpersist()
-        notes["label_prop_5m"] = (
-            f"all {n} nodes labeled, {n_comm} communities after 4 "
-            "deterministic argmax rounds; one action, linear round chain"
-        )
-        return int(n_comm)
-
-    run("label_prop_5m", lp)
-
-    def hits():
-        from mcpvectordb_spark.operators.graph import hits_scores
-
-        auth = hits_scores(g, iters=4).cache()
-        n = auth.count()
-        s = auth.agg(F.sum("auth")).collect()[0][0]
-        assert abs(s - 1.0) < 1e-6, s
-        auth.unpersist()
-        notes["hits_5m"] = (
-            f"{n} authorities, L1 mass {s:.6f}; normalization stays inside "
-            "the agg stage (empty-frame window), no per-half-step jobs"
-        )
-        return int(n)
-
-    run("hits_5m", hits)
-
-    def bfs():
-        from mcpvectordb_spark.operators.graph import bfs_distances
-
-        seeds = spark.range(1000).select(F.col("id").alias("node"))
-        dist = bfs_distances(g, seeds, max_depth=3).cache()
-        n = dist.count()
-        by_d = {r["d"]: r["n"] for r in dist.groupBy("d").agg(
-            F.count(F.lit(1)).alias("n")).collect()}
-        assert by_d.get(0) == 1000 and n <= n_nodes, (by_d, n)
-        dist.unpersist()
-        notes["bfs_5m"] = (
-            f"levels {sorted(by_d.items())}; frontier expansion against one "
-            "pinned edge materialization"
-        )
-        return int(n)
-
-    run("bfs_5m", bfs)
-
-    big_docs.unpersist()
-    g.unpersist()
-
-    def ivm():
-        from mcpvectordb_spark.operators.ivm import incremental_join_delta
-
-        a = load_table(spark, SF, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice")
-        da = a.filter(F.col("o_orderkey") % 97 == 0)
-        ia = da.withColumn("o_totalprice", F.col("o_totalprice") * 1.1)
-        b = load_table(spark, SF, "customer").select("c_custkey", "c_mktsegment")
-        db = b.filter(F.col("c_custkey") % 89 == 0)
-        ib = db.withColumn("c_mktsegment", F.concat("c_mktsegment", F.lit("*")))
-        delta = incremental_join_delta(
-            a, ia, da, b, ib, db, "o_custkey", "c_custkey",
-            "o_orderkey", "c_custkey").cache()
-        ins = delta.filter("op = 'ins'").count()
-        dels = delta.filter("op = 'del'").count()
-        # applying the delta must reconcile the view cardinality exactly
-        v = a.join(b, F.col("o_custkey") == F.col("c_custkey")).count()
-        a2 = a.join(da.select("o_orderkey"), "o_orderkey", "left_anti").unionByName(ia)
-        b2 = b.join(db.select("c_custkey"), "c_custkey", "left_anti").unionByName(ib)
-        v2 = a2.join(b2, F.col("o_custkey") == F.col("c_custkey")).count()
-        assert v + ins - dels == v2, (v, ins, dels, v2)
-        delta.unpersist()
-        notes["ivm_1m5"] = (
-            f"|V|={v}, +{ins}/-{dels} reconciles to |V'|={v2}; refresh plan "
-            "is all broadcast delta joins, zero exchanges"
-        )
-        return int(ins + dels)
-
-    run("ivm_1m5", ivm)
-
-    print(json.dumps({
-        "mode": "r4c", "docs": n_docs, "edges": n_edges,
-        "timings_sec": timings, "result_counts": counts, "notes": notes,
-    }))
-    spark.stop()
-
-
-
-def main_r4d() -> None:
-    """Stress the round-4c/4d operators at sf1-equivalent scale:
-    Adamic-Adar link prediction on a 2M-edge/1M-node graph (wedge-fanout
-    bound asserted), Mann-Whitney U over 6M events / 90k users, KMV
-    sketch overlap of two ~90k-user sets vs exact truth, Holt fold over
-    60 per-type daily series.  In-script correctness assertions."""
-    spark = get_spark("stress-r4d")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    # ---- 2M-edge / 1M-node graph (und degree ~4: the sparse regime where
-    # ---- wedge fanout sum(deg^2) stays linear-ish) ------------------------
-    n_nodes, n_edges = 1_000_000, 2_000_000
-    g = spark.range(n_edges).select(
-        (F.col("id") % n_nodes).alias("src"),
-        ((F.col("id") * 2654435761 + 1) % n_nodes).alias("dst"),
-    ).filter(F.col("src") != F.col("dst")).repartition(64).cache()
-    g.count()
-
-    def linkpred():
-        from mcpvectordb_spark.operators.graph import adamic_adar_linkpred
-
-        und = (
-            g.select(F.col("src").alias("s"), F.col("dst").alias("t"))
-            .unionByName(g.select(F.col("dst").alias("s"), F.col("src").alias("t")))
-            .distinct()
-            .cache()
-        )
-        n_und = und.count()
-        sumsq = (
-            und.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-            .agg(F.sum(F.col("d") * F.col("d")).alias("q")).collect()[0]["q"]
-        )
-        cand = adamic_adar_linkpred(g, max_degree=16).cache()
-        n = cand.count()
-        # every candidate is genuinely non-adjacent (anti-join verified
-        # independently) and within the wedge-fanout bound
-        leaked = cand.join(
-            und.select(F.col("s").alias("a"), F.col("t").alias("b")), ["a", "b"]
-        ).count()
-        bad = cand.filter(
-            (F.col("adamic_adar") <= 0) | (F.col("common_neighbors") < 1)
-        ).count()
-        assert leaked == 0 and bad == 0 and 0 < n <= sumsq // 2, (n, leaked, bad, sumsq)
-        cand.unpersist(); und.unpersist()
-        notes["linkpred_2m"] = (
-            f"{n} candidate pairs from {n_und} undirected edges; wedge "
-            f"fanout bound sum(deg^2)/2 = {sumsq // 2} held; 0 existing-edge "
-            "leaks, degree table broadcast, hub cutoff at deg 16"
-        )
-        return int(n)
-
-    run("linkpred_2m", linkpred)
-
-    # ---- 6M events (the r4b replication) ----------------------------------
-    ev = load_table(spark, SF, "events")
-    r60 = spark.range(60).select(F.col("id").alias("r"))
-    big_ev = (
-        ev.crossJoin(F.broadcast(r60))
-        .select(
-            (F.col("event_id") * 100 + F.col("r")).alias("event_id"),
-            F.timestamp_seconds(
-                F.unix_timestamp("ts") + F.col("r") * 37
-            ).alias("ts"),
-            (F.col("user_id") + F.col("r") * 1_000_000).alias("user_id"),
-            "event_type",
-            "value",
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_ev = big_ev.count()
-    print(f"# r4d corpus: {n_ev} events", file=sys.stderr)
-
-    def mannwhitney():
-        from mcpvectordb_spark.operators.stats import ab_assign, mann_whitney_u
-
-        users = (
-            big_ev.filter(F.col("event_type") == "purchase")
-            .groupBy("user_id")
-            .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("metric"))
-        )
-        n_users = users.count()
-        samples = users.select(ab_assign(F.col("user_id")).alias("variant"), "metric")
-        r = mann_whitney_u(samples).collect()[0]
-        assert r["n_a"] + r["n_b"] == n_users, (r, n_users)
-        assert abs(r["n_a"] - r["n_b"]) < 0.02 * n_users  # hash split balance
-        assert 0.0 <= r["u_a"] <= r["n_a"] * r["n_b"]
-        notes["mannwhitney_6m"] = (
-            f"{n_users} users ranked ({r['n_a']}/{r['n_b']} split), U={r['u_a']:.1f}, "
-            f"z={r['z']:.3f}; ranks computed over the distinct-cents domain, "
-            "never a per-user global sort"
-        )
-        return int(n_users)
-
-    run("mannwhitney_6m", mannwhitney)
-
-    def kmv():
-        from mcpvectordb_spark.operators.sketches import kmv_set_stats, kmv_sketch
-
-        mid = big_ev.agg(
-            F.timestamp_seconds(
-                (F.unix_timestamp(F.min("ts")) + F.unix_timestamp(F.max("ts"))) / 2
-            ).alias("m")
-        ).collect()[0]["m"]
-        a_set = big_ev.filter(F.col("ts") < F.lit(mid))
-        b_set = big_ev.filter(F.col("ts") >= F.lit(mid))
-        key = F.concat(F.lit("u:"), F.col("user_id").cast("string"))
-        r = kmv_set_stats(
-            kmv_sketch(a_set, key, k=256), kmv_sketch(b_set, key, k=256), k=256
-        ).collect()[0]
-        ea = a_set.select("user_id").distinct().count()
-        eb = b_set.select("user_id").distinct().count()
-        ei = a_set.select("user_id").join(
-            b_set.select("user_id").distinct(), "user_id", "left_semi"
-        ).distinct().count()
-        assert abs(r["est_a"] - ea) / ea < 0.15, (r["est_a"], ea)
-        assert abs(r["est_b"] - eb) / eb < 0.15, (r["est_b"], eb)
-        assert abs(r["est_intersection"] - ei) / max(ei, 1) < 0.25, (
-            r["est_intersection"], ei,
-        )
-        notes["kmv_6m"] = (
-            f"half-month user sets |A|={ea} |B|={eb} |A∩B|={ei}; KMV-256 "
-            f"estimates {r['est_a']:.0f}/{r['est_b']:.0f}/"
-            f"{r['est_intersection']:.0f} — all within the 1/sqrt(k) error "
-            "regime; sketches built by TakeOrderedAndProject, never a full "
-            "shuffle"
-        )
-        return int(ei)
-
-    run("kmv_6m", kmv)
-
-    def holt():
-        from mcpvectordb_spark.operators.timeseries import holt_linear
-
-        daily = big_ev.groupBy(
-            F.col("event_type").alias("k"),
-            (F.col("user_id") / 1_000_000).cast("long").alias("rep"),
-            F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date")).alias("t"),
-        ).agg(F.count(F.lit(1)).cast("double").alias("x"))
-        series = daily.select(
-            F.concat("k", F.lit("#"), F.col("rep").cast("string")).alias("k"), "t", "x"
-        )
-        out = holt_linear(series, "k", "t", "x", 0.5, 0.25, horizon=7).cache()
-        n = out.count()
-        n_keys = out.select("k").distinct().count()
-        n_fut = out.filter("x IS NULL").count()
-        assert n_fut == 7 * n_keys, (n_fut, n_keys)
-        out.unpersist()
-        notes["holt_300"] = (
-            f"{n_keys} per-(type,replica) daily series folded in one plan "
-            f"({n} fitted+forecast rows); per-key state = |days| structs"
-        )
-        return int(n)
-
-    run("holt_300", holt)
-
-
-    def graph_metrics():
-        from mcpvectordb_spark.operators.graph import label_propagation, modularity
-
-        labels = label_propagation(g, rounds=4).cache()
-        labels.count()
-        r = modularity(g, labels).collect()[0]
-        # Q is bounded in [-1, 1]; the arithmetic graph has weak community
-        # structure, but every node must be labeled and scored
-        assert -1.0 <= r["modularity"] <= 1.0, r
-        assert 0 < r["n_communities"] <= n_nodes
-        labels.unpersist()
-        notes["modularity_2m"] = (
-            f"Q = {r['modularity']:.4f} over {r['n_communities']} LP-4 "
-            "communities on 2M edges; scoring = two keyed joins + one "
-            "|communities|-row agg, independent of graph size"
-        )
-        return int(r["n_communities"])
-
-    run("graph_metrics_2m", graph_metrics)
-
-    def psi():
-        edges_ref = big_ev.filter(F.col("event_id") % 2 == 0)
-        probe = big_ev.filter(F.col("event_id") % 2 == 1)
-        ed = edges_ref.groupBy(F.col("event_type").alias("et")).agg(
-            *[F.percentile("value", F.lit(i / 10.0)).alias(f"e{i}") for i in range(1, 10)]
-        )
-        b = probe.join(F.broadcast(ed), F.col("event_type") == F.col("et")).select(
-            "event_type",
-            sum((F.col("value") >= F.col(f"e{i}")).cast("int") for i in range(1, 10)).alias("bin"),
-        )
-        counts = b.groupBy("event_type", "bin").agg(F.count(F.lit(1)).alias("n"))
-        rows = counts.collect()
-        per_type = {}
-        for r in rows:
-            per_type.setdefault(r["event_type"], {})[r["bin"]] = r["n"]
-        import math
-        for et, bins in per_type.items():
-            tot = sum(bins.values())
-            psi_v = sum(
-                (bins.get(i, 0) / tot - 0.1) * math.log(max(bins.get(i, 0) / tot, 1e-6) / 0.1)
-                for i in range(10)
-            )
-            # same-distribution halves: PSI must be far below the 0.1
-            # "investigate" threshold
-            assert psi_v < 0.02, (et, psi_v)
-        notes["psi_6m"] = (
-            f"{len(per_type)} types scored over {sum(len(v) for v in per_type.values())} "
-            "decile cells from 3M probe rows; all PSI < 0.02 vs the "
-            "even-half reference (same distribution), edges broadcast"
-        )
-        return int(len(rows))
-
-    run("psi_6m", psi)
-
-    print(json.dumps({
-        "mode": "r4d", "events": n_ev, "edges": n_edges,
-        "timings_sec": timings, "result_counts": counts, "notes": notes,
-    }))
-    spark.stop()
-
-
-def main_r4e() -> None:
-    """Stress the round-3 heavy operators (round-3 verdict item 6) at
-    sf1-equivalent scale: weighted PageRank on a 5M-edge/500k-node graph,
-    trigram-LM perplexity + TF-IDF cosine self-join + RM3 expansion on a
-    200k-doc corpus.  In-script correctness assertions throughout; the
-    tfidf pair count is checked against BOTH an exact closed form and the
-    max_df**2 fanout bound."""
-    spark = get_spark("stress-r4e")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    # ---- 5M-edge / 500k-node weighted graph (every node has out-edges,
-    # ---- so PageRank mass is conserved exactly) ---------------------------
-    n_nodes, n_edges = 500_000, 5_000_000
-    g = spark.range(n_edges).select(
-        (F.col("id") % n_nodes).alias("src"),
-        ((F.col("id") * 2654435761 + 1) % n_nodes).alias("dst"),
-        (F.lit(1.0) + (F.col("id") % 3)).alias("w"),
-    ).filter(F.col("src") != F.col("dst")).repartition(64).cache()
-    n_g = g.count()
-
-    def pr():
-        from mcpvectordb_spark.operators.graph import pagerank
-
-        ranks = pagerank(g, iterations=10, weight_col="w").cache()
-        n = ranks.count()
-        agg = ranks.agg(
-            F.sum("rank").alias("mass"), F.min("rank").alias("mn")
-        ).collect()[0]
-        # no dangling nodes -> the rank vector stays a probability
-        # distribution through all 10 iterations
-        assert n == n_nodes, n
-        assert abs(agg["mass"] - 1.0) < 1e-6, agg["mass"]
-        assert agg["mn"] > 0, agg["mn"]
-        ranks.unpersist()
-        notes["pagerank_5m"] = (
-            f"{n} nodes ranked over {n_g} weighted edges, 10 iterations; "
-            f"rank mass {agg['mass']:.9f} (conserved), min rank > 0; one "
-            "join + one keyed agg per iteration, ranks localCheckpointed"
-        )
-        return int(n)
-
-    run("pagerank_5m", pr)
-
-    # ---- 200k-doc corpus: 40 exact replicas per origin + planted markers
-    # ---- ('grp<origin>' df=40 survives max_df; 'uniq<r>' df=5000 is cut),
-    # ---- giving the tfidf join an EXACT expected pair count -------------
-    docs = load_table(spark, SF, "documents")
-    n_origins = docs.count()
-    r40 = spark.range(40).select(F.col("id").alias("r"))
-    big_docs = (
-        docs.crossJoin(F.broadcast(r40))
-        .select(
-            (F.col("doc_id") * 1000 + F.col("r")).alias("id"),
-            F.concat(
-                F.col("text"),
-                F.lit(" grp"), F.col("doc_id").cast("string"),
-                F.lit(" uniq"), F.col("r").cast("string"),
-            ).alias("text"),
-        )
-        .repartition(64)
-        .cache()
-    )
-    n_docs = big_docs.count()
-    print(f"# r4e corpus: {n_docs} docs", file=sys.stderr)
-
-    def ngram():
-        from mcpvectordb_spark.operators.ngram_lm import ngram_lm_score
-
-        out = ngram_lm_score(big_docs, "id", "text").cache()
-        n = out.count()
-        bad = out.filter(
-            F.col("ppl").isNull() | F.isnan("ppl") | (F.col("ppl") <= 1.0)
-        ).count()
-        # replicas of one origin are byte-identical -> identical perplexity
-        per_origin = (
-            out.groupBy((F.col("id") / 1000).cast("long").alias("origin"))
-            .agg(F.countDistinct(F.round("ppl", 9)).alias("k"))
-            .filter(F.col("k") != 1)
-            .count()
-        )
-        assert n == n_docs and bad == 0 and per_origin == 0, (n, bad, per_origin)
-        out.unpersist()
-        notes["ngram_lm_200k"] = (
-            f"{n} docs scored, all ppl finite > 1; all {n_origins} origins "
-            "have replica-identical perplexity; grams shuffled as 48-bit "
-            "hashes through 5 hash equi-joins against bounded count tables"
-        )
-        return int(n)
-
-    run("ngram_lm_200k", ngram)
-
-    def tfidf():
-        from mcpvectordb_spark.operators.bm25 import doc_terms
-        from mcpvectordb_spark.operators.simjoin import tfidf_cosine_pairs
-
-        max_df = 100
-        # independent fanout bound from the data: sum over joinable terms
-        # (2 <= df <= max_df) of df^2 / 2
-        dfreq = (
-            doc_terms(big_docs, "id", "text")
-            .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        )
-        bound = (
-            dfreq.filter((F.col("df") >= 2) & (F.col("df") <= max_df))
-            .agg(F.sum(F.col("df") * F.col("df") / 2).alias("b")).collect()[0]["b"]
-        )
-        pairs = tfidf_cosine_pairs(big_docs, "id", "text", threshold=0.9, max_df=max_df).cache()
-        n = pairs.count()
-        cross = pairs.filter(
-            (F.col("id_a") / 1000).cast("long") != (F.col("id_b") / 1000).cast("long")
-        ).count()
-        bad = pairs.filter((F.col("cosine") < 0.9) | (F.col("cosine") > 1.0 + 1e-9)).count()
-        expected = n_origins * (40 * 39 // 2)
-        assert n == expected and cross == 0 and bad == 0, (n, expected, cross, bad)
-        assert n <= bound, (n, bound)
-        pairs.unpersist()
-        notes["tfidf_simjoin_200k"] = (
-            f"{n} pairs == exact closed form {n_origins}*C(40,2) (0 cross-"
-            f"origin; every common-vocab term is cut by max_df={max_df}) and "
-            f"within the fanout bound sum(df^2)/2 = {int(bound)}; inverted-"
-            "index candidates, df table broadcast, two shuffles"
-        )
-        return int(n)
-
-    run("tfidf_simjoin_200k", tfidf)
-
-    def rm3():
-        from mcpvectordb_spark.operators.bm25 import bm25_topk
-        from mcpvectordb_spark.operators.prf import rm3_topk
-
-        top_terms = [
-            r["t"]
-            for r in (
-                big_docs.select(F.explode(F.split(F.lower("text"), r"\s+")).alias("t"))
-                .filter(F.length("t") >= 4)
-                .groupBy("t").agg(F.count(F.lit(1)).alias("n"))
-                .orderBy(F.desc("n"), "t").limit(3).collect()
-            )
-        ]
-        query = " ".join(top_terms)
-        out = rm3_topk(big_docs, query, 10, "id", "text").cache()
-        rows = out.collect()
-        scores = [r["score"] for r in rows]
-        base = {r["doc"] for r in bm25_topk(big_docs, query, 10, "id", "text").collect()}
-        assert len(rows) == 10 and len({r["doc"] for r in rows}) == 10, rows
-        assert all(s > 0 for s in scores) and scores == sorted(scores, reverse=True)
-        out.unpersist()
-        notes["rm3_200k"] = (
-            f"query '{query}': 10 expanded-BM25 docs, scores positive "
-            f"descending, {len(base & {r['doc'] for r in rows})}/10 overlap "
-            "with plain BM25; 2 passes by construction, feedback set + "
-            "expansion vocab broadcast"
-        )
-        return int(len(rows))
-
-    run("rm3_200k", rm3)
-
-    print(json.dumps({
-        "mode": "r4e", "docs": n_docs, "edges": n_g,
-        "timings_sec": timings, "result_counts": counts, "notes": notes,
-    }))
-    spark.stop()
-
-
-
-
-def main_r4f() -> None:
-    """Stress this round's statistics/IR/calibration cohort at
-    sf1-equivalent scale: ACF on a 2M-cell dense hourly grid with a
-    planted 24h cycle, pairwise XCF with planted lead-lags, Bradley-
-    Terry on 5M games / 2,000 players with planted skills, isotonic
-    calibration on 5M scored rows, FD discovery on 6M rows with planted
-    dependencies, quantile normalization of two 3M-row affine-shifted
-    groups, and exact phrase search over a 200k-doc corpus with a
-    planted occurrence count.  In-script correctness assertions
-    throughout."""
-    spark = get_spark("stress-r4f")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    # ---- ACF: 200 keys x 10,000 hours, planted 24h cycle ------------------
-    n_keys, span = 200, 10_000
-    hourly = spark.range(n_keys * span).select(
-        (F.col("id") % n_keys).cast("string").alias("k"),
-        (F.col("id") / n_keys).cast("long").alias("t"),
-    ).select(
-        "k", "t",
-        (
-            F.lit(100)
-            + F.when((F.col("t") % 24) < 4, 80).otherwise(0)
-            + F.pmod(F.xxhash64("k", "t"), F.lit(21)) - 10
-        ).cast("long").alias("y"),
-    ).repartition(64).cache()
-    _ = hourly.count()
-
-    def acf_stress():
-        from mcpvectordb_spark.operators.timeseries import acf
-
-        out = acf(hourly, "k", "t", "y", max_lag=36).cache()
-        n = out.count()
-        assert n == n_keys * 36, n
-        # per key, the max-|r| lag among 2..36 must be the planted 24
-        best = (
-            out.filter(F.col("lag") >= 2)
-            .withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("k").orderBy(F.abs("r").desc())
-                ),
-            )
-            .filter(F.col("rk") == 1)
-        )
-        wrong = best.filter(F.col("lag") != 24).count()
-        assert wrong == 0, wrong
-        out.unpersist()
-        notes["acf_2m_grid"] = (
-            f"{n} (key, lag) rows off a {n_keys * span:,}-cell dense grid; "
-            "the planted 24h cycle is the argmax-|r| lag for all 200 keys; "
-            "lag join shuffled (key, t, y) longs only, 36x fan-out"
-        )
-        return n
-
-    run("acf_2m_grid", acf_stress)
-
-    # ---- XCF: 10 series x 20,000 hours, series i+1 lags series 0 by i ----
-    nx, xspan = 10, 20_000
-    base = spark.range(xspan).select(
-        F.col("id").alias("t"),
-        (F.pmod(F.xxhash64(F.col("id")), F.lit(200))).cast("long").alias("b"),
-    )
-    xs = base.select(
-        F.explode(F.sequence(F.lit(0), F.lit(nx - 1))).alias("i"), "t", "b"
-    ).select(
-        F.concat(F.lit("s"), F.col("i")).alias("k"),
-        (F.col("t") + F.col("i")).alias("t"),
-        (F.col("b") + F.pmod(F.xxhash64("i", "t"), F.lit(11))).cast("long").alias("y"),
-    ).repartition(64).cache()
-    _ = xs.count()
-
-    def xcf_stress():
-        from mcpvectordb_spark.operators.timeseries import xcf
-
-        out = xcf(xs, "k", "t", "y", max_lag=9).cache()
-        n = out.count()
-        assert n == nx * (nx - 1) * 10, n
-        # s0 leads s_i by exactly i hours: argmax_lag r(s0 -> s_i) == i
-        best = (
-            out.filter((F.col("key_x") == "s0") & (F.col("key_y") != "s0"))
-            .withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("key_y").orderBy(F.col("r").desc())
-                ),
-            )
-            .filter(F.col("rk") == 1)
-            .collect()
-        )
-        for row in best:
-            want = int(row["key_y"][1:])
-            if want <= 9:
-                assert row["lag"] == want, (row["key_y"], row["lag"])
-        out.unpersist()
-        notes["xcf_10x20k"] = (
-            f"{n} (pair, lag) correlations over a shared 20k-hour grid; "
-            "every planted shift i recovered as the argmax lag of "
-            "r(s0 -> s_i); pair join input bounded by K*span*(L+1)"
-        )
-        return n
-
-    run("xcf_10x20k", xcf_stress)
-
-    # ---- Bradley-Terry: 5M games, 2,000 players, planted skill ladder ----
-    n_players, n_games = 2_000, 5_000_000
-    g = spark.range(n_games).select(
-        F.pmod(F.xxhash64(F.col("id"), F.lit(1)), F.lit(n_players)).alias("a"),
-        F.pmod(F.xxhash64(F.col("id"), F.lit(2)), F.lit(n_players)).alias("b"),
-        F.pmod(F.xxhash64(F.col("id"), F.lit(3)), F.lit(1000)).alias("u"),
-    ).filter(F.col("a") != F.col("b")).select(
-        # P(a wins) = skill_a/(skill_a+skill_b) with skill = 1 + id/200
-        F.when(
-            F.col("u")
-            < (1000 * (1 + F.col("a") / 200))
-            / ((1 + F.col("a") / 200) + (1 + F.col("b") / 200)),
-            F.col("a"),
-        ).otherwise(F.col("b")).alias("winner"),
-        F.when(
-            F.col("u")
-            >= (1000 * (1 + F.col("a") / 200))
-            / ((1 + F.col("a") / 200) + (1 + F.col("b") / 200)),
-            F.col("a"),
-        ).otherwise(F.col("b")).alias("loser"),
-    ).repartition(64).cache()
-    n_g = g.count()
-
-    def bt_stress():
-        from mcpvectordb_spark.operators.stats import bradley_terry
-
-        out = bradley_terry(g, "winner", "loser", iterations=10,
-                            loop_partitions=8).cache()
-        n = out.count()
-        assert n == n_players, n
-        s = out.agg(F.sum("strength").alias("z")).collect()[0]["z"]
-        # strengths are rounded to 6dp -> sum drifts up to n*5e-7
-        assert abs(s - 1.0) < 1e-3, s
-        # planted ladder: decile-mean strengths must be strictly increasing
-        dec = (
-            out.select((F.col("entity") / 200).cast("int").alias("d"), "strength")
-            .groupBy("d").agg(F.avg("strength").alias("m"))
-            .orderBy("d").collect()
-        )
-        ms = [r["m"] for r in dec]
-        assert all(ms[i] < ms[i + 1] for i in range(len(ms) - 1)), ms
-        out.unpersist()
-        notes["bt_5m_games"] = (
-            f"{n_players} strengths from {n_g:,} games; strength sums to 1, "
-            "all 10 skill-decile means strictly ordered; pair table "
-            "<= 4M rows, 10 MM rounds of broadcast joins"
-        )
-        return n
-
-    run("bt_5m_games", bt_stress)
-
-    # ---- Isotonic calibration: 5M rows ------------------------------------
-    sc5 = spark.range(5_000_000).select(
-        (F.pmod(F.xxhash64("id"), F.lit(1_000_001)) / 1_000_000.0).alias("p"),
-    ).select(
-        "p",
-        (F.pmod(F.xxhash64((F.col("p") * 1e9).cast("long"), F.lit(7)), F.lit(1000))
-         < F.col("p") * F.col("p") * 1000).cast("long").alias("y"),
-    ).repartition(64).cache()
-    _ = sc5.count()
-
-    def iso_stress():
-        from mcpvectordb_spark.operators.modeleval import isotonic_calibration
-
-        out = isotonic_calibration(sc5, "y", "p", n_blocks=1000).cache()
-        rows = out.orderBy("block").collect()
-        iso = [r["iso_rate"] for r in rows]
-        assert iso == sorted(iso), "not monotone"
-        # PAVA preserves the weighted total: sum n*iso == sum n_pos
-        tot = out.agg(
-            F.sum(F.col("n") * F.col("iso_rate")).alias("a"),
-            F.sum("n_pos").alias("b"),
-        ).collect()[0]
-        assert abs(tot["a"] - tot["b"]) / tot["b"] < 1e-3, tot
-        # p^2 label curve -> fit must be genuinely increasing overall
-        assert iso[-1] - iso[0] > 0.8, (iso[0], iso[-1])
-        out.unpersist()
-        notes["isotonic_5m"] = (
-            f"{len(rows)} calibration blocks from 5,000,000 scored rows; fit "
-            f"monotone, weighted mass preserved (PAVA invariant), range "
-            f"{iso[0]:.3f}->{iso[-1]:.3f} on the planted p^2 curve; pair table "
-            "bounded at blocks^2/2 regardless of corpus size"
-        )
-        return len(rows)
-
-    run("isotonic_5m", iso_stress)
-
-    # ---- FD discovery: 6M rows, planted dependencies ----------------------
-    fd6 = spark.range(6_000_000).select(
-        F.col("id").alias("rid"),
-        F.pmod(F.xxhash64("id"), F.lit(50_000)).alias("code"),
-    ).select(
-        "rid", "code",
-        (F.col("code") % 100).alias("bucket"),       # code -> bucket holds
-        F.pmod(F.xxhash64("rid", F.lit(9)), F.lit(7)).alias("noise"),
-    ).repartition(64).cache()
-    _ = fd6.count()
-
-    def fd_stress():
-        from mcpvectordb_spark.operators.dataquality import fd_discovery
-
-        out = {
-            (r["lhs"], r["rhs"]): r
-            for r in fd_discovery(fd6, {
-                "rid": F.col("rid"),
-                "code": F.col("code"),
-                "bucket": F.col("bucket"),
-                "noise": F.col("noise"),
-            }).collect()
-        }
-        assert out[("rid", "code")]["holds"]          # unique key
-        assert out[("code", "bucket")]["holds"]       # planted derivation
-        assert not out[("bucket", "code")]["holds"]   # 500 codes per bucket
-        assert not out[("noise", "bucket")]["holds"]
-        assert out[("bucket", "code")]["extra_rhs_values"] == 50_000 - 100
-        notes["fd_6m"] = (
-            "12 ordered column pairs profiled over 6,000,000 rows; planted "
-            "code->bucket dependency detected, reverse direction counted "
-            "exactly (49,900 extra RHS values); fan-out is schema-sized"
-        )
-        return len(out)
-
-    run("fd_6m", fd_stress)
-
-    # ---- Quantile normalization: two 3M-row affine-shifted groups ---------
-    qn = spark.range(6_000_000).select(
-        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("k"),
-        F.pmod(F.xxhash64("id"), F.lit(2_000)).alias("v0"),
-    ).select(
-        "k",
-        F.when(F.col("k") == "a", F.col("v0")).otherwise(
-            F.col("v0") * 3 + 500
-        ).alias("v"),
-    ).repartition(64).cache()
-    _ = qn.count()
-
-    def qnorm_stress():
-        from mcpvectordb_spark.operators.stats import quantile_normalize
-
-        out = quantile_normalize(qn, "k", "v").cache()
-        n = out.count()
-        # after normalization the two groups' weighted distributions must
-        # coincide: KS distance of the normalized CDFs < 1% (per-block
-        # counts carry hash noise, so compare distributions, not cells)
-        per = out.groupBy("norm").pivot("k", ["a", "b"]).sum("n").fillna(0)
-        tots = per.agg(F.sum("a").alias("ta"), F.sum("b").alias("tb"))
-        wcum = Window.orderBy("norm").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        ks = (
-            per.withColumn("ca", F.sum("a").over(wcum))
-            .withColumn("cb", F.sum("b").over(wcum))
-            .crossJoin(F.broadcast(tots))
-            .agg(
-                F.max(
-                    F.abs(F.col("ca") / F.col("ta") - F.col("cb") / F.col("tb"))
-                ).alias("ks")
-            )
-            .collect()[0]["ks"]
-        )
-        assert ks < 0.01, ks
-        # and the map preserves within-group rank order
-        mono_bad = (
-            out.withColumn(
-                "prev",
-                F.lag("norm").over(Window.partitionBy("k").orderBy("v")),
-            )
-            .filter(F.col("prev") > F.col("norm"))
-            .count()
-        )
-        assert mono_bad == 0, mono_bad
-        out.unpersist()
-        notes["qnorm_6m"] = (
-            f"{n} map rows from 6,000,000 values in two affine-shifted "
-            f"groups; normalized-CDF KS distance {ks:.4f} (< 1%), map "
-            "monotone within each group; windows ran over ~2,000 value "
-            "blocks"
-        )
-        return n
-
-    run("qnorm_6m", qnorm_stress)
-
-    # ---- Phrase search: 200k docs, planted occurrences --------------------
-    docs = spark.range(200_000).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit("alpha beta gamma delta epsilon zeta eta theta iota kappa "),
-            F.when(F.col("id") % 40 == 0, F.lit("magic needle phrase "))
-            .otherwise(F.lit("plain filler tokens ")),
-            F.lit("lambda mu nu xi omicron pi rho sigma tau upsilon"),
-        ).alias("text"),
-    ).repartition(64).cache()
-    _ = docs.count()
-
-    def phrase_stress():
-        from mcpvectordb_spark.operators.phrase import phrase_search
-
-        out = phrase_search(docs, "doc_id", "text", "magic needle phrase")
-        n = out.count()
-        assert n == 200_000 // 40, n
-        pos_ok = out.filter(F.col("first_pos") != 11).count()
-        assert pos_ok == 0, pos_ok
-        notes["phrase_200k"] = (
-            f"{n} matching docs out of 200,000 (exactly the planted 1-in-40), "
-            "every anchor at the planted position 11; postings are map-only, "
-            "the shuffle carried only the 3 phrase terms' postings"
-        )
-        return n
-
-    run("phrase_200k", phrase_stress)
-
-    print(json.dumps({
-        "mode": "r4f",
-        "timings_s": timings,
-        "counts": counts,
-        "notes": notes,
-    }))
-    spark.stop()
-
-
-
-
-def main_r4g() -> None:
-    """Stress the retrieval-eval / forecasting / sketch cohort at
-    sf1-equivalent scale: embedding isotropy on 500k x 64 vectors with a
-    planted anisotropic direction, clarity + RBO on a 200k-doc corpus
-    with a planted topical cluster, DDSketch quantiles on 6M lognormal
-    values vs exact order statistics, SPRT on a 6M-row Bernoulli stream
-    with a planted elevated segment, and Holt-Winters + MASE on 300
-    planted weekly-seasonal series.  In-script assertions throughout."""
-    spark = get_spark("stress-r4g")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    # ---- isotropy: 500k x 64 with one dominant direction -------------------
-    def iso_stress():
-        dim = 64
-        emb = spark.range(500_000).select(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(dim)),
-                lambda j: (
-                    (F.pmod(F.xxhash64(F.col("id"), j), F.lit(2001)) - 1000)
-                    / 1000.0
-                    # dominant shared direction on dim 1: 10x variance
-                    + F.when(j == 1, ((F.pmod(F.xxhash64(F.col("id")), F.lit(2001)) - 1000) / 100.0)).otherwise(F.lit(0.0))
-                ),
-            ).alias("v")
-        ).repartition(64).localCheckpoint()
-        n = emb.count()
-        sums = emb.select(F.posexplode("v").alias("j0", "xj"), "v").groupBy(
-            F.col("j0").alias("j")
-        ).agg(
-            F.sum("xj").alias("sx"),
-            *[F.sum(F.col("xj") * F.element_at("v", k + 1)).alias(f"m{k}") for k in range(dim)],
-        )
-        mu = sums.select("j", (F.col("sx") / n).alias("mu"))
-        cells = sums.select(
-            "j",
-            F.posexplode(F.array(*[F.col(f"m{k}") for k in range(dim)])).alias("k", "m"),
-        ).select("j", "k", (F.col("m") / n).alias("m"))
-        cov = (
-            cells.join(mu.select("j", F.col("mu").alias("mj")), "j")
-            .join(mu.select(F.col("j").alias("k"), F.col("mu").alias("mk")), "k")
-            .select("j", "k", (F.col("m") - F.col("mj") * F.col("mk")).alias("c"))
-        )
-        r = cov.agg(
-            F.sum(F.when(F.col("j") == F.col("k"), F.col("c"))).alias("tr"),
-            F.sum(F.col("c") * F.col("c")).alias("f2"),
-        ).collect()[0]
-        pr = r["tr"] * r["tr"] / r["f2"]
-        # closed form for the planted spectrum: dim 1 carries uniform
-        # [-10,10] + [-1,1] variance (100+1)/3, the other 63 carry 1/3,
-        # so PR = (101/3 + 63/3)^2 / ((101/3)^2 + 63*(1/3)^2) = 2.64
-        lam1, lam = 101.0 / 3.0, 1.0 / 3.0
-        expect = (lam1 + 63 * lam) ** 2 / (lam1 ** 2 + 63 * lam ** 2)
-        assert abs(pr - expect) / expect < 0.05, (pr, expect)
-        notes["isotropy_500k"] = (
-            f"PR {pr:.2f} over 500,000 x 64 vectors == the planted "
-            f"spectrum's closed form {expect:.2f} within 5% (one dominant "
-            "direction among 63 isotropic); one n*dim-row pass with 64 sum "
-            "expressions, never n^2 or eigen"
-        )
-        return n
-
-    run("isotropy_500k", iso_stress)
-
-    # ---- clarity + RBO on 200k docs with a topical cluster ------------------
-    common = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    topical = "plasma tokamak divertor stellarator blanket tritium"
-
-    docs200 = spark.range(200_000).select(
-        F.col("id").alias("doc_id"),
-        F.when(
-            F.col("id") % 100 == 0,
-            F.concat(F.lit(topical + " "), F.lit(common)),
-        ).otherwise(F.lit(common + " lambda mu nu xi omicron")).alias("text"),
-    ).repartition(64).localCheckpoint()
-    _ = docs200.count()
-
-    def clarity_stress():
-        from mcpvectordb_spark.operators.prf import clarity_score
-
-        hi = clarity_score(docs200, "tokamak divertor", "doc_id", "text").collect()[0]
-        lo = clarity_score(docs200, "alpha beta", "doc_id", "text").collect()[0]
-        assert hi["clarity_bits"] > lo["clarity_bits"] + 1.0, (hi, lo)
-        assert lo["clarity_bits"] >= 0
-        notes["clarity_200k"] = (
-            f"topical query clarity {hi['clarity_bits']:.2f} bits vs vague "
-            f"{lo['clarity_bits']:.2f} over 200k docs; feedback set broadcast, "
-            "collection model one agg of the posting list"
-        )
-        return 2
-
-    run("clarity_200k", clarity_stress)
-
-    def rbo_stress():
-        from mcpvectordb_spark.operators.bm25 import bm25_topk
-        from mcpvectordb_spark.operators.modeleval import rbo
-        from mcpvectordb_spark.operators.qlm import qlm_topk
-
-        wa = Window.orderBy(F.desc("score"), F.asc("doc"))
-        ra = bm25_topk(docs200, "tokamak divertor blanket", 10, "doc_id", "text").select(
-            "doc", F.row_number().over(wa).alias("rank")
-        )
-        rb = qlm_topk(docs200, "tokamak divertor blanket", 10, "doc_id", "text").select(
-            "doc", F.row_number().over(wa).alias("rank")
-        )
-        r = rbo(ra, rb, k=10, p=0.9).collect()[0]
-        # both scorers must retrieve from the SAME planted topical cluster
-        assert r["overlap_at_k"] >= 8, r
-        assert r["rbo"] > 0.5, r
-        notes["rbo_200k"] = (
-            f"RBO@10 {r['rbo']:.3f}, overlap {r['overlap_at_k']}/10 between "
-            "BM25 and QLM over 200k docs — both rankers agree on the planted "
-            "cluster; metric cost is two broadcast 10-row lists"
-        )
-        return r["overlap_at_k"]
-
-    run("rbo_200k", rbo_stress)
-
-    # ---- DDSketch on 6M lognormal values ------------------------------------
-    def dd_stress():
-        from mcpvectordb_spark.operators.sketches import dd_quantile, dd_sketch
-
-        vals = spark.range(6_000_000).select(
-            F.lit("a").alias("k"),
-            F.exp(
-                (F.pmod(F.xxhash64("id"), F.lit(100_001)) / 100_000.0 - 0.5) * 4.0
-                + 3.0
-            ).alias("v"),
-        ).repartition(64).localCheckpoint()
-        n = vals.count()
-        sk = dd_sketch(vals, "k", "v", gamma=1.02)
-        nb = sk.count()
-        est = {r["q"]: r["est"] for r in dd_quantile(sk, [0.5, 0.9, 0.99], 1.02).collect()}
-        # exact order statistics via value blocks
-        wv = Window.partitionBy("k").orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-        blocks = vals.groupBy("k", "v").agg(F.count(F.lit(1)).alias("c"))
-        cum = blocks.select("k", "v", F.sum("c").over(wv).alias("cum"))
-        tol = (1.02 - 1) / (1.02 + 1)
-        for q in (0.5, 0.9, 0.99):
-            r = -(-int(q * 10_000) * n // 10_000)
-            exact = cum.filter(F.col("cum") >= r).agg(F.min("v")).collect()[0][0]
-            rel = abs(est[q] - exact) / exact
-            assert rel <= tol + 1e-9, (q, rel)
-        notes["ddsketch_6m"] = (
-            f"{nb} buckets summarize 6,000,000 lognormal values; p50/p90/p99 "
-            f"all within the {tol:.4f} theoretical bound of exact order "
-            "statistics (verified against value-block ranks)"
-        )
-        return nb
-
-    run("ddsketch_6m", dd_stress)
-
-    # ---- SPRT on 6M rows with an elevated segment ---------------------------
-    def sprt_stress():
-        # first 5.9M rows at p ~ 0.2, then the stream turns elevated (0.35):
-        # an SPRT restarted at the changepoint must cross the UPPER bound
-        rows = spark.range(6_000_000).select(
-            F.col("id").alias("t"),
-            (
-                F.pmod(F.xxhash64("id"), F.lit(1000))
-                < F.when(F.col("id") < 5_900_000, 200).otherwise(350)
-            ).cast("int").alias("x"),
-        )
-        seg = rows.filter(F.col("t") >= 5_900_000)
-        w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-        c1 = F.log(F.lit(0.3) / F.lit(0.2))
-        c0 = F.log(F.lit(0.7) / F.lit(0.8))
-        walk = seg.select(
-            F.count(F.lit(1)).over(w).alias("n"), F.sum("x").over(w).alias("k")
-        ).select("n", "k", (F.col("k") * c1 + (F.col("n") - F.col("k")) * c0).alias("s"))
-        dec = walk.filter(F.abs("s") >= F.log(F.lit(19.0))).agg(
-            F.min("n").alias("n_dec")
-        ).collect()[0]["n_dec"]
-        sval = walk.filter(F.col("n") == dec).collect()[0]["s"]
-        assert sval > 0, sval          # elevated -> upper bound
-        assert dec < 2_000, dec        # decides fast at p=0.35 vs H1=0.3
-        notes["sprt_6m"] = (
-            f"restarted at the planted changepoint, the SPRT crossed the "
-            f"UPPER bound after {dec} observations (of 100,000 available) — "
-            "the early-stopping value proposition at stream scale"
-        )
-        return int(dec)
-
-    run("sprt_6m", sprt_stress)
-
-    # ---- Holt-Winters + MASE on 300 planted weekly series -------------------
-    def hw_stress():
-        from mcpvectordb_spark.operators.timeseries import holt_winters_additive
-
-        series = spark.range(300 * 364).select(
-            (F.col("id") % 300).cast("string").alias("k"),
-            (F.col("id") / 300).cast("long").alias("t"),
-        ).select(
-            "k", "t",
-            (
-                F.lit(200)
-                + (F.col("t") / 10).cast("long")                       # trend
-                + F.when(F.pmod(F.col("t"), F.lit(7)) < 2, 120).otherwise(0)  # weekly
-                + F.pmod(F.xxhash64("k", "t"), F.lit(11)) - 5          # noise
-            ).cast("long").alias("x"),
-        ).repartition(64).localCheckpoint()
-        _ = series.count()
-        hw = holt_winters_additive(series, "k", "t", "x", period=7).localCheckpoint()
-        n_fit = hw.count()
-        assert n_fit == 300 * (364 - 7), n_fit
-        # MASE vs seasonal naive must beat 1 for every series
-        wlag = Window.partitionBy("k").orderBy("t")
-        naive = series.select("k", "t", F.lag("x", 7).over(wlag).alias("xn")).filter(
-            F.col("xn").isNotNull()
-        )
-        j = hw.join(naive, ["k", "t"]).select(
-            "k",
-            F.abs(F.col("x") - F.col("fitted")).alias("em"),
-            F.abs(F.col("x") - F.col("xn").cast("double")).alias("en"),
-        )
-        mases = j.groupBy("k").agg((F.sum("em") / F.sum("en")).alias("mase"))
-        bad = mases.filter(F.col("mase") >= 1.0).count()
-        med = mases.agg(F.median("mase")).collect()[0][0]
-        # alpha=0.5 chases the +/-5 noise, so a noise-dominated minority of
-        # series can sit just above 1; require 90% wins and a sub-1 median
-        assert bad <= 30, bad
-        assert med < 0.95, med
-        notes["hw_mase_300"] = (
-            f"{n_fit} fitted rows across 300 year-long weekly+trend series in "
-            f"ONE folded plan; median MASE {med:.3f}, {300 - bad}/300 series "
-            "beat seasonal-naive (the trend is what the naive repeat misses)"
-        )
-        return n_fit
-
-    run("hw_mase_300", hw_stress)
-
-    print(json.dumps({
-        "mode": "r4g",
-        "timings_s": timings,
-        "counts": counts,
-        "notes": notes,
-    }))
-    spark.stop()
-
-
-
-
-def main_r4h() -> None:
-    """Stress the causal/attribution/spectral tail of round 4 at
-    sf1-equivalent scale: U-shaped attribution over 6M events / 90k
-    users (journey join fan-out + credit conservation), the targeted
-    periodogram over a 2M-cell grid with a planted 24h cycle, and the
-    A/A DiD harness over 6M events (placebo must hold at scale)."""
-    spark = get_spark("stress-r4h")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    # 6M events / 90k users over 30 days, ~1/5 purchases
-    n_ev, n_users = 6_000_000, 90_000
-    ev = spark.range(n_ev).select(
-        F.col("id").alias("event_id"),
-        F.pmod(F.xxhash64("id", F.lit(1)), F.lit(n_users)).alias("user_id"),
-        F.timestamp_seconds(
-            F.lit(1_700_000_000)
-            + F.pmod(F.xxhash64("id", F.lit(2)), F.lit(30 * 86400))
-        ).alias("ts"),
-        F.element_at(
-            F.array(F.lit("view"), F.lit("click"), F.lit("signup"),
-                    F.lit("error"), F.lit("purchase")),
-            (F.pmod(F.xxhash64("id", F.lit(3)), F.lit(5)) + 1).cast("int"),
-        ).alias("event_type"),
-        (F.pmod(F.xxhash64("id", F.lit(4)), F.lit(10000)) / 100.0).alias("value"),
-    ).repartition(64).localCheckpoint()
-    _ = ev.count()
-
-    def ushaped_stress():
-        from mcpvectordb_spark.operators.analytics import ushaped_attribution
-
-        out = ushaped_attribution(ev, "purchase", window_days=7).localCheckpoint()
-        n = out.count()
-        # credit conservation per conversion, across the WHOLE corpus
-        bad = (
-            out.groupBy("u", "ceid")
-            .agg(F.sum("credit").alias("s"))
-            .filter(F.abs(F.col("s") - 1.0) > 1e-9)
-            .count()
-        )
-        assert bad == 0, bad
-        convs = out.select("ceid").distinct().count()
-        notes["ushaped_6m"] = (
-            f"{n:,} credit rows across {convs:,} conversions from 6,000,000 "
-            "events; per-conversion credits sum to exactly 1 for EVERY "
-            "conversion; journey join fan-out bounded by touches/user-week"
-        )
-        return n
-
-    run("ushaped_6m", ushaped_stress)
-
-    def did_stress():
-        from mcpvectordb_spark.catalog import QUERIES  # noqa: F401
-        # replicate the catalog DiD on the synthetic frame via its algebra:
-        # hash-split arms, epoch-midpoint split, purchase cents
-        from mcpvectordb_spark.operators.dedup import hexint48
-
-        span = ev.agg(
-            F.min(F.unix_timestamp("ts")).alias("t0"),
-            F.max(F.unix_timestamp("ts")).alias("t1"),
-        )
-        base = ev.crossJoin(F.broadcast(span)).select(
-            F.pmod(hexint48(F.col("user_id").cast("string")), F.lit(2)).alias("arm"),
-            (F.unix_timestamp("ts") >= ((F.col("t0") + F.col("t1")) / 2).cast("long"))
-            .cast("int").alias("post"),
-            "user_id",
-            F.when(F.col("event_type") == "purchase",
-                   F.round(F.col("value") * 100, 0).cast("long"))
-            .otherwise(F.lit(0)).alias("cents"),
-        )
-        pu = base.groupBy("arm", "post", "user_id").agg(F.sum("cents").alias("y"))
-        cells = pu.groupBy("arm", "post").agg(
-            F.count(F.lit(1)).alias("n"), F.avg("y").alias("m"),
-            F.var_samp("y").alias("v"),
-        ).collect()
-        m = {(r["arm"], r["post"]): r for r in cells}
-        did = (m[(1, 1)]["m"] - m[(1, 0)]["m"]) - (m[(0, 1)]["m"] - m[(0, 0)]["m"])
-        se = sum(m[k]["v"] / m[k]["n"] for k in m) ** 0.5
-        t = did / se
-        assert abs(t) < 3.5, t  # A/A placebo holds at 6M scale
-        notes["did_6m"] = (
-            f"A/A DiD over 6,000,000 events / 4 cells of ~45k users: "
-            f"t = {t:.2f} (placebo holds); two shuffles total"
-        )
-        return int(sum(r["n"] for r in cells))
-
-    run("did_6m", did_stress)
-
-    def periodogram_stress():
-        hourly = spark.range(200 * 10_000).select(
-            (F.col("id") % 200).cast("string").alias("k"),
-            (F.col("id") / 200).cast("long").alias("t"),
-        ).select(
-            "k", "t",
-            (
-                F.lit(100)
-                + F.when((F.col("t") % 24) < 6, 60).otherwise(0)
-                + F.pmod(F.xxhash64("k", "t"), F.lit(15)) - 7
-            ).cast("long").alias("y"),
-        )
-        per = hourly.select(
-            "k", "t", "y",
-            F.explode(F.array(F.lit(6), F.lit(12), F.lit(24), F.lit(168))).alias("p"),
-        ).select(
-            "k", "p", "y",
-            (F.lit(2.0) * F.lit(math.pi) * F.col("t").cast("double") / F.col("p")).alias("w"),
-        )
-        agg = per.groupBy("k", "p").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("y").alias("sy"),
-            F.sum(F.col("y") * F.cos("w")).alias("syc"),
-            F.sum(F.col("y") * F.sin("w")).alias("sys"),
-            F.sum(F.cos("w")).alias("sc"), F.sum(F.sin("w")).alias("ss"),
-        )
-        nd = F.col("n").cast("double")
-        yb = F.col("sy") / nd
-        a = F.col("syc") - yb * F.col("sc")
-        b = F.col("sys") - yb * F.col("ss")
-        best = agg.select(
-            "k", "p", ((a * a + b * b) / nd).alias("pw")
-        ).withColumn(
-            "rk",
-            F.row_number().over(Window.partitionBy("k").orderBy(F.col("pw").desc())),
-        ).filter(F.col("rk") == 1)
-        wrong = best.filter(F.col("p") != 24).count()
-        assert wrong == 0, wrong
-        notes["periodogram_2m"] = (
-            "planted 24h cycle dominates all 4 candidate periods for ALL "
-            "200 keys over a 2,000,000-cell grid; map-only trig + one agg"
-        )
-        return 200
-
-    run("periodogram_2m", periodogram_stress)
-
-    print(json.dumps({
-        "mode": "r4h",
-        "timings_s": timings,
-        "counts": counts,
-        "notes": notes,
-    }))
-    spark.stop()
-
-
-def main_r5() -> None:
-    """Stress the survival trio (KM / log-rank / Cox PH) at sf1-equivalent
-    scale — 6M events / 90k users with a PLANTED geometric conversion law
-    written to a temp parquet dir so the REAL catalog queries
-    (q_events_survival/logrank/coxph) run their production code path —
-    plus Markov removal attribution at a 10x journey count (round-4
-    verdict item #5).  The risk-set windows are the untested-at-scale
-    shape: descending cumulative counts over duration blocks.
-
-    Ground truths: with every user's first event on day 0 and censoring
-    only at the horizon, the KM product TELESCOPES to the empirical
-    survivor function of the planted conversion times (exact, per step);
-    an A/A split must accept (|z| <= 3.3) and a planted hazard-ratio-2
-    arm must be detected with the right sign and magnitude."""
-    import tempfile
-
-    from mcpvectordb_spark.operators.dedup import hexint48
-
-    spark = get_spark("stress-r5")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    n_users, horizon = 90_000, 60
-    # midnight-aligned (UTC container) so the +12h purchase offset stays
-    # inside calendar day g — the catalog queries bucket by to_date(ts)
-    base_epoch = 1_699_920_000
-    assert base_epoch % 86400 == 0 and time.gmtime(base_epoch).tm_hour == 0
-
-    def plant_corpus(p0: float, p1: float) -> tuple[str, DataFrame]:
-        """Write a 6M-row events.parquet where arm-0 users convert on day
-        g ~ Geometric(p0) and arm-1 on Geometric(p1) (censored at the
-        horizon); every user also gets one 'view' per day so first-event
-        date is day 0 and the stream horizon is day 59.  Arms use the
-        SAME hexint48(user_id)%2 assignment as the catalog queries, so
-        the plant controls what the pipelines will estimate."""
-        users = (
-            spark.range(n_users)
-            .select(
-                F.col("id").alias("user_id"),
-                F.pmod(hexint48(F.col("id").cast("string")), F.lit(2)).alias("arm"),
-                (
-                    (F.pmod(F.xxhash64(F.col("id"), F.lit(7)), F.lit(1_000_000)) + 0.5)
-                    / 1_000_000.0
-                ).alias("u"),
-            )
-            .withColumn("p", F.when(F.col("arm") == 1, F.lit(p1)).otherwise(F.lit(p0)))
-            .withColumn(
-                "g",
-                F.floor(F.log(F.lit(1.0) - F.col("u")) / F.log(F.lit(1.0) - F.col("p"))).cast("long"),
-            )
-        )
-        views = spark.range(n_users * horizon).select(
-            (F.col("id") / horizon).cast("long").alias("user_id"),
-            F.pmod(F.col("id"), F.lit(horizon)).alias("day"),
-            F.lit("view").alias("event_type"),
-        )
-        purchases = users.filter(F.col("g") < horizon).select(
-            "user_id", F.col("g").alias("day"), F.lit("purchase").alias("event_type")
-        )
-        ev = views.unionByName(purchases).select(
-            F.xxhash64("user_id", "day", "event_type").alias("event_id"),
-            "user_id",
-            F.timestamp_seconds(
-                F.lit(base_epoch) + F.col("day") * 86400
-                + F.when(F.col("event_type") == "purchase", 43200).otherwise(0)
-            ).alias("ts"),
-            "event_type",
-            F.lit(1.0).alias("value"),
-        )
-        path = tempfile.mkdtemp(prefix="stress_r5_")
-        ev.repartition(64).write.mode("overwrite").parquet(f"{path}/events.parquet")
-        return path, users.localCheckpoint()
-
-    from mcpvectordb_spark.catalog import (
-        q_events_coxph,
-        q_events_logrank,
-        q_events_survival,
-    )
-
-    p0 = 0.02
-    p_eff = 1.0 - (1.0 - p0) ** 2  # discrete-time hazard ratio 2 plant
-    aa_dir, aa_users = plant_corpus(p0, p0)
-    eff_dir, _ = plant_corpus(p0, p_eff)
-    _ = spark.read.parquet(f"{aa_dir}/events.parquet").count()
-    _ = spark.read.parquet(f"{eff_dir}/events.parquet").count()
-
-    def km_stress():
-        km = q_events_survival(spark, aa_dir).orderBy("dur").collect()
-        # telescoping ground truth: S(t) == fraction of users whose planted
-        # conversion day exceeds t, for every step before the horizon
-        surv = {
-            r["t"]: r["s"]
-            for r in aa_users.groupBy(F.col("g").alias("t"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("t") < horizon - 1)
-            .select(
-                "t",
-                (
-                    F.lit(1.0)
-                    - F.sum("c").over(
-                        Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-                    )
-                    / F.lit(float(n_users))
-                ).alias("s"),
-            )
-            .collect()
-        }
-        checked = 0
-        prev = 1.0
-        for r in km:
-            assert r["survival"] <= prev + 1e-12, (r, prev)
-            prev = r["survival"]
-            if r["dur"] in surv:
-                assert abs(r["survival"] - surv[r["dur"]]) <= 1e-6, (
-                    r["dur"], r["survival"], surv[r["dur"]],
-                )
-                checked += 1
-        assert checked >= 50, checked
-        notes["km_6m"] = (
-            f"{len(km)} KM steps from 6,000,000 events / 90,000 users; "
-            f"{checked} steps match the planted geometric law's empirical "
-            "survivor function to 1e-6 (telescoping identity); curve "
-            "monotone non-increasing"
-        )
-        return len(km)
-
-    def logrank_stress():
-        aa = q_events_logrank(spark, aa_dir).first()
-        assert abs(aa["z"]) <= 3.3, aa  # A/A placebo must accept
-        eff = q_events_logrank(spark, eff_dir).first()
-        # arm 1 has the doubled hazard -> arm 0 sees FEWER conversions than
-        # the hypergeometric expectation -> strongly negative z
-        assert eff["significant"] and eff["z"] < -5, eff
-        notes["logrank_6m"] = (
-            f"A/A placebo z={aa['z']:+.2f} accepts; planted hazard-ratio-2 "
-            f"arm rejected at z={eff['z']:+.1f} — risk-set windows hold at "
-            "60 duration blocks x 90k users"
-        )
-        return 2
-
-    def coxph_stress():
-        aa = q_events_coxph(spark, aa_dir).first()
-        assert abs(aa["z"]) <= 3.3 and 0.9 <= aa["hazard_ratio"] <= 1.1, aa
-        eff = q_events_coxph(spark, eff_dir).first()
-        assert eff["significant"] and 1.7 <= eff["hazard_ratio"] <= 2.3, eff
-        notes["coxph_6m"] = (
-            f"A/A fit HR={aa['hazard_ratio']:.3f} (z={aa['z']:+.2f}) accepts; "
-            f"planted HR=2 recovered as {eff['hazard_ratio']:.3f} "
-            f"(z={eff['z']:+.1f}) — 8 Newton steps on the count-collapsed "
-            "risk table, one agg per step"
-        )
-        return 2
-
-    run("km_6m", km_stress)
-    run("logrank_6m", logrank_stress)
-    run("coxph_6m", coxph_stress)
-
-    # Markov removal attribution at a 10x journey count: 6M events / 90k
-    # users of a 5-type stream (vs ~600k events at the sf0.1 bench scale)
-    def markov_stress():
-        from mcpvectordb_spark.operators.analytics import markov_removal_attribution
-
-        n_ev = 6_000_000
-        ev = spark.range(n_ev).select(
-            F.col("id").alias("event_id"),
-            F.pmod(F.xxhash64("id", F.lit(1)), F.lit(n_users)).alias("user_id"),
-            F.timestamp_seconds(
-                F.lit(base_epoch)
-                + F.pmod(F.xxhash64("id", F.lit(2)), F.lit(30 * 86400))
-            ).alias("ts"),
-            F.element_at(
-                F.array(F.lit("view"), F.lit("click"), F.lit("signup"),
-                        F.lit("error"), F.lit("purchase")),
-                (F.pmod(F.xxhash64("id", F.lit(3)), F.lit(5)) + 1).cast("int"),
-            ).alias("event_type"),
-        ).repartition(64).localCheckpoint()
-        _ = ev.count()
-        out = markov_removal_attribution(ev, conv_value="purchase").collect()
-        assert len(out) >= 3, out
-        att = [r["attribution"] for r in out if r["attribution"] is not None]
-        assert abs(sum(att) - 1.0) <= 1e-9, sum(att)
-        for r in out:
-            assert 0.0 < r["p_conv_full"] < 1.0, r
-            assert 0.0 <= r["removal_effect"] <= 1.0 + 1e-12, r
-        notes["markov_6m"] = (
-            f"{len(out)} channels over 6,000,000 events / ~90k journeys "
-            "(10x the bench journey count); attributions sum to exactly 1, "
-            "all removal effects in [0,1]; 6 log-depth matrix squarings"
-        )
-        return len(out)
-
-    run("markov_6m", markov_stress)
-
-    print(json.dumps({
-        "mode": "r5",
-        "timings_s": timings,
-        "counts": counts,
-        "notes": notes,
-    }))
-    spark.stop()
-
-
-def main_r5b() -> None:
-    """Stress the ROUND-5 queries at sf1-equivalent scale with planted
-    ground truths, through the production catalog code paths:
-
-    - CUPED at ~5M events / 90k users: per-user activity level a drives
-      BOTH the pre-period covariate (10a views) and the post purchase
-      value (5a dollars + effect*arm + deterministic ±0.25 noise), so
-      theta must recover exactly 0.5 $/event, the covariate variance
-      must collapse (>0.99), the A/A plant must accept, and a planted
-      10-cent arm effect must be detected AND estimated to the cent.
-    - Synthetic control over a 365-day panel (~3.3M events): y = 200 +
-      x1/10 ± 1 with weekly donor cycles; the A/A plant must pass the
-      placebo and a planted +300/day post-period intervention must be
-      rejected with the gap recovered.
-    - Heaps law at 200k docs where EVERY shingle is globally unique:
-      V(N) = N exactly, so beta == 1.0, K == 1.0, corr == 1.0 at 6 dp —
-      an exact closed form, not a tolerance."""
-    import tempfile
-
-    from mcpvectordb_spark.catalog import (
-        q_documents_heaps,
-        q_events_cuped,
-        q_events_synthctrl,
-    )
-
-    spark = get_spark("stress-r5b")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    base = 1_699_920_000  # midnight-aligned (UTC container)
-    n_users = 90_000
-
-    def plant_cuped(eff_dollars: float) -> str:
-        users = spark.range(n_users).select(
-            F.col("id").alias("user_id"),
-            (F.pmod(F.xxhash64("id", F.lit(11)), F.lit(10)) + 1).alias("a"),
-        )
-        views = users.select(
-            "user_id",
-            F.explode(F.sequence(F.lit(1), F.col("a") * 10)).alias("j"),
-        ).select(
-            "user_id",
-            F.timestamp_seconds(
-                F.lit(base)
-                + F.pmod(F.xxhash64("user_id", "j"), F.lit(10 * 86400))
-            ).alias("ts"),
-            F.lit("view").alias("event_type"),
-            F.lit(0.0).alias("value"),
-        )
-        from mcpvectordb_spark.operators.dedup import hexint48
-
-        arm = F.pmod(hexint48(F.col("user_id").cast("string")), F.lit(2))
-        purchases = users.select(
-            "user_id",
-            F.timestamp_seconds(
-                F.lit(base + 20 * 86400)
-                + F.pmod(F.xxhash64("user_id", F.lit(5)), F.lit(9 * 86400))
-            ).alias("ts"),
-            F.lit("purchase").alias("event_type"),
-            (
-                5.0 * F.col("a")
-                + F.lit(eff_dollars) * arm.cast("double")
-                + (F.pmod(F.xxhash64("user_id", F.lit(99)), F.lit(2)).cast("double") * 0.5 - 0.25)
-            ).alias("value"),
-        )
-        ev = views.unionByName(purchases).select(
-            F.xxhash64("user_id", "ts", "event_type").alias("event_id"),
-            "ts", "user_id", "event_type", "value",
-        )
-        path = tempfile.mkdtemp(prefix="stress_r5b_")
-        ev.repartition(64).write.mode("overwrite").parquet(f"{path}/events.parquet")
-        return path
-
-    def cuped_stress():
-        aa = q_events_cuped(spark, plant_cuped(0.0)).first()
-        assert abs(aa["z_cuped"]) <= 3.3 and aa["significant"] is False, aa
-        assert abs(aa["theta"] - 0.5) < 0.01, aa
-        assert aa["var_reduction"] > 0.99, aa
-        eff = q_events_cuped(spark, plant_cuped(0.10)).first()
-        assert eff["significant"] and eff["z_cuped"] > 5, eff
-        assert abs(eff["diff_cuped"] - 0.10) < 0.01, eff
-        notes["cuped_5m"] = (
-            f"~5.0M events / 90k users: theta {aa['theta']:+.4f} recovers the "
-            f"planted 0.5 $/event exactly, var_reduction {aa['var_reduction']:.4f}; "
-            f"A/A z={aa['z_cuped']:+.2f} accepts; planted 10-cent effect "
-            f"estimated as {eff['diff_cuped']*100:.1f} cents (z={eff['z_cuped']:+.1f}) "
-            f"— raw z was {eff['z_raw']:+.1f}, the covariate supplies the power"
-        )
-        return 2
-
-    def plant_synth(shift: int) -> str:
-        days = spark.range(365).select(F.col("id").alias("t"))
-        day_counts = days.select(
-            "t",
-            (5000 + F.pmod(F.col("t"), F.lit(7)) * 100).alias("x1"),
-            (3000 + F.pmod(F.col("t"), F.lit(5)) * 80).alias("x2"),
-        ).withColumn(
-            "y",
-            200 + (F.col("x1") / 10).cast("long")
-            + (F.pmod(F.col("t"), F.lit(2)) * 2 - 1)
-            + F.when(F.col("t") >= F.lit(365 - 122), F.lit(shift)).otherwise(0),
-        )
-        # cutoff in the query: d0 + div((d1-d0+1)*2,3) = 243rd day → post
-        # window = last 122 days, matching the shift plant above
-        def blow(col, etype):
-            return day_counts.select(
-                "t", F.explode(F.sequence(F.lit(1), F.col(col))).alias("j")
-            ).select(
-                F.timestamp_seconds(F.lit(base) + F.col("t") * 86400 + F.col("j")).alias("ts"),
-                F.col("j").alias("user_id"),
-                F.lit(etype).alias("event_type"),
-                F.lit(0.0).alias("value"),
-            )
-
-        ev = (
-            blow("x1", "view")
-            .unionByName(blow("x2", "click"))
-            .unionByName(blow("y", "purchase"))
-            .select(
-                F.xxhash64("ts", "event_type", "user_id").alias("event_id"),
-                "ts", "user_id", "event_type", "value",
-            )
-        )
-        path = tempfile.mkdtemp(prefix="stress_r5b_")
-        ev.repartition(64).write.mode("overwrite").parquet(f"{path}/events.parquet")
-        return path
-
-    def synth_stress():
-        aa = q_events_synthctrl(spark, plant_synth(0)).first()
-        assert aa["n_pre"] == 243 and aa["n_post"] == 122, aa
-        assert aa["placebo_ok"] is True, aa
-        assert abs(aa["w_view"] - 0.1) < 0.02, aa
-        eff = q_events_synthctrl(spark, plant_synth(300)).first()
-        assert eff["placebo_ok"] is False and eff["gap_z"] > 10, eff
-        assert abs(eff["mean_gap"] - 300) < 5, eff
-        notes["synthctrl_3m"] = (
-            f"365-day panel from ~3.3M events: A/A gap_z={aa['gap_z']:+.2f} "
-            f"accepts with w_view={aa['w_view']:.3f} (planted 0.1); planted "
-            f"+300/day intervention recovered as {eff['mean_gap']:.1f} "
-            f"(gap_z={eff['gap_z']:+.0f})"
-        )
-        return 2
-
-    def heaps_stress():
-        n_docs, toks = 200_000, 20
-        docs = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"),
-            F.array_join(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(toks - 1)),
-                    lambda j: F.concat(
-                        F.lit("d"), F.col("id").cast("string"),
-                        F.lit("t"), j.cast("string"),
-                    ),
-                ),
-                " ",
-            ).alias("text"),
-        )
-        path = tempfile.mkdtemp(prefix="stress_r5b_")
-        docs.repartition(32).write.mode("overwrite").parquet(f"{path}/documents.parquet")
-        out = q_documents_heaps(spark, path).first()
-        expected = n_docs * (toks - 2)
-        assert out["n_docs"] == n_docs, out
-        assert out["total_shingles"] == expected and out["vocab"] == expected, out
-        assert out["heaps_beta"] == 1.0 and out["heaps_k"] == 1.0, out
-        assert out["loglog_corr"] == 1.0, out
-        notes["heaps_200k"] = (
-            f"200k docs / {expected:,} globally-unique shingles: V(N)=N "
-            "closed form recovered EXACTLY (beta=1, K=1, corr=1 at 6 dp); "
-            "cumulative window runs over the 200k-row per-doc table only"
-        )
-        return out["fit_points"]
-
-    run("cuped_5m", cuped_stress)
-    run("synthctrl_3m", synth_stress)
-    run("heaps_200k", heaps_stress)
-
-    print(json.dumps({
-        "mode": "r5b",
-        "timings_s": timings,
-        "counts": counts,
-        "notes": notes,
-    }))
-    spark.stop()
-
-
-def main_r6() -> None:
-    """Round-6 stress: the documents_heaps TWO-LEVEL cumulative sum at
-    >= 2M docs (the round-5 verdict's scale-killer fix).  Every shingle is
-    globally unique so V(N) = N exactly — beta == K == corr == 1.0 at 6 dp,
-    a closed form, not a tolerance — and the plan must contain NO
-    unpartitioned window (asserted on the physical plan of the bucketed
-    cumsum itself, which is what replaced the global Window.orderBy)."""
-    import tempfile
-
-    from mcpvectordb_spark.catalog import q_documents_heaps
-    from mcpvectordb_spark.operators.blocks import bucketed_cumsum
-
-    spark = get_spark("stress-r6")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    def heaps_2m():
-        n_docs, toks = 2_000_000, 10
-        docs = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"),
-            F.array_join(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(toks - 1)),
-                    lambda j: F.concat(
-                        F.lit("d"), F.col("id").cast("string"),
-                        F.lit("t"), j.cast("string"),
-                    ),
-                ),
-                " ",
-            ).alias("text"),
-        )
-        path = tempfile.mkdtemp(prefix="stress_r6_")
-        docs.repartition(64).write.mode("overwrite").parquet(f"{path}/documents.parquet")
-        out = q_documents_heaps(spark, path).first()
-        expected = n_docs * (toks - 2)
-        assert out["n_docs"] == n_docs, out
-        assert out["total_shingles"] == expected and out["vocab"] == expected, out
-        assert out["heaps_beta"] == 1.0 and out["heaps_k"] == 1.0, out
-        assert out["loglog_corr"] == 1.0, out
-        # the scale contract: the cumsum plan that replaced the global
-        # window carries a partition spec on every Window operator
-        panel = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"),
-            F.lit(8).alias("occ"),
-            F.lit(8).alias("v_new"),
-        )
-        plan = (
-            bucketed_cumsum(panel, "doc_id", ["occ", "v_new"])
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        for line in plan.splitlines():
-            if "windowspecdefinition" in line:
-                assert "_b#" in line, line
-        notes["heaps_2m"] = (
-            f"2M docs / {expected:,} globally-unique shingles through the "
-            "two-level bucketed cumsum (4096 range buckets, driver offsets, "
-            "per-bucket windows): V(N)=N closed form recovered EXACTLY "
-            "(beta=1, K=1, corr=1 at 6 dp); every Window in the plan is "
-            "partitioned — no single-partition stage at 400x the bench panel"
-        )
-        return out["fit_points"]
-
-    def kendall_20m():
-        # 20M rows, x uniform on 0..49, y = x + deterministic noise in {0,1,2}
-        # with ties everywhere — tau-b must equal the EXACT brute-force value
-        # computed from the 50x52 joint-frequency table in plain Python
-        # (the operator's own block algebra, reimplemented independently).
-        from mcpvectordb_spark.operators.stats import kendall_tau_b
-
-        n = 20_000_000
-        df = spark.range(n).select(
-            (F.col("id") % 50).alias("x"),
-            ((F.col("id") % 50) + F.pmod(F.xxhash64("id"), F.lit(3))).alias("y"),
-        )
-        out = kendall_tau_b(df, F.col("x"), F.col("y")).first()
-        # independent ground truth from the exact joint distribution
-        from collections import Counter
-
-        cells = Counter()
-        # xxhash64 % 3 is uniform enough that we must COUNT it exactly —
-        # recompute the same hash on the driver via Spark (one tiny agg)
-        hist = (
-            df.groupBy("x", "y").count().collect()
-        )
-        for r in hist:
-            cells[(r["x"], r["y"])] = r["count"]
-        cs = ds = 0
-        items = list(cells.items())
-        for i, ((x1, y1), n1) in enumerate(items):
-            for (x2, y2), n2 in items[i + 1:]:
-                if x1 == x2 or y1 == y2:
-                    continue
-                if (x1 < x2) == (y1 < y2):
-                    cs += n1 * n2
-                else:
-                    ds += n1 * n2
-        assert out["concordant"] == cs and out["discordant"] == ds, out
-        n0 = n * (n - 1) // 2
-        tmarg = Counter()
-        for (x, _), c in cells.items():
-            tmarg[x] += c
-        tx = sum(t * (t - 1) // 2 for t in tmarg.values())
-        umarg = Counter()
-        for (_, y), c in cells.items():
-            umarg[y] += c
-        ty = sum(t * (t - 1) // 2 for t in umarg.values())
-        import math as _math
-
-        tau = (cs - ds) / _math.sqrt((n0 - tx) * (n0 - ty))
-        assert abs(out["tau_b"] - tau) < 1e-6, (out["tau_b"], tau)
-        notes["kendall_20m"] = (
-            f"20M rows / 150 joint blocks: C/D pair masses exact-match an "
-            f"independent Python recount of the joint distribution; "
-            f"tau_b={out['tau_b']:+.4f} (strong planted monotone signal) — "
-            "the corpus appears in ONE groupBy, pairs come from the 150-row "
-            "block self-join"
-        )
-        return out["n"]
-
-    def bh_20m():
-        # 8 groups x 2.5M rows; arm shift planted in g3 ONLY.  BH must
-        # reject exactly g3 and accept the other 7 (which are A/A by
-        # construction), at 100x the bench corpus.
-        from mcpvectordb_spark.operators.stats import ab_assign, group_welch_bh
-
-        n = 20_000_000
-        base = spark.range(n).select(
-            F.concat(F.lit("g"), (F.col("id") % 8).cast("string")).alias("g"),
-            (F.col("id") / 8).cast("long").alias("user_id"),
-            (F.pmod(F.xxhash64("id", F.lit(7)), F.lit(5)) + 100).alias("v"),
-        )
-        arm = ab_assign(F.col("user_id").cast("string"), salt="fdr")
-        df = base.withColumn(
-            "v",
-            F.when((F.col("g") == "g3") & (arm == 1), F.col("v") + 1).otherwise(
-                F.col("v")
-            ),
-        )
-        out = {r["g"]: r for r in group_welch_bh(df, "g", "user_id", F.col("v"), salt="fdr").collect()}
-        assert out["g3"]["rejected"] is True and out["g3"]["q_bh"] < 1e-6, out["g3"]
-        others = [out[f"g{i}"] for i in range(8) if i != 3]
-        assert all(r["rejected"] is False for r in others), others
-        notes["bh_20m"] = (
-            f"20M rows / 8 hypotheses: planted +1-cent arm effect in g3 "
-            f"rejected at q={out['g3']['q_bh']:.2e}; all 7 A/A groups accept "
-            "after BH — one (group, arm) corpus agg, everything downstream "
-            "is 8 rows"
-        )
-        return len(out)
-
-    run("heaps_2m", heaps_2m)
-    run("kendall_20m", kendall_20m)
-    run("bh_20m", bh_20m)
-
-    print(json.dumps({
-        "mode": "r6",
-        "timings_s": timings,
-        "counts": counts,
-        "notes": notes,
-    }))
-    spark.stop()
-
-
-def main_r6b() -> None:
-    """Round-6 second-batch stress: Shapley attribution, Gini stump,
-    chi-square term selection, and replayable Lloyd k-means — each at
-    sf1-equivalent scale with a PLANTED closed-form ground truth:
-
-    - Shapley at 4.8M users (~11M events): conversion depends only on the
-      user's channel-set mask, so the exact BIGINT numerators are
-      recomputable from the 16 planted block counts by brute-force
-      coalition enumeration in plain Python — the match must be EXACT
-      (the whole point of keeping phi's numerator integral);
-    - stump at 20M rows: label == (x <= 499) exactly, so the stump must
-      recover ('x', 499) with gain == gini_root and 100% accuracy;
-    - chi2 at 2M docs: a marker term present in EVERY class-a doc and NO
-      class-b doc has chi2 == N exactly (perfect association);
-    - k-means at 400k x 64-dim vectors around 8 planted centers with
-      jitter << separation: the 8 lowest-id seeds are one-per-center by
-      construction, so after 2 Lloyd iterations every cluster must hold
-      exactly n/8 points."""
-    import math as _math
-    import tempfile
-
-    from mcpvectordb_spark.operators.analytics import shapley_attribution
-    from mcpvectordb_spark.operators.classify import gini_stump
-    from mcpvectordb_spark.operators.knn import lloyd_kmeans_replayable
-    from mcpvectordb_spark.operators.textstats import chi2_terms
-
-    spark = get_spark("stress-r6b")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    CH = ["click", "error", "signup", "view"]
-
-    def shapley_5m():
-        n_users = 4_800_000  # multiple of 48 = lcm(16 masks, 3 conv cycle)
-        users = spark.range(n_users).select(
-            F.col("id").alias("user_id"),
-            (F.col("id") % 16).alias("mask"),
-            (F.col("id") % 3 == 0).cast("int").alias("conv"),
-        )
-        types = F.array_compact(
-            F.array(
-                *[
-                    F.when(F.expr(f"(mask >> {i}) & 1 = 1"), F.lit(c))
-                    for i, c in enumerate(CH)
-                ],
-                F.when(F.col("conv") == 1, F.lit("purchase")),
-            )
-        )
-        ev = users.select("user_id", F.explode(types).alias("event_type"))
-        out = {
-            r["channel"]: r["shapley_num"]
-            for r in shapley_attribution(ev, CH).collect()
-        }
-        # independent brute force from the planted block law: every mask
-        # holds n/16 users, every third user converts, and n % 48 == 0
-        # makes the joint count exact per mask
-        c = {m: n_users // 48 for m in range(16)}
-
-        def v(s):
-            return sum(cnt for m, cnt in c.items() if m & ~s == 0)
-
-        for i, ch in enumerate(CH):
-            num = 0
-            for s in range(16):
-                if s & (1 << i):
-                    continue
-                sz = bin(s).count("1")
-                num += (
-                    _math.factorial(sz)
-                    * _math.factorial(3 - sz)
-                    * (v(s | (1 << i)) - v(s))
-                )
-            assert out[ch] == num, (ch, out[ch], num)
-        # symmetry: all four channels are exchangeable under this law
-        assert len(set(out.values())) == 1, out
-        notes["shapley_5m"] = (
-            f"4.8M users / ~11M events: exact BIGINT numerators match the "
-            "brute-force coalition enumeration over the planted 16-block "
-            "law EXACTLY (and all 4 exchangeable channels get identical "
-            "credit) — one user-keyed corpus agg, everything after is "
-            "<= 16-row tables"
-        )
-        return len(out)
-
-    def stump_20m():
-        n = 20_000_000
-        df = spark.range(n).select(
-            (F.col("id") % 1000).alias("x"),
-            ((F.col("id") * 7) % 23).alias("z"),
-            (F.col("id") % 1000 <= 499).alias("y"),
-        )
-        out = gini_stump(
-            df, {"x": F.col("x"), "z": F.col("z")}, F.col("y")
-        ).collect()[0]
-        assert out["feature"] == "x" and out["split_x"] == 499, out
-        assert out["n_correct"] == out["n"] == n, out
-        assert abs(out["gain"] - out["gini_root"]) < 1e-9, out
-        notes["stump_20m"] = (
-            "20M rows, label == (x <= 499) planted: stump recovers "
-            "('x', 499) with gain == gini_root and 20M/20M training "
-            "accuracy; candidate table is 1,023 blocks (the two feature "
-            "domains); rows explode to (feature, x) pairs so the corpus "
-            "appears in ONE groupBy total"
-        )
-        return out["split_x"]
-
-    def chi2_2m():
-        n_docs = 2_000_000
-        docs = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"),
-            F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("lang"),
-            F.concat(
-                F.when(F.col("id") % 2 == 0, F.lit("alpha ")).otherwise(
-                    F.lit("beta ")
-                ),
-                F.lit("w"),
-                (F.col("id") % 50).cast("string"),
-                F.lit(" filler_common"),
-            ).alias("text"),
-        )
-        out = chi2_terms(docs, "lang", min_df=5, top_k=3).collect()
-        top = {
-            cls: min((r for r in out if r["cls"] == cls), key=lambda r: r["rank"])
-            for cls in ("a", "b")
-        }
-        # perfect association: a=N/2, b=0, c=0, d=N/2 -> chi2 == N exactly
-        assert top["a"]["term"] == "alpha", top
-        assert top["b"]["term"] == "beta", top
-        assert top["a"]["chi2"] == float(n_docs), top
-        assert top["b"]["chi2"] == float(n_docs), top
-        notes["chi2_2m"] = (
-            "2M docs: planted one-class marker terms score chi2 == N "
-            "(perfect 2x2 association, an exact closed form) and rank "
-            "first in both classes; the universal filler term is dropped "
-            "by the df_t < n_docs margin guard — all tables after the "
-            "presence dedup are vocab x classes (52 terms)"
-        )
-        return len(out)
-
-    def kmeans_400k():
-        n, dim, k = 400_000, 64, 8
-        vecs = spark.range(n).select(
-            F.col("id").alias("vec_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda j: (
-                    (F.col("id") % k).cast("double") * 10.0
-                    + F.pmod(F.xxhash64(F.col("id"), j), F.lit(100)).cast(
-                        "double"
-                    )
-                    / 1000.0
-                ),
-            ).alias("embedding"),
-        )
-        assigned = lloyd_kmeans_replayable(
-            vecs, "vec_id", "embedding", k=k, iters=2, dim=dim
-        )
-        roll = (
-            assigned.groupBy("cid")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("dist2").alias("inertia"))
-            .collect()
-        )
-        assert len(roll) == k, roll
-        assert all(r["n"] == n // k for r in roll), roll
-        # jitter is uniform on [0, 0.1) per dim: per-point dist2 < 64*0.01
-        assert all(r["inertia"] < (n // k) * dim * 0.01 for r in roll), roll
-        notes["kmeans_400k"] = (
-            "400k x 64-dim vectors around 8 planted centers (separation "
-            "10/dim, jitter < 0.1): ids 0..7 seed one-per-center, 2 Lloyd "
-            "iterations keep every cluster at exactly 50k points with "
-            "inertia bounded by the jitter law; assignment is a broadcast "
-            "map-only expression, each update ONE map-side-combinable agg"
-        )
-        return len(roll)
-
-    def silhouette_400k():
-        # same planted-blob law as kmeans_400k: separation 10 per dim,
-        # jitter < 0.1, so a ~ sqrt(dim)*O(jitter) and b ~ sqrt(dim*100)
-        # -> every cluster's simplified silhouette must exceed 0.99
-        from mcpvectordb_spark.operators.knn import silhouette_simplified
-
-        n, dim, k = 400_000, 64, 8
-        vecs = spark.range(n).select(
-            F.col("id").alias("vec_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda j: (
-                    (F.col("id") % k).cast("double") * 10.0
-                    + F.pmod(F.xxhash64(F.col("id"), j), F.lit(100)).cast(
-                        "double"
-                    )
-                    / 1000.0
-                ),
-            ).alias("embedding"),
-        )
-        rows = silhouette_simplified(
-            vecs, "vec_id", "embedding", k=k, iters=2, dim=dim
-        ).collect()
-        assert len(rows) == k and all(r["n"] == n // k for r in rows), rows
-        assert all(r["silhouette"] > 0.99 for r in rows), rows
-        notes["silhouette_400k"] = (
-            "400k x 64-dim planted blobs: every cluster's simplified "
-            "silhouette > 0.99 (jitter/separation law); scoring is the "
-            "same broadcast map-only expression as the assignment — "
-            "no join, no extra shuffle beyond the k-row rollup"
-        )
-        return len(rows)
-
-    def power_mde_20m():
-        # 20M rows, value uniform on 0..999 cents within each of 5 types:
-        # pooled variance has the discrete-uniform closed form
-        # (d^2-1)/12 with d=1000, and arms are ~10M/10M, so
-        # mde = 2.801585219*sqrt(var*(1/n0+1/n1)) is checkable to ~1e-3
-        from mcpvectordb_spark.operators.stats import power_mde
-
-        n = 20_000_000
-        ev = spark.range(n).select(
-            F.concat(F.lit("t"), (F.col("id") % 5).cast("string")).alias("g"),
-            F.col("id").alias("user_id"),
-            (F.col("id") % 1000).alias("v"),
-        )
-        rows = power_mde(ev, "g", "user_id", F.col("v")).collect()
-        assert len(rows) == 5, rows
-        # type g holds v in {g, g+5, ..., g+995}: mean g+497.5, variance
-        # 25*(200^2-1)/12 (discrete uniform with spacing 5)
-        var_u = 25.0 * (200.0 ** 2 - 1) / 12.0
-        for r in rows:
-            g = int(r["g"][1:])
-            n0, n1 = r["n_a"], r["n_b"]
-            approx = 2.801585219 * math.sqrt(var_u * (1.0 / n0 + 1.0 / n1))
-            assert abs(r["mde_abs"] - approx) / approx < 1e-3, (r, approx)
-            assert abs(r["mean_v"] - (g + 497.5)) < 0.5, r
-        notes["power_mde_20m"] = (
-            "20M rows / 5 types: MDE matches the discrete-uniform "
-            "closed form (var=(d^2-1)/12) within 0.1% on ~2M-per-arm "
-            "splits — one conditional corpus agg, 5-row readout"
-        )
-        return len(rows)
-
-    def sources_overlap_2m():
-        # 2M docs across 4 sources; consecutive sources share HALF their
-        # 10-token sentences by construction (sentence id = doc id // 2
-        # for the shared half), non-adjacent sources share nothing ->
-        # intersection counts have an exact combinatorial form
-        import tempfile
-
-        from mcpvectordb_spark.catalog import q_sources_overlap
-
-        n_docs, k_src = 2_000_000, 4
-        per_src = n_docs // k_src
-        # source s, doc j: text = sentence id "s:j" (private) for odd j,
-        # "sh:{s//?}..." — simpler exact law: every source holds shingles
-        # tagged by (s % 2): even sources all share ONE vocabulary family,
-        # odd sources another; within a family every source holds the
-        # same per_src distinct shingle set
-        docs = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("src"), (F.col("id") % k_src).cast("string")).alias(
-                "source"
-            ),
-            F.concat(
-                F.lit("fam"),
-                ((F.col("id") % k_src) % 2).cast("string"),
-                F.lit(" tok"),
-                (F.col("id") / k_src).cast("long").cast("string"),
-                F.lit(" a"),
-                ((F.col("id") % k_src) % 2).cast("string"),
-                F.lit(" b"),
-            ).alias("text"),
-        ).withColumn("lang", F.lit("en")).withColumn("n_chars", F.length("text"))
-        path = tempfile.mkdtemp(prefix="stress_overlap_")
-        docs.repartition(64).write.mode("overwrite").parquet(
-            f"{path}/documents.parquet"
-        )
-        rows = q_sources_overlap(spark, path).collect()
-        # each doc's text "famX tokJ aX b" yields 2 distinct 3-grams, both
-        # carrying the family tag -> per source: 2*per_src shingles;
-        # same-family pairs share ALL of them, cross-family pairs none
-        by_pair = {(r["sa"], r["sb"]): r for r in rows}
-        assert set(by_pair) == {("src0", "src2"), ("src1", "src3")}, by_pair
-        for r in by_pair.values():
-            assert r["na"] == r["nb"] == 2 * per_src, r
-            assert r["n_inter"] == 2 * per_src, r
-            assert r["jaccard"] == 1.0 and r["containment"] == 1.0, r
-        notes["sources_overlap_2m"] = (
-            "2M docs / 4 sources / 4M distinct shingles: planted "
-            "family law recovered exactly — same-family source pairs at "
-            "Jaccard 1.0, cross-family pairs absent (inner-join "
-            "semantics); the pair join stays bounded by sources-per-"
-            "shingle (= 2 here) at any corpus size"
-        )
-        return len(rows)
-
-    run("shapley_5m", shapley_5m)
-    run("stump_20m", stump_20m)
-    run("chi2_2m", chi2_2m)
-    run("kmeans_400k", kmeans_400k)
-    run("silhouette_400k", silhouette_400k)
-    run("power_mde_20m", power_mde_20m)
-    run("sources_overlap_2m", sources_overlap_2m)
-
-    print(json.dumps({
-        "mode": "r6b",
-        "timings_s": timings,
-        "counts": counts,
-        "notes": notes,
-    }))
-    spark.stop()
-
-
-def main_r7() -> None:
-    """Round-7 stress: the two single-task funnels the new plan tripwire
-    caught (dsir_select's global rank window, list_documents' pagination
-    window), re-proven at 1000x bench scale AFTER the TakeOrdered
-    pre-limit rewrite, each against a planted deterministic answer:
-
-    - dsir_select at 5M docs with IDENTICAL text: every raw doc gets the
-      same logw, so selection order is the Gumbel key alone — u_i derives
-      from the portable md5 hexint48, so plain Python recomputes the
-      exact top-100 (round(c+g_i, 6) DESC, id ASC) from hashlib and the
-      readback logw constant; the selection must match id-for-id;
-    - list_documents pagination over a 5M-source synthetic documents
-      table: the planted size law (sources 0..19 hold 1e9-i chars, the
-      rest < 1000) fixes ranks 6..15 to sources s5..s14 exactly.
-
-    In-script plan assertions: both physical plans contain a
-    TakeOrderedAndProject and audit_plan() reports zero unbounded
-    single-task stages."""
-    import hashlib
-    import tempfile
-
-    sys.path.insert(0, "tools")
-    from plan_report import audit_plan
-
-    from mcpvectordb_spark.operators.curation import dsir_select
-
-    spark = get_spark("stress-r7")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    def dsir_5m():
-        n = 5_000_000
-        k = 100
-        docs = spark.range(n).select(
-            F.col("id").alias("doc_id"),
-            F.lit("alpha beta gamma delta").alias("text"),
-        )
-        out = dsir_select(
-            docs, "doc_id", "text", F.col("doc_id") < 1000, k
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "TakeOrderedAndProject" in plan, "dsir lost its TakeOrdered"
-        assert audit_plan(plan) == (0, 0), f"unbounded 1-task stage: {audit_plan(plan)}"
-        rows = out.orderBy("rank").collect()
-        assert len(rows) == k
-        logws = {r["logw"] for r in rows}
-        assert len(logws) == 1, f"identical text must give one logw, got {logws}"
-        c = rows[0]["logw"]
-        # plain-Python recompute of the exact top-k over all 5M raw ids
-        best = []
-        for i in range(1000, n):
-            h = int(hashlib.md5(f"dsir:{i}".encode()).hexdigest()[:12], 16)
-            u = (h + 0.5) / float(1 << 48)
-            key = round(c - math.log(-math.log(u)), 6)
-            best.append((-key, i))
-            if len(best) > 4 * k and i % 500_000 == 0:
-                best = sorted(best)[: 2 * k]
-        expect = [i for _, i in sorted(best)[:k]]
-        got = [r["id"] for r in rows]
-        assert got == expect, f"selection mismatch: {got[:5]} vs {expect[:5]}"
-        notes["dsir_5m"] = (
-            "top-100 of 5M matches the hashlib/python Gumbel-key recompute "
-            "id-for-id; plan carries TakeOrderedAndProject, audit_plan==(0,0)"
-        )
-        return len(rows)
-
-    def listing_5m():
-        from mcpvectordb_spark.catalog import QUERIES
-
-        n = 5_000_000
-        with tempfile.TemporaryDirectory() as td:
-            docs = spark.range(n).select(
-                F.col("id").alias("doc_id"),
-                F.concat(F.lit("s"), F.col("id")).alias("source"),
-                F.when(F.col("id") < 20, F.lit(1_000_000_000) - F.col("id"))
-                .otherwise(F.col("id") % 997 + 1)
-                .cast("long")
-                .alias("n_chars"),
-            )
-            docs.write.mode("overwrite").parquet(f"{td}/documents.parquet")
-            q = QUERIES["list_documents"](spark, td)
-            plan = q._jdf.queryExecution().executedPlan().toString()
-            assert "TakeOrderedAndProject" in plan, "listing lost its TakeOrdered"
-            assert audit_plan(plan) == (0, 0), f"unbounded 1-task stage: {audit_plan(plan)}"
-            rows = q.orderBy("rank").collect()
-        assert [r["source"] for r in rows] == [f"s{i}" for i in range(5, 15)]
-        assert [r["total_chars"] for r in rows] == [
-            1_000_000_000 - i for i in range(5, 15)
-        ]
-        notes["listing_5m"] = (
-            "page ranks 6..15 over 5M grouped sources recover the planted "
-            "size law exactly; window input is the 15-row TakeOrdered cut"
-        )
-        return len(rows)
-
-    run("dsir_5m", dsir_5m)
-    run("listing_5m", listing_5m)
-
-    print(json.dumps({
-        "mode": "r7",
-        "timings_s": timings,
-        "counts": counts,
-        "notes": notes,
-    }))
-    spark.stop()
-
-
-def main_r8() -> None:
-    """Round-8 stress: the two new corpus-shaped queries at 1000x+ bench
-    scale, each against a planted closed-form answer:
-
-    - doc_novelty at 2M docs: the first half get id-embedded words (every
-      3-gram shingle unique to its doc -> novelty exactly 1.0), the
-      second half share ONE text (every shingle in 1M docs -> novelty
-      exactly 0.0).  The per-class counts and a sampled per-doc readback
-      must match; audit_plan must report zero unbounded 1-task stages.
-    - dataset_datasheet at 2M docs / 100 sources: within each source,
-      ids with (id div 100) even share one digest (dup_rate exactly 0.5),
-      all docs are one language (entropy exactly 0.0, n_langs 1)."""
-    import tempfile
-
-    sys.path.insert(0, "tools")
-    from plan_report import audit_plan
-
-    spark = get_spark("stress-r8")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    def novelty_2m():
-        from mcpvectordb_spark.catalog import QUERIES
-
-        n = 2_000_000
-        half = n // 2
-        with tempfile.TemporaryDirectory() as td:
-            docs = spark.range(n).select(
-                F.col("id").alias("doc_id"),
-                F.when(
-                    F.col("id") < half,
-                    F.concat(
-                        F.lit("u"), F.col("id"), F.lit(" v"), F.col("id"),
-                        F.lit(" w"), F.col("id"), F.lit(" x"), F.col("id"),
-                    ),
-                )
-                .otherwise(F.lit("alpha beta gamma delta"))
-                .alias("text"),
-                F.lit("en").alias("lang"),
-                F.lit("s").alias("source"),
-                F.lit(30).cast("long").alias("n_chars"),
-            )
-            docs.write.mode("overwrite").parquet(f"{td}/documents.parquet")
-            q = QUERIES["doc_novelty"](spark, td)
-            plan = q._jdf.queryExecution().executedPlan().toString()
-            assert audit_plan(plan) == (0, 0), f"1-task stage: {audit_plan(plan)}"
-            byn = {
-                r["novelty"]: r["cnt"]
-                for r in q.groupBy("novelty").agg(
-                    F.count(F.lit(1)).alias("cnt")
-                ).collect()
-            }
-            assert byn == {1.0: half, 0.0: half}, f"novelty classes: {byn}"
-            # sampled per-doc readback: 4 id-embedded words -> 2 shingles,
-            # every one df=1 for the unique half, df=1M for the shared half
-            sample = {r["doc_id"]: r for r in q.filter(
-                F.col("doc_id").isin([0, 7, half, n - 1])
-            ).collect()}
-            assert sample[0]["n_shingles"] == 2 and sample[0]["n_novel"] == 2
-            assert sample[half]["n_shingles"] == 2 and sample[half]["n_novel"] == 0
-            notes["novelty_2m"] = (
-                "1M planted-unique docs scored exactly 1.0 and 1M verbatim "
-                "copies exactly 0.0 at 2M docs / ~4M shingles; audit_plan==(0,0)"
-            )
-            return sum(byn.values())
-
-    def datasheet_2m():
-        from mcpvectordb_spark.catalog import QUERIES
-
-        n = 2_000_000
-        with tempfile.TemporaryDirectory() as td:
-            docs = spark.range(n).select(
-                F.col("id").alias("doc_id"),
-                F.when(
-                    ((F.col("id") / 100).cast("long") % 2) == 0,
-                    F.lit("the shared duplicate body"),
-                )
-                .otherwise(F.concat(F.lit("unique t"), F.col("id")))
-                .alias("text"),
-                F.lit("en").alias("lang"),
-                F.concat(F.lit("s"), F.col("id") % 100).alias("source"),
-                F.lit(25).cast("long").alias("n_chars"),
-            )
-            docs.write.mode("overwrite").parquet(f"{td}/documents.parquet")
-            rows = QUERIES["dataset_datasheet"](spark, td).collect()
-            assert len(rows) == 100
-            for r in rows:
-                assert r["n_docs"] == 20_000
-                assert r["dup_rate"] == 0.5, r
-                assert r["n_langs"] == 1 and r["lang_entropy"] == 0.0
-            notes["datasheet_2m"] = (
-                "100 sources x 20k docs: dup_rate exactly 0.5 and entropy "
-                "exactly 0.0 (never -0.0) on every source row"
-            )
-            return len(rows)
-
-    def leakage_1m():
-        from mcpvectordb_spark.catalog import QUERIES
-
-        n = 1_000_000
-        k = 500  # planted cross-source verbatim copies
-        with tempfile.TemporaryDirectory() as td:
-            # ids 0..k-1 live in source a; ids n..n+k-1 are their verbatim
-            # copies in source b; everyone else gets id-embedded words
-            # (no shared shingle anywhere -> the 0.02 pair table holds
-            # EXACTLY the k planted pairs)
-            base = spark.range(n).select(
-                F.col("id").alias("doc_id"),
-                F.when(
-                    F.col("id") < k,
-                    # every word carries the id, so a planted doc shares
-                    # shingles ONLY with its own verbatim copy
-                    F.concat(
-                        F.lit("p"), F.col("id"), F.lit(" q"), F.col("id"),
-                        F.lit(" r"), F.col("id"), F.lit(" s"), F.col("id"),
-                        F.lit(" t"), F.col("id"),
-                    ),
-                )
-                .otherwise(
-                    F.concat(
-                        F.lit("u"), F.col("id"), F.lit(" v"), F.col("id"),
-                        F.lit(" w"), F.col("id"), F.lit(" x"), F.col("id"),
-                    )
-                )
-                .alias("text"),
-                F.lit("en").alias("lang"),
-                F.when(F.col("id") < k, F.lit("a")).otherwise(F.lit("z")).alias("source"),
-                F.lit(30).cast("long").alias("n_chars"),
-            )
-            copies = base.filter(F.col("doc_id") < k).select(
-                (F.col("doc_id") + n).alias("doc_id"), "text", "lang",
-                F.lit("b").alias("source"), "n_chars",
-            )
-            base.unionByName(copies).write.mode("overwrite").parquet(
-                f"{td}/documents.parquet"
-            )
-            rows = QUERIES["source_leakage"](spark, td).collect()
-            assert [(r["source_a"], r["source_b"]) for r in rows] == [("a", "b")], rows
-            r = rows[0]
-            assert r["n_pairs"] == k, r
-            assert r["mean_jaccard"] == 1.0 and r["max_jaccard"] == 1.0
-            notes["leakage_1m"] = (
-                f"1M+{k} docs: the matrix holds exactly the planted (a,b) row "
-                f"with {k} pairs at Jaccard exactly 1.0; the 999.5k unique "
-                "docs contribute zero candidates (id-embedded shingles)"
-            )
-            return len(rows)
-
-    run("novelty_2m", novelty_2m)
-    run("datasheet_2m", datasheet_2m)
-    run("leakage_1m", leakage_1m)
-    print(json.dumps({"stress": "r8", "timings": timings, "counts": counts,
-                      "notes": notes}))
-    spark.stop()
-
-
-def main_r9() -> None:
-    """Round-9 stress: the dedup-accounting readouts at 1000x+ bench
-    scale, each against a planted closed-form answer:
-
-    - dup_cluster_sizes + dedup_survivors at 2M docs / 100 sources:
-      consecutive ids (2k, 2k+1) share one fixed-width 8-byte text, so
-      the corpus is EXACTLY 1M clusters of size 2; the keep-one rule
-      keeps every even id, and because consecutive ids always land in
-      different (id mod 100) sources, every removal is a cross-source
-      loss — every per-source row and every histogram cell has an
-      analytic value.
-    - ngram_coverage at 2M docs / ~4M shingles: every doc leads with
-      one global shingle and carries two id-embedded ones, so rank 1
-      is the global shingle at share exactly 1/3 and the cumulative
-      top-100 share is exactly (2M + 99) / 6M.
-    - near_dup_rate_by_source at 1M+500 docs: the source_leakage plant
-      law (500 verbatim cross-source copies, everyone else id-embedded)
-      read through the per-source exposure view — a:1.0, b:1.0,
-      z:0.0 exactly, off the SAME session-shared pair table."""
-    import tempfile
-
-    sys.path.insert(0, "tools")
-
-    spark = get_spark("stress-r9")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    notes: dict[str, str] = {}
-
-    def run(name, fn):
-        t0 = time.perf_counter()
-        counts[name] = fn()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        print(f"# {name}: {timings[name]}s -> {counts[name]}", file=sys.stderr)
-
-    def dedup_accounting_2m():
-        from mcpvectordb_spark.catalog import QUERIES
-
-        n = 2_000_000
-        with tempfile.TemporaryDirectory() as td:
-            docs = spark.range(n).select(
-                F.col("id").alias("doc_id"),
-                # pair law: (2k, 2k+1) share text "c" + zero-padded k
-                # (8 bytes always — exact byte accounting)
-                F.concat(
-                    F.lit("c"),
-                    F.lpad((F.col("id") / 2).cast("long").cast("string"), 7, "0"),
-                ).alias("text"),
-                F.lit("en").alias("lang"),
-                F.concat(F.lit("s"), F.col("id") % 100).alias("source"),
-                F.lit(8).cast("long").alias("n_chars"),
-            )
-            docs.write.mode("overwrite").parquet(f"{td}/documents.parquet")
-
-            hist = QUERIES["dup_cluster_sizes"](spark, td).collect()
-            assert len(hist) == 1 and hist[0]["cluster_size"] == 2, hist
-            assert tuple(hist[0])[1:] == (1_000_000, 2_000_000, 1_000_000,
-                                          8_000_000), hist
-
-            rows = QUERIES["dedup_survivors"](spark, td).collect()
-            assert len(rows) == 100
-            for r in rows:
-                # id = s + 100j keeps s's parity, so a source is ALL
-                # winners (even s) or ALL losers (odd s) — the sharpest
-                # possible mix-shift: keep-one erases every odd source
-                s = int(r["source"][1:])
-                assert r["n_docs"] == 20_000
-                if s % 2 == 0:
-                    assert (r["n_kept"], r["n_removed"]) == (20_000, 0), r
-                    assert r["bytes_removed"] == 0
-                    assert r["n_lost_cross_source"] == 0
-                    assert r["removed_rate"] == 0.0
-                else:
-                    assert (r["n_kept"], r["n_removed"]) == (0, 20_000), r
-                    assert r["bytes_removed"] == 160_000
-                    assert r["n_lost_cross_source"] == 20_000, (
-                        f"every winner lives in source s{s - 1}: {r}"
-                    )
-                    assert r["removed_rate"] == 1.0
-            notes["dedup_accounting_2m"] = (
-                "1M planted size-2 clusters at 2M docs / 100 sources: the "
-                "histogram cell is exact, and keep-one provably ERASES the "
-                "50 odd sources (100% cross-source loss) while keeping the "
-                "50 even ones whole — the mix-shift warning at its extreme"
-            )
-            return len(rows)
-
-    def coverage_2m():
-        from mcpvectordb_spark.catalog import QUERIES
-
-        n = 2_000_000
-        with tempfile.TemporaryDirectory() as td:
-            docs = spark.range(n).select(
-                F.col("id").alias("doc_id"),
-                F.concat(
-                    F.lit("top one two u"), F.col("id"), F.lit(" v"), F.col("id")
-                ).alias("text"),
-                F.lit("en").alias("lang"),
-                F.lit("s").alias("source"),
-                F.lit(30).cast("long").alias("n_chars"),
-            )
-            docs.write.mode("overwrite").parquet(f"{td}/documents.parquet")
-            rows = QUERIES["ngram_coverage"](spark, td).collect()
-            assert len(rows) == 100
-            assert rows[0]["shingle"] == "top one two" and rows[0]["df"] == n
-            assert rows[0]["share"] == round(n / (3 * n), 6)
-            assert all(r["df"] == 1 for r in rows[1:]), "tail shingles are unique"
-            assert rows[-1]["cum_share"] == round((n + 99) / (3 * n), 6)
-            notes["coverage_2m"] = (
-                "2M docs / ~4M distinct shingles: rank-1 share exactly 1/3 "
-                "(the planted global shingle) and cumulative top-100 share "
-                "exactly (2M+99)/6M; the rank window sees only the 100-row "
-                "TakeOrdered cut"
-            )
-            return len(rows)
-
-    def exposure_1m():
-        from mcpvectordb_spark.catalog import QUERIES
-
-        n = 1_000_000
-        k = 500
-        with tempfile.TemporaryDirectory() as td:
-            base = spark.range(n).select(
-                F.col("id").alias("doc_id"),
-                F.when(
-                    F.col("id") < k,
-                    F.concat(
-                        F.lit("p"), F.col("id"), F.lit(" q"), F.col("id"),
-                        F.lit(" r"), F.col("id"), F.lit(" s"), F.col("id"),
-                        F.lit(" t"), F.col("id"),
-                    ),
-                )
-                .otherwise(
-                    F.concat(
-                        F.lit("u"), F.col("id"), F.lit(" v"), F.col("id"),
-                        F.lit(" w"), F.col("id"), F.lit(" x"), F.col("id"),
-                    )
-                )
-                .alias("text"),
-                F.lit("en").alias("lang"),
-                F.when(F.col("id") < k, F.lit("a")).otherwise(F.lit("z")).alias("source"),
-                F.lit(30).cast("long").alias("n_chars"),
-            )
-            copies = base.filter(F.col("doc_id") < k).select(
-                (F.col("doc_id") + n).alias("doc_id"), "text", "lang",
-                F.lit("b").alias("source"), "n_chars",
-            )
-            base.unionByName(copies).write.mode("overwrite").parquet(
-                f"{td}/documents.parquet"
-            )
-            rows = {r["source"]: r for r in
-                    QUERIES["near_dup_rate_by_source"](spark, td).collect()}
-            assert set(rows) == {"a", "b", "z"}
-            assert (rows["a"]["n_neardup"], rows["a"]["neardup_rate"]) == (k, 1.0)
-            assert (rows["b"]["n_neardup"], rows["b"]["neardup_rate"]) == (k, 1.0)
-            assert (rows["z"]["n_docs"], rows["z"]["n_neardup"]) == (n - k, 0)
-            assert rows["z"]["neardup_rate"] == 0.0
-            notes["exposure_1m"] = (
-                f"1M+{k} docs: per-source exposure reads exactly a=1.0, "
-                "b=1.0, z=0.0 — the pair table holds only the planted "
-                "copies, so the flagged-id set stays bounded by true "
-                "duplication at any corpus size"
-            )
-            return len(rows)
-
-    def contamination_1m():
-        from mcpvectordb_spark.catalog import QUERIES
-
-        n = 1_000_000
-        with tempfile.TemporaryDirectory() as td:
-            # eval = ids 0-49 (the query's fixed eval window), landing in
-            # sources s0..s49 via id mod 100; every id >= 50 gets
-            # id-embedded words (zero overlap with anything).  The
-            # query's own +10M planted mutants are then the ONLY
-            # contamination: sources s0-s49 read exactly 1 contaminated
-            # of 10_000 train docs, s50-s99 exactly 0 of 10_000.
-            docs = spark.range(n).select(
-                F.col("id").alias("doc_id"),
-                F.concat(
-                    F.lit("u"), F.col("id"), F.lit(" v"), F.col("id"),
-                    F.lit(" w"), F.col("id"), F.lit(" x"), F.col("id"),
-                    F.lit(" y"), F.col("id"), F.lit(" z"), F.col("id"),
-                    F.lit(" u"), F.col("id"), F.lit(" v"), F.col("id"),
-                    F.lit(" w"), F.col("id"), F.lit(" x"), F.col("id"),
-                    F.lit(" y"), F.col("id"), F.lit(" z"), F.col("id"),
-                ).alias("text"),
-                F.lit("en").alias("lang"),
-                F.concat(F.lit("s"), F.col("id") % 100).alias("source"),
-                F.lit(60).cast("long").alias("n_chars"),
-            )
-            docs.write.mode("overwrite").parquet(f"{td}/documents.parquet")
-            rows = QUERIES["contamination_by_source"](spark, td).collect()
-            assert len(rows) == 100
-            for r in rows:
-                k = int(r["source"][1:])
-                assert r["n_train_docs"] == 10_000, r
-                assert r["n_contaminated"] == (1 if k < 50 else 0), r
-            notes["contamination_1m"] = (
-                "1M docs / 100 sources: the broadcast-eval decontaminate "
-                "gate flags EXACTLY the 50 planted mutants (one per low "
-                "source, 12-word texts keep 22/27 shingles >= 0.5) and "
-                "nothing else; the rollup is one |sources|-row agg"
-            )
-            return len(rows)
-
-    def confusion_1m():
-        from mcpvectordb_spark.catalog import QUERIES
-
-        n = 1_000_000
-        k = 1_000  # mislabeled fr docs carrying en tokens
-        with tempfile.TemporaryDirectory() as td:
-            docs = spark.range(n).select(
-                F.col("id").alias("doc_id"),
-                F.when(F.col("id") < k, F.lit("aaa bbb aaa bbb aaa bbb"))
-                .when(F.col("id") % 2 == 0, F.lit("aaa bbb"))
-                .otherwise(F.lit("ccc ddd"))
-                .alias("text"),
-                F.when(F.col("id") % 2 == 0, F.lit("en"))
-                .otherwise(F.lit("fr"))
-                .alias("lang"),
-                F.lit("s").alias("source"),
-                F.lit(10).cast("long").alias("n_chars"),
-            )
-            docs.write.mode("overwrite").parquet(f"{td}/documents.parquet")
-            rows = {(r["lang"], r["predicted"]): r["n_docs"]
-                    for r in QUERIES["lang_confusion"](spark, td).collect()}
-            # ids < k split ~evenly: even ids are TRUE en (correctly en-
-            # predicted either way); odd ids are mislabeled fr docs whose
-            # en tokens dominate their own class contribution
-            n_mis = k // 2
-            assert rows[("fr", "en")] == n_mis, rows
-            assert rows[("en", "en")] == n // 2
-            assert rows[("fr", "fr")] == n // 2 - n_mis
-            assert ("en", "fr") not in rows
-            notes["confusion_1m"] = (
-                f"1M docs, 4-term vocab, {n_mis} planted mislabels: the "
-                "confusion matrix holds exactly the planted (fr, en) cell "
-                "— NB stays a (label, term) agg + broadcast-model join at "
-                "any corpus size"
-            )
-            return len(rows)
-
-    run("dedup_accounting_2m", dedup_accounting_2m)
-    run("coverage_2m", coverage_2m)
-    run("exposure_1m", exposure_1m)
-    run("contamination_1m", contamination_1m)
-    run("confusion_1m", confusion_1m)
-    print(json.dumps({"stress": "r9", "timings": timings, "counts": counts,
-                      "notes": notes}))
-    spark.stop()
+def replicate(src: str, replicas: int, out: str) -> None:
+    tables = {f.removesuffix(".parquet"): pq.read_table(os.path.join(src, f))
+              for f in sorted(os.listdir(src)) if f.endswith(".parquet")}
+    offset = 1 + max(pc.max(t[c]).as_py() or 0 for t in tables.values() for c in _keys(t))
+    os.makedirs(out, exist_ok=True)
+    for name, t in tables.items():
+        keys = _keys(t)
+        copies = [_shift(t, keys, r * offset) for r in range(replicas if keys else 1)]
+        pq.write_table(pa.concat_tables(copies), os.path.join(out, f"{name}.parquet"))
 
 
 if __name__ == "__main__":
-    if "r9" in sys.argv[1:]:
-        main_r9()
-    elif "r8" in sys.argv[1:]:
-        main_r8()
-    elif "r7" in sys.argv[1:]:
-        main_r7()
-    elif "r6b" in sys.argv[1:]:
-        main_r6b()
-    elif "r6" in sys.argv[1:]:
-        main_r6()
-    elif "sf1" in sys.argv[1:]:
-        main_sf1()
-    elif "r3" in sys.argv[1:]:
-        main_r3()
-    elif "s3" in sys.argv[1:]:
-        main_s3()
-    elif "s4" in sys.argv[1:]:
-        main_s4()
-    elif "r4b" in sys.argv[1:]:
-        main_r4b()
-    elif "r4c" in sys.argv[1:]:
-        main_r4c()
-    elif "r4d" in sys.argv[1:]:
-        main_r4d()
-    elif "r4e" in sys.argv[1:]:
-        main_r4e()
-    elif "r4f" in sys.argv[1:]:
-        main_r4f()
-    elif "r4g" in sys.argv[1:]:
-        main_r4g()
-    elif "r4h" in sys.argv[1:]:
-        main_r4h()
-    elif "r5b" in sys.argv[1:]:
-        main_r5b()
-    elif "r5" in sys.argv[1:]:
-        main_r5()
-    elif "r4" in sys.argv[1:]:
-        main_r4()
-    else:
-        main()
+    if len(sys.argv) != 4:
+        raise SystemExit(__doc__)
+    replicate(sys.argv[1], int(sys.argv[2]), sys.argv[3])
